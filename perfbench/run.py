@@ -5,8 +5,9 @@ Python process and JVM.
 
 Workloads (see ``BENCHMARK.json`` and ``perfbench/README.md``): ``lookup``
 and ``mutate``. Each is a closed loop with one client and no
-think time at ``local[nproc]``. Inputs derive from ``--seed`` only; every
-answer is checked outside the timed region.
+think time at ``local[nproc]``, pinned to half the CPUs it is given.
+Inputs derive from ``--seed`` only; every answer is checked outside the
+timed region.
 
 The last line of standard output is one JSON object with ``correct``,
 ``attempted``, ``failed`` and ``metrics``: the end-to-end metrics with
@@ -33,11 +34,14 @@ ROOT = os.path.dirname(HERE)
 
 WORKLOADS = ("lookup", "mutate")
 # timed passes per 16 s of --seconds (see Run.loop): a lookup pass takes
-# about 7 s at sf0.01 on 4 cores and a mutate pass about 8 s, but mutate
+# about 11 s at sf0.01 on 2 cores and a mutate pass about 10 s, but mutate
 # runs three, because the cost of a write varies with the file it lands
 # in and each pass writes to other files
 PASSES_PER_16S = {"lookup": 2, "mutate": 3}
 SETUP_REPS = 3
+# the driver JVM's heap, fixed from the start (-Xms = -Xmx): a heap that
+# grows during a run resizes and collects at other moments in every run
+HEAP = "1g"
 SF = 0.01
 
 # figures of one workload, printed on the run line
@@ -97,12 +101,13 @@ def start_session(work: str, nproc: int):
              .config("spark.ui.enabled", "false")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.sql.shuffle.partitions", str(nproc))
-             .config("spark.driver.memory", "2g")
+             .config("spark.driver.memory", HEAP)
              .config("spark.local.dir", os.path.join(work, "spark-local"))
              .config("spark.sql.warehouse.dir",
                      os.path.join(work, "warehouse"))
              .config("spark.driver.extraJavaOptions",
-                     f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}")
+                     f"-Xms{HEAP} -Djava.io.tmpdir={tmp} "
+                     f"-Dderby.system.home={tmp}")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -478,6 +483,12 @@ def main(argv=None) -> int:
               file=sys.stderr)
         return 2
     sys.path.insert(0, ROOT)
+    # half the CPUs the run is given: on a machine shared with other
+    # work, Spark's task threads, the JVM's compiler and collector threads
+    # and the Py4J round trips between Python and the JVM then wait less
+    # for a core, and run-to-run spread falls
+    cpus = sorted(os.sched_getaffinity(0))
+    os.sched_setaffinity(0, cpus[:max(1, len(cpus) // 2)])
     nproc = len(os.sched_getaffinity(0))
     base = os.path.join(ROOT, ".perfbench_work")
     # fixed-width name: table paths are stored in the index, whose size
@@ -502,7 +513,7 @@ def main(argv=None) -> int:
     import pyspark
     print(json.dumps({
         "workload": args.workload, "seed": args.seed, "sf": args.sf,
-        "trace": args.trace, "nproc": nproc,
+        "trace": args.trace, "cpus_given": len(cpus), "nproc": nproc,
         "python": sys.version.split()[0], "pyspark": pyspark.__version__,
         "figures": {n: {"value": v, "unit": FIGURE_UNITS[n]}
                     for n, v in sorted(run.figures.items())},
