@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Any, Dict, List, Optional, Union
 
 from pyspark.sql import Column as SparkColumn
@@ -38,6 +39,15 @@ from parquet_index_spark.metastore import (
     IndexMetadata, IndexNotFoundError, LocationSpec, Metastore,
 )
 from parquet_index_spark.pruning import prune_files
+
+_GLOB_META = re.compile(r"[\\{}\[\],*?]")
+
+
+def _glob_escape(text: str) -> str:
+    """``text`` with Hadoop GlobPattern metacharacters backslash-escaped,
+    so that Spark's path globbing and ``pathGlobFilter`` match it
+    literally."""
+    return _GLOB_META.sub(r"\\\g<0>", text)
 
 
 class PruneInfo:
@@ -83,31 +93,17 @@ class IndexedDataFrame:
 
     def filter(self, predicate: Union[str, P.Predicate, SparkColumn]) -> DataFrame:
         ast, residual = self._compile(predicate)
-        if ast is None:
-            self._manager.last_prune_info = PruneInfo(
-                len(self._metadata.all_file_paths()),
-                len(self._metadata.all_file_paths()), pruned=False)
-            return self.df.filter(residual)
-        survivors = self._prune(ast)
         all_paths = self._metadata.all_file_paths()
+        survivors = all_paths if ast is None else self._prune(ast)
         self._manager.last_prune_info = PruneInfo(
-            len(all_paths), len(survivors), pruned=True)
-        if len(survivors) == len(all_paths):
-            return self.df.filter(residual)
-        if not survivors:
-            empty = self._spark.createDataFrame([], self._metadata.data_schema)
-            return empty.filter(residual)
-        reader = (self._spark.read
-                  .schema(self._metadata.data_schema)
-                  .option("basePath", self._metadata.table_path))
-        paths = [self._metadata.abs_path(p)
-                 for p in self._collapse_to_directories(survivors)]
-        return reader.parquet(*paths).filter(residual)
+            len(all_paths), len(survivors), pruned=ast is not None)
+        return self._scan(survivors).filter(residual)
 
-    def _prune(self, ast):
-        """Driver-side numpy fold by default; Spark-job fold when the
-        metadata itself is too big for driver memory
-        (spark.sql.index.pruning.sparkThreshold blocks, default 5M)."""
+    def _fold_route(self):
+        """-> (spark_fold, tz): fold with a Spark job when the metadata
+        itself is too big for driver memory
+        (spark.sql.index.pruning.sparkThreshold blocks, default 5M), and
+        the session time zone that instant literals fold in."""
         from parquet_index_spark import pruning_spark
         try:
             threshold = int(self._spark.conf.get(
@@ -119,38 +115,66 @@ class IndexedDataFrame:
             tz = self._spark.conf.get("spark.sql.session.timeZone")
         except Exception:
             tz = None
-        total_blocks = int(self._metadata.files["blocks"].sum())
-        if total_blocks > threshold:
+        return int(self._metadata.files["blocks"].sum()) > threshold, tz
+
+    def _prune(self, ast):
+        """Driver-side numpy fold by default; Spark-job fold past the
+        threshold (``_fold_route``)."""
+        from parquet_index_spark import pruning_spark
+        spark_fold, tz = self._fold_route()
+        if spark_fold:
             return pruning_spark.prune_files_with_spark(
                 self._spark, self._metadata, ast, tz)
         return prune_files(ast, self._metadata.context(), tz)
 
-    def _collapse_to_directories(self, survivors):
-        """Replace a directory's full surviving file set with the directory
-        itself. On a 100k-partition table where partition pruning keeps a
-        few partitions, this passes a handful of directory paths to the
-        reader instead of thousands of file paths (SURVEY §7 de-risk;
-        empty files add no rows, so including them via the directory is
-        sound)."""
-        import os as _os
-        # empty files can never survive pruning (no blocks) but add no rows,
-        # so a directory counts as fully-covered when its NON-empty files all
-        # survive
-        per_dir_total: dict = {}
-        files = self._metadata.files
-        for p, blocks in zip(files["path"], files["blocks"]):
-            if blocks > 0:
-                per_dir_total.setdefault(_os.path.dirname(p), set()).add(p)
-        surv_by_dir: dict = {}
-        for p in survivors:
-            surv_by_dir.setdefault(_os.path.dirname(p), set()).add(p)
-        out = []
-        for d, files in surv_by_dir.items():
-            if d and files == per_dir_total[d]:
-                out.append(d)
-            else:
-                out.extend(sorted(files))
-        return out
+    def _scan(self, files) -> DataFrame:
+        """The one route by which a pruned read reaches Spark: exactly
+        ``files`` (relative paths) under the metastore schema, from the
+        roots ``_collapse_to_directories`` picks, with a
+        ``pathGlobFilter`` of the files' escaped names selecting them
+        inside directory roots."""
+        meta = self._metadata
+        if len(files) == len(meta.files):
+            return self.df
+        if not files:
+            return self._spark.createDataFrame([], meta.data_schema)
+        names = sorted({os.path.basename(p) for p in files})
+        return (self._spark.read
+                .schema(meta.data_schema)
+                .option("basePath", meta.table_path)
+                .option("pathGlobFilter",
+                        "{" + ",".join(map(_glob_escape, names)) + "}")
+                .parquet(*[_glob_escape(meta.abs_path(r) if r
+                                        else meta.table_path)
+                           for r in self._collapse_to_directories(files)]))
+
+    def _collapse_to_directories(self, files) -> list:
+        """Reader roots for ``files``. Past
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` root
+        paths Spark lists them in a distributed job, one task per path,
+        before the query reads a row; up to it, on the driver. So up to
+        the threshold the roots are the files themselves, which resolve
+        faster than a listing of their directories; past it, the files'
+        distinct directories, each listed once on the driver.
+
+        The name glob applies in every root, so a directory that also
+        holds a non-surviving file named like a survivor elsewhere (Hive
+        partitions written by one job share file names) is replaced by
+        its survivors' own paths; names are unique within a directory,
+        so a single root never needs this."""
+        if len(files) <= int(self._spark.conf.get(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold")):
+            return sorted(files)
+        dirs = {os.path.dirname(p) for p in files}
+        clash = set()
+        if len(dirs) > 1:
+            keep = set(files)
+            names = {os.path.basename(p) for p in files}
+            clash = {os.path.dirname(p) for p in self._metadata.files["path"]
+                     if p not in keep and os.path.dirname(p) in dirs
+                     and os.path.basename(p) in names}
+        return sorted(dirs - clash) + sorted(
+            p for p in files if os.path.dirname(p) in clash)
 
     where = filter
 
@@ -275,10 +299,7 @@ class IndexedDataFrame:
                     "overall_files": len(all_paths), "pruned": False,
                     "leaves": {}}
         ctx = self._metadata.context()
-        try:
-            tz = self._spark.conf.get("spark.sql.session.timeZone")
-        except Exception:  # noqa: BLE001
-            tz = None
+        tz = self._fold_route()[1]
 
         def n_files(mask: np.ndarray) -> int:
             keep = np.zeros(len(ctx.file_paths), dtype=bool)
@@ -416,18 +437,8 @@ class IndexedDataFrame:
         ast, residual = self._compile(predicate)
         if ast is None:
             return self.filter(residual).count()
-        try:
-            threshold = int(self._spark.conf.get(
-                pruning_spark.SPARK_PRUNING_THRESHOLD,
-                str(pruning_spark.DEFAULT_THRESHOLD)))
-        except Exception:
-            threshold = pruning_spark.DEFAULT_THRESHOLD
-        try:
-            tz = self._spark.conf.get("spark.sql.session.timeZone")
-        except Exception:
-            tz = None
-        total_blocks = int(self._metadata.files["blocks"].sum())
-        if total_blocks > threshold:
+        spark_fold, tz = self._fold_route()
+        if spark_fold:
             total, scan_paths = pruning_spark.count_files_with_spark(
                 self._spark, self._metadata, ast, tz)
         else:
@@ -445,12 +456,7 @@ class IndexedDataFrame:
         self._manager.last_prune_info = PruneInfo(
             len(all_paths), len(scan_paths), pruned=True)
         if scan_paths:
-            reader = (self._spark.read
-                      .schema(self._metadata.data_schema)
-                      .option("basePath", self._metadata.table_path))
-            paths = [self._metadata.abs_path(p)
-                     for p in self._collapse_to_directories(scan_paths)]
-            total += reader.parquet(*paths).filter(residual).count()
+            total += self._scan(scan_paths).filter(residual).count()
         return total
 
     def min_max_where(self, column: str, predicate=None) -> tuple:
@@ -492,18 +498,8 @@ class IndexedDataFrame:
             ast, residual = self._compile(predicate)
             if ast is None:
                 return _scan_fallback(residual)
-        try:
-            threshold = int(self._spark.conf.get(
-                pruning_spark.SPARK_PRUNING_THRESHOLD,
-                str(pruning_spark.DEFAULT_THRESHOLD)))
-        except Exception:
-            threshold = pruning_spark.DEFAULT_THRESHOLD
-        try:
-            tz = self._spark.conf.get("spark.sql.session.timeZone")
-        except Exception:
-            tz = None
-        total_blocks = int(self._metadata.files["blocks"].sum())
-        if total_blocks > threshold:
+        spark_fold, tz = self._fold_route()
+        if spark_fold:
             lo, hi, scan_paths = pruning_spark.min_max_files_with_spark(
                 self._spark, self._metadata, column, ast, tz)
         else:
@@ -534,12 +530,7 @@ class IndexedDataFrame:
         self._manager.last_prune_info = PruneInfo(
             len(all_paths), len(scan_paths), pruned=True)
         if scan_paths:
-            reader = (self._spark.read
-                      .schema(self._metadata.data_schema)
-                      .option("basePath", self._metadata.table_path))
-            paths = [self._metadata.abs_path(p)
-                     for p in self._collapse_to_directories(scan_paths)]
-            df = reader.parquet(*paths)
+            df = self._scan(scan_paths)
             if residual is not None:
                 df = df.filter(residual)
             row = df.agg(F.min(column).alias("mn"),
@@ -549,11 +540,6 @@ class IndexedDataFrame:
                 if kind == ityp.STRING:
                     s_lo, s_hi = smn, smx
                 else:
-                    try:
-                        tz = self._spark.conf.get(
-                            "spark.sql.session.timeZone")
-                    except Exception:
-                        tz = None
                     s_lo = ityp.to_long_space(smn, kind, tz)
                     s_hi = ityp.to_long_space(smx, kind, tz)
                 lo = s_lo if lo is None else min(lo, s_lo)

@@ -31,7 +31,7 @@ import pandas as pd
 
 from pyspark.sql import SparkSession, functions as F
 
-from parquet_index_spark import predicates as P
+from parquet_index_spark import collector, predicates as P
 from parquet_index_spark import types as ityp
 
 SPARK_PRUNING_THRESHOLD = "spark.sql.index.pruning.sparkThreshold"
@@ -401,6 +401,9 @@ def _prepare_pivot(spark: SparkSession, metadata, referenced: set,
         f.endswith(".parquet") for f in os.listdir(stats_path))
     if not has_shards:
         return None, {}, frozenset()
+    # the membership probes are pandas UDFs that import this package on
+    # the executors' Python workers, in sessions that never ran a build
+    collector._ensure_package_shipped(spark)
     stats_df = spark.read.parquet(stats_path)
 
     kinds = {c: k for c, k in metadata.index_columns.items() if c in referenced}

@@ -7,17 +7,37 @@ ordering (708-758).
 """
 
 import os
+from urllib.parse import unquote, urlparse
 
 import pytest
 from pyspark.sql import Row, functions as F
 
 from parquet_index_spark import QueryContext, col
+from parquet_index_spark.predicates import parse_sql_predicate
 from tests.conftest import assert_same_rows
 
 
 @pytest.fixture()
 def ctx(spark, tmp_metastore):
     return QueryContext(spark)
+
+
+def _scan_roots(df):
+    """Root paths of the file indexes behind ``df``'s scans."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            paths = leaf.relation().location().rootPaths()
+            roots += [paths.apply(j).toString() for j in range(paths.size())]
+    return roots
+
+
+def _input_files(df, table):
+    """``df.inputFiles()`` as sorted paths relative to ``table``."""
+    return sorted(os.path.relpath(unquote(urlparse(f).path), table)
+                  for f in df.inputFiles())
 
 
 class TestPartitionedTables:
@@ -52,26 +72,24 @@ class TestPartitionedTables:
             assert_same_rows(t.filter(pred),
                              spark.read.parquet(ptable).filter(pred))
 
-    def test_whole_partition_collapses_to_directory(self, spark, ctx, ptable):
-        """When every file of a partition survives, the reader gets the
-        directory path, not the file list (scale: short path lists)."""
-        ctx.index.create.mode("overwrite").indexBy("num").parquet(ptable)
-        t = ctx.index.parquet(ptable)
-        survivors = None
-        import parquet_index_spark.manager as mgr
-        orig = mgr.IndexedDataFrame._collapse_to_directories
-
-        def spy(self, s):
-            nonlocal survivors
-            survivors = orig(self, s)
-            return survivors
-
-        mgr.IndexedDataFrame._collapse_to_directories = spy
-        try:
-            t.filter("part = 2").collect()
-        finally:
-            mgr.IndexedDataFrame._collapse_to_directories = orig
-        assert survivors == ["part=2"]
+    def test_whole_partition_collapses_to_directory(self, spark, ctx,
+                                                    tmp_table_dir):
+        """When a whole partition of more files than Spark lists on the
+        driver survives, Spark gets the one directory root, not the file
+        list (scale: short path lists), and reads exactly the fold's
+        survivors."""
+        path = os.path.join(tmp_table_dir, "wide_parts")
+        # 40 tasks each write one file into each of the 4 partitions
+        spark.range(0, 4000, numPartitions=40) \
+            .selectExpr("id AS num", "cast(id % 4 AS int) AS part") \
+            .write.partitionBy("part").parquet(path)
+        ctx.index.create.indexBy("num").parquet(path)
+        t = ctx.index.parquet(path)
+        df = t.filter("part = 2")
+        assert [os.path.basename(r) for r in _scan_roots(df)] == ["part=2"]
+        survivors = t._prune(parse_sql_predicate("part = 2"))
+        assert len(survivors) == 40
+        assert _input_files(df, path) == sorted(survivors)
 
     def test_indexing_partition_column_rejected(self, ctx, ptable):
         # ParquetMetastoreSupport.scala:111-117
@@ -236,3 +254,106 @@ class TestEdgeFixtures:
         t = ctx.index.parquet(path)
         assert_same_rows(t.filter("id = 5"),
                          spark.read.parquet(path).filter("id = 5"))
+
+
+class TestPrunedReadRoute:
+    """How a pruned read reaches Spark (``IndexedDataFrame._scan``): the
+    survivors' paths up to Spark's parallel-listing threshold (32), past
+    it their directories plus a file-name glob. No per-file listing job
+    at any survivor count, and exactly the survivors are read."""
+
+    @pytest.fixture()
+    def flat40(self, spark, tmp_table_dir):
+        """Flat 40-file table: 36 files share ids 0..999 (every one a
+        boundary file for ``id < 500``), 4 hold ids 10000..10399."""
+        path = os.path.join(tmp_table_dir, "flat40")
+        spark.range(0, 1000).repartition(36).write.parquet(path)
+        spark.range(10_000, 10_400).repartition(4) \
+            .write.mode("append").parquet(path)
+        return path
+
+    def test_building_pruned_reader_launches_no_job(self, spark, ctx,
+                                                    flat40, monkeypatch):
+        import parquet_index_spark.manager as mgr
+        ctx.index.create.indexBy("id").parquet(flat40)
+        t = ctx.index.parquet(flat40)
+        sc = spark.sparkContext
+        built = []
+        orig = mgr.IndexedDataFrame._scan
+
+        def scan_in_group(self, files):
+            group = f"pis_scan_{len(built)}"
+            sc.setJobGroup(group, "pruned reader construction")
+            try:
+                df = orig(self, files)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            built.append((len(files),
+                          len(sc.statusTracker().getJobIdsForGroup(group))))
+            return df
+
+        monkeypatch.setattr(mgr.IndexedDataFrame, "_scan", scan_in_group)
+        plain = spark.read.parquet(flat40)
+        wide = t.filter("id < 500")
+        assert _scan_roots(wide) == [_scan_roots(plain)[0]]
+        assert_same_rows(wide, plain.filter("id < 500"))
+        assert t.count_where("id < 500") == 500
+        assert ctx.index.last_prune_info.selected_files == 36
+        assert_same_rows(t.filter("id = 10005"),
+                         plain.filter("id = 10005"))
+        assert [n for n, _ in built][:2] == [36, 36]
+        assert [jobs for _, jobs in built] == [0, 0, 0]
+
+    @pytest.mark.parametrize("plain_survivors", [0, 30])
+    def test_glob_escapes_metacharacters(self, spark, ctx, tmp_table_dir,
+                                         plain_survivors):
+        """Survivors named with ``{ } [ ] , * ? \\`` match only
+        themselves, read by path (6 survivors) or through the directory
+        glob (36): each has a decoy that the unescaped name would match
+        as a glob."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = os.path.join(tmp_table_dir, "globnames")
+        os.makedirs(path)
+        pairs = [("a{1}", "a1"), ("b[2]", "b2"), ("c,3", "c"),
+                 ("d*4", "dzz4"), ("e?5", "ex5"), ("f\\6", "f6")]
+        pairs += [(f"plain{i}", f"decoy{i}") for i in range(plain_survivors)]
+        names = [n + ".parquet" for pair in pairs for n in pair]
+        for i, name in enumerate(names):
+            pq.write_table(pa.table({"id": list(range(i * 10, i * 10 + 10))}),
+                           os.path.join(path, name))
+        ctx.index.create.indexBy("id").parquet(path)
+        t = ctx.index.parquet(path)
+        pred = "id IN ({})".format(
+            ", ".join(str(i * 10 + 3) for i in range(0, len(names), 2)))
+        df = t.filter(pred)
+        assert_same_rows(df, spark.read.parquet(path).filter(pred))
+        assert _input_files(df, path) == sorted(names[::2])
+
+    def test_shared_names_across_partitions_read_exactly(self, spark, ctx,
+                                                         tmp_table_dir):
+        """One write job gives every partition the same file names. A
+        directory root whose non-survivor shares a survivor's name is
+        replaced by its survivors' paths, so a count reads no file that
+        it already counted from metadata."""
+        path = os.path.join(tmp_table_dir, "shared_names")
+        # task t writes ids 100t..100t+99: evens into p=0, odds into p=1,
+        # under one file name per task
+        spark.range(0, 4000, numPartitions=40) \
+            .selectExpr("id", "cast(id % 2 AS int) AS p") \
+            .write.partitionBy("p").parquet(path)
+        ctx.index.create.indexBy("id").parquet(path)
+        t = ctx.index.parquet(path)
+        # p=0: one row of tasks 0..33 and 39 (35 boundary files, the rest
+        # pruned); p=1: task 1's file fully matches, one row of task 39
+        hits = ", ".join(str(100 * k + 2) for k in [*range(34), 39])
+        pred = (f"(p = 0 AND id IN ({hits})) OR "
+                "(p = 1 AND ((id >= 100 AND id < 200) OR id = 3901))")
+        plain = spark.read.parquet(path).filter(pred)
+        assert t.count_where(pred) == plain.count() == 86
+        assert ctx.index.last_prune_info.selected_files == 36
+        df = t.filter(pred)
+        assert_same_rows(df, plain)
+        assert _input_files(df, path) == sorted(
+            t._prune(parse_sql_predicate(pred)))

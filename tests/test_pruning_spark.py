@@ -133,6 +133,29 @@ class TestSparkPruningEquivalence:
         finally:
             spark.conf.unset(SPARK_PRUNING_THRESHOLD)
 
+    def test_spark_fold_ships_package(self, spark, tctx, table, monkeypatch):
+        """The fold's pandas-UDF probes import this package on the
+        executors: a Spark-fold read in a session where no index build
+        ran ships it, once."""
+        from parquet_index_spark import collector as C
+        sc = spark.sparkContext
+        app = sc.applicationId
+        C._SHIPPED_SESSIONS.discard(app)  # as if no build ran here
+        shipped = []
+        real_add = sc.addPyFile
+        monkeypatch.setattr(sc, "addPyFile",
+                            lambda p: (shipped.append(p), real_add(p)))
+        spark.conf.set(SPARK_PRUNING_THRESHOLD, "0")
+        try:
+            t = tctx.index.parquet(table)
+            for pred in ("id = 1234", "s = 's00042'"):
+                assert_same_rows(t.filter(pred),
+                                 spark.read.parquet(table).filter(pred))
+        finally:
+            spark.conf.unset(SPARK_PRUNING_THRESHOLD)
+        assert app in C._SHIPPED_SESSIONS
+        assert len(shipped) == 1
+
 
 @pytest.fixture(scope="module")
 def filtered_table(spark, prune_base, request):
