@@ -814,16 +814,15 @@ def main() -> None:
     compaction = _section(_compaction_section)
 
     def _partition_collapse_section():
-        """Reader-root pruning signal (r11 verdict stretch #7, SURVEY §7
-        de-risk): on a 2000-partition hive table where the index keeps 3
-        partitions, the reader must receive 3 paths — not thousands —
-        via manager._collapse_to_directories. 2000 partitions is the
+        """Directory-coalescing pruning signal (r11 verdict stretch #7,
+        SURVEY §7 de-risk): on a 2000-partition hive table where the
+        index keeps 3 partitions, the reader must receive 3 DIRECTORY
+        paths — not thousands of per-file paths — via
+        manager._collapse_to_directories. 2000 partitions is the
         per-round-affordable stand-in for the 100k-partition regime the
         path was built for; the signal is the path COUNT, which is
-        scale-independent. Up to Spark's parallel-listing threshold (32)
-        the roots are the surviving files themselves, so here
-        all_directories is false; past it they are the survivors'
-        directories."""
+        scale-independent (whole surviving partitions always collapse
+        to one path each)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         n_parts = 2000

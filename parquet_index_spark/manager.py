@@ -128,11 +128,12 @@ class IndexedDataFrame:
         return prune_files(ast, self._metadata.context(), tz)
 
     def _scan(self, files) -> DataFrame:
-        """The one route by which a pruned read reaches Spark: exactly
-        ``files`` (relative paths) under the metastore schema, from the
-        roots ``_collapse_to_directories`` picks, with a
-        ``pathGlobFilter`` of the files' escaped names selecting them
-        inside directory roots."""
+        """The one route by which a pruned read reaches Spark: ``files``
+        (relative paths) under the metastore schema, from their distinct
+        directories as roots, with a ``pathGlobFilter`` of their escaped
+        names selecting them. Spark lists each root once on the driver,
+        so it never runs a per-file listing job. The name glob applies in
+        every root, so ``_read_by_scan(files)`` is what is read."""
         meta = self._metadata
         if len(files) == len(meta.files):
             return self.df
@@ -149,32 +150,21 @@ class IndexedDataFrame:
                            for r in self._collapse_to_directories(files)]))
 
     def _collapse_to_directories(self, files) -> list:
-        """Reader roots for ``files``. Past
-        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` root
-        paths Spark lists them in a distributed job, one task per path,
-        before the query reads a row; up to it, on the driver. So up to
-        the threshold the roots are the files themselves, which resolve
-        faster than a listing of their directories; past it, the files'
-        distinct directories, each listed once on the driver.
+        """Reader roots for ``files``: their distinct directories."""
+        return sorted({os.path.dirname(p) for p in files})
 
-        The name glob applies in every root, so a directory that also
-        holds a non-surviving file named like a survivor elsewhere (Hive
-        partitions written by one job share file names) is replaced by
-        its survivors' own paths; names are unique within a directory,
-        so a single root never needs this."""
-        if len(files) <= int(self._spark.conf.get(
-                "spark.sql.sources.parallelPartitionDiscovery.threshold")):
-            return sorted(files)
+    def _read_by_scan(self, files) -> set:
+        """Every indexed file that ``_scan(files)`` reads: ``files``, plus
+        any file in their directories named like one of them (Hive
+        partitions written by one job share file names). Names are
+        unique within a directory, so one root reads exactly ``files``."""
         dirs = {os.path.dirname(p) for p in files}
-        clash = set()
-        if len(dirs) > 1:
-            keep = set(files)
-            names = {os.path.basename(p) for p in files}
-            clash = {os.path.dirname(p) for p in self._metadata.files["path"]
-                     if p not in keep and os.path.dirname(p) in dirs
-                     and os.path.basename(p) in names}
-        return sorted(dirs - clash) + sorted(
-            p for p in files if os.path.dirname(p) in clash)
+        if len(dirs) < 2:
+            return set(files)
+        names = {os.path.basename(p) for p in files}
+        return {p for p in self._metadata.files["path"]
+                if os.path.dirname(p) in dirs
+                and os.path.basename(p) in names}
 
     where = filter
 
@@ -445,14 +435,14 @@ class IndexedDataFrame:
             ctx = self._metadata.context()
             may = PR.evaluate(ast, ctx, tz)
             full = PR.evaluate_full(ast, ctx, tz)
-            boundary = may & ~full
-            file_boundary = np.zeros(len(ctx.file_paths), dtype=bool)
-            file_boundary[ctx.file_ids[boundary]] = True
-            # full blocks inside a scanned file are counted by the scan
-            full_outside_scan = full & ~file_boundary[ctx.file_ids]
-            total = int(ctx.rows[full_outside_scan].sum())
-            scan_paths = [p for p, b
-                          in zip(ctx.file_paths, file_boundary) if b]
+            boundary = np.zeros(len(ctx.file_paths), dtype=bool)
+            boundary[ctx.file_ids[may & ~full]] = True
+            scan_paths = [p for p, b in zip(ctx.file_paths, boundary) if b]
+            read = self._read_by_scan(scan_paths)
+            file_read = np.array([p in read for p in ctx.file_paths],
+                                 dtype=bool)
+            # full blocks inside a file the scan reads are counted by it
+            total = int(ctx.rows[full & ~file_read[ctx.file_ids]].sum())
         self._manager.last_prune_info = PruneInfo(
             len(all_paths), len(scan_paths), pruned=True)
         if scan_paths:

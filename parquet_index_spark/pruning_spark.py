@@ -29,7 +29,7 @@ from typing import List
 
 import pandas as pd
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession, Window, functions as F
 
 from parquet_index_spark import collector, predicates as P
 from parquet_index_spark import types as ityp
@@ -597,8 +597,16 @@ def count_files_with_spark(spark: SparkSession, metadata,
     # these files get scanned anyway) ever reach the driver
     per_path = per_path.join(F.broadcast(_manifest_df(spark, metadata)),
                              "path", "inner")
+    # the scan also reads a file that shares a directory with one boundary
+    # file and its name with another (manager._read_by_scan), and counts
+    # it: such a file is left out of the metadata total
+    in_dir = F.max("b").over(Window.partitionBy(
+        F.regexp_extract("path", "^(.*)/", 1)))
+    named = F.max("b").over(Window.partitionBy(
+        F.substring_index("path", "/", -1)))
+    per_path = per_path.withColumn("r", in_dir * named)
     row = per_path.agg(
-        F.sum(F.when(F.col("b") == 0, F.col("fr"))
+        F.sum(F.when((F.col("b") == 0) & (F.col("r") == 0), F.col("fr"))
               .otherwise(F.lit(0))).alias("meta"),
         F.collect_list(F.when(F.col("b") == 1, F.col("path"))).alias("bp")
     ).head()

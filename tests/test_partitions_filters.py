@@ -73,23 +73,17 @@ class TestPartitionedTables:
                              spark.read.parquet(ptable).filter(pred))
 
     def test_whole_partition_collapses_to_directory(self, spark, ctx,
-                                                    tmp_table_dir):
-        """When a whole partition of more files than Spark lists on the
-        driver survives, Spark gets the one directory root, not the file
-        list (scale: short path lists), and reads exactly the fold's
-        survivors."""
-        path = os.path.join(tmp_table_dir, "wide_parts")
-        # 40 tasks each write one file into each of the 4 partitions
-        spark.range(0, 4000, numPartitions=40) \
-            .selectExpr("id AS num", "cast(id % 4 AS int) AS part") \
-            .write.partitionBy("part").parquet(path)
-        ctx.index.create.indexBy("num").parquet(path)
-        t = ctx.index.parquet(path)
+                                                    ptable):
+        """When every file of a partition survives, Spark gets the one
+        directory root, not the file list (scale: short path lists), and
+        reads exactly the fold's survivors."""
+        ctx.index.create.mode("overwrite").indexBy("num").parquet(ptable)
+        t = ctx.index.parquet(ptable)
         df = t.filter("part = 2")
         assert [os.path.basename(r) for r in _scan_roots(df)] == ["part=2"]
         survivors = t._prune(parse_sql_predicate("part = 2"))
-        assert len(survivors) == 40
-        assert _input_files(df, path) == sorted(survivors)
+        assert len(survivors) > 1
+        assert _input_files(df, ptable) == sorted(survivors)
 
     def test_indexing_partition_column_rejected(self, ctx, ptable):
         # ParquetMetastoreSupport.scala:111-117
@@ -258,9 +252,9 @@ class TestEdgeFixtures:
 
 class TestPrunedReadRoute:
     """How a pruned read reaches Spark (``IndexedDataFrame._scan``): the
-    survivors' paths up to Spark's parallel-listing threshold (32), past
-    it their directories plus a file-name glob. No per-file listing job
-    at any survivor count, and exactly the survivors are read."""
+    survivors' directories as roots plus a file-name glob. No per-file
+    listing job at any survivor count; a count reads no file it already
+    counted from metadata."""
 
     @pytest.fixture()
     def flat40(self, spark, tmp_table_dir):
@@ -272,11 +266,31 @@ class TestPrunedReadRoute:
             .write.mode("append").parquet(path)
         return path
 
-    def test_building_pruned_reader_launches_no_job(self, spark, ctx,
-                                                    flat40, monkeypatch):
+    @pytest.fixture()
+    def shared_names(self, spark, tmp_table_dir):
+        """Two Hive partitions written by one 40-task job, so both hold
+        the same 40 file names. Task t writes ids 100t..100t+99: evens
+        into p=0, odds into p=1."""
+        path = os.path.join(tmp_table_dir, "shared_names")
+        spark.range(0, 4000, numPartitions=40) \
+            .selectExpr("id", "cast(id % 2 AS int) AS p") \
+            .write.partitionBy("p").parquet(path)
+        return path
+
+    # p=0: one row of tasks 0..33 and 39 (35 boundary files, the rest
+    # pruned); p=1: task 1's file fully matches, one row of task 39. The
+    # glob of the survivors' names matches task 1's p=0 file, which is
+    # read too, and task 1's p=1 file, which must not be counted twice.
+    SHARED_PRED = (
+        "(p = 0 AND id IN ({})) OR "
+        "(p = 1 AND ((id >= 100 AND id < 200) OR id = 3901))".format(
+            ", ".join(str(100 * k + 2) for k in [*range(34), 39])))
+
+    @staticmethod
+    def _count_scan_jobs(spark, monkeypatch):
+        """Wrap ``_scan`` to record, per call, (number of files, Spark
+        jobs launched while the reader was built)."""
         import parquet_index_spark.manager as mgr
-        ctx.index.create.indexBy("id").parquet(flat40)
-        t = ctx.index.parquet(flat40)
         sc = spark.sparkContext
         built = []
         orig = mgr.IndexedDataFrame._scan
@@ -293,6 +307,13 @@ class TestPrunedReadRoute:
             return df
 
         monkeypatch.setattr(mgr.IndexedDataFrame, "_scan", scan_in_group)
+        return built
+
+    def test_building_pruned_reader_launches_no_job(self, spark, ctx,
+                                                    flat40, monkeypatch):
+        ctx.index.create.indexBy("id").parquet(flat40)
+        t = ctx.index.parquet(flat40)
+        built = self._count_scan_jobs(spark, monkeypatch)
         plain = spark.read.parquet(flat40)
         wide = t.filter("id < 500")
         assert _scan_roots(wide) == [_scan_roots(plain)[0]]
@@ -304,12 +325,9 @@ class TestPrunedReadRoute:
         assert [n for n, _ in built][:2] == [36, 36]
         assert [jobs for _, jobs in built] == [0, 0, 0]
 
-    @pytest.mark.parametrize("plain_survivors", [0, 30])
-    def test_glob_escapes_metacharacters(self, spark, ctx, tmp_table_dir,
-                                         plain_survivors):
+    def test_glob_escapes_metacharacters(self, spark, ctx, tmp_table_dir):
         """Survivors named with ``{ } [ ] , * ? \\`` match only
-        themselves, read by path (6 survivors) or through the directory
-        glob (36): each has a decoy that the unescaped name would match
+        themselves: each has a decoy that the unescaped name would match
         as a glob."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -318,7 +336,6 @@ class TestPrunedReadRoute:
         os.makedirs(path)
         pairs = [("a{1}", "a1"), ("b[2]", "b2"), ("c,3", "c"),
                  ("d*4", "dzz4"), ("e?5", "ex5"), ("f\\6", "f6")]
-        pairs += [(f"plain{i}", f"decoy{i}") for i in range(plain_survivors)]
         names = [n + ".parquet" for pair in pairs for n in pair]
         for i, name in enumerate(names):
             pq.write_table(pa.table({"id": list(range(i * 10, i * 10 + 10))}),
@@ -331,29 +348,32 @@ class TestPrunedReadRoute:
         assert_same_rows(df, spark.read.parquet(path).filter(pred))
         assert _input_files(df, path) == sorted(names[::2])
 
-    def test_shared_names_across_partitions_read_exactly(self, spark, ctx,
-                                                         tmp_table_dir):
-        """One write job gives every partition the same file names. A
-        directory root whose non-survivor shares a survivor's name is
-        replaced by its survivors' paths, so a count reads no file that
-        it already counted from metadata."""
-        path = os.path.join(tmp_table_dir, "shared_names")
-        # task t writes ids 100t..100t+99: evens into p=0, odds into p=1,
-        # under one file name per task
-        spark.range(0, 4000, numPartitions=40) \
-            .selectExpr("id", "cast(id % 2 AS int) AS p") \
-            .write.partitionBy("p").parquet(path)
-        ctx.index.create.indexBy("id").parquet(path)
-        t = ctx.index.parquet(path)
-        # p=0: one row of tasks 0..33 and 39 (35 boundary files, the rest
-        # pruned); p=1: task 1's file fully matches, one row of task 39
-        hits = ", ".join(str(100 * k + 2) for k in [*range(34), 39])
-        pred = (f"(p = 0 AND id IN ({hits})) OR "
-                "(p = 1 AND ((id >= 100 AND id < 200) OR id = 3901))")
-        plain = spark.read.parquet(path).filter(pred)
-        assert t.count_where(pred) == plain.count() == 86
-        assert ctx.index.last_prune_info.selected_files == 36
-        df = t.filter(pred)
+    @pytest.mark.parametrize("spark_fold", [False, True])
+    def test_shared_names_count_once(self, spark, ctx, shared_names,
+                                     monkeypatch, spark_fold):
+        """A count over partitions that share file names reads a fully
+        matching file through the name glob, and counts it once, from
+        either fold; building the readers launches no Spark job."""
+        from parquet_index_spark.pruning_spark import SPARK_PRUNING_THRESHOLD
+        ctx.index.create.indexBy("id").parquet(shared_names)
+        t = ctx.index.parquet(shared_names)
+        pred = self.SHARED_PRED
+        plain = spark.read.parquet(shared_names).filter(pred)
+        built = self._count_scan_jobs(spark, monkeypatch)
+        if spark_fold:
+            spark.conf.set(SPARK_PRUNING_THRESHOLD, "0")
+        try:
+            assert t.count_where(pred) == plain.count() == 86
+            assert ctx.index.last_prune_info.selected_files == 36
+            df = t.filter(pred)
+            survivors = t._prune(parse_sql_predicate(pred))
+        finally:
+            spark.conf.unset(SPARK_PRUNING_THRESHOLD)
         assert_same_rows(df, plain)
-        assert _input_files(df, path) == sorted(
-            t._prune(parse_sql_predicate(pred)))
+        assert sorted(r.split(os.sep)[-1] for r in _scan_roots(df)) \
+            == ["p=0", "p=1"]
+        read = _input_files(df, shared_names)
+        assert set(survivors) < set(read)
+        assert read == sorted(t._read_by_scan(survivors))
+        assert [n for n, _ in built] == [36, 37]
+        assert [jobs for _, jobs in built] == [0, 0]
