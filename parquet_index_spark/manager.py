@@ -503,8 +503,8 @@ class IndexedDataFrame:
                 full = PR.evaluate_full(ast, ctx, tz)
             # statless-but-maybe-non-null blocks hide their extremes from
             # metadata even when the predicate proves them full
-            statless = ~stats.has & (stats.nulls != ctx.rows)
-            scan_block = (may & ~full) | (full & statless)
+            scan_block = (may & ~full) | (
+                full & PR.statless(stats.has, stats.nulls, ctx.rows))
             file_scan = np.zeros(len(ctx.file_paths), dtype=bool)
             file_scan[ctx.file_ids[scan_block]] = True
             meta_blocks = full & stats.has & ~file_scan[ctx.file_ids]

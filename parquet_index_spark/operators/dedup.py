@@ -648,11 +648,17 @@ def dedup_against_corpus(df_new: DataFrame, corpus: DataFrame,
     # (4 fewer jobs, and at scale: two fewer full passes over the
     # corpus and one fewer over the batch). Result identical — both
     # shapes are exactly ``df_new ANTI JOIN corpus ON key`` (NULL keys
-    # never equal, always kept). The routing count is the same sizing
-    # count the bloom path pays anyway; callers passing
-    # ``expected_corpus_items`` route on their (over)estimate, which
-    # can only send a small corpus down the (sound) bloom path.
-    if 0 <= n <= max_broadcast_keys:
+    # never equal, always kept). Without a hint the routing count is
+    # the same sizing count the bloom path pays anyway. A hint is never
+    # trusted alone: one that underestimates would broadcast the whole
+    # distinct key set, so a hint within the budget is confirmed by a
+    # bounded ``limit(max_broadcast_keys + 1)`` count. A corpus the
+    # count finds larger takes the (sound) bloom path, its filter still
+    # sized from the hint.
+    if n <= max_broadcast_keys and (
+            not expected_corpus_items
+            or corpus.limit(max_broadcast_keys + 1).count()
+            <= max_broadcast_keys):
         return (df_new.join(
             F.broadcast(corpus.select(F.col(key)).distinct()),
             [key], "left_anti")

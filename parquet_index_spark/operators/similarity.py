@@ -1212,16 +1212,18 @@ def semantic_contamination(train_df: DataFrame, eval_df: DataFrame,
     # Python boundary once instead of once per candidate pair, and only
     # (eval id, dot, norms) rows above the conservative margin come
     # back; the exact rounded-threshold decision stays a Spark
-    # expression below. The train side needs a dummy id column for the
-    # shared kernel; it is never emitted.
+    # expression below. The shared kernel takes an id on both sides;
+    # train ids are never read (pairs_only_y_lt_x=False), so the train
+    # side projects a typed NULL and need not carry ``id_col`` at all.
+    id_type = dict(eval_df.dtypes)[id_col]
     tr = (ivf_assign(train_df, centroids, id_col, vec_col)
           .filter(F.col("cluster_id").isNotNull())
           .withColumn("__v", _as_double(F.col(vec_col)))
-          .select("cluster_id", F.col(id_col).alias("__id"), "__v"))
+          .select("cluster_id", F.lit(None).cast(id_type).alias("__id"),
+                  "__v"))
     e = (ev.filter(F.col("cluster_id").isNotNull())
          .withColumn("__v", _as_double(F.col(vec_col)))
          .select("cluster_id", F.col(id_col).alias("__id"), "__v"))
-    id_type = dict(eval_df.dtypes)[id_col]
     cand = _cross_gram_candidates(e, tr, ["cluster_id"], id_type,
                                   threshold, pairs_only_y_lt_x=False)
     hits = (cand

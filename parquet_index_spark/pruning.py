@@ -22,10 +22,13 @@ Reproduces the semantics of the reference's fold algebra
 - predicates on unindexed columns and unsupported shapes fold to
   "scan" (ibid:128-136).
 
-Unlike the reference this fold is *vectorized*: one numpy pass over all
-blocks of all files instead of a per-file future pool
+The lattice is written once (`_fold`) and runs on two backends. Here,
+`_BlockOps` answers with numpy bool arrays: one *vectorized* pass over all
+blocks of all files instead of the reference's per-file future pool
 (ParquetIndex.scala:158-185) — at 100 TB the metadata is millions of rows
 and per-file Python loops would dominate query latency.
+`pruning_spark._ColumnOps` answers with Spark Columns over the pivoted
+stats parquet, for metadata that outgrows the driver.
 
 Negation is handled soundly by push-down (see predicates.push_not_down) —
 deliberate divergence from ParquetIndexFilters.scala:118-123.
@@ -39,7 +42,6 @@ import numpy as np
 
 from parquet_index_spark import predicates as P
 from parquet_index_spark import types as ityp
-from parquet_index_spark.statistics import MembershipFilter
 
 
 class ColumnBlockStats:
@@ -55,6 +57,12 @@ class ColumnBlockStats:
         self.nulls = nulls      # int64[n]: null count, -1 => unknown
         self.min_l = min_l      # int64[n] (long-space) or None for strings
         self.max_l = max_l
+        if min_s is not None:
+            # statless blocks' string bounds fill with "" once, so every
+            # comparison runs in numpy's C loop; `has` masks those
+            # blocks in every rule of the fold
+            min_s = np.where(np.equal(min_s, None), "", min_s)
+            max_s = np.where(np.equal(max_s, None), "", max_s)
         self.min_s = min_s      # object[n] of str or None for numerics
         self.max_s = max_s
 
@@ -93,14 +101,6 @@ class BlockStatsContext:
         return self._membership_cache[column]
 
 
-def _true(ctx: BlockStatsContext) -> np.ndarray:
-    return np.ones(ctx.n, dtype=bool)
-
-
-def _false(ctx: BlockStatsContext) -> np.ndarray:
-    return np.zeros(ctx.n, dtype=bool)
-
-
 def _norm_literal(value, kind: str, tz: str = None):
     """Literal → stat space; None on un-coercible literal (=> scan).
 
@@ -113,56 +113,174 @@ def _norm_literal(value, kind: str, tz: str = None):
         return None
 
 
-def _cmp_arrays(stats: ColumnBlockStats, v, op: str) -> np.ndarray:
-    """Elementwise op between a block-stats bound and a normalized literal."""
-    if stats.kind == ityp.STRING:
-        src = stats.min_s if op in ("min_lt", "min_le") else stats.max_s
-        # object array with None where has_stats is False; fill then compare
-        # elementwise in numpy's C loop (~10x a python listcomp at 1M blocks)
-        filled = np.where(np.equal(src, None), "", src)
-        if op == "min_lt":
-            return (filled < v).astype(bool, copy=False)
-        if op == "min_le":
-            return (filled <= v).astype(bool, copy=False)
-        if op == "max_gt":
-            return (filled > v).astype(bool, copy=False)
-        return (filled >= v).astype(bool, copy=False)
-    if op == "min_lt":
-        return stats.min_l < v
-    if op == "min_le":
-        return stats.min_l <= v
-    if op == "max_gt":
-        return stats.max_l > v
-    return stats.max_l >= v
+def statless(has, nulls, rows):
+    """Blocks with no min/max that are NOT known all-null: footer-path
+    files written with statistics disabled (nulls == -1), or footers
+    carrying a null count but no min/max (0 <= nulls < rows). They might
+    hold any value: pruning them would drop real rows."""
+    return ~has & (nulls != rows)
 
 
-def _statless_maybe(stats: ColumnBlockStats, ctx: "BlockStatsContext") -> np.ndarray:
-    """Blocks with no min/max that are NOT known all-null: footer-path files
-    written with statistics disabled (nulls == -1), or footers carrying a
-    null count but no min/max (0 <= nulls < rows). Pruning these would drop
-    real rows; every comparison keeps them."""
-    return ~stats.has & (stats.nulls != ctx.rows)
+# Each comparison as its (may-match, full-match) test over a block's
+# [mn, mx] bounds and the normalized literal v. `_fold` wraps them in the
+# two guards every comparison shares: may-match also keeps `statless`
+# blocks; full-match needs `has & (nulls == 0)`, as any null row fails
+# every comparison.
+_RULES = {
+    P.Eq: (lambda mn, mx, v: (mn <= v) & (mx >= v),
+           lambda mn, mx, v: (mn == v) & (mx == v)),
+    # `c != v` might match unless min == max == v
+    P.Ne: (lambda mn, mx, v: ~((mn == v) & (mx == v)),
+           lambda mn, mx, v: (mx < v) | (mn > v)),
+    P.Gt: (lambda mn, mx, v: mx > v, lambda mn, mx, v: mn > v),
+    P.Ge: (lambda mn, mx, v: mx >= v, lambda mn, mx, v: mn >= v),
+    P.Lt: (lambda mn, mx, v: mn < v, lambda mn, mx, v: mx < v),
+    P.Le: (lambda mn, mx, v: mn <= v, lambda mn, mx, v: mx <= v),
+}
 
 
-def _contains(stats: ColumnBlockStats, ctx: "BlockStatsContext", v) -> np.ndarray:
-    """Null-tolerant contains: (has_stats && min <= v <= max), or no stats
-    at all (ColumnStatistics.scala:97-107; statless blocks keep)."""
-    return (stats.has & _cmp_arrays(stats, v, "min_le")
-            & _cmp_arrays(stats, v, "max_ge")) | _statless_maybe(stats, ctx)
+def _fold(pred: P.Predicate, ops, tz: str, full: bool):
+    """The fold lattice over a pushed-down predicate: the may-match mask
+    ("some row of the block might match") when ``full`` is False, the
+    full-match mask ("every row matches") when it is True. Where the
+    stats cannot decide, may-match answers True and full-match False.
+
+    ``ops`` is the backend (`_BlockOps`, `pruning_spark._ColumnOps`); the
+    masks it returns support ``& | ~`` and comparisons."""
+    if isinstance(pred, (P.And, P.Or)):
+        conj = isinstance(pred, P.And)
+        out = ops.const(conj)
+        for c in pred.children:
+            # full-match Or: a block whose rows satisfy different children
+            # is not provable from min/max and stays partial
+            if conj:
+                out &= _fold(c, ops, tz, full)
+            else:
+                out |= _fold(c, ops, tz, full)
+            if ops.settled(out, not conj):
+                break
+        return out
+    if isinstance(pred, P.Trivial):
+        return ops.const(pred.value)
+    if isinstance(pred, (P.TermMatch, P.TermPrefixMatch)):
+        # term index: per-block membership over the column's distinct
+        # tokens (a prefix probe needs a string dict). A filter proves
+        # absence, never that EVERY row holds the term. Blank terms are
+        # not stored (the residual's split can emit "" at trim edges).
+        term = pred.term if isinstance(pred, P.TermMatch) else pred.prefix
+        tcol = next((pred.column + s
+                     for s in (P.TERMS2_SUFFIX, P.TERMS_SUFFIX)
+                     if ops.kind(pred.column + s) is not None), None)
+        if full or tcol is None or not term.strip():
+            return ops.const(not full)
+        if isinstance(pred, P.TermMatch):
+            return ops.membership(tcol, ityp.STRING, ops.const(True), [term])
+        return ops.prefix_membership(tcol, ops.const(True), term)
+
+    # unindexed column (ParquetIndexFilters.scala:37-39), Unsupported, or
+    # the Not that push_not_down leaves only above Unsupported => scan
+    kind = ops.kind(getattr(pred, "column", None))
+    if kind is None:
+        return ops.const(not full)
+    if isinstance(pred, P.InBloom):
+        # reverse membership probe (dpp_join's big-dim tier): refute a
+        # block when its exact DICT values all miss the dim-key bloom
+        return ops.const(False) if full else \
+            ops.in_bloom(pred.column, kind, pred.blob)
+    has, nulls, rows, mn, mx = ops.stats(pred.column)
+    if isinstance(pred, P.IsNull):
+        # nulls == -1 (unknown) never equals rows >= 0
+        return rows == nulls if full else (nulls > 0) | (nulls == -1)
+    if isinstance(pred, P.IsNotNull):
+        return nulls == 0 if full else (rows > 0) & (rows > nulls)
+    if isinstance(pred, P.StartsWith):
+        # beyond-reference: strings with prefix p form the interval
+        # [p, prefix_upper_bound(p)) under the order min/max are stored
+        # in (sound vs truncated footer bounds — truncation only widens
+        # [min, max]); a string dict with no member starting with p
+        # refutes the block
+        if kind != ityp.STRING:
+            return ops.const(not full)
+        p, hi = pred.prefix, P.prefix_upper_bound(pred.prefix)
+        rng = P.Ge(pred.column, p) if hi is None else \
+            P.And((P.Ge(pred.column, p), P.Lt(pred.column, hi)))
+        out = _fold(rng, ops, tz, full)
+        return out if full or not p else \
+            ops.prefix_membership(pred.column, out, p)
+
+    if isinstance(pred, P.In):
+        op, values = P.Eq, pred.values
+    elif type(pred) in _RULES:
+        op, values = type(pred), (pred.value,)
+    else:
+        return ops.const(not full)
+    vs = [_norm_literal(x, kind, tz) for x in values]
+    if not full and any(v is None for v in vs):
+        return ops.const(True)  # an un-coercible literal => scan
+    vs = [v for v in vs if v is not None]
+    if not vs:
+        return ops.const(False)
+    rule = _RULES[op][full]
+    hit = rule(mn, mx, vs[0])
+    for v in vs[1:]:
+        hit |= rule(mn, mx, v)
+    if full:
+        return ops.known(has & (nulls == 0) & hit)
+    out = ops.known(has & hit) | statless(has, nulls, rows)
+    # Eq/In consult the membership filter after min/max (ibid:54-75)
+    return ops.membership(pred.column, kind, out, vs) if op is P.Eq else out
 
 
-def _apply_membership(ctx: BlockStatsContext, column: str, kind: str,
-                      result: np.ndarray, values: list) -> np.ndarray:
-    """Refine an Eq/In range-match with membership filters where available.
+class _BlockOps:
+    """The numpy backend of `_fold`: bool[n_blocks] over a context."""
 
-    Fully vectorized (ColumnMembership.refine): numpy column ops over the
-    packed dict/bloom arrays — no per-block Python in the query path."""
-    if not result.any():
-        return result
-    memb = ctx.membership(column)
-    if memb is None:
-        return result
-    return memb.refine(result, values, kind)
+    def __init__(self, ctx: BlockStatsContext):
+        self.ctx = ctx
+
+    def const(self, value: bool) -> np.ndarray:
+        return np.full(self.ctx.n, value, dtype=bool)
+
+    @staticmethod
+    def settled(out: np.ndarray, value: bool) -> bool:
+        return bool(out.all()) if value else not out.any()
+
+    def kind(self, column: str) -> Optional[str]:
+        return getattr(self.ctx.columns.get(column), "kind", None)
+
+    def stats(self, column: str):
+        s = self.ctx.columns[column]
+        if s.kind == ityp.STRING:
+            return s.has, s.nulls, self.ctx.rows, s.min_s, s.max_s
+        return s.has, s.nulls, self.ctx.rows, s.min_l, s.max_l
+
+    @staticmethod
+    def known(mask: np.ndarray) -> np.ndarray:
+        return mask
+
+    def membership(self, column: str, kind: str, out: np.ndarray,
+                   values: list) -> np.ndarray:
+        """Refine a may-match with membership filters where available —
+        numpy column ops over the packed dict/bloom arrays
+        (ColumnMembership.refine), no per-block Python."""
+        memb = self.ctx.membership(column) if out.any() else None
+        return out if memb is None else memb.refine(out, values, kind)
+
+    def prefix_membership(self, column: str, out: np.ndarray,
+                          prefix: str) -> np.ndarray:
+        memb = self.ctx.membership(column) if out.any() else None
+        return out if memb is None else memb.refine_prefix(out, prefix)
+
+    def in_bloom(self, column: str, kind: str, blob: bytes) -> np.ndarray:
+        """Blocks without dict evidence, or an unreadable blob, scan."""
+        from parquet_index_spark.statistics import BloomFilter
+        memb = self.ctx.membership(column)
+        if memb is None:
+            return self.const(True)
+        try:
+            probe = BloomFilter.from_bytes(blob)
+        except Exception:  # noqa: BLE001 — unknown blob => scan (sound)
+            return self.const(True)
+        return memb.refine_against_filter(self.const(True), probe, kind)
 
 
 def evaluate(pred: P.Predicate, ctx: BlockStatsContext,
@@ -170,148 +288,7 @@ def evaluate(pred: P.Predicate, ctx: BlockStatsContext,
     """Fold predicate → bool[n_blocks] "block might contain a matching row".
 
     ``tz``: spark.sql.session.timeZone, for instant-timestamp literals."""
-    pred = P.push_not_down(pred)
-    return _eval(pred, ctx, tz)
-
-
-def _eval(pred: P.Predicate, ctx: BlockStatsContext, tz: str = None) -> np.ndarray:
-    if isinstance(pred, P.And):
-        out = _true(ctx)
-        for c in pred.children:
-            out &= _eval(c, ctx, tz)
-            if not out.any():
-                break
-        return out
-    if isinstance(pred, P.Or):
-        out = _false(ctx)
-        for c in pred.children:
-            out |= _eval(c, ctx, tz)
-            if out.all():
-                break
-        return out
-    if isinstance(pred, P.Trivial):
-        return _true(ctx) if pred.value else _false(ctx)
-    if isinstance(pred, P.Unsupported):
-        return _true(ctx)
-    if isinstance(pred, P.Not):
-        # push_not_down leaves Not only above Unsupported leaves
-        return _true(ctx)
-    if isinstance(pred, P.TermMatch):
-        # term index: per-block membership over the column's distinct
-        # tokens; blocks (or tables) without a term filter soundly scan.
-        # Empty/whitespace terms are not stored in the filter (the
-        # residual's split can emit "" tokens at trim edges) => may-match
-        if not pred.term.strip():
-            return _true(ctx)
-        for suf in (P.TERMS2_SUFFIX, P.TERMS_SUFFIX):
-            if pred.column + suf in ctx.columns:
-                return _apply_membership(ctx, pred.column + suf,
-                                         ityp.STRING, _true(ctx),
-                                         [pred.term])
-        return _true(ctx)
-    if isinstance(pred, P.TermPrefixMatch):
-        # token-prefix probe: only DICT term filters carry prefix
-        # evidence (refine_prefix); bloom blocks and tables without a
-        # term index soundly scan
-        if not pred.prefix.strip():
-            return _true(ctx)
-        for suf in (P.TERMS2_SUFFIX, P.TERMS_SUFFIX):
-            if pred.column + suf in ctx.columns:
-                memb = ctx.membership(pred.column + suf)
-                if memb is None:
-                    return _true(ctx)
-                return memb.refine_prefix(_true(ctx), pred.prefix)
-        return _true(ctx)
-
-    stats = ctx.columns.get(pred.column)
-    if stats is None:
-        return _true(ctx)  # unindexed column => scan (ParquetIndexFilters.scala:37-39)
-    kind = stats.kind
-
-    if isinstance(pred, P.InBloom):
-        # reverse membership probe (dpp_join's big-dim tier): refute a
-        # block when its exact DICT values all miss the dim-key bloom;
-        # blocks without dict evidence soundly scan
-        memb = ctx.membership(pred.column)
-        if memb is None:
-            return _true(ctx)
-        from parquet_index_spark.statistics import BloomFilter
-        try:
-            probe = BloomFilter.from_bytes(pred.blob)
-        except Exception:  # noqa: BLE001 — unknown blob => scan (sound)
-            return _true(ctx)
-        return memb.refine_against_filter(_true(ctx), probe, kind)
-    if isinstance(pred, P.Eq):
-        v = _norm_literal(pred.value, kind, tz)
-        if v is None:
-            return _true(ctx)
-        out = _contains(stats, ctx, v)
-        return _apply_membership(ctx, pred.column, kind, out, [v])
-    if isinstance(pred, P.In):
-        vs = [nv for nv in (_norm_literal(x, kind, tz) for x in pred.values) if nv is not None]
-        if len(vs) != len(pred.values):
-            return _true(ctx)  # some literal un-coercible => conservative
-        if not vs:
-            return _false(ctx)
-        out = _false(ctx)
-        for v in vs:
-            out |= _contains(stats, ctx, v)
-        return _apply_membership(ctx, pred.column, kind, out, vs)
-    if isinstance(pred, P.Ne):
-        v = _norm_literal(pred.value, kind, tz)
-        if v is None:
-            return _true(ctx)
-        # a block matches `c != v` iff it has a non-null value different
-        # from v: not(min == max == v)
-        if kind == ityp.STRING:
-            min_eq = np.equal(stats.min_s, v)
-            max_eq = np.equal(stats.max_s, v)
-        else:
-            min_eq = stats.min_l == v
-            max_eq = stats.max_l == v
-        return (stats.has & ~(min_eq & max_eq)) | _statless_maybe(stats, ctx)
-    if isinstance(pred, P.IsNull):
-        return (stats.nulls > 0) | (stats.nulls == -1)
-    if isinstance(pred, P.IsNotNull):
-        known = stats.nulls >= 0
-        return np.where(known, ctx.rows - np.maximum(stats.nulls, 0) > 0, ctx.rows > 0)
-    if isinstance(pred, P.Gt):
-        v = _norm_literal(pred.value, kind, tz)
-        return _true(ctx) if v is None else \
-            (stats.has & _cmp_arrays(stats, v, "max_gt")) | _statless_maybe(stats, ctx)
-    if isinstance(pred, P.Ge):
-        v = _norm_literal(pred.value, kind, tz)
-        return _true(ctx) if v is None else \
-            (stats.has & _cmp_arrays(stats, v, "max_ge")) | _statless_maybe(stats, ctx)
-    if isinstance(pred, P.Lt):
-        v = _norm_literal(pred.value, kind, tz)
-        return _true(ctx) if v is None else \
-            (stats.has & _cmp_arrays(stats, v, "min_lt")) | _statless_maybe(stats, ctx)
-    if isinstance(pred, P.Le):
-        v = _norm_literal(pred.value, kind, tz)
-        return _true(ctx) if v is None else \
-            (stats.has & _cmp_arrays(stats, v, "min_le")) | _statless_maybe(stats, ctx)
-    if isinstance(pred, P.StartsWith):
-        # beyond-reference: strings with prefix p form the interval
-        # [p, prefix_upper_bound(p)) under the same lexicographic order
-        # min/max are stored in, so the may-match test is interval
-        # intersection (sound vs truncated footer bounds — truncation
-        # only widens [min, max]). Dict filters refine: a stored
-        # distinct set with no member starting with p refutes the block.
-        if kind != ityp.STRING:
-            return _true(ctx)  # prefix probe on non-string stats => scan
-        p = pred.prefix
-        hi = P.prefix_upper_bound(p)
-        out = stats.has & _cmp_arrays(stats, p, "max_ge")
-        if hi is not None:
-            out &= _cmp_arrays(stats, hi, "min_lt")
-        out = out | _statless_maybe(stats, ctx)
-        if p and out.any():
-            memb = ctx.membership(pred.column)
-            if memb is not None:
-                out = memb.refine_prefix(out, p)
-        return out
-    return _true(ctx)
+    return _fold(P.push_not_down(pred), _BlockOps(ctx), tz, False)
 
 
 def prune_files(pred: P.Predicate, ctx: BlockStatsContext,
@@ -325,52 +302,17 @@ def prune_files(pred: P.Predicate, ctx: BlockStatsContext,
     return [p for p, m in zip(ctx.file_paths, matched) if m]
 
 
-# ---------------------------------------------------------------------------
-# Full-match fold: "EVERY row of this block satisfies the predicate"
-# ---------------------------------------------------------------------------
-# The dual of `evaluate` (which answers "might ANY row match"). Where the
-# may-match fold must err toward True, this one must err toward False: a
-# block is full-match only when the stored stats PROVE the predicate for
-# all rows. min/max in the metastore are exact (footer values, or data-
-# recomputed where footers are distrusted — collector._footer_str_trusted),
-# so min >= v proves `col > v-1` etc. Any null row fails every comparison
-# predicate, hence comparisons also require a known zero null count.
+# The full-match fold is the dual of `evaluate` (which answers "might ANY
+# row match"). Where the may-match fold must err toward True, this one
+# must err toward False: a block is full-match only when the stored stats
+# PROVE the predicate for all rows. min/max in the metastore are exact
+# (footer values, or data-recomputed where footers are distrusted —
+# collector._footer_str_trusted), so min >= v proves `col > v-1` etc.
 #
 # This enables metadata-only aggregation (IndexedDataFrame.count_where):
 # full blocks contribute their exact footer row counts with no data IO;
 # only blocks in the PARTIAL band (may-match but not full-match) force a
 # scan of their file. No reference analog — the reference only prunes.
-
-
-def _cmp_full(stats: ColumnBlockStats, v, op: str) -> np.ndarray:
-    """Elementwise bound comparisons needed only by the full-match fold."""
-    if stats.kind == ityp.STRING:
-        src = stats.min_s if op.startswith("min") else stats.max_s
-        filled = np.where(np.equal(src, None), "", src)
-        if op == "min_gt":
-            return (filled > v).astype(bool, copy=False)
-        if op == "min_ge":
-            return (filled >= v).astype(bool, copy=False)
-        if op == "max_lt":
-            return (filled < v).astype(bool, copy=False)
-        if op == "max_le":
-            return (filled <= v).astype(bool, copy=False)
-        if op == "min_eq":
-            return np.equal(stats.min_s, v).astype(bool, copy=False)
-        return np.equal(stats.max_s, v).astype(bool, copy=False)
-    if op == "min_gt":
-        return stats.min_l > v
-    if op == "min_ge":
-        return stats.min_l >= v
-    if op == "max_lt":
-        return stats.max_l < v
-    if op == "max_le":
-        return stats.max_l <= v
-    if op == "min_eq":
-        return stats.min_l == v
-    return stats.max_l == v
-
-
 def evaluate_full(pred: P.Predicate, ctx: BlockStatsContext,
                   tz: str = None) -> np.ndarray:
     """Fold predicate → bool[n_blocks] "every row satisfies the predicate".
@@ -378,94 +320,4 @@ def evaluate_full(pred: P.Predicate, ctx: BlockStatsContext,
     Sound in the downward direction: False whenever the stats cannot
     prove the predicate (unindexed column, unsupported shape, unknown
     null count, statless block)."""
-    pred = P.push_not_down(pred)
-    return _eval_full(pred, ctx, tz)
-
-
-def _eval_full(pred: P.Predicate, ctx: BlockStatsContext,
-               tz: str = None) -> np.ndarray:
-    if isinstance(pred, P.And):
-        out = _true(ctx)
-        for c in pred.children:
-            out &= _eval_full(c, ctx, tz)
-            if not out.any():
-                break
-        return out
-    if isinstance(pred, P.Or):
-        # every row satisfies (a OR b) if every row satisfies a, or every
-        # row satisfies b; a mixed block (some rows via a, others via b)
-        # is NOT provable from min/max alone and stays partial
-        out = _false(ctx)
-        for c in pred.children:
-            out |= _eval_full(c, ctx, tz)
-            if out.all():
-                break
-        return out
-    if isinstance(pred, P.Trivial):
-        return _true(ctx) if pred.value else _false(ctx)
-    if isinstance(pred, (P.Unsupported, P.Not, P.TermMatch,
-                         P.TermPrefixMatch)):
-        # a membership filter can prove absence-of-evidence, never that
-        # EVERY row contains the term
-        return _false(ctx)
-
-    stats = ctx.columns.get(getattr(pred, "column", None))
-    if stats is None:
-        return _false(ctx)
-    kind = stats.kind
-
-    if isinstance(pred, P.IsNull):
-        # all-null blocks may legitimately lack min/max (has=False)
-        return ctx.rows == stats.nulls  # nulls == -1 never equals rows >= 0
-    if isinstance(pred, P.IsNotNull):
-        return stats.nulls == 0
-
-    # every comparison below fails on a null row => require known 0 nulls
-    nn0 = stats.has & (stats.nulls == 0)
-    if not nn0.any():
-        return _false(ctx)
-
-    if isinstance(pred, P.Eq):
-        v = _norm_literal(pred.value, kind, tz)
-        if v is None:
-            return _false(ctx)
-        # constant block: min == max == v means every (non-null) row == v
-        return nn0 & _cmp_full(stats, v, "min_eq") & _cmp_full(stats, v, "max_eq")
-    if isinstance(pred, P.In):
-        vs = [nv for nv in (_norm_literal(x, kind, tz) for x in pred.values)
-              if nv is not None]
-        if not vs:
-            return _false(ctx)
-        out = _false(ctx)
-        for v in vs:
-            out |= _cmp_full(stats, v, "min_eq") & _cmp_full(stats, v, "max_eq")
-        return nn0 & out
-    if isinstance(pred, P.Ne):
-        v = _norm_literal(pred.value, kind, tz)
-        if v is None:
-            return _false(ctx)
-        return nn0 & (_cmp_full(stats, v, "max_lt")
-                      | _cmp_full(stats, v, "min_gt"))
-    if isinstance(pred, P.Gt):
-        v = _norm_literal(pred.value, kind, tz)
-        return _false(ctx) if v is None else nn0 & _cmp_full(stats, v, "min_gt")
-    if isinstance(pred, P.Ge):
-        v = _norm_literal(pred.value, kind, tz)
-        return _false(ctx) if v is None else nn0 & _cmp_full(stats, v, "min_ge")
-    if isinstance(pred, P.Lt):
-        v = _norm_literal(pred.value, kind, tz)
-        return _false(ctx) if v is None else nn0 & _cmp_full(stats, v, "max_lt")
-    if isinstance(pred, P.Le):
-        v = _norm_literal(pred.value, kind, tz)
-        return _false(ctx) if v is None else nn0 & _cmp_full(stats, v, "max_le")
-    if isinstance(pred, P.StartsWith):
-        # every row has the prefix iff the whole [min, max] range sits
-        # inside [p, prefix_upper_bound(p)) — and no row is null
-        if kind != ityp.STRING:
-            return _false(ctx)
-        hi = P.prefix_upper_bound(pred.prefix)
-        out = nn0 & _cmp_full(stats, pred.prefix, "min_ge")
-        if hi is not None:
-            out &= _cmp_full(stats, hi, "max_lt")
-        return out
-    return _false(ctx)
+    return _fold(P.push_not_down(pred), _BlockOps(ctx), tz, True)

@@ -9,7 +9,8 @@ fold as a Spark aggregation over the stats *parquet* directly:
     stats (long format, one row per file x block x column)
       -> conditional-aggregation pivot per (path, block) over the
          referenced columns only
-      -> boolean fold expression (same boundary semantics)
+      -> pruning._fold over `_ColumnOps`: the lattice both folds share,
+         answered with Columns instead of bool arrays
       -> bool_or per path -> surviving file list
 
 Membership (dict/bloom/bitmap) refinement applies here too (round-2): dict
@@ -33,6 +34,7 @@ from pyspark.sql import SparkSession, Window, functions as F
 
 from parquet_index_spark import collector, predicates as P
 from parquet_index_spark import types as ityp
+from parquet_index_spark.pruning import _fold, statless
 
 SPARK_PRUNING_THRESHOLD = "spark.sql.index.pruning.sparkThreshold"
 DEFAULT_THRESHOLD = 5_000_000
@@ -190,58 +192,84 @@ def _dict_vs_filter_probe(blob: bytes):
     return probe
 
 
-def _membership_ok(col: str, kind: str, values: list) -> F.Column:
-    """Dict/bloom refinement for Eq/In over already-normalized values.
+class _ColumnOps:
+    """The Spark backend of `pruning._fold`: boolean Columns over the
+    pivoted stats (`_pivot_stats`, `_prepare_pivot`). Membership probes
+    apply to ``memb_cols`` only — the columns whose pivoted frame carries
+    __dict_l/__dict_s/__bloom; partition pseudo-columns don't."""
 
-    dict: arrays_overlap against the literal array (whole-stage codegen);
-    bloom: pandas-UDF probe; no filter: pass (sound)."""
-    int_vals = [v for v in values if not isinstance(v, str)]
-    str_vals = [v for v in values if isinstance(v, str)]
-    dl, ds = F.col(f"{col}__dict_l"), F.col(f"{col}__dict_s")
-    bloom = F.col(f"{col}__bloom")
-    has_dl = dl.isNotNull() & (F.size(dl) > 0)
-    has_ds = ds.isNotNull() & (F.size(ds) > 0)
-    dl_ok = F.arrays_overlap(
-        dl, F.array(*[F.lit(int(v)) for v in int_vals]).cast("array<bigint>")) \
-        if int_vals else F.lit(False)
-    ds_ok = F.arrays_overlap(
-        ds, F.array(*[F.lit(v) for v in str_vals])) if str_vals else F.lit(False)
-    from parquet_index_spark.statistics import hash_pair_for
-    pairs = [hash_pair_for(v, kind) for v in values]
-    bloom_ok = _bloom_any_probe(pairs, int_vals)(bloom)
-    return (F.when(has_dl, dl_ok)
-            .when(has_ds, ds_ok)
-            .when(bloom.isNotNull(), bloom_ok)
-            .otherwise(F.lit(True)))
+    def __init__(self, kinds: dict, memb_cols: frozenset = frozenset()):
+        self.kinds = kinds
+        self.memb_cols = memb_cols
 
+    @staticmethod
+    def const(value: bool) -> F.Column:
+        return F.lit(bool(value))
 
-def _leaf(col: str, kind: str, op: str, value, tz: str = None) -> F.Column:
-    """Boolean Column for one comparison leaf over the pivoted stats."""
-    try:
-        v = ityp.literal_to_stat_value(value, kind, tz)
-    except (TypeError, ValueError, KeyError):
-        return F.lit(True)
-    if v is None:
-        return F.lit(True)
-    has = F.coalesce(F.col(f"{col}__has"), F.lit(False))
-    # statless-but-maybe-nonnull blocks keep (numpy fold's _statless_maybe):
-    # no min/max AND not known all-null => pruning would be unsound
-    nulls = F.coalesce(F.col(f"{col}__nulls"), F.lit(-1))
-    statless = ~has & (nulls != F.col("__rows"))
-    if kind == ityp.STRING:
-        mn, mx = F.col(f"{col}__min_s"), F.col(f"{col}__max_s")
-    else:
-        mn, mx = F.col(f"{col}__min_l"), F.col(f"{col}__max_l")
-    lit = F.lit(v)
-    table = {
-        "eq": has & (mn <= lit) & (lit <= mx),
-        "ne": has & ~((mn == lit) & (mx == lit)),
-        "gt": has & (mx > lit),
-        "ge": has & (mx >= lit),
-        "lt": has & (mn < lit),
-        "le": has & (mn <= lit),
-    }
-    return F.coalesce(table[op], F.lit(False)) | statless
+    @staticmethod
+    def settled(out: F.Column, value: bool) -> bool:
+        return False  # a Column's value is known only inside the job
+
+    def kind(self, column: str):
+        return self.kinds.get(column)
+
+    def stats(self, column: str):
+        sfx = "_s" if self.kinds[column] == ityp.STRING else "_l"
+        return (F.coalesce(F.col(f"{column}__has"), F.lit(False)),
+                F.coalesce(F.col(f"{column}__nulls"), F.lit(-1)),
+                F.col("__rows"),
+                F.col(f"{column}__min{sfx}"), F.col(f"{column}__max{sfx}"))
+
+    @staticmethod
+    def known(mask: F.Column) -> F.Column:
+        # a NULL comparison proves nothing either way
+        return F.coalesce(mask, F.lit(False))
+
+    def membership(self, column: str, kind: str, out: F.Column,
+                   values: list) -> F.Column:
+        """Dict/bloom refinement over already-normalized values.
+
+        dict: arrays_overlap against the literal array (whole-stage
+        codegen); bloom: pandas-UDF probe; no filter: pass (sound)."""
+        if column not in self.memb_cols:
+            return out
+        int_vals = [v for v in values if not isinstance(v, str)]
+        str_vals = [v for v in values if isinstance(v, str)]
+        dl, ds = F.col(f"{column}__dict_l"), F.col(f"{column}__dict_s")
+        bloom = F.col(f"{column}__bloom")
+        has_dl = dl.isNotNull() & (F.size(dl) > 0)
+        has_ds = ds.isNotNull() & (F.size(ds) > 0)
+        dl_ok = F.arrays_overlap(
+            dl, F.array(*[F.lit(int(v)) for v in int_vals])
+            .cast("array<bigint>")) if int_vals else F.lit(False)
+        ds_ok = F.arrays_overlap(
+            ds, F.array(*[F.lit(v) for v in str_vals])) \
+            if str_vals else F.lit(False)
+        from parquet_index_spark.statistics import hash_pair_for
+        pairs = [hash_pair_for(v, kind) for v in values]
+        bloom_ok = _bloom_any_probe(pairs, int_vals)(bloom)
+        return out & (F.when(has_dl, dl_ok)
+                      .when(has_ds, ds_ok)
+                      .when(bloom.isNotNull(), bloom_ok)
+                      .otherwise(F.lit(True)))
+
+    def prefix_membership(self, column: str, out: F.Column,
+                          prefix: str) -> F.Column:
+        """A string dict with no member starting with ``prefix`` refutes
+        the block; blooms hold no prefix evidence and pass."""
+        if column not in self.memb_cols:
+            return out
+        ds = F.col(f"{column}__dict_s")
+        has_ds = ds.isNotNull() & (F.size(ds) > 0)
+        ds_ok = F.exists(ds, lambda x: x.startswith(F.lit(prefix)))
+        return out & F.when(has_ds, ds_ok).otherwise(F.lit(True))
+
+    def in_bloom(self, column: str, kind: str, blob: bytes) -> F.Column:
+        if column not in self.memb_cols:
+            return F.lit(True)
+        return _dict_vs_filter_probe(blob)(
+            F.col(f"{column}__dict_l"), F.col(f"{column}__dict_s"),
+            F.col(f"{column}__bloom"))
 
 
 def compile_to_spark(pred: P.Predicate, kinds: dict, tz: str = None,
@@ -251,130 +279,14 @@ def compile_to_spark(pred: P.Predicate, kinds: dict, tz: str = None,
     (those whose pivoted frame carries __dict_l/__dict_s/__bloom; partition
     pseudo-columns don't). ``kinds``: indexed/partition column -> kind;
     ``tz``: session timezone for instant-timestamp literal localization."""
-    pred = P.push_not_down(pred)
-    return _compile(pred, kinds, tz, memb_cols)
+    return _fold(P.push_not_down(pred), _ColumnOps(kinds, memb_cols), tz,
+                 False)
 
 
-def _compile(pred: P.Predicate, kinds: dict, tz: str = None,
-             memb_cols: frozenset = frozenset()) -> F.Column:
-    if isinstance(pred, P.And):
-        out = F.lit(True)
-        for c in pred.children:
-            out = out & _compile(c, kinds, tz, memb_cols)
-        return out
-    if isinstance(pred, P.Or):
-        out = F.lit(False)
-        for c in pred.children:
-            out = out | _compile(c, kinds, tz, memb_cols)
-        return out
-    if isinstance(pred, P.Trivial):
-        return F.lit(pred.value)
-    if isinstance(pred, (P.Unsupported, P.Not)):
-        return F.lit(True)
-    if isinstance(pred, P.TermMatch):
-        # term index: membership over the block's distinct tokens; a
-        # table without a term index (column absent) soundly scans
-        if not pred.term.strip():
-            return F.lit(True)
-        for suf in (P.TERMS2_SUFFIX, P.TERMS_SUFFIX):
-            tcol = pred.column + suf
-            if tcol in kinds and tcol in memb_cols:
-                return _membership_ok(tcol, ityp.STRING, [pred.term])
-        return F.lit(True)
-    if isinstance(pred, P.TermPrefixMatch):
-        # token-prefix probe against the term dict (bloom: no evidence)
-        p = pred.prefix
-        if not p.strip():
-            return F.lit(True)
-        for suf in (P.TERMS2_SUFFIX, P.TERMS_SUFFIX):
-            tcol = pred.column + suf
-            if tcol in kinds and tcol in memb_cols:
-                ds = F.col(f"{tcol}__dict_s")
-                has_ds = ds.isNotNull() & (F.size(ds) > 0)
-                ds_ok = F.exists(ds, lambda x: x.startswith(F.lit(p)))
-                return F.when(has_ds, ds_ok).otherwise(F.lit(True))
-        return F.lit(True)
-
-    kind = kinds.get(getattr(pred, "column", None))
-    if kind is None:
-        return F.lit(True)
-    c = pred.column
-    if isinstance(pred, P.InBloom):
-        # reverse membership probe (dpp_join's big-dim tier): blocks
-        # whose exact DICT values all miss the dim-key bloom are
-        # refuted; everything else (bloom/bitmap/no filter) scans
-        if c not in memb_cols:
-            return F.lit(True)
-        return _dict_vs_filter_probe(pred.blob)(
-            F.col(f"{c}__dict_l"), F.col(f"{c}__dict_s"),
-            F.col(f"{c}__bloom"))
-    if isinstance(pred, P.Eq):
-        rng = _leaf(c, kind, "eq", pred.value, tz)
-        if c not in memb_cols:
-            return rng
-        try:
-            v = ityp.literal_to_stat_value(pred.value, kind, tz)
-        except (TypeError, ValueError, KeyError):
-            return rng
-        return rng if v is None else rng & _membership_ok(c, kind, [v])
-    if isinstance(pred, P.Ne):
-        return _leaf(c, kind, "ne", pred.value, tz)
-    if isinstance(pred, P.In):
-        if not pred.values:
-            return F.lit(False)
-        out = F.lit(False)
-        vs = []
-        for v in pred.values:
-            try:
-                nv = ityp.literal_to_stat_value(v, kind, tz)
-            except (TypeError, ValueError, KeyError):
-                nv = None
-            if nv is None:
-                # un-coercible literal => conservative scan, matching the
-                # numpy fold (partial range ORs would be unsound)
-                return F.lit(True)
-            vs.append(nv)
-            out = out | _leaf(c, kind, "eq", v, tz)
-        if c in memb_cols and vs:
-            out = out & _membership_ok(c, kind, vs)
-        return out
-    if isinstance(pred, P.IsNull):
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        return (nulls > 0) | (nulls == -1)
-    if isinstance(pred, P.IsNotNull):
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        return F.when(nulls >= 0, F.col("__rows") - nulls > 0) \
-            .otherwise(F.col("__rows") > 0)
-    if isinstance(pred, P.Gt):
-        return _leaf(c, kind, "gt", pred.value, tz)
-    if isinstance(pred, P.Ge):
-        return _leaf(c, kind, "ge", pred.value, tz)
-    if isinstance(pred, P.Lt):
-        return _leaf(c, kind, "lt", pred.value, tz)
-    if isinstance(pred, P.Le):
-        return _leaf(c, kind, "le", pred.value, tz)
-    if isinstance(pred, P.StartsWith):
-        # prefix interval [p, prefix_upper_bound(p)) against string
-        # min/max, with string-dict refinement (pruning._eval's
-        # StartsWith rule, distributed)
-        if kind != ityp.STRING:
-            return F.lit(True)
-        p = pred.prefix
-        has = F.coalesce(F.col(f"{c}__has"), F.lit(False))
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        statless = ~has & (nulls != F.col("__rows"))
-        rng = has & (F.col(f"{c}__max_s") >= F.lit(p))
-        hi = P.prefix_upper_bound(p)
-        if hi is not None:
-            rng = rng & (F.col(f"{c}__min_s") < F.lit(hi))
-        out = F.coalesce(rng, F.lit(False)) | statless
-        if p and c in memb_cols:
-            ds = F.col(f"{c}__dict_s")
-            has_ds = ds.isNotNull() & (F.size(ds) > 0)
-            ds_ok = F.exists(ds, lambda x: x.startswith(F.lit(p)))
-            out = out & F.when(has_ds, ds_ok).otherwise(F.lit(True))
-        return out
-    return F.lit(True)
+def compile_full_to_spark(pred: P.Predicate, kinds: dict,
+                          tz: str = None) -> F.Column:
+    """AST -> boolean Column "every row of the block satisfies pred"."""
+    return _fold(P.push_not_down(pred), _ColumnOps(kinds), tz, True)
 
 
 def _manifest_df(spark: SparkSession, metadata):
@@ -389,8 +301,8 @@ def _prepare_pivot(spark: SparkSession, metadata, referenced: set,
                    tz: str = None):
     """Shared front half of every distributed fold: read the stats
     parquet, pivot the referenced columns wide per (path, block), and
-    join partition values in as exact pseudo-stats (mirroring the numpy
-    context, metastore.IndexMetadata._build_context).
+    join partition values in as exact pseudo-stats (min == max == value,
+    as metastore.IndexMetadata._build_context builds them).
 
     -> (pivoted | None, kinds, memb_cols); None when the index has no
     stats shards (empty table)."""
@@ -442,18 +354,16 @@ def _prepare_pivot(spark: SparkSession, metadata, referenced: set,
 
 def prune_files_with_spark(spark: SparkSession, metadata,
                            pred: P.Predicate, tz: str = None) -> List[str]:
-    """Distributed equivalent of pruning.prune_files (minus membership).
+    """Distributed equivalent of pruning.prune_files, membership
+    refinement included.
 
     Partition-column predicates are folded too: partition values join in
-    from the file manifest as exact pseudo-stats, mirroring the numpy
-    context (metastore.IndexMetadata._build_context).
+    from the file manifest as exact pseudo-stats (`_prepare_pivot`).
     """
     pivoted, kinds, memb_cols = _prepare_pivot(
         spark, metadata, P.referenced_columns(pred), tz)
     if pivoted is None:
         return []
-    # ensure every referenced-but-missing stat column exists (unindexed
-    # columns were already folded to True at compile time)
     match = compile_to_spark(pred, kinds, tz, memb_cols=memb_cols)
     survivors = (pivoted.withColumn("__match", match)
                  .groupBy("path")
@@ -461,112 +371,9 @@ def prune_files_with_spark(spark: SparkSession, metadata,
                  .filter("m = 1")
                  .select("path"))
     manifest = set(metadata.files["path"])
-    # drop orphan stats paths from an interrupted refresh (manifest is the
-    # commit point — same tolerance as the numpy fold's _build_context)
+    # drop orphan stats paths from an interrupted refresh (the manifest
+    # is the commit point)
     return [r["path"] for r in survivors.collect() if r["path"] in manifest]
-
-
-# ---------------------------------------------------------------------------
-# Distributed full-match fold + metadata aggregation jobs
-# ---------------------------------------------------------------------------
-# The Spark-side mirror of pruning.evaluate_full, so count_where /
-# min_max_where keep their metadata acceleration when the metadata itself
-# outgrows the driver fold — which at 100 TB is the NORMAL case, exactly
-# where a metadata-answered aggregate matters most. Same soundness
-# direction: False whenever the stats cannot prove the predicate.
-# Membership filters are irrelevant here (a bloom/dict can prove absence,
-# never that every row matches).
-
-
-def _full_leaf(col: str, kind: str, op: str, value, tz: str = None) -> F.Column:
-    """Full-match Column for one comparison leaf over the pivoted stats."""
-    try:
-        v = ityp.literal_to_stat_value(value, kind, tz)
-    except (TypeError, ValueError, KeyError):
-        return F.lit(False)
-    if v is None:
-        return F.lit(False)
-    has = F.coalesce(F.col(f"{col}__has"), F.lit(False))
-    nulls = F.coalesce(F.col(f"{col}__nulls"), F.lit(-1))
-    nn0 = has & (nulls == 0)
-    if kind == ityp.STRING:
-        mn, mx = F.col(f"{col}__min_s"), F.col(f"{col}__max_s")
-    else:
-        mn, mx = F.col(f"{col}__min_l"), F.col(f"{col}__max_l")
-    lit = F.lit(v)
-    table = {
-        "eq": (mn == lit) & (mx == lit),
-        "ne": (mx < lit) | (mn > lit),
-        "gt": mn > lit,
-        "ge": mn >= lit,
-        "lt": mx < lit,
-        "le": mx <= lit,
-    }
-    return F.coalesce(nn0 & table[op], F.lit(False))
-
-
-def compile_full_to_spark(pred: P.Predicate, kinds: dict,
-                          tz: str = None) -> F.Column:
-    """AST -> boolean Column "every row of the block satisfies pred"."""
-    pred = P.push_not_down(pred)
-    return _compile_full(pred, kinds, tz)
-
-
-def _compile_full(pred: P.Predicate, kinds: dict, tz: str = None) -> F.Column:
-    if isinstance(pred, P.And):
-        out = F.lit(True)
-        for c in pred.children:
-            out = out & _compile_full(c, kinds, tz)
-        return out
-    if isinstance(pred, P.Or):
-        out = F.lit(False)
-        for c in pred.children:
-            out = out | _compile_full(c, kinds, tz)
-        return out
-    if isinstance(pred, P.Trivial):
-        return F.lit(pred.value)
-    if isinstance(pred, (P.Unsupported, P.Not, P.TermMatch,
-                         P.TermPrefixMatch)):
-        return F.lit(False)  # term membership can never prove full-match
-    kind = kinds.get(getattr(pred, "column", None))
-    if kind is None:
-        return F.lit(False)
-    c = pred.column
-    if isinstance(pred, P.IsNull):
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        return nulls == F.col("__rows")  # -1 never equals rows >= 0
-    if isinstance(pred, P.IsNotNull):
-        return F.coalesce(F.col(f"{c}__nulls"), F.lit(-1)) == 0
-    if isinstance(pred, P.Eq):
-        return _full_leaf(c, kind, "eq", pred.value, tz)
-    if isinstance(pred, P.Ne):
-        return _full_leaf(c, kind, "ne", pred.value, tz)
-    if isinstance(pred, P.In):
-        out = F.lit(False)
-        for v in pred.values:
-            out = out | _full_leaf(c, kind, "eq", v, tz)
-        return out
-    if isinstance(pred, P.Gt):
-        return _full_leaf(c, kind, "gt", pred.value, tz)
-    if isinstance(pred, P.Ge):
-        return _full_leaf(c, kind, "ge", pred.value, tz)
-    if isinstance(pred, P.Lt):
-        return _full_leaf(c, kind, "lt", pred.value, tz)
-    if isinstance(pred, P.Le):
-        return _full_leaf(c, kind, "le", pred.value, tz)
-    if isinstance(pred, P.StartsWith):
-        # all-prefix block: [min, max] inside [p, prefix_upper_bound(p))
-        # with zero nulls (pruning._eval_full's StartsWith rule)
-        if kind != ityp.STRING:
-            return F.lit(False)
-        has = F.coalesce(F.col(f"{c}__has"), F.lit(False))
-        nn0 = has & (F.coalesce(F.col(f"{c}__nulls"), F.lit(-1)) == 0)
-        out = nn0 & (F.col(f"{c}__min_s") >= F.lit(pred.prefix))
-        hi = P.prefix_upper_bound(pred.prefix)
-        if hi is not None:
-            out = out & (F.col(f"{c}__max_s") < F.lit(hi))
-        return F.coalesce(out, F.lit(False))
-    return F.lit(False)
 
 
 def count_files_with_spark(spark: SparkSession, metadata,
@@ -642,12 +449,8 @@ def min_max_files_with_spark(spark: SparkSession, metadata, column: str,
                      .join(F.broadcast(_manifest_df(spark, metadata)),
                            "path", "inner"))
         return None, None, sorted(r["path"] for r in survivors.collect())
-    has = F.coalesce(F.col(f"{column}__has"), F.lit(False))
-    nulls = F.coalesce(F.col(f"{column}__nulls"), F.lit(-1))
-    statless = ~has & (nulls != F.col("__rows"))
-    scan_block = (may & ~full) | (full & statless)
-    suffix = "_s" if kind == ityp.STRING else "_l"
-    mn_col, mx_col = F.col(f"{column}__min{suffix}"), F.col(f"{column}__max{suffix}")
+    has, nulls, rows, mn_col, mx_col = _ColumnOps(kinds).stats(column)
+    scan_block = (may & ~full) | (full & statless(has, nulls, rows))
     meta_ok = full & has
     per_path = (pivoted
                 .withColumn("__scan", scan_block)

@@ -1811,6 +1811,33 @@ class TestDedupAgainstCorpus:
         assert sorted(r["id"] for r in a.collect()) == \
             sorted(r["id"] for r in b.collect())
 
+    def test_underestimated_hint_takes_bloom_route(self, spark):
+        """A size hint within max_broadcast_keys is confirmed by a bounded
+        count before the direct route broadcasts the corpus keys: a
+        corpus larger than the budget takes the bloom route however small
+        the hint, and the result is still the exact anti join."""
+        from parquet_index_spark import plans
+        from parquet_index_spark.operators.dedup import dedup_against_corpus
+        corpus = spark.createDataFrame(
+            [(i, f"text {i}") for i in range(200)], "id: long, t: string")
+        new = spark.createDataFrame(
+            [(1000 + i, f"text {i * 4}") for i in range(60)],
+            "id: long, t: string")
+        got = dedup_against_corpus(new, corpus, key="t",
+                                   expected_corpus_items=1,
+                                   max_broadcast_keys=100)
+        # the bloom route's exact pass semi-joins the corpus against the
+        # bloom candidates; the direct route is one broadcast anti join
+        assert "LeftSemi" in plans.formatted_plan(got)
+        want = new.join(corpus.select("t").distinct(), ["t"], "left_anti")
+        assert sorted(r["id"] for r in got.collect()) == \
+            sorted(r["id"] for r in want.collect())
+        assert got.count() == 10  # keys 200..236 step 4 are new
+        direct = dedup_against_corpus(new, corpus, key="t",
+                                      expected_corpus_items=1,
+                                      max_broadcast_keys=200)
+        assert "LeftSemi" not in plans.formatted_plan(direct)
+
     def test_null_keys_follow_anti_join_semantics(self, spark):
         from parquet_index_spark.operators.dedup import dedup_against_corpus
         corpus = spark.createDataFrame(
@@ -1910,6 +1937,22 @@ class TestSemanticContamination:
                S.semantic_contamination(train, evalset, cents,
                                         threshold=0.9).collect()}
         assert out == {1: True, 3: False, 5: True}
+
+    def test_train_side_needs_no_id_column(self, spark):
+        """The train frame may carry only embeddings: train ids are never
+        read, since only eval rows are flagged."""
+        train = spark.createDataFrame(
+            [([1.0, 0.0, 0.0, 0.0],), ([0.0, 1.0, 0.0, 0.0],)],
+            "embedding: array<double>")
+        evalset = spark.createDataFrame(
+            [(1, [0.99, 0.01, 0.0, 0.0]),
+             (3, [0.0, 0.0, 1.0, 0.0])],
+            "vec_id: long, embedding: array<double>")
+        cents = S.ivf_seed_centroids(evalset, n_centroids=2)
+        out = {r["vec_id"]: r["is_contaminated"] for r in
+               S.semantic_contamination(train, evalset, cents,
+                                        threshold=0.9).collect()}
+        assert out == {1: True, 3: False}
 
     def test_no_cartesian_in_plan(self, spark):
         from parquet_index_spark.workload import semantic_contamination_stats

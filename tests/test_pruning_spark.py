@@ -10,7 +10,8 @@ import os
 import pytest
 
 from parquet_index_spark import QueryContext
-from parquet_index_spark.predicates import parse_sql_predicate
+from parquet_index_spark import types as ityp
+from parquet_index_spark.predicates import TERMS_SUFFIX, parse_sql_predicate
 from parquet_index_spark.pruning import prune_files
 from parquet_index_spark.pruning_spark import (
     SPARK_PRUNING_THRESHOLD, prune_files_with_spark,
@@ -228,3 +229,200 @@ class TestSparkPruningMembership:
         with_m = set(prune_files_with_spark(spark, metadata, ast))
         numpy_files = set(prune_files(ast, metadata.context()))
         assert with_m == numpy_files
+
+
+class TestFoldBackendParity:
+    """`pruning._fold` runs on numpy arrays (`evaluate`, `evaluate_full`)
+    and on Spark Columns (`compile_to_spark`, `compile_full_to_spark`).
+    On one set of block stats the two backends must return the same
+    may-match and full-match mask, block for block, for every predicate
+    shape. All masks come from one `select` over one frame: one job."""
+
+    L, D, S, T = ityp.LONG, ityp.DATE, ityp.STRING, "t" + TERMS_SUFFIX
+    KINDS = {"l": L, "d": D, "s": S, T: S}
+
+    def _blocks(self):
+        from parquet_index_spark.statistics import (
+            BitmapFilter, BloomFilter, DictFilter, MembershipFilter)
+        L, D, S, T = self.L, self.D, self.S, self.T
+
+        def bloom(values, kind):
+            bf = BloomFilter.create(16)
+            for v in values:
+                bf.put(v, kind)
+            return MembershipFilter(None, bf)
+
+        def dict_(values):
+            return MembershipFilter(DictFilter(set(values)), None)
+
+        # (kind, min, max, nulls); min None => no min/max; a missing
+        # column => no stats row at all (statless, nulls unknown)
+        blocks = [
+            {"rows": 100, "cols": {"l": (L, 1, 9, 0), "d": (D, 0, 10, 0),
+                                   "s": (S, "b", "d", 0),
+                                   T: (S, "apple", "zoo", 0)}},
+            # constant blocks; no stats row for d or the terms
+            {"rows": 100, "cols": {"l": (L, 5, 5, 0),
+                                   "s": (S, "b", "b", 0)}},
+            # statless: footer written without statistics
+            {"rows": 100, "cols": {"l": (L, None, None, -1),
+                                   "d": (D, None, None, -1),
+                                   "s": (S, None, None, -1),
+                                   T: (S, None, None, -1)}},
+            # all-null
+            {"rows": 100, "cols": {"l": (L, None, None, 100),
+                                   "d": (D, None, None, 100),
+                                   "s": (S, None, None, 100),
+                                   T: (S, None, None, 100)}},
+            # null counts without min/max
+            {"rows": 100, "cols": {"l": (L, None, None, 7),
+                                   "d": (D, None, None, 0),
+                                   "s": (S, None, None, 3)}},
+            # unknown null counts with min/max
+            {"rows": 100, "cols": {"l": (L, 2, 6, -1), "d": (D, 1, 4, -1),
+                                   "s": (S, "a", "c", -1),
+                                   T: (S, "cat", "dog", -1)}},
+            # zero rows
+            {"rows": 0, "cols": {"l": (L, None, None, 0),
+                                 "d": (D, None, None, 0),
+                                 "s": (S, None, None, 0)}},
+            {"rows": 50, "cols": {"l": (L, 3, 8, 2), "d": (D, 2, 9, 0),
+                                  "s": (S, "ab", "abz", 5),
+                                  T: (S, "ant", "bee", 0)}},
+            {"rows": 100, "cols": {"l": (L, -3, 0, 0), "d": (D, -5, -1, 0),
+                                   "s": (S, "\U0010ffff", "\U0010ffff", 0)}},
+            {"rows": 100, "cols": {"l": (L, 7, 12, 0), "d": (D, 8, 20, 0),
+                                   "s": (S, "c", "ca", 0),
+                                   T: (S, "ape", "axe", 0)}},
+        ]
+        bitmap = MembershipFilter(None, None, BitmapFilter.from_values([2, 6]))
+        membership = {
+            "l": [dict_({1, 4, 9}), None, None, None, None, bitmap, None,
+                  dict_({3, 8}), None, bloom([7, 12], L)],
+            "s": [dict_({"b", "c", "d"}), None, None, None, None,
+                  bloom(["a", "c"], S), None, dict_({"ab", "abz"}), None,
+                  None],
+            T: [dict_({"apple", "zoo"}), None, None, None, None,
+                bloom(["cat", "dog"], S), None, dict_({"ant", "bee"}),
+                None, dict_({"ape", "axe"})],
+        }
+        return blocks, membership
+
+    def _frame(self, spark, blocks, membership):
+        """The pivoted-stats frame (`pruning_spark._pivot_stats` columns)
+        for the same blocks, plus the block index ``__i``."""
+        from pyspark.sql import types as T_
+        fields = [T_.StructField("__i", T_.IntegerType()),
+                  T_.StructField("__rows", T_.LongType())]
+        for c in self.KINDS:
+            fields += [
+                T_.StructField(f"{c}__has", T_.BooleanType()),
+                T_.StructField(f"{c}__nulls", T_.LongType()),
+                T_.StructField(f"{c}__min_l", T_.LongType()),
+                T_.StructField(f"{c}__max_l", T_.LongType()),
+                T_.StructField(f"{c}__min_s", T_.StringType()),
+                T_.StructField(f"{c}__max_s", T_.StringType()),
+                T_.StructField(f"{c}__dict_l", T_.ArrayType(T_.LongType())),
+                T_.StructField(f"{c}__dict_s",
+                               T_.ArrayType(T_.StringType())),
+                T_.StructField(f"{c}__bloom", T_.BinaryType())]
+        rows = []
+        for i, b in enumerate(blocks):
+            row = [i, b["rows"]]
+            for c, kind in self.KINDS.items():
+                spec = b["cols"].get(c)
+                if spec is None:
+                    row += [None] * 6
+                else:
+                    _, mn, mx, nulls = spec
+                    bounds = [None, None, mn, mx] if kind == self.S \
+                        else [mn, mx, None, None]
+                    row += [mn is not None, nulls] + bounds
+                mf = (membership.get(c) or [None] * len(blocks))[i]
+                dict_l = dict_s = blob = None
+                if mf is not None and mf.dict_filter is not None:
+                    vals = sorted(mf.dict_filter.values)
+                    dict_s, dict_l = (vals, None) if kind == self.S \
+                        else (None, vals)
+                elif mf is not None:
+                    blob = bytes((mf.bitmap_filter or mf.bloom_filter)
+                                 .to_bytes())
+                row += [dict_l, dict_s, blob]
+            rows.append(row)
+        return spark.createDataFrame(rows, T_.StructType(fields))
+
+    def _predicates(self):
+        import datetime
+
+        from pyspark.sql import functions as F
+        from parquet_index_spark import predicates as P
+        from parquet_index_spark.statistics import BloomFilter
+        day = datetime.date(1970, 1, 4)  # 3 in long space
+        dim = BloomFilter.create(16)
+        for v in (3, 12):
+            dim.put(v, self.L)
+        unsupported = P.Unsupported(lambda: F.lit(True), "udf")
+        preds = []
+        for op in (P.Eq, P.Ne, P.Gt, P.Ge, P.Lt, P.Le):
+            preds += [op("l", 5), op("l", 9), op("d", day), op("s", "b"),
+                      op("s", "c")]
+        preds += [
+            P.In("l", (1, 7)), P.In("s", ("a", "ca")), P.In("d", (day,)),
+            P.In("l", ()),                        # empty IN
+            P.IsNull("l"), P.IsNull("s"), P.IsNull("d"), P.IsNotNull("l"),
+            P.IsNotNull("d"),
+            P.StartsWith("s", "a"), P.StartsWith("s", "ab"),
+            P.StartsWith("s", ""),
+            P.StartsWith("s", "\U0010ffff"),      # no prefix_upper_bound
+            P.StartsWith("l", "1"),               # non-string column
+            P.Eq("l", "x"), P.In("l", (1, "x")),  # un-coercible literals
+            P.Gt("d", "not-a-date"),
+            P.Eq("zz", 1), P.Lt("zz", 1),         # unindexed column
+            P.Not(unsupported), unsupported,
+            P.NullSafeEq("l", 5), P.Not(P.NullSafeEq("s", "b")),
+            P.Trivial(True), P.Trivial(False),
+            P.TermMatch("t", "ant"), P.TermMatch("t", "cat"),
+            P.TermMatch("t", " "), P.TermMatch("q", "ant"),
+            P.TermPrefixMatch("t", "ap"), P.TermPrefixMatch("t", "b"),
+            P.InBloom("l", bytes(dim.to_bytes())),
+            P.And((P.Or((P.Eq("l", 2), P.Gt("s", "c"))),
+                   P.Not(P.Lt("d", day)))),
+            P.Or((P.And((P.Ge("l", 3), P.Le("l", 8), P.IsNotNull("s"))),
+                  P.IsNull("d"), P.StartsWith("s", "ab"))),
+            P.Not(P.Or((P.In("l", (5, 9)), P.And((P.Ne("s", "b"),
+                                                  P.Eq("zz", 3)))))),
+        ]
+        return preds
+
+    def test_may_and_full_masks_match_per_block(self, spark):
+        import numpy as np
+
+        from parquet_index_spark import collector
+        from parquet_index_spark.pruning import evaluate, evaluate_full
+        from parquet_index_spark.pruning_spark import (
+            compile_full_to_spark, compile_to_spark)
+        from tests.test_fold_algebra import make_ctx
+        collector._ensure_package_shipped(spark)  # the probes are UDFs
+        blocks, membership = self._blocks()
+        ctx = make_ctx([dict(b, file=f"f{i}") for i, b in enumerate(blocks)],
+                       membership)
+        preds = self._predicates()
+        memb_cols = frozenset(self.KINDS)
+        cols = []
+        for i, p in enumerate(preds):
+            cols += [compile_to_spark(p, self.KINDS, "UTC", memb_cols)
+                     .alias(f"may{i}"),
+                     compile_full_to_spark(p, self.KINDS, "UTC")
+                     .alias(f"full{i}")]
+        got = sorted(self._frame(spark, blocks, membership)
+                     .select("__i", *cols).collect(),
+                     key=lambda r: r["__i"])
+        mixed = 0
+        for i, p in enumerate(preds):
+            for name, fold in (("may", evaluate), ("full", evaluate_full)):
+                want = fold(p, ctx, "UTC")
+                spark_mask = np.array([r[f"{name}{i}"] for r in got])
+                assert spark_mask.tolist() == want.tolist(), (name, p)
+                mixed += bool(want.any() and not want.all())
+        # the block cases actually separate the shapes
+        assert mixed >= len(preds)

@@ -8,7 +8,7 @@ loudly — either stored type would corrupt half the files).
 
 Also pins the footer-path soundness rule: a parquet file written with
 statistics disabled has no min/max but is NOT all-null — it must never be
-pruned (pruning.py _statless_maybe).
+pruned (pruning.statless, which pruning._fold applies to every comparison).
 """
 
 import os
