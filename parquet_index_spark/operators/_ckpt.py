@@ -104,8 +104,8 @@ def observation_get_bounded(obs, timeout_sec: float = 300.0):
     ``None`` when the metrics were not delivered within ``timeout_sec``.
 
     ``Observation.get`` blocks indefinitely until an action on the
-    observed frame delivers the metrics. The known failure class (the
-    merge_into counter notes): AQE empty-relation propagation can
+    observed frame delivers the metrics. The known failure class (see
+    ``sources._counted_rewrite``): AQE empty-relation propagation can
     collapse a subtree and drop its CollectMetrics node, fulfilling the
     observation with a row the reader cannot decode — or never. Callers
     that observed a frame whose action has ALREADY COMPLETED use this

@@ -13,6 +13,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 
 from parquet_index_spark.manager import QueryContext
+from parquet_index_spark.operators._ckpt import observation_get_bounded
 
 import threading as _threading
 
@@ -942,30 +943,18 @@ def _require_index_current(spark, meta, op: str) -> None:
     stale index share that staleness contract knowingly; destructive
     writes must not. One recursive listing against the live table — noise
     next to the rewrite it gates."""
-    from parquet_index_spark import collector
-
     # both sides resolve through the table's own Hadoop FS (qualified
     # URIs), so DML works on any scheme: the former os.path.abspath
     # normalization made every file on an hdfs://\/s3a:// table look
     # unindexed and spuriously refused legitimate remote DML (round-5
     # verdict nit #3). fail-safe direction unchanged — a normalization
     # miss still refuses rather than corrupts.
-    fs, jpath = _fs_for(spark, meta.table_path)
+    indexed = _qualified_uris(spark, meta.table_path, meta.all_file_paths())
+    fs, _ = _fs_for(spark, meta.table_path)
     hpath = spark._jvm.org.apache.hadoop.fs.Path
-    indexed = {
-        fs.makeQualified(hpath(collector.resolve_file(meta.table_path, p)))
-        .toString()
-        for p in meta.all_file_paths()}
-    unindexed = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            u = fs.makeQualified(st.getPath()).toString()
-            if u not in indexed:
-                unindexed.append(u)
-    unindexed.sort()
+    listed = (fs.makeQualified(hpath(f)).toString()
+              for f, _sz in _parquet_files(spark, meta.table_path))
+    unindexed = sorted(u for u in listed if u not in indexed)
     if unindexed:
         raise ValueError(
             f"{op}: the table has {len(unindexed)} data file(s) not "
@@ -1128,8 +1117,6 @@ def _compact_table_impl(spark, path: str, target_file_mb: int = 128,
     proportional to their data share — a skewed partition compacts into
     several files instead of one giant one.
     """
-    import os
-
     from pyspark.sql import functions as F
 
     if target_file_mb < 1:
@@ -1144,19 +1131,14 @@ def _compact_table_impl(spark, path: str, target_file_mb: int = 128,
     if not files:
         raise ValueError(f"no parquet data files under {path!r}")
     # hive layout detection from the data-file paths themselves (works
-    # without an index): dir components shaped name=value
+    # without an index): dir components shaped name=value. The listing
+    # is qualified, so the first file's path relative to the table is
+    # plain '/'-prefix arithmetic (the _qualified_uris contract)
     fs, jpath = _fs_for(spark, path)
-    base = jpath.toUri().getPath().rstrip("/")
-    pcols: List[str] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        nm = st.getPath().getName()
-        if nm.endswith(".parquet") and not nm.startswith(("_", ".")):
-            rel = os.path.relpath(st.getPath().toUri().getPath(), base)
-            pcols = [comp.split("=", 1)[0]
-                     for comp in rel.split(os.sep)[:-1] if "=" in comp]
-            break
+    base = fs.makeQualified(jpath).toString().rstrip("/")
+    pcols = [comp.split("=", 1)[0]
+             for comp in files[0][0][len(base) + 1:].split("/")[:-1]
+             if "=" in comp]
     total = sum(sz for _, sz in files)
     n_target = max(1, -(-total // (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
@@ -1275,6 +1257,98 @@ def _maintain_table_impl(spark, path: str, max_files: int = 64,
     return out
 
 
+def _begin_rewrite(ctx, path: str, op: str):
+    """The prologue every DML call runs before it reads anything. It heals
+    a crash between a prior swap's two renames (the table dir is absent in
+    that state, so the index load would fail with an unrelated error),
+    fails fast on a stranded staging dir, loads the index and refuses it
+    when stale, refuses a single-file table (no partial-rewrite
+    granularity) and reads the session time zone. ``op`` is the public
+    name (``merge_into``); its first word names the ``__<word>_tmp`` /
+    ``__<word>_bak`` staging dirs that vacuum_table and recovery know.
+    Returns (table, pctx, tz)."""
+    from parquet_index_spark import collector
+
+    spark = ctx.spark_session
+    kind = op.split("_")[0]
+    _recover_staged_swap(spark, path, f"__{kind}_bak")
+    _refuse_stranded_tmp(spark, path, f"{path.rstrip('/')}__{kind}_tmp", op)
+    table = ctx.index.parquet(path)
+    meta = table._metadata
+    _require_index_current(spark, meta, op)
+    pctx = meta.context()
+    if collector.SELF_FILE in pctx.file_paths:
+        raise ValueError(
+            f"{op} requires a directory table (single-file tables have no "
+            "partial-rewrite granularity)")
+    try:
+        tz = spark.conf.get("spark.sql.session.timeZone")
+    except Exception:  # noqa: BLE001
+        tz = None
+    return table, pctx, tz
+
+
+def _read_files(spark, meta, abs_paths) -> DataFrame:
+    """The DML reader: the given data files under the metastore schema,
+    with partition values recovered from their paths (basePath)."""
+    return (spark.read.schema(meta.data_schema)
+            .option("basePath", meta.table_path)
+            .parquet(*sorted(abs_paths)))
+
+
+def _counted_rewrite(ctx, path: str, op: str, meta, read_rel, mark, rewrite,
+                     drop_rel=()) -> int:
+    """The one read -> rewrite -> count -> swap -> refresh pipeline of the
+    DML trio. Reads the ``read_rel`` files once; ``mark(rows) -> (rows,
+    hit)`` flags the rows the op counts with a non-null boolean Column,
+    and ``rewrite(rows, hit)`` gives what replaces those files (called
+    with ``(None, None)`` when there is nothing to read; None stages an
+    empty rewrite). The hit count rides the rewrite's own scan as
+    CollectMetrics and is read once through a bounded wait; on a miss
+    (the AQE dropped-CollectMetrics class) it is re-counted over the
+    source files, which stay untouched until the swap. The staged swap
+    displaces ``read_rel + drop_rel``, then the index refreshes
+    incrementally. Returns the hit count."""
+    from pyspark.sql import Observation, functions as F
+
+    spark = ctx.spark_session
+    kind = op.split("_")[0]
+    stem = f"{path.rstrip('/')}__{kind}"
+    read_abs = _qualified_uris(spark, meta.table_path, read_rel)
+    obs = None
+    if read_abs:
+        rows, hit = mark(_read_files(spark, meta, read_abs))
+        obs = Observation(f"{op}_hit")
+        out = rewrite(rows.observe(obs, F.count(F.when(hit, 1)).alias("n")),
+                      hit)
+    else:
+        out = rewrite(None, None)
+    if out is None:
+        fs, jtmp = _fs_for(spark, stem + "_tmp")
+        fs.delete(jtmp, True)
+        fs.mkdirs(jtmp)
+    else:
+        # partitioned: hash on the partition columns so each partition
+        # value writes from one task — one output file per touched
+        # partition, no task x partition file explosion under partitionBy
+        pcols = list(meta.partition_columns)
+        writer = (out.repartition(max(1, len(read_abs)), *pcols)
+                  .write.mode("overwrite"))
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.parquet(stem + "_tmp")
+    n_hit = 0
+    if obs is not None:
+        got = observation_get_bounded(obs)
+        n_hit = (int(got["n"]) if got is not None
+                 else rows.filter(hit).count())
+    _staged_swap(spark, path, stem + "_tmp", stem + "_bak",
+                 read_abs | _qualified_uris(spark, meta.table_path, drop_rel),
+                 label=kind)
+    ctx.index.refresh.parquet(path)
+    return n_hit
+
+
 def merge_into(ctx, path: str, updates: DataFrame, key: str,
                max_keys: int = 100_000,
                delete_keys=None) -> dict:
@@ -1309,9 +1383,10 @@ def merge_into(ctx, path: str, updates: DataFrame, key: str,
     NOTHING key-sized reaches the driver — the fold degrades to the
     sound [min, max] range (plus a distributed-bloom ``InBloom`` probe
     when the fact index carries exact dict/bitmap evidence, the
-    dpp_join big-dim tier) and the row cut becomes a broadcast-guarded
-    ``left_anti`` join. An oversized plain-list input routes through
-    the same guarded path rather than planning a million-literal IN.
+    dpp_join big-dim tier) and the row cut flags rows through a
+    broadcast-guarded left join of the key set. An oversized plain-list
+    input routes through the same guarded path rather than planning a
+    million-literal IN.
     Delete and upsert key sets must be disjoint (the caller resolves a
     key touched by both — write_merge_sink's seq_col latest-wins does);
     overlap raises rather than guessing an order. Returns {files_total,
@@ -1354,30 +1429,21 @@ def merge_into(ctx, path: str, updates: DataFrame, key: str,
 def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
                      max_keys: int, delete_keys, owned: list,
                      caller_cached: bool) -> dict:
-    import os
-
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructField, StructType
 
-    from parquet_index_spark import collector, predicates as P
+    from parquet_index_spark import predicates as P, types as ityp
+    from parquet_index_spark.operators._ckpt import (
+        checkpoint_corpus_observed)
     from parquet_index_spark.pruning import prune_files
 
     spark = updates.sparkSession
-    # heal a crash between the swap's two renames BEFORE touching the
-    # table (the table dir is absent in that state; the index load
-    # below would fail with an unrelated missing-path error) —
-    # round-11 review, second pass: recovery was compact-only while
-    # all four DML ops share the same window
-    _recover_staged_swap(spark, path, "__merge_bak")
-    # fail-fast on a stranded staging dir BEFORE the batch's eager
-    # compute (round-11 review, third pass: the probe sat just before
-    # the tmp write, after minutes of checkpoint/aggregate work on a
-    # real CDC batch that was doomed to raise)
-    _refuse_stranded_tmp(spark, path, path.rstrip("/") + "__merge_tmp",
-                         "merge_into")
-    table = ctx.index.parquet(path)
+    # the prologue runs BEFORE the batch's eager compute (round-11
+    # review, third pass: a stranded-tmp refusal after minutes of
+    # checkpoint/aggregate work on a real CDC batch wasted all of it)
+    table, pctx, tz = _begin_rewrite(ctx, path, "merge_into")
     meta = table._metadata
-    _require_index_current(spark, meta, "merge_into")
-    pcols = list(meta.partition_columns)
+    key_type = meta.data_schema[key].dataType
     table_cols = [f.name for f in meta.data_schema.fields]
     if sorted(updates.columns) != sorted(table_cols):
         raise ValueError(
@@ -1397,22 +1463,17 @@ def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
             "(cast the batch explicitly): " +
             ", ".join(f"{n}: {got} != table {want}"
                       for n, got, want in mismatched))
-    from parquet_index_spark.operators._ckpt import (
-        checkpoint_corpus_observed)
     # ONE materialization for the whole merge (count-then-join rule —
-    # round-10 review): the key probe, the over-cap null/bounds
-    # aggregate, the overlap semi-join, the row count, and both rewrite
-    # joins all re-reference updates; without this each re-executes the
-    # caller's full upstream plan. Also decouples a batch derived from
-    # the table ITSELF from the directory before the staged swap.
-    # Round-15 (guide §1.4): the batch row count, the key null check
-    # and the full-side key bounds ride the materialization scan as
-    # CollectMetrics — the dedicated updates.count() job and the
-    # over-cap null/bounds aggregate (each a full batch pass at scale)
-    # are gone.
-    # Release-ownership guard (round-11 review): caller_cached was
-    # probed on the caller's ORIGINAL object in the wrapper — only
-    # frames whose caching this call introduced are released at the end.
+    # round-10 review): the key probe, the overlap semi-join, the
+    # rows_updated count and the rewrite join all re-reference updates;
+    # without this each re-executes the caller's full upstream plan. Also
+    # decouples a batch derived from the table ITSELF from the directory
+    # before the staged swap. The batch row count, the key null check and
+    # the full-side key bounds ride the materialization scan as
+    # CollectMetrics (round-15, guide §1.4). Release-ownership guard
+    # (round-11 review): caller_cached was probed on the caller's
+    # ORIGINAL object in the wrapper — only frames whose caching this
+    # call introduced are released at the end.
     updates, _um = checkpoint_corpus_observed(
         updates,
         F.count(F.lit(1)).alias("n"),
@@ -1423,6 +1484,11 @@ def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
     if not caller_cached:
         owned.append(updates)
 
+    def key_frame(values):
+        return spark.createDataFrame(
+            [(v,) for v in values],
+            StructType([StructField(key, key_type)]))
+
     # --- delete keys: normalize to either a bounded driver list (the
     # exact tier) or a distributed DataFrame (the guarded tier). A list
     # longer than max_keys is re-parallelized so Catalyst never plans an
@@ -1430,46 +1496,31 @@ def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
     dels, dels_df, big_dels = [], None, False
     exact_dels_df = None  # checkpointed frame kept for the exact tier's
     lo_d = hi_d = n_est_d = None  # full-side overlap probe
-    if isinstance(delete_keys, DataFrame):
-        dels_df_in = delete_keys
-    elif delete_keys:
+    dels_df_in = delete_keys if isinstance(delete_keys, DataFrame) else None
+    if dels_df_in is None and delete_keys:
         dels = list(delete_keys)
         if any(d is None for d in dels):
             raise ValueError("merge_into: delete keys must be non-null")
         if len(dels) > max_keys:
-            from pyspark.sql.types import StructField, StructType
-            dels_df_in = spark.createDataFrame(
-                [(v,) for v in dels],
-                StructType([StructField(key,
-                                        meta.data_schema[key].dataType)]))
-            dels = []
-        else:
-            dels_df_in = None
-    else:
-        dels_df_in = None
+            dels_df_in, dels = key_frame(dels), []
     if dels_df_in is not None:
         if key not in dels_df_in.columns:
             raise ValueError(
                 "merge_into: delete_keys DataFrame must carry the key "
                 f"column {key!r} (got {dels_df_in.columns})")
         got = dels_df_in.schema[key].dataType
-        want = meta.data_schema[key].dataType
-        if got != want:
+        if got != key_type:
             raise ValueError(
                 f"merge_into: delete key type {got.simpleString()} != "
-                f"table {want.simpleString()} (cast the batch "
+                f"table {key_type.simpleString()} (cast the batch "
                 "explicitly — a mismatched type makes the pruning fold "
                 "unsound)")
-        # one materialization shared by the row-cut joins and the bloom
-        # build; the tier decision (exact key count), the null check and
-        # the sound full-set [min, max] bounds ride that SAME scan as
-        # CollectMetrics (round-15, guide §1.4) — the old shape paid a
-        # limit-probe job plus, on the guarded tier, a dedicated
-        # null/bounds/approx-distinct aggregate (a second full pass over
-        # the key set at scale). The frame is already DISTINCT, so the
-        # observed row count IS the exact key count — it also replaces
-        # the approx_count_distinct bloom-sizing estimate with the exact
-        # value (sizing-only: a bloom false positive only admits files).
+        # one materialization shared by the row cut and the bloom build;
+        # the tier decision (exact key count), the null check and the
+        # sound full-set [min, max] bounds ride that SAME scan as
+        # CollectMetrics (round-15, guide §1.4). The frame is already
+        # DISTINCT, so the observed row count IS the exact key count (it
+        # also sizes the bloom: a false positive only admits files).
         dels_df, _dm = checkpoint_corpus_observed(
             dels_df_in.select(key).distinct(),
             F.count(F.lit(1)).alias("n"),
@@ -1477,67 +1528,43 @@ def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
             F.min(key).alias("lo"), F.max(key).alias("hi"),
             name="merge_dels_ckpt")
         owned.append(dels_df)
+        if _dm["n_null"]:
+            raise ValueError("merge_into: delete keys must be non-null")
         if int(_dm["n"] or 0) > max_keys:
             big_dels = True
-            if _dm["n_null"]:
-                raise ValueError(
-                    "merge_into: delete keys must be non-null")
-            lo_d, hi_d = _dm["lo"], _dm["hi"]
+            lo_d, hi_d = ityp.as_instants((_dm["lo"], _dm["hi"]), key_type)
             n_est_d = int(_dm["n"])
         else:
             # the distinct set fits the driver cap: collect it — the
             # exact-tier semantics, identical to the plain-list form
             # (the frame handle survives for the full-side overlap
             # probe)
-            sample = [r[0] for r in dels_df.collect()]
-            dels, exact_dels_df, dels_df = sample, dels_df, None
-            if any(d is None for d in dels):
-                raise ValueError(
-                    "merge_into: delete keys must be non-null")
-    vals = [r[0] for r in
-            updates.select(key).distinct().limit(max_keys + 1).collect()]
+            dels, exact_dels_df, dels_df = (
+                [r[0] for r in dels_df.collect()], dels_df, None)
+    dels = ityp.as_instants(dels, key_type)
+    vals = ityp.as_instants(
+        [r[0] for r in
+         updates.select(key).distinct().limit(max_keys + 1).collect()],
+        key_type)
     if any(v is None for v in vals):
         raise ValueError("merge_into: update keys must be non-null")
-    if dels:
-        overlap = set(dels) & set(vals)
-        if overlap:
-            raise ValueError(
-                "merge_into: delete and upsert key sets overlap "
-                f"(e.g. {sorted(overlap)[:3]}); resolve each key to its "
-                "latest change first (seq_col in write_merge_sink)")
-        if len(vals) > max_keys:
-            # the upsert keys are a truncated SAMPLE — an overlapping
-            # key outside it would silently bypass the contract
-            # (round-10 review #3): check the delete list against the
-            # FULL update side with one bounded semi-join (reusing the
-            # already-checkpointed frame when the input was one)
-            ddf = exact_dels_df
-            if ddf is None:
-                from pyspark.sql.types import StructField, StructType
-                ddf = spark.createDataFrame(
-                    [(v,) for v in dels],
-                    StructType([StructField(
-                        key, meta.data_schema[key].dataType)]))
-            hit = (updates.select(key).join(ddf, key, "left_semi")
-                   .limit(3).collect())
-            if hit:
-                raise ValueError(
-                    "merge_into: delete and upsert key sets overlap "
-                    f"(e.g. {sorted(r[0] for r in hit)}); resolve each "
-                    "key to its latest change first (seq_col in "
-                    "write_merge_sink)")
-    elif big_dels and vals:
-        # distributed disjointness check: one bounded semi-join probe
-        hit = (updates.select(key).join(dels_df, key, "left_semi")
-               .limit(3).collect())
-        if hit:
-            raise ValueError(
-                "merge_into: delete and upsert key sets overlap "
-                f"(e.g. {sorted(r[0] for r in hit)}); resolve each key "
-                "to its latest change first (seq_col in "
-                "write_merge_sink)")
+    clash = sorted(set(dels) & set(vals))[:3]
+    if not clash and ((dels and len(vals) > max_keys) or (big_dels and vals)):
+        # the upsert keys are a truncated SAMPLE, or the delete keys are
+        # distributed — an overlapping key outside the driver sets would
+        # silently bypass the contract (round-10 review #3): check the
+        # FULL update side with one bounded semi-join
+        ddf = (dels_df if big_dels else exact_dels_df
+               if exact_dels_df is not None else key_frame(dels))
+        clash = sorted(r[0] for r in updates.select(key)
+                       .join(ddf, key, "left_semi").limit(3).collect())
+    if clash:
+        raise ValueError(
+            "merge_into: delete and upsert key sets overlap "
+            f"(e.g. {clash}); resolve each key to its latest change first "
+            "(seq_col in write_merge_sink)")
     if not vals and not dels and not big_dels:
-        return {"files_total": len(meta.context().file_paths),
+        return {"files_total": len(pctx.file_paths),
                 "files_rewritten": 0, "rows_updated": 0,
                 "rows_inserted": 0, "rows_deleted": 0,
                 "delete_path": None}
@@ -1545,11 +1572,11 @@ def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
         # LIMITed sample: its min/max is unsound AND its null check is
         # incomplete (a NULL key outside the sample would slip through
         # — round-10 review). The FULL-side null count and key bounds
-        # were observed on the checkpoint materialization scan
-        # (round-15), so the dedicated full-batch aggregate is gone.
+        # were observed on the checkpoint materialization scan.
         if _um["n_null"]:
             raise ValueError("merge_into: update keys must be non-null")
-        ast = P.And((P.Ge(key, _um["lo"]), P.Le(key, _um["hi"])))
+        lo, hi = ityp.as_instants((_um["lo"], _um["hi"]), key_type)
+        ast = P.And((P.Ge(key, lo), P.Le(key, hi)))
     elif vals:
         ast = P.In(key, tuple(vals))
     else:
@@ -1566,140 +1593,60 @@ def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
         # count fits the bloom's own driver-size budget (past
         # max_bloom_keys the blob itself is driver-sized — range-only)
         from parquet_index_spark.functions.joins import degraded_key_fold
-        dast = degraded_key_fold(dels_df, key, key,
-                                 meta.data_schema[key].dataType,
+        dast = degraded_key_fold(dels_df, key, key, key_type,
                                  meta.filter_type, lo_d, hi_d,
                                  int(n_est_d))
         ast = dast if ast is None else P.Or((ast, dast))
-    pctx = meta.context()
-    affected_rel = set(prune_files(ast, pctx))
-    all_rel = list(pctx.file_paths)
-    if collector.SELF_FILE in all_rel:
-        raise ValueError(
-            "merge_into requires a directory table (single-file tables "
-            "have no partial-rewrite granularity)")
-    affected_abs = _qualified_uris(spark, meta.table_path, affected_rel)
+    affected_rel = prune_files(ast, pctx, tz)
 
-    # n_updates observed on the batch checkpoint scan (round-15) — the
-    # dedicated count() pass over the materialized batch is gone
-    rows_deleted = 0
-    obs_cur = obs_mid = None
-    if affected_abs:
-        from pyspark.sql import Observation
-        current = (spark.read.schema(meta.data_schema)
-                   .option("basePath", meta.table_path)
-                   .parquet(*sorted(affected_abs)))
-        # rows_deleted rides the rewrite write itself (CollectMetrics
-        # via observe — the update_where precedent, round-4 VERDICT
-        # #2): row counts observed before and after the delete cut on
-        # the ONE rewrite scan, counter = the difference — exact
-        # because the cut removes exactly the delete-key-matched table
-        # rows, the same per-table-row semantics the old dedicated
-        # semi-join count had. rows_updated can NOT ride the same
-        # differential: (rows before − rows after) the update
-        # anti-join counts removed TABLE rows, but the contract counts
-        # UPDATE rows with a match — they differ as soon as one key
-        # maps to several table rows (caught by the round-15 full
-        # matrix on the duplicate-key fixture: differential said 2,
-        # contract says 1, and rows_inserted went negative), so it
-        # keeps its dedicated semi-join count below.
-        obs_cur = Observation("merge_rows_in")
-        current = current.observe(obs_cur, F.count(F.lit(1)).alias("n"))
+    marker = "__pis_merge_del"
+
+    def mark(rows):
+        # the delete cut flags rows; NULL-keyed table rows never match
+        # and survive (isin is NULL for them, the left join finds none)
         if dels:
-            # NULL-keyed table rows survive (isin is NULL for them)
-            is_del = F.coalesce(F.col(key).isin(dels), F.lit(False))
-            current = current.filter(~is_del)
-        elif big_dels:
-            # guarded tier: broadcast-probed anti join — the key set
-            # never lands on the driver and Catalyst falls back to a
-            # shuffle join past the broadcast cap instead of planning an
-            # unbounded IN. NULL-keyed table rows never equi-match and
-            # survive, mirroring the isin path. checkpoint=False:
-            # dels_df is ALREADY checkpointed (round-10 review #4).
-            from parquet_index_spark.functions.joins import (
-                broadcast_if_small)
-            dset = broadcast_if_small(dels_df, checkpoint=False)
-            current = current.join(dset, key, "left_anti")
-        if dels or big_dels:
-            obs_mid = Observation("merge_rows_after_delete")
-            current = current.observe(obs_mid,
-                                      F.count(F.lit(1)).alias("n"))
-        kept = current.join(updates.select(key), key, "left_anti")
-        merged = kept.unionByName(updates)
-        n_out = max(1, len(affected_abs))
-    else:
-        merged = updates
-        n_out = 1
+            return rows, F.coalesce(F.col(key).isin(dels), F.lit(False))
+        if not big_dels:
+            return rows, F.lit(False)
+        # guarded tier: a broadcast-probed left join of the key set — it
+        # never lands on the driver, and Catalyst falls back to a
+        # shuffle join past the broadcast cap instead of planning an
+        # unbounded IN. checkpoint=False: dels_df is ALREADY
+        # checkpointed (round-10 review #4).
+        from parquet_index_spark.functions.joins import broadcast_if_small
+        dset = broadcast_if_small(dels_df.withColumn(marker, F.lit(True)),
+                                  checkpoint=False)
+        return (rows.join(dset, key, "left"),
+                F.coalesce(F.col(marker), F.lit(False)))
 
-    tmp = path.rstrip("/") + "__merge_tmp"
-    bak = path.rstrip("/") + "__merge_bak"
-    # partitioned: rewrite partition-aware (one task per partition value;
-    # see delete_where). A key whose update carries a DIFFERENT partition
-    # value migrates naturally — the stale row's file is in the affected
-    # set (key pruning is partition-agnostic) so the anti-join drops it,
-    # and partitionBy routes the fresh row to its new directory.
-    out = (merged.repartition(n_out, *pcols) if pcols
-           else merged.repartition(n_out))
-    writer = out.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(tmp)
+    def rewrite(rows, hit):
+        # a key whose update carries a DIFFERENT partition value migrates
+        # naturally: the stale row's file is in the affected set (key
+        # pruning is partition-agnostic), so the anti-join drops it and
+        # partitionBy routes the fresh row to its new directory
+        if rows is None:
+            return updates
+        kept = rows.filter(~hit).drop(marker)
+        return (kept.join(updates.select(key), key, "left_anti")
+                .unionByName(updates))
+
     rows_updated = 0
-    if affected_abs:
-        # bounded reads (round-16, ADVICE): the rewrite write above is
-        # the observed stream's action, so these return immediately in
-        # every healthy run — the watchdog guards the documented AQE
-        # empty-relation class (a dropped CollectMetrics node would
-        # otherwise block Observation.get forever). On a miss, fall
-        # back to explicit probe jobs over the SOURCE files, which are
-        # untouched until the staged swap below — the exact pre-r15
-        # counters, just slower.
-        from parquet_index_spark.operators._ckpt import (
-            observation_get_bounded)
-        got_cur = observation_get_bounded(obs_cur)
-        got_mid = (observation_get_bounded(obs_mid)
-                   if obs_mid is not None else got_cur)
-        if got_cur is None or got_mid is None:
-            probe = (spark.read.schema(meta.data_schema)
-                     .option("basePath", meta.table_path)
-                     .parquet(*sorted(affected_abs)))
-            cur_n = probe.count() if got_cur is None \
-                else int(got_cur["n"] or 0)
-            if obs_mid is None:
-                mid_n = cur_n
-            elif got_mid is not None:
-                mid_n = int(got_mid["n"] or 0)
-            elif dels:
-                mid_n = probe.filter(
-                    ~F.coalesce(F.col(key).isin(dels),
-                                F.lit(False))).count()
-            else:
-                mid_n = probe.join(dels_df, key, "left_anti").count()
-        else:
-            cur_n = int(got_cur["n"] or 0)
-            mid_n = int(got_mid["n"] or 0)
-        rows_deleted = cur_n - mid_n
-        if n_updates:
-            # UPDATE-row semantics (see the counter note above): one
-            # semi-join count over the affected files' keys — update
-            # rows whose key survives the delete cut. Runs AFTER the
-            # rewrite write so the write stays the observed stream's
-            # FIRST action: under AQE an empty batch (or an empty join
-            # side at runtime) collapses this probe's plan, dropping
-            # the CollectMetrics nodes, and an observation fulfilled by
-            # the collapsed probe completes with a schemaless row that
-            # Observation.get cannot decode. The source files are
-            # untouched until the staged swap below, so the probe reads
-            # the same rows either way; an empty batch skips it.
-            rows_updated = (updates.join(current.select(key), key,
-                                         "left_semi").count())
-    rows_inserted = n_updates - rows_updated
-    _staged_swap(spark, path, tmp, bak, affected_abs, label="merge")
-    ctx.index.refresh.parquet(path)
-    return {"files_total": len(all_rel),
+    if affected_rel and n_updates:
+        # UPDATE-row semantics: update rows whose key matches a table row.
+        # The delete cut's row differential would count removed TABLE
+        # rows instead, which differ once one key maps to several table
+        # rows (the round-15 duplicate-key fixture). The key sets are
+        # disjoint, so the cut never removes a matched row, and this read
+        # is unobserved: its plan cannot fulfil the rewrite's observation.
+        cur = _read_files(spark, meta, _qualified_uris(
+            spark, meta.table_path, affected_rel))
+        rows_updated = updates.join(cur.select(key), key, "left_semi").count()
+    rows_deleted = _counted_rewrite(ctx, path, "merge_into", meta,
+                                    affected_rel, mark, rewrite)
+    return {"files_total": len(pctx.file_paths),
             "files_rewritten": len(affected_rel),
             "rows_updated": rows_updated,
-            "rows_inserted": rows_inserted,
+            "rows_inserted": n_updates - rows_updated,
             "rows_deleted": rows_deleted,
             "delete_path": ("anti" if big_dels else
                             "in" if dels else None)}
@@ -2073,39 +2020,18 @@ def _delete_where_impl(ctx, path: str, predicate) -> dict:
     their paths (basePath) and rewritten partition-aware, merging back
     into their dirs in the swap. Refuses to run through a stale index
     (unindexed appended files would silently survive). Returns
-    {files_total, files_dropped_whole, files_rewritten, rows_deleted}.
+    {files_total, files_dropped_whole, files_rewritten, rows_deleted}:
+    rows_deleted is the whole-dropped files' metastore row count plus
+    the boundary rows the rewrite's scan flagged.
     """
-    import os
-
     import numpy as np
 
-    from parquet_index_spark import collector
+    from pyspark.sql import functions as F
+
     from parquet_index_spark import pruning as PR
 
-    # heal a crash between the swap's two renames BEFORE touching the
-    # table (the table dir is absent in that state; the index load
-    # below would fail with an unrelated missing-path error) —
-    # round-11 review, second pass: recovery was compact-only while
-    # all four DML ops share the same window
-    _recover_staged_swap(ctx.spark_session, path, "__delete_bak")
-    _refuse_stranded_tmp(ctx.spark_session, path,
-                         path.rstrip("/") + "__delete_tmp", "delete_where")
-    table = ctx.index.parquet(path)
-    spark = table._spark
-    meta = table._metadata
-    _require_index_current(spark, meta, "delete_where")
-    pcols = list(meta.partition_columns)
-    pctx = meta.context()
-    all_rel = list(pctx.file_paths)
-    if collector.SELF_FILE in all_rel:
-        raise ValueError(
-            "delete_where requires a directory table (single-file tables "
-            "have no partial-rewrite granularity)")
+    table, pctx, tz = _begin_rewrite(ctx, path, "delete_where")
     ast, residual = table._compile(predicate)
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:  # noqa: BLE001
-        tz = None
     if ast is None:
         # unfoldable predicate: sound degradation — every file is a
         # boundary file (full rewrite, exact row filter still applies)
@@ -2131,68 +2057,19 @@ def _delete_where_impl(ctx, path: str, predicate) -> dict:
         raise ValueError(
             "delete_where would remove every row; drop the table and its "
             "index instead of deleting through them")
-
-    whole_rows = int(pctx.rows[whole[pctx.file_ids]].sum())
-    whole_abs = _qualified_uris(
-        spark, meta.table_path,
-        [p for p, w in zip(pctx.file_paths, whole) if w])
-    boundary_abs = _qualified_uris(
-        spark, meta.table_path,
-        [p for p, b in zip(pctx.file_paths, boundary) if b])
-
-    tmp = path.rstrip("/") + "__delete_tmp"
-    bak = path.rstrip("/") + "__delete_bak"
-    rows_deleted = whole_rows
-    if boundary_abs:
-        from pyspark.sql import functions as F
-
-        current = (spark.read.schema(meta.data_schema)
-                   .option("basePath", meta.table_path)
-                   .parquet(*sorted(boundary_abs)))
-        n_before = int(pctx.rows[boundary[pctx.file_ids]].sum())
-        # DELETE removes rows where pred is TRUE; rows where it is NULL
-        # survive (SQL three-valued semantics) — hence coalesce, not ~pred
-        kept = current.filter(F.coalesce(~residual, F.lit(True)))
-        # surviving-row count rides the rewrite write itself
-        # (CollectMetrics via observe — the update_where precedent): the
-        # old shape re-read the ENTIRE rewritten tmp dir just to count,
-        # doubling the IO of every boundary rewrite at scale
-        from pyspark.sql import Observation
-        obs_kept = Observation("delete_rows_kept")
-        kept = kept.observe(obs_kept, F.count(F.lit(1)).alias("n"))
-        # partitioned: hash on the partition columns so each partition
-        # value writes from one task — one output file per touched
-        # partition, no task×partition file explosion under partitionBy
-        out = (kept.repartition(max(1, len(boundary_abs)), *pcols)
-               if pcols else
-               kept.repartition(max(1, len(boundary_abs))))
-        writer = out.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(tmp)
-        # bounded read + explicit fallback (round-16, ADVICE): the write
-        # above delivered the metrics in every healthy run; on the
-        # documented AQE dropped-CollectMetrics class, re-count the
-        # already-written tmp dir (the pre-r15 shape) instead of hanging
-        from parquet_index_spark.operators._ckpt import (
-            observation_get_bounded)
-        got = observation_get_bounded(obs_kept)
-        n_after = (int(got["n"] or 0) if got is not None
-                   else spark.read.parquet(tmp).count())
-        rows_deleted += n_before - n_after
-    else:
-        # whole-file drops only: stage an empty rewrite dir for the swap
-        fs, _ = _fs_for(spark, path)
-        jtmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
-        fs.delete(jtmp, True)
-        fs.mkdirs(jtmp)
-    _staged_swap(spark, path, tmp, bak, whole_abs | boundary_abs,
-                 label="delete")
-    ctx.index.refresh.parquet(path)
+    boundary_rel = [p for p, b in zip(pctx.file_paths, boundary) if b]
+    # DELETE removes rows where pred is TRUE; rows where it is NULL
+    # survive (SQL three-valued semantics) — hence coalesce, not pred
+    n_hit = _counted_rewrite(
+        ctx, path, "delete_where", table._metadata, boundary_rel,
+        lambda rows: (rows, F.coalesce(residual, F.lit(False))),
+        lambda rows, hit: None if rows is None else rows.filter(~hit),
+        drop_rel=[p for p, w in zip(pctx.file_paths, whole) if w])
     return {"files_total": nf,
             "files_dropped_whole": int(whole.sum()),
-            "files_rewritten": len(boundary_abs),
-            "rows_deleted": int(rows_deleted)}
+            "files_rewritten": len(boundary_rel),
+            "rows_deleted": int(pctx.rows[whole[pctx.file_ids]].sum())
+            + n_hit}
 
 
 def update_where(ctx, path: str, predicate,
@@ -2215,7 +2092,8 @@ def _update_where_impl(ctx, path: str, predicate,
     updated — SQL three-valued semantics). Pruning soundness is the
     usual contract: may-match is a superset of does-match, so every row
     the predicate selects lives in a rewritten file. Same staged-rename
-    swap + incremental refresh as merge_into/delete_where.
+    swap + incremental refresh as merge_into/delete_where; rows_updated
+    is counted on the rewrite's own scan.
     Hive-partitioned tables work end-to-end (partition pseudo-stats
     prune; boundary files rewrite partition-aware), but assignments may
     not target a partition column — that would migrate rows between
@@ -2224,108 +2102,50 @@ def _update_where_impl(ctx, path: str, predicate,
     (unindexed appended files would silently miss the UPDATE). Returns
     {files_total, files_rewritten, rows_updated}.
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    from parquet_index_spark import collector
     from parquet_index_spark.pruning import prune_files
 
     if not assignments:
         raise ValueError("update_where requires at least one assignment")
-    # heal a crash between the swap's two renames BEFORE touching the
-    # table (the table dir is absent in that state; the index load
-    # below would fail with an unrelated missing-path error) —
-    # round-11 review, second pass: recovery was compact-only while
-    # all four DML ops share the same window
-    _recover_staged_swap(ctx.spark_session, path, "__update_bak")
-    _refuse_stranded_tmp(ctx.spark_session, path,
-                         path.rstrip("/") + "__update_tmp", "update_where")
-    table = ctx.index.parquet(path)
-    spark = table._spark
+    table, pctx, tz = _begin_rewrite(ctx, path, "update_where")
     meta = table._metadata
-    _require_index_current(spark, meta, "update_where")
-    pcols = list(meta.partition_columns)
-    pctx = meta.context()
-    all_rel = list(pctx.file_paths)
-    if collector.SELF_FILE in all_rel:
-        raise ValueError(
-            "update_where requires a directory table (single-file tables "
-            "have no partial-rewrite granularity)")
     table_cols = [f.name for f in meta.data_schema.fields]
     unknown = sorted(set(assignments) - set(table_cols))
     if unknown:
         raise ValueError(f"update_where: unknown columns {unknown}")
-    bad = sorted(set(assignments) & set(pcols))
+    bad = sorted(set(assignments) & set(meta.partition_columns))
     if bad:
         raise ValueError(
             f"update_where cannot assign partition columns {bad}: rows "
             "would migrate between partition directories (express it as "
             "a DELETE plus a re-insert instead)")
     ast, residual = table._compile(predicate)
-    if ast is None:
-        affected_rel = set(all_rel)     # sound: rewrite everything
-    else:
-        try:
-            tz = spark.conf.get("spark.sql.session.timeZone")
-        except Exception:  # noqa: BLE001
-            tz = None
-        affected_rel = set(prune_files(ast, pctx, tz))
+    affected_rel = (list(pctx.file_paths) if ast is None  # sound: all
+                    else prune_files(ast, pctx, tz))
     if not affected_rel:
-        return {"files_total": len(all_rel), "files_rewritten": 0,
+        return {"files_total": len(pctx.file_paths), "files_rewritten": 0,
                 "rows_updated": 0}
-    affected_abs = _qualified_uris(spark, meta.table_path, affected_rel)
-    current = (spark.read.schema(meta.data_schema)
-               .option("basePath", meta.table_path)
-               .parquet(*sorted(affected_abs)))
-    hit = F.coalesce(residual, F.lit(False))
-    # rows_updated is computed INSIDE the rewrite job (CollectMetrics via
-    # observe): a separate pre-count would read every affected file twice,
-    # doubling the IO of every UPDATE at scale (round-4 VERDICT #2)
-    from pyspark.sql import Observation
-    obs = Observation("update_where_metrics")
-    current = current.observe(
-        obs, F.sum(F.when(hit, F.lit(1)).otherwise(F.lit(0)))
-        .alias("rows_updated"))
-    out_cols = []
-    for c in table_cols:
-        if c in assignments:
-            new = assignments[c]
-            new = F.expr(new) if isinstance(new, str) else new
-            field_type = meta.data_schema[c].dataType.simpleString()
-            out_cols.append(F.when(hit, new.cast(field_type))
-                            .otherwise(F.col(c)).alias(c))
-        else:
-            out_cols.append(F.col(c))
-    updated = current.select(*out_cols)
-    tmp = path.rstrip("/") + "__update_tmp"
-    bak = path.rstrip("/") + "__update_bak"
-    # partitioned: hash on the partition columns so each partition value
-    # writes from one task (see delete_where)
-    out = (updated.repartition(max(1, len(affected_abs)), *pcols)
-           if pcols else
-           updated.repartition(max(1, len(affected_abs))))
-    writer = out.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(tmp)
-    # bounded read + explicit fallback (round-16, ADVICE): source files
-    # are untouched until the swap, so a dropped-CollectMetrics miss
-    # re-counts the hit rows from them instead of hanging
-    from parquet_index_spark.operators._ckpt import observation_get_bounded
-    got = observation_get_bounded(obs)
-    if got is not None:
-        rows_updated = got["rows_updated"] or 0  # sum is NULL on 0 rows
-    else:
-        rows_updated = (spark.read.schema(meta.data_schema)
-                        .option("basePath", meta.table_path)
-                        .parquet(*sorted(affected_abs))
-                        .filter(hit).count())
-    _staged_swap(spark, path, tmp, bak, affected_abs, label="update")
-    ctx.index.refresh.parquet(path)
-    return {"files_total": len(all_rel),
+
+    def rewrite(rows, hit):
+        out_cols = []
+        for c in table_cols:
+            if c in assignments:
+                new = assignments[c]
+                new = F.expr(new) if isinstance(new, str) else new
+                field_type = meta.data_schema[c].dataType.simpleString()
+                out_cols.append(F.when(hit, new.cast(field_type))
+                                .otherwise(F.col(c)).alias(c))
+            else:
+                out_cols.append(F.col(c))
+        return rows.select(*out_cols)
+
+    n_hit = _counted_rewrite(
+        ctx, path, "update_where", meta, affected_rel,
+        lambda rows: (rows, F.coalesce(residual, F.lit(False))), rewrite)
+    return {"files_total": len(pctx.file_paths),
             "files_rewritten": len(affected_rel),
-            "rows_updated": int(rows_updated)}
+            "rows_updated": n_hit}
 
 
 def ingest_csv(spark, csv_path: str, table_path: str, *, header: bool = True,

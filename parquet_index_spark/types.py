@@ -127,6 +127,21 @@ def to_long_space(value: Any, kind: str, tz: Optional[str] = None) -> int:
     raise TypeError(f"kind {kind} is not long-space")
 
 
+def as_instants(values, dtype: T.DataType) -> list:
+    """Key values collected from Spark, ready to fold. PySpark returns a
+    ``TimestampType`` value as a NAIVE datetime in the driver process's
+    local zone (``TimestampType.fromInternal``), while the fold reads a
+    naive literal as a wall time in the zone it is given — so a collected
+    instant would fold as a different instant whenever the two zones
+    differ. ``astimezone()`` makes each naive value the aware instant it
+    is. Other types, ``TimestampNTZType`` included, and None pass
+    through."""
+    if not isinstance(dtype, T.TimestampType):
+        return list(values)
+    return [v.astimezone() if isinstance(v, _dt.datetime) and v.tzinfo is None
+            else v for v in values]
+
+
 def literal_to_stat_value(value: Any, kind: str, tz: Optional[str] = None) -> Any:
     """Normalize a predicate literal for comparison against stored stats:
     string kind -> str, everything else -> long-space int."""

@@ -3055,3 +3055,66 @@ class TestStagePoolLatencyGate:
                                                tmp_table_dir):
         mode = self._flat_swap(spark, tmp_table_dir, "gate_small", n=10)
         assert mode["mode"] == "under_floor"
+
+
+class TestDmlCountFallback:
+    """Every DML row counter rides the rewrite's own scan as one
+    Observation, read once through a bounded wait. When that read misses
+    (the AQE dropped-CollectMetrics class), the count falls back to one
+    probe over the source files. Forcing the miss must change neither a
+    counter nor the table."""
+
+    @staticmethod
+    def _run(spark, ctx, path):
+        from pyspark.sql import functions as F
+        from parquet_index_spark import sources as S
+        for i in range(8):  # 8 files of 500 ids: exact file boundaries
+            (spark.range(i * 500, (i + 1) * 500)
+             .select("id", (F.col("id") % 7).alias("v"))
+             .coalesce(1).write.mode("append").parquet(path))
+        ctx.index.create.indexBy("id").parquet(path)
+
+        def rows(lo, hi, v):
+            return spark.range(lo, hi).select(
+                "id", F.lit(v).cast("long").alias("v"))
+
+        infos = [
+            S.delete_where(ctx, path, "id >= 250 AND id < 1750"),
+            S.update_where(ctx, path, "id >= 2000 AND id < 2014",
+                           {"v": F.lit(-1).cast("long")}),
+            S.merge_into(ctx, path, rows(2500, 2700, -2), "id",
+                         delete_keys=list(range(3000, 3040))),
+            S.merge_into(ctx, path, rows(3500, 3700, -3), "id",
+                         max_keys=50,
+                         delete_keys=rows(3100, 3200, 0).select("id")),
+        ]
+        table = sorted(tuple(r) for r in
+                       ctx.index.parquet(path).df.collect())
+        return infos, table
+
+    def test_forced_miss_matches_healthy_run(self, spark, ctx,
+                                             tmp_table_dir, monkeypatch):
+        from parquet_index_spark import sources as S
+        healthy = self._run(spark, ctx, os.path.join(tmp_table_dir, "ok"))
+        infos, table = healthy
+        assert (infos[0]["files_dropped_whole"], infos[0]["files_rewritten"],
+                infos[0]["rows_deleted"]) == (2, 2, 1500)
+        assert infos[1]["rows_updated"] == 14
+        assert (infos[2]["delete_path"], infos[2]["rows_updated"],
+                infos[2]["rows_deleted"], infos[2]["rows_inserted"]) == (
+                    "in", 200, 40, 0)
+        assert (infos[3]["delete_path"], infos[3]["rows_updated"],
+                infos[3]["rows_deleted"], infos[3]["rows_inserted"]) == (
+                    "anti", 200, 100, 0)
+        assert len(table) == 4000 - 1500 - 40 - 100
+
+        misses = []
+
+        def miss(obs, timeout_sec=300.0):
+            misses.append(obs)
+            return None
+
+        monkeypatch.setattr(S, "observation_get_bounded", miss)
+        forced = self._run(spark, ctx, os.path.join(tmp_table_dir, "miss"))
+        assert len(misses) == 4  # one bounded read per DML call
+        assert forced == healthy

@@ -107,3 +107,65 @@ class TestInstantPruningNonUtc:
         finally:
             spark.conf.set("spark.sql.session.timeZone", old)
             ctx.index.delete.parquet(instant_table)
+
+
+class TestCollectedInstantKeys:
+    """PySpark hands TimestampType values back as naive datetimes in the
+    driver process's zone. merge_into and dpp_join fold keys they collect
+    from Spark, so they must fold them as the instants they are, whatever
+    that zone is: here the driver runs in New York and the session in UTC."""
+
+    @pytest.fixture()
+    def ny_driver(self, spark, monkeypatch):
+        import time
+        old = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        with monkeypatch.context() as m:
+            m.setenv("TZ", "America/New_York")
+            time.tzset()
+            try:
+                yield
+            finally:
+                spark.conf.set("spark.sql.session.timeZone", old)
+        time.tzset()
+
+    @staticmethod
+    def _keys(spark, lo, hi, v=None):
+        """(ts, v) rows for minutes lo..hi-1 past a fixed UTC instant."""
+        return spark.range(lo, hi).select(
+            F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 60)
+            .alias("ts"),
+            (F.col("id") if v is None else F.lit(v)).cast("long").alias("v"))
+
+    @pytest.fixture()
+    def ts_table(self, spark, tmp_metastore, tmp_table_dir, ny_driver):
+        """480 one-minute keys range-split over 8 files, indexed on the
+        instant key."""
+        path = os.path.join(tmp_table_dir, "ts_keys")
+        (self._keys(spark, 0, 480).repartitionByRange(8, "ts")
+         .write.parquet(path))
+        ctx = QueryContext(spark)
+        ctx.index.create.indexBy("ts").parquet(path)
+        return ctx, path
+
+    @pytest.mark.parametrize("max_keys", [100_000, 0])
+    def test_merge_updates_existing_key(self, spark, ts_table, max_keys):
+        from parquet_index_spark.sources import merge_into
+        ctx, path = ts_table
+        info = merge_into(ctx, path, self._keys(spark, 100, 101, v=-1), "ts",
+                          max_keys=max_keys)
+        assert (info["files_rewritten"], info["rows_updated"],
+                info["rows_inserted"]) == (1, 1, 0)
+        t = spark.read.parquet(path)
+        assert t.count() == 480
+        assert t.select("ts").distinct().count() == 480
+        assert t.filter("v = -1").count() == 1
+
+    @pytest.mark.parametrize("max_keys", [100_000, 0])
+    def test_dpp_join_keeps_every_match(self, spark, ts_table, max_keys):
+        from parquet_index_spark.functions.joins import dpp_join
+        ctx, path = ts_table
+        dim = self._keys(spark, 0, 480).filter("v % 48 = 5").select(
+            "ts", F.col("v").alias("dim_v"))
+        got = dpp_join(ctx, path, "ts", dim, "ts", max_keys=max_keys)
+        assert sorted(r["v"] for r in got.collect()) == list(range(5, 480, 48))
