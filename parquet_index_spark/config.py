@@ -12,6 +12,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from parquet_index_spark import statistics
+
 METASTORE_LOCATION = "spark.sql.index.metastore"
 CREATE_IF_NOT_EXISTS = "spark.sql.index.createIfNotExists"
 NUM_PARTITIONS = "spark.sql.index.partitions"
@@ -23,7 +25,11 @@ PARQUET_FILTER_EAGER_LOADING = "spark.sql.index.parquet.filter.eagerLoading"
 DICT_MAX_SIZE = "spark.sql.index.parquet.filter.dict.maxSize"
 # bloom false-positive probability: expected extra files scanned on a point
 # query ~= n_blocks * fpp (400 blocks at 0.03 -> ~12 extra; at 0.001 ->
-# ~0.4). Lower fpp costs ~2x metadata per decade: bits/item = 1.44*log2(1/fpp)
+# ~0.4). Each decade of fpp costs ~4.8 bits per distinct value per block:
+# bits/item = 1.44*log2(1/fpp). Defaults to 0.001 (statistics.BLOOM_FPP),
+# not the reference's fixed 0.03: about 7 more bits per distinct value
+# buy ~30x fewer false-positive files. Blooms carry their own geometry,
+# so an index built at another fpp keeps working and refreshes mix freely.
 BLOOM_FPP = "spark.sql.index.parquet.filter.bloom.fpp"
 # every incremental refresh appends stats shard(s); a per-micro-batch
 # write_indexed_sink stream would accumulate thousands and degrade every
@@ -120,6 +126,6 @@ class IndexConf:
             filter_type=filter_type,
             filter_eager_loading=_bool(get(PARQUET_FILTER_EAGER_LOADING), False),
             dict_max_size=int(get(DICT_MAX_SIZE, "4096") or 4096),
-            bloom_fpp=float(get(BLOOM_FPP, "0.03") or 0.03),
+            bloom_fpp=float(get(BLOOM_FPP) or statistics.BLOOM_FPP),
             refresh_max_shards=int(get(REFRESH_MAX_SHARDS, "64") or 64),
         )

@@ -138,7 +138,10 @@ class IndexedDataFrame:
         if len(files) == len(meta.files):
             return self.df
         if not files:
-            return self._spark.createDataFrame([], meta.data_schema)
+            # an RDD of no partitions: collecting it runs no task, where
+            # local rows would start a Python worker for nothing
+            return self._spark.createDataFrame(
+                self._spark.sparkContext.emptyRDD(), meta.data_schema)
         names = sorted({os.path.basename(p) for p in files})
         return (self._spark.read
                 .schema(meta.data_schema)

@@ -36,6 +36,7 @@ deliberate divergence from ParquetIndexFilters.scala:118-123.
 
 from __future__ import annotations
 
+import datetime
 from typing import Callable, Dict, List, Optional
 
 import numpy as np
@@ -106,7 +107,14 @@ def _norm_literal(value, kind: str, tz: str = None):
 
     ``tz`` is the Spark session timezone: TIMESTAMP-kind (instant) naive
     literals are localized through it so the fold compares the same instant
-    the residual filter evaluates (sound under any session timezone)."""
+    the residual filter evaluates (sound under any session timezone).
+
+    A datetime against a DATE column is un-coercible: Spark compares the
+    two as timestamps, the date widened to its midnight, so
+    ``d < TIMESTAMP '2000-01-05 12:00:00'`` keeps d = 2000-01-05, which
+    the day 2000-01-05 in stat space would prune."""
+    if kind == ityp.DATE and isinstance(value, datetime.datetime):
+        return None
     try:
         return ityp.literal_to_stat_value(value, kind, tz)
     except (TypeError, ValueError, KeyError):
@@ -139,6 +147,49 @@ _RULES = {
 }
 
 
+# Widest integral range [lo, hi] the may-match fold probes value by value
+# against the membership filters: every row in the range holds one of its
+# hi - lo + 1 values, so a block whose filter holds none of them cannot
+# match. A one-week date range or a 150-key id range probes; a wider range
+# prunes on min/max alone, as the per-value probe cost grows with width
+# while the chance that some value of the range hits grows toward 1.
+RANGE_PROBE_MAX = 256
+
+# a comparison's inclusive integral bound is its literal plus this shift
+_SHIFT = {P.Ge: 0, P.Gt: 1, P.Le: 0, P.Lt: -1}
+
+
+def _exact_long(value, kind: str):
+    """A range bound in long space, or None unless the literal normalizes
+    exactly: an int for INT/LONG, a date or ISO date string for DATE."""
+    if kind == ityp.DATE:
+        exact = isinstance(value, (datetime.date, str))
+    else:
+        exact = kind in (ityp.INT, ityp.LONG) and isinstance(value, int) \
+            and not isinstance(value, bool)
+    return _norm_literal(value, kind) if exact else None
+
+
+def _integral_ranges(children, ops) -> dict:
+    """{column: (kind, lo, hi)} for each INT, LONG or DATE column that the
+    direct Ge/Gt/Le/Lt ``children`` of an And bound on both sides."""
+    bounds: dict = {}
+    for c in children:
+        kind = ops.kind(c.column) if type(c) in _SHIFT else None
+        v = _exact_long(c.value, kind) if kind else None
+        if v is None:
+            continue
+        v += _SHIFT[type(c)]
+        lo, hi = bounds.get(c.column, (None, None))
+        if isinstance(c, (P.Ge, P.Gt)):
+            lo = v if lo is None else max(lo, v)
+        else:
+            hi = v if hi is None else min(hi, v)
+        bounds[c.column] = (lo, hi)
+    return {col: (ops.kind(col), lo, hi) for col, (lo, hi) in bounds.items()
+            if lo is not None and hi is not None}
+
+
 def _fold(pred: P.Predicate, ops, tz: str, full: bool):
     """The fold lattice over a pushed-down predicate: the may-match mask
     ("some row of the block might match") when ``full`` is False, the
@@ -158,7 +209,18 @@ def _fold(pred: P.Predicate, ops, tz: str, full: bool):
             else:
                 out |= _fold(c, ops, tz, full)
             if ops.settled(out, not conj):
-                break
+                return out
+        if conj and not full:
+            # the range probe: a may-match And bounding an integral column
+            # on both sides needs some value of [lo, hi] in the block. The
+            # full-match fold never probes: a filter proves absence only
+            for col, (kind, lo, hi) in _integral_ranges(pred.children,
+                                                        ops).items():
+                if hi < lo:
+                    out &= ops.const(False)
+                elif hi - lo < RANGE_PROBE_MAX:
+                    out = ops.membership(col, kind, out,
+                                         list(range(lo, hi + 1)))
         return out
     if isinstance(pred, P.Trivial):
         return ops.const(pred.value)

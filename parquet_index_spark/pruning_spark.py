@@ -64,14 +64,15 @@ def _pivot_stats(stats_df, columns: List[str]):
     return stats_df.groupBy("path", "block").agg(*aggs)
 
 
-def _bloom_any_probe(hash_pairs: List[tuple], int_values: List[int]):
+def _bloom_any_probe(h1, h2, int_values: List[int]):
     """Arrow-batched UDF: membership binary -> might-contain-any(values),
     dispatched on the serialization magic (bloom or dense bitmap).
 
-    The probe values' hash PAIRS are precomputed driver-side and baked into
-    the closure; each batch row is k bit tests (bloom) or exact offset bit
-    tests (bitmap) — executor-side, no driver involvement, no hashing in
-    the UDF."""
+    The probe values' hash pairs (uint64 arrays h1, h2) are computed
+    driver-side and baked into the closure; each batch row runs the numpy
+    multi-value probe the driver fold runs over a whole column
+    (`statistics._bloom_any`, `_bitmap_any`) on its one filter —
+    executor-side, no driver involvement, no hashing in the UDF."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
@@ -86,13 +87,11 @@ def _bloom_any_probe(hash_pairs: List[tuple], int_values: List[int]):
             try:
                 raw = bytes(b)
                 if raw[:8] == _BITMAP_MAGIC:
-                    bm = BitmapFilter.from_bytes(raw)
-                    out.append(any(bm.might_contain(v, "long")
-                                   for v in int_values))
+                    out.append(BitmapFilter.from_bytes(raw)
+                               .might_contain_any(int_values))
                 else:
-                    bf = BloomFilter.from_bytes(raw)
-                    out.append(any(bf.might_contain_pair(h1, h2)
-                                   for h1, h2 in hash_pairs))
+                    out.append(BloomFilter.from_bytes(raw)
+                               .might_contain_any(h1, h2))
             except ValueError:
                 out.append(True)  # unknown format => scan (sound)
         return pd.Series(out)
@@ -245,9 +244,8 @@ class _ColumnOps:
         ds_ok = F.arrays_overlap(
             ds, F.array(*[F.lit(v) for v in str_vals])) \
             if str_vals else F.lit(False)
-        from parquet_index_spark.statistics import hash_pair_for
-        pairs = [hash_pair_for(v, kind) for v in values]
-        bloom_ok = _bloom_any_probe(pairs, int_vals)(bloom)
+        from parquet_index_spark.statistics import hash_pairs_for
+        bloom_ok = _bloom_any_probe(*hash_pairs_for(values), int_vals)(bloom)
         return out & (F.when(has_dl, dl_ok)
                       .when(has_ds, ds_ok)
                       .when(bloom.isNotNull(), bloom_ok)

@@ -2,13 +2,21 @@
 
 Mirrors the semantics of the reference's ColumnFilterStatistics
 (ColumnFilterStatistics.scala:251-393): a per-(file, block, column)
-membership structure consulted only for EqualTo / In after min-max passes.
+membership structure consulted for EqualTo / In after min-max passes —
+and, beyond the reference, for short integral ranges, whose every value
+is probed (pruning.RANGE_PROBE_MAX).
 
-- bloom: expected items = min(block rows, 2**20), fpp configurable
-  (reference fixes 0.03, ColumnFilterStatistics.scala:256); double hashing
-  with a kind-dependent hash pair — splitmix64-style mixing for long-space
-  values (numpy-vectorizable: the index BUILD hashes whole blocks as one
-  uint64 array pass) and blake2b for strings. Serialized to bytes and
+- bloom: expected items = min(block rows, 2**20), fpp configurable,
+  default 0.001 — a divergence from the reference, which fixes 0.03
+  (ColumnFilterStatistics.scala:256): a point read over n blocks opens
+  about n * fpp false-positive files, 12 of 400 at 0.03 against 0.4 at
+  0.001, for about 7 more bits per distinct value per block. Each bloom
+  carries its own geometry (m, k), so blooms built at any fpp probe and
+  fold together. Double hashing with a kind-dependent hash pair —
+  splitmix64-style mixing for long-space values (numpy-vectorizable: the
+  index BUILD hashes whole blocks as one uint64 array pass) and blake2b
+  for strings (one hash per value); bits are set and tested in one numpy
+  pass per hash round. Serialized to bytes and
   stored as a *binary column in the metadata parquet* rather than side
   files — one metadata read instead of O(files) small reads at prune time.
   Format magic is versioned: blooms written by an older format fail the
@@ -27,9 +35,11 @@ import math
 import struct
 from typing import Any, Iterable, Optional
 
+import numpy as np
+
 from parquet_index_spark import types as ityp
 
-BLOOM_FPP = 0.03
+BLOOM_FPP = 0.001
 BLOOM_MAX_ITEMS = 1 << 20
 _MAGIC = b"PIBLOOM2"
 BLOOM_FORMAT = 2
@@ -77,6 +87,97 @@ def hash_pair_for(value, kind: str) -> tuple:
     return _hash_pair_long(int(value))
 
 
+def _mix64_np(x):
+    """`_mix64` over a uint64 array (numpy arithmetic wraps at 64 bits)."""
+    x = x ^ (x >> np.uint64(33))
+    x *= np.uint64(_MIX_C1)
+    x ^= x >> np.uint64(33)
+    x *= np.uint64(_MIX_C2)
+    x ^= x >> np.uint64(33)
+    return x
+
+
+def _hash_pairs_long(values) -> tuple:
+    """`_hash_pair_long` over an int64 array: (h1, h2) uint64 arrays."""
+    h1 = _mix64_np(np.asarray(values, dtype=np.int64).view(np.uint64))
+    return h1, _mix64_np(h1 + np.uint64(_GOLDEN)) | np.uint64(1)
+
+
+def hash_pairs_for(values) -> tuple:
+    """`hash_pair_for` over many stat-normalized values: (h1, h2) uint64
+    arrays — one numpy pass for long-space values, one blake2b each for
+    strings."""
+    if not any(isinstance(v, str) for v in values):
+        return _hash_pairs_long(values)
+    pairs = [hash_pair_for(v, None) for v in values]
+    return (np.array([p[0] for p in pairs], dtype=np.uint64),
+            np.array([p[1] for p in pairs], dtype=np.uint64))
+
+
+# (block, value) pairs one numpy pass of a multi-value probe holds
+_PROBE_CHUNK = 1 << 18
+
+
+def _pairs(n_rows: int, n_vals: int):
+    """Every (row, value) index pair, in chunks of at most _PROBE_CHUNK."""
+    step = max(1, _PROBE_CHUNK // max(n_vals, 1))
+    for lo in range(0, n_rows, step):
+        hi = min(lo + step, n_rows)
+        yield (np.repeat(np.arange(lo, hi), n_vals),
+               np.tile(np.arange(n_vals), hi - lo))
+
+
+def _ragged(rows: list) -> Optional[tuple]:
+    """Per-block filters as one ragged group: ``rows`` of (block id, a, b,
+    payload bytes) -> (ids, a int64[g], b int64[g], byte_offsets int64[g+1],
+    concat uint8[~]); None when empty."""
+    if not rows:
+        return None
+    offs = np.zeros(len(rows) + 1, dtype=np.int64)
+    offs[1:] = np.cumsum([len(r[3]) for r in rows])
+    return (np.array([r[0] for r in rows], dtype=np.int64),
+            np.array([r[1] for r in rows], dtype=np.int64),
+            np.array([r[2] for r in rows], dtype=np.int64), offs,
+            np.frombuffer(b"".join(r[3] for r in rows), dtype=np.uint8))
+
+
+def _bloom_any(m, k, offs, concat, rows, h1, h2):
+    """bool[len(rows)]: might bloom ``rows[j]`` of a ragged group (geometry
+    ``m[row]``, ``k[row]``; bits in ``concat[offs[row]:offs[row + 1]]``)
+    contain ANY value of the hash pairs (h1, h2)? One numpy pass per hash
+    round over the (row, value) pairs still alive: a pair drops at its
+    first unset bit and hits once all of its row's k bits are set."""
+    out = np.zeros(len(rows), dtype=bool)
+    for r, v in _pairs(len(rows), len(h1)):
+        b = rows[r]
+        mb, kb, i = m[b].astype(np.uint64), k[b], 0
+        while len(r):
+            idx = (h1[v] + np.uint64(i) * h2[v]) % mb
+            byte = concat[offs[b] + (idx >> np.uint64(3)).astype(np.int64)]
+            ok = ((byte >> (idx & np.uint64(7)).astype(np.uint8)) & 1) > 0
+            i += 1
+            out[r[ok & (kb <= i)]] = True
+            keep = ok & (kb > i)
+            r, v, b, mb, kb = r[keep], v[keep], b[keep], mb[keep], kb[keep]
+    return out
+
+
+def _bitmap_any(vmins, nbits, offs, concat, rows, vals):
+    """bool[len(rows)]: does dense bitmap ``rows[j]`` of a ragged group
+    (bit ``v - vmins[row]`` in ``concat[offs[row]:offs[row + 1]]``) hold
+    ANY of the long-space values ``vals``?"""
+    out = np.zeros(len(rows), dtype=bool)
+    vals = np.asarray(vals, dtype=np.int64)
+    for r, v in _pairs(len(rows), len(vals)):
+        b = rows[r]
+        idx = vals[v] - vmins[b]
+        ok = (idx >= 0) & (idx < nbits[b])
+        r, b, idx = r[ok], b[ok], idx[ok]
+        byte = concat[offs[b] + (idx >> 3)]
+        out[r[((byte >> (idx & 7).astype(np.uint8)) & 1) > 0]] = True
+    return out
+
+
 class BloomFilter:
     """Fixed-size bloom filter with k rounds of double hashing."""
 
@@ -91,7 +192,12 @@ class BloomFilter:
     def create(cls, expected_items: int, fpp: float = BLOOM_FPP) -> "BloomFilter":
         n = max(1, min(int(expected_items), BLOOM_MAX_ITEMS))
         m = max(8, int(-n * math.log(fpp) / (math.log(2) ** 2)))
-        k = max(1, round(m / n * math.log(2)))
+        # k rounds down, so for any fpp below 1/2, m * ln2 / k (describe's
+        # design capacity, read back from the stored geometry) is never
+        # below n. At fpp 0.001 rounding up would give k = 10 > 9.97 and
+        # read a filter holding exactly n items as over capacity; k = 9
+        # costs ~3% in fpp
+        k = max(1, math.floor(m / n * math.log(2)))
         return cls(m, k)
 
     def put_bytes(self, data: bytes) -> None:
@@ -124,58 +230,46 @@ class BloomFilter:
         v = ityp.literal_to_stat_value(value, kind)
         return self.might_contain_pair(*hash_pair_for(v, kind))
 
-    def put_longs_vectorized(self, values) -> None:
-        """Insert an int64 numpy array in O(k) vectorized passes."""
-        import numpy as np
-        x = np.asarray(values, dtype=np.int64).view(np.uint64).copy()
-        for shift_mul in ((33, _MIX_C1), (33, _MIX_C2)):
-            x ^= x >> np.uint64(shift_mul[0])
-            x *= np.uint64(shift_mul[1])
-        x ^= x >> np.uint64(33)
-        h1 = x
-        y = h1 + np.uint64(_GOLDEN)
-        for shift_mul in ((33, _MIX_C1), (33, _MIX_C2)):
-            y ^= y >> np.uint64(shift_mul[0])
-            y *= np.uint64(shift_mul[1])
-        y ^= y >> np.uint64(33)
-        h2 = y | np.uint64(1)
+    def put_pairs(self, h1, h2) -> None:
+        """Insert hash-pair arrays: one numpy pass per hash round, setting
+        bits in place (work grows with the values, not the filter, so
+        batches can stream into a filter sized for a whole table)."""
         m = np.uint64(self.num_bits)
-        bits = np.frombuffer(self.bits, dtype=np.uint8).copy()
+        bits = np.frombuffer(self.bits, dtype=np.uint8)  # writable view
         for i in range(self.num_hashes):
             idx = (h1 + np.uint64(i) * h2) % m
             np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
                              np.left_shift(np.uint8(1),
-                                           (idx & np.uint64(7)).astype(np.uint8)))
-        self.bits = bytearray(bits.tobytes())
+                                           (idx & np.uint64(7))
+                                           .astype(np.uint8)))
+
+    def put_longs_vectorized(self, values) -> None:
+        """Insert an int64 numpy array in O(k) vectorized passes."""
+        self.put_pairs(*_hash_pairs_long(values))
 
     def might_contain_longs_vectorized(self, values):
         """Vectorized membership probe for an int64 numpy array — the
         read-side mirror of :meth:`put_longs_vectorized` (identical hash
         pipeline, so a value inserted by one is always found by the
         other). Returns a numpy bool array."""
-        import numpy as np
-        x = np.asarray(values, dtype=np.int64).view(np.uint64).copy()
-        for shift_mul in ((33, _MIX_C1), (33, _MIX_C2)):
-            x ^= x >> np.uint64(shift_mul[0])
-            x *= np.uint64(shift_mul[1])
-        x ^= x >> np.uint64(33)
-        h1 = x
-        y = h1 + np.uint64(_GOLDEN)
-        for shift_mul in ((33, _MIX_C1), (33, _MIX_C2)):
-            y ^= y >> np.uint64(shift_mul[0])
-            y *= np.uint64(shift_mul[1])
-        y ^= y >> np.uint64(33)
-        h2 = y | np.uint64(1)
+        h1, h2 = _hash_pairs_long(values)
         m = np.uint64(self.num_bits)
         bits = np.frombuffer(self.bits, dtype=np.uint8)
-        out = np.ones(len(x), dtype=bool)
+        out = np.ones(len(h1), dtype=bool)
         for i in range(self.num_hashes):
             idx = (h1 + np.uint64(i) * h2) % m
             byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
-            bit = (byte >> (idx & np.uint64(7)).astype(np.uint8)) \
-                & np.uint8(1)
-            out &= bit.astype(bool)
+            out &= ((byte >> (idx & np.uint64(7)).astype(np.uint8))
+                    & np.uint8(1)).astype(bool)
         return out
+
+    def might_contain_any(self, h1, h2) -> bool:
+        """Might any value of the hash-pair arrays be present?"""
+        return bool(_bloom_any(
+            np.array([self.num_bits]), np.array([self.num_hashes]),
+            np.zeros(1, dtype=np.int64),
+            np.frombuffer(self.bits, dtype=np.uint8),
+            np.zeros(1, dtype=np.int64), h1, h2)[0])
 
     def to_bytes(self) -> bytes:
         header = _MAGIC + struct.pack(">II", self.num_bits, self.num_hashes)
@@ -213,7 +307,6 @@ class BitmapFilter:
     def from_values(cls, values) -> Optional["BitmapFilter"]:
         """Build from normalized long-space values; None if the span is too
         wide for a dense representation (caller falls back to bloom)."""
-        import numpy as np
         arr = np.asarray(list(values), dtype=np.int64)
         if len(arr) == 0:
             return cls(0, 1)
@@ -236,6 +329,14 @@ class BitmapFilter:
         if idx < 0 or idx >= self.num_bits:
             return False
         return bool((self.bits[idx >> 3] >> (idx & 7)) & 1)
+
+    def might_contain_any(self, values) -> bool:
+        """Does the block hold any of the long-space ``values``?"""
+        return bool(_bitmap_any(
+            np.array([self.vmin]), np.array([self.num_bits]),
+            np.zeros(1, dtype=np.int64),
+            np.frombuffer(self.bits, dtype=np.uint8),
+            np.zeros(1, dtype=np.int64), values)[0])
 
     def to_bytes(self) -> bytes:
         header = _BITMAP_MAGIC + struct.pack(">qI", self.vmin, self.num_bits)
@@ -290,13 +391,13 @@ class ColumnMembership:
     probed in a Python for-loop — fine at 10^4 blocks, pathological at
     millions): dict values live in one concatenated array per value type
     with per-type block offsets and are probed with a single np.isin pass;
-    blooms are grouped by geometry (num_bits, num_hashes), their bit arrays
-    stacked into one 2D uint8 matrix per group, and each hash round is one
-    vectorized column gather across the whole group.
+    blooms and bitmaps each live in one ragged byte array with per-block
+    geometry and offsets, so a probe is one numpy pass per bit test over
+    the (candidate block, value) pairs, whatever mix of geometries the
+    blocks were built with.
     """
 
     def __init__(self, n: int):
-        import numpy as np
         self.n = n
         self.has_filter = np.zeros(n, dtype=bool)
         self.has_dict = np.zeros(n, dtype=bool)
@@ -304,22 +405,21 @@ class ColumnMembership:
         self.str_offsets = np.zeros(n + 1, dtype=np.int64)
         self.dict_long: Optional[Any] = None   # int64[total_long]
         self.dict_str: Optional[Any] = None    # object[total_str]
-        # [(row_ids int64[g], num_bits, num_hashes, bits uint8[g, nbytes])]
-        self.bloom_groups: list = []
-        # one ragged group: (row_ids, vmins int64[g], nbits int64[g],
-        #                    byte_offsets int64[g+1], concat bytes uint8[~])
+        # ragged groups (`_ragged`): (row_ids, num_bits int64[g],
+        #   num_hashes int64[g], byte_offsets int64[g+1], concat uint8[~])
+        self.bloom_group: Optional[tuple] = None
+        # (row_ids, vmins int64[g], nbits int64[g], byte_offsets, concat)
         self.bitmap_group: Optional[tuple] = None
 
     # -- construction ------------------------------------------------------
     @classmethod
     def build(cls, dict_long_col, dict_str_col, bloom_col) -> "ColumnMembership":
         """From the aligned metadata arrays (object arrays of list/bytes/None)."""
-        import numpy as np
         n = len(bloom_col)
         out = cls(n)
         long_parts: list = []
         str_parts: list = []
-        groups: dict = {}
+        bloom_rows: list = []
         bitmap_rows: list = []
         li = si = 0
         for i in range(n):
@@ -337,7 +437,7 @@ class ColumnMembership:
             elif isinstance(bb, (bytes, bytearray)) and len(bb) >= 16 \
                     and bytes(bb[:8]) == _MAGIC:
                 m, k = struct.unpack(">II", bb[8:16])
-                groups.setdefault((m, k), []).append((i, bytes(bb[16:])))
+                bloom_rows.append((i, m, k, bytes(bb[16:])))
                 out.has_filter[i] = True
             elif isinstance(bb, (bytes, bytearray)) and len(bb) >= 20 \
                     and bytes(bb[:8]) == _BITMAP_MAGIC:
@@ -350,21 +450,8 @@ class ColumnMembership:
             out.dict_long = np.concatenate(long_parts)
         if str_parts:
             out.dict_str = np.concatenate(str_parts)
-        for (m, k), rows in groups.items():
-            ids = np.array([r[0] for r in rows], dtype=np.int64)
-            nbytes = (m + 7) // 8
-            bits = np.frombuffer(b"".join(r[1] for r in rows),
-                                 dtype=np.uint8).reshape(len(rows), nbytes)
-            out.bloom_groups.append((ids, m, k, bits))
-        if bitmap_rows:
-            ids = np.array([r[0] for r in bitmap_rows], dtype=np.int64)
-            vmins = np.array([r[1] for r in bitmap_rows], dtype=np.int64)
-            nbits = np.array([r[2] for r in bitmap_rows], dtype=np.int64)
-            offs = np.zeros(len(bitmap_rows) + 1, dtype=np.int64)
-            offs[1:] = np.cumsum([len(r[3]) for r in bitmap_rows])
-            concat = np.frombuffer(b"".join(r[3] for r in bitmap_rows),
-                                   dtype=np.uint8)
-            out.bitmap_group = (ids, vmins, nbits, offs, concat)
+        out.bloom_group = _ragged(bloom_rows)
+        out.bitmap_group = _ragged(bitmap_rows)
         return out
 
     @classmethod
@@ -400,7 +487,6 @@ class ColumnMembership:
         pass: flag every stored value, then segment-reduce per block over
         the dict offsets.
         """
-        import numpy as np
         if self.dict_str is None or not prefix or not candidates.any():
             return candidates
         str_counts = np.diff(self.str_offsets)
@@ -432,14 +518,13 @@ class ColumnMembership:
         Blocks without any membership filter pass through unchanged; the
         whole probe is numpy column operations — no per-block Python.
         """
-        import numpy as np
         if not len(values):
             return candidates
         out = candidates & ~self.has_filter
+        int_vals = [v for v in values if not isinstance(v, str)]
+        str_vals = [v for v in values if isinstance(v, str)]
         if self.has_dict.any():
             dict_hit = np.zeros(self.n, dtype=bool)
-            int_vals = [v for v in values if not isinstance(v, str)]
-            str_vals = [v for v in values if isinstance(v, str)]
             if self.dict_long is not None and int_vals:
                 pos = np.nonzero(np.isin(self.dict_long,
                                          np.array(int_vals, dtype=np.int64)))[0]
@@ -451,37 +536,18 @@ class ColumnMembership:
                 blk = np.searchsorted(self.str_offsets, pos, side="right") - 1
                 dict_hit[blk] = True
             out |= candidates & self.has_dict & dict_hit
-        if self.bitmap_group is not None:
+        # bitmaps and blooms test only the candidate blocks, every
+        # (block, value) pair in one numpy pass per bit test
+        if self.bitmap_group is not None and int_vals:
             ids, vmins, nbits, offs, concat = self.bitmap_group
-            cand = candidates[ids]
-            if cand.any():
-                any_val = np.zeros(len(ids), dtype=bool)
-                for v in values:
-                    if isinstance(v, str):
-                        continue
-                    idx = np.int64(v) - vmins
-                    ok = cand & ~any_val & (idx >= 0) & (idx < nbits)
-                    if ok.any():
-                        safe = np.where(ok, idx, 0)
-                        byte = concat[offs[:-1] + (safe >> 3)]
-                        hit = (byte & (1 << (safe & 7)).astype(np.uint8)) > 0
-                        any_val |= ok & hit
-                out[ids] |= any_val
-        for ids, m, k, bits in self.bloom_groups:
-            cand = candidates[ids]
-            if not cand.any():
-                continue
-            any_val = np.zeros(len(ids), dtype=bool)
-            for v in values:
-                h1, h2 = hash_pair_for(v, kind)
-                ok = cand & ~any_val
-                for i in range(k):
-                    if not ok.any():
-                        break
-                    idx = ((h1 + i * h2) & _M64) % m
-                    ok &= (bits[:, idx >> 3] & (1 << (idx & 7))) > 0
-                any_val |= ok
-            out[ids] |= any_val
+            rows = np.nonzero(candidates[ids])[0]
+            out[ids[rows]] |= _bitmap_any(vmins, nbits, offs, concat, rows,
+                                          int_vals)
+        if self.bloom_group is not None:
+            ids, m, k, offs, concat = self.bloom_group
+            rows = np.nonzero(candidates[ids])[0]
+            out[ids[rows]] |= _bloom_any(m, k, offs, concat, rows,
+                                         *hash_pairs_for(values))
         return out
 
     def refine_against_filter(self, candidates, probe: "BloomFilter",
@@ -503,7 +569,6 @@ class ColumnMembership:
         array, so consecutive non-empty starts delimit exactly the
         non-empty blocks); string dicts probe each UNIQUE value once;
         bitmaps enumerate their set bits per block."""
-        import numpy as np
         refutable = self.has_dict.copy()
         bitmap_ok = self.bitmap_group is not None and kind != ityp.STRING
         if bitmap_ok:
@@ -566,10 +631,6 @@ def build_filters(unique_values: Iterable[Any], kind: str, filter_type: str,
             return None, bm.to_bytes()
         # span too wide for a dense bitmap: bloom below (sound, inexact)
     bloom = BloomFilter.create(max(len(values), 1) if values else 1, bloom_fpp)
-    if values and not isinstance(values[0], str):
-        # long-space kinds: one vectorized uint64 pass per hash round
-        bloom.put_longs_vectorized(values)
-    else:
-        for v in values:
-            bloom.put_pair(*_hash_pair(v.encode("utf-8")))
+    # each value hashed once; one numpy pass per hash round sets the bits
+    bloom.put_pairs(*hash_pairs_for(values))
     return None, bloom.to_bytes()

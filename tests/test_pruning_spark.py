@@ -299,6 +299,11 @@ class TestFoldBackendParity:
         membership = {
             "l": [dict_({1, 4, 9}), None, None, None, None, bitmap, None,
                   dict_({3, 8}), None, bloom([7, 12], L)],
+            "d": [dict_({0, 3, 10}), None, None, None, None,
+                  bloom([1, 4], D), None,
+                  MembershipFilter(None, None,
+                                   BitmapFilter.from_values([2, 9])),
+                  None, bloom([8, 20], D)],
             "s": [dict_({"b", "c", "d"}), None, None, None, None,
                   bloom(["a", "c"], S), None, dict_({"ab", "abz"}), None,
                   None],
@@ -356,6 +361,7 @@ class TestFoldBackendParity:
 
         from pyspark.sql import functions as F
         from parquet_index_spark import predicates as P
+        from parquet_index_spark.pruning import RANGE_PROBE_MAX
         from parquet_index_spark.statistics import BloomFilter
         day = datetime.date(1970, 1, 4)  # 3 in long space
         dim = BloomFilter.create(16)
@@ -391,6 +397,36 @@ class TestFoldBackendParity:
                   P.IsNull("d"), P.StartsWith("s", "ab"))),
             P.Not(P.Or((P.In("l", (5, 9)), P.And((P.Ne("s", "b"),
                                                   P.Eq("zz", 3)))))),
+        ]
+        # ranges bounded on both sides probe the membership filters with
+        # every value of [lo, hi] (`pruning.RANGE_PROBE_MAX`)
+        cap = RANGE_PROBE_MAX
+
+        def rng(c, lo_op, lo, hi_op, hi, *more):
+            return P.And((lo_op(c, lo), hi_op(c, hi)) + more)
+
+        def days(n):
+            return day + datetime.timedelta(days=n - 3)
+
+        preds += [
+            rng("l", P.Ge, 2, P.Lt, 4), rng("l", P.Gt, 6, P.Le, 8),
+            rng("l", P.Ge, 5, P.Le, 5), rng("l", P.Ge, 10, P.Le, 11),
+            rng("l", P.Ge, 4, P.Lt, 4),                 # empty
+            rng("l", P.Ge, -cap + 1, P.Le, 0),          # width == cap
+            rng("l", P.Ge, -cap, P.Le, 0),              # width == cap + 1
+            rng("l", P.Ge, 2, P.Lt, 4, P.Ne("s", "b"), P.Le("l", 3)),
+            P.Not(rng("l", P.Ge, 2, P.Lt, 4)),
+            P.Or((rng("l", P.Ge, 2, P.Lt, 4), rng("l", P.Gt, 6, P.Le, 8))),
+            rng("d", P.Ge, days(2), P.Le, days(3)),
+            rng("d", P.Gt, days(4), P.Lt, days(9)),
+            rng("d", P.Ge, str(days(5)), P.Le, str(days(7))),  # ISO strings
+            rng("d", P.Ge, days(11), P.Lt, days(11)),   # empty
+            rng("d", P.Ge, days(1), P.Le, days(cap)),   # width == cap
+            rng("d", P.Ge, days(0), P.Le, days(cap)),   # width == cap + 1
+            # a datetime literal does not normalize exactly: no probe
+            rng("d", P.Ge, datetime.datetime.combine(days(5),
+                                                     datetime.time()),
+                P.Le, days(7)),
         ]
         return preds
 
