@@ -12,8 +12,8 @@ Create/Exists/DeleteIndexCommand with mode/indexBy/indexByAll/table/parquet)
     context.index.delete.parquet(path)
 
 run unchanged. The query path is pre-planned pruning (SURVEY §3.2 mapping):
-compile the predicate against the metadata, read the surviving files with
-stock ``spark.read.parquet``, re-apply the full predicate.
+compile the predicate against the metadata, read exactly the surviving files
+(``IndexedDataFrame._read_files``), re-apply the full predicate.
 """
 
 from __future__ import annotations
@@ -26,10 +26,12 @@ from typing import Any, Dict, List, Optional, Union
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+from py4j.java_gateway import JavaClass
 
 from parquet_index_spark import collector, predicates as P, types as ityp
 from parquet_index_spark.catalog import resolve_catalog_table
@@ -45,8 +47,7 @@ _GLOB_META = re.compile(r"[\\{}\[\],*?]")
 
 def _glob_escape(text: str) -> str:
     """``text`` with Hadoop GlobPattern metacharacters backslash-escaped,
-    so that Spark's path globbing and ``pathGlobFilter`` match it
-    literally."""
+    so that a Hadoop glob matches it literally."""
     return _GLOB_META.sub(r"\\\g<0>", text)
 
 
@@ -128,46 +129,89 @@ class IndexedDataFrame:
         return prune_files(ast, self._metadata.context(), tz)
 
     def _scan(self, files) -> DataFrame:
-        """The one route by which a pruned read reaches Spark: ``files``
-        (relative paths) under the metastore schema, from their distinct
-        directories as roots, with a ``pathGlobFilter`` of their escaped
-        names selecting them. Spark lists each root once on the driver,
-        so it never runs a per-file listing job. The name glob applies in
-        every root, so ``_read_by_scan(files)`` is what is read."""
-        meta = self._metadata
-        if len(files) == len(meta.files):
+        """The reader of a pruned read over ``files`` (relative paths):
+        the whole table (``df``) when every indexed file survives, an
+        empty frame when none does, else exactly ``files``."""
+        if len(files) == len(self._metadata.files):
             return self.df
         if not files:
             # an RDD of no partitions: collecting it runs no task, where
             # local rows would start a Python worker for nothing
             return self._spark.createDataFrame(
-                self._spark.sparkContext.emptyRDD(), meta.data_schema)
-        names = sorted({os.path.basename(p) for p in files})
-        return (self._spark.read
-                .schema(meta.data_schema)
-                .option("basePath", meta.table_path)
-                .option("pathGlobFilter",
-                        "{" + ",".join(map(_glob_escape, names)) + "}")
-                .parquet(*[_glob_escape(meta.abs_path(r) if r
-                                        else meta.table_path)
-                           for r in self._collapse_to_directories(files)]))
+                self._spark.sparkContext.emptyRDD(),
+                self._metadata.data_schema)
+        return self._read_files(files)
+
+    def _read_files(self, files) -> DataFrame:
+        """Exactly ``files`` (relative paths, at least one) under the
+        metastore schema, with partition values from their paths: the one
+        reader of pruned reads and DML rewrites.
+
+        Spark's relation is built over the files' own ``FileStatus``es and
+        handed to the file index through a status cache of this read's
+        own, so no listing job runs at any file or directory count. It
+        makes one Hadoop glob per directory, ``<dir>{/<name>,...}``, in
+        this process: a brace group that holds a slash expands to the
+        files' own paths, and each is statted, so no directory is listed.
+        The statuses come from the file system, not from the metastore's
+        stored sizes: a file rewritten in place since indexing would be
+        read at its old length and silently lose rows."""
+        meta, spark = self._metadata, self._spark
+        jspark = spark._jsparkSession
+        client = spark.sparkContext._gateway._gateway_client
+
+        def jclass(name):
+            # by full name: each package step of ``spark._jvm`` is a JVM
+            # round trip
+            return JavaClass(name, client)
+
+        ds = "org.apache.spark.sql.execution.datasources."
+        hpath = jclass("org.apache.hadoop.fs.Path")
+        utils = jclass("org.apache.spark.api.python.PythonUtils")
+        option = jclass("scala.Option")
+        table = hpath(meta.table_path)
+        fs = table.getFileSystem(jspark.sessionState().newHadoopConf())
+        table = fs.makeQualified(table)
+        # expanding a brace group, Hadoop takes one level of escapes off
+        # each alternative, so a name is escaped twice to stay literal
+        names: Dict[str, list] = {}
+        for p in files:
+            names.setdefault(os.path.dirname(p), []).append(
+                _glob_escape(_glob_escape(os.path.basename(p))))
+        cache = jclass(ds + "SharedInMemoryCache")(
+            2 ** 63 - 1, 0).createForNewClient()
+        dirs = self._collapse_to_directories(files)
+        roots = [hpath(table, d) if d else table for d in dirs]
+        for d, root in zip(dirs, roots):
+            found = fs.globStatus(hpath(
+                _glob_escape(meta.abs_path(d))
+                + "{/" + ",/".join(names[d]) + "}"))
+            if found is None or len(found) < len(names[d]):
+                raise FileNotFoundError(
+                    f"indexed data files under {meta.abs_path(d)} are "
+                    "gone; refresh the index")
+            cache.putLeafFiles(root, found)
+        opts = utils.toScalaMap({"basePath": meta.table_path})
+        none = option.apply(None)
+        index = jclass(ds + "InMemoryFileIndex")(
+            jspark, utils.toSeq(roots), opts,
+            option.apply(jspark.parseDataType(meta.data_schema.json())),
+            cache, none, none)
+        cache.invalidateAll()
+        # as in ``spark.read``: the relation appends the partition
+        # columns after a data schema that leaves them out
+        parts = index.partitionSchema()
+        part_names = {n.lower() for n in parts.fieldNames()}
+        data = T.StructType([f for f in meta.data_schema.fields
+                             if f.name.lower() not in part_names])
+        relation = jclass(ds + "HadoopFsRelation")(
+            index, parts, jspark.parseDataType(data.json()).asNullable(),
+            none, jclass(ds + "parquet.ParquetFileFormat")(), opts, jspark)
+        return DataFrame(jspark.baseRelationToDataFrame(relation), spark)
 
     def _collapse_to_directories(self, files) -> list:
         """Reader roots for ``files``: their distinct directories."""
         return sorted({os.path.dirname(p) for p in files})
-
-    def _read_by_scan(self, files) -> set:
-        """Every indexed file that ``_scan(files)`` reads: ``files``, plus
-        any file in their directories named like one of them (Hive
-        partitions written by one job share file names). Names are
-        unique within a directory, so one root reads exactly ``files``."""
-        dirs = {os.path.dirname(p) for p in files}
-        if len(dirs) < 2:
-            return set(files)
-        names = {os.path.basename(p) for p in files}
-        return {p for p in self._metadata.files["path"]
-                if os.path.dirname(p) in dirs
-                and os.path.basename(p) in names}
 
     where = filter
 
@@ -441,11 +485,8 @@ class IndexedDataFrame:
             boundary = np.zeros(len(ctx.file_paths), dtype=bool)
             boundary[ctx.file_ids[may & ~full]] = True
             scan_paths = [p for p, b in zip(ctx.file_paths, boundary) if b]
-            read = self._read_by_scan(scan_paths)
-            file_read = np.array([p in read for p in ctx.file_paths],
-                                 dtype=bool)
-            # full blocks inside a file the scan reads are counted by it
-            total = int(ctx.rows[full & ~file_read[ctx.file_ids]].sum())
+            # full blocks inside a boundary file are counted by its scan
+            total = int(ctx.rows[full & ~boundary[ctx.file_ids]].sum())
         self._manager.last_prune_info = PruneInfo(
             len(all_paths), len(scan_paths), pruned=True)
         if scan_paths:
@@ -1117,7 +1158,6 @@ class DataFrameIndexManager:
         reads of half the files."""
         if not new_files:
             return
-        import pyspark.sql.types as T
         paths = [collector.resolve_file(spec.table_path, f["path"])
                  for f in new_files]
         new_schema = (self.spark.read.option("mergeSchema", "true")

@@ -30,7 +30,7 @@ from typing import List
 
 import pandas as pd
 
-from pyspark.sql import SparkSession, Window, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from parquet_index_spark import collector, predicates as P
 from parquet_index_spark import types as ityp
@@ -394,25 +394,16 @@ def count_files_with_spark(spark: SparkSession, metadata,
                 .groupBy("path")
                 .agg(F.max((F.col("__may") & ~F.col("__full"))
                            .cast("int")).alias("b"),
-                     F.sum(F.when(F.col("__full"), F.col("__rows"))
-                           .otherwise(F.lit(0))).alias("fr")))
+                     F.sum(F.when(F.col("__full"), F.col("__rows")))
+                     .alias("fr")))
     # manifest join runs IN the job (orphan stats from an interrupted
     # refresh must not count), and the full-file total is aggregated
     # in-job too: only one long and the boundary path list (bounded —
     # these files get scanned anyway) ever reach the driver
     per_path = per_path.join(F.broadcast(_manifest_df(spark, metadata)),
                              "path", "inner")
-    # the scan also reads a file that shares a directory with one boundary
-    # file and its name with another (manager._read_by_scan), and counts
-    # it: such a file is left out of the metadata total
-    in_dir = F.max("b").over(Window.partitionBy(
-        F.regexp_extract("path", "^(.*)/", 1)))
-    named = F.max("b").over(Window.partitionBy(
-        F.substring_index("path", "/", -1)))
-    per_path = per_path.withColumn("r", in_dir * named)
     row = per_path.agg(
-        F.sum(F.when((F.col("b") == 0) & (F.col("r") == 0), F.col("fr"))
-              .otherwise(F.lit(0))).alias("meta"),
+        F.sum(F.when(F.col("b") == 0, F.col("fr"))).alias("meta"),
         F.collect_list(F.when(F.col("b") == 1, F.col("path"))).alias("bp")
     ).head()
     return int(row["meta"] or 0), sorted(row["bp"])

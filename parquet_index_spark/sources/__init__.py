@@ -501,18 +501,15 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
       (default 600): the holder is presumed crashed — its heartbeat
       would have refreshed the mtime — and the lease is taken over.
 
-    Takeover race discipline (round-12 review): takeover is
-    re-stat -> delete -> create-exclusive -> READ-BACK VERIFY. The
-    re-stat immediately before the delete confirms the lock is still
-    the same stale file first observed (same mtime) so a fresh lock a
-    faster racer just created is not deleted; create-exclusive is the
-    atomic arbiter between racers whose deletes both targeted the
-    stale file; and the read-back verify catches the remaining
-    interleaving (our create landing between a racer's stat and
-    delete) before this writer ever touches the table. The unguarded
-    window is one metadata-op wide and requires two takeovers racing
-    inside it after a full TTL expiry — the same residual every
-    filesystem-marker lease (no compare-and-swap primitive) carries.
+    Takeover race discipline: takeover is rename-aside -> identify ->
+    delete -> create-exclusive -> READ-BACK VERIFY. The lock is renamed
+    to a name of this writer's own and deleted only when the renamed
+    file is the stale one first observed (same mtime, or same owner
+    record); a fresh lock a faster racer created meanwhile is renamed
+    back and this writer refuses. Rename is atomic, so no racer ever
+    removes a lock it has not identified; create-exclusive arbitrates
+    between the creates that follow, and the read-back verify catches a
+    create that raced ours before this writer touches the table.
 
     Atomicity note: HDFS/ABFS ``create(overwrite=false)`` is atomic;
     raw local FS approximates it (exists-then-create) — fine for the
@@ -575,9 +572,9 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
                     f"{op}: created the writer lock at {uri} but could "
                     f"not write the owner record ({exc}); the lock was "
                     "removed — retry the operation.") from exc
-            # read-back verify: a takeover racer whose stale-stat
-            # preceded our create may have deleted+replaced our fresh
-            # lock — never proceed on a lock that is not ours
+            # read-back verify: where create-exclusive is not atomic
+            # (raw local FS checks, then opens), a racer's create can
+            # land on ours — never proceed on a lock that is not ours
             holder = _read_lock_owner(fs, jlock)
             if holder == {}:
                 # unreadable ({} = read error, not a foreign token):
@@ -620,9 +617,9 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
                         name="pis-writer-heartbeat")
                     _HEARTBEAT_THREAD.start()
             return lease
+        holder = _read_lock_owner(fs, jlock) or {}
         try:
-            st = fs.getFileStatus(jlock)
-            mtime_ms = st.getModificationTime()
+            mtime_ms = fs.getFileStatus(jlock).getModificationTime()
             age = _t.time() - mtime_ms / 1000.0
         except Exception:  # noqa: BLE001 — no lock file after a failed
             if attempt == 1:   # create: either it vanished between the
@@ -632,19 +629,27 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
                 f"no existing lock is readable — filesystem problem, "
                 f"not a concurrent writer: {create_exc}") from create_exc
         if age > ttl and attempt == 1:
-            # presumed-crashed holder: ONE takeover attempt. Re-stat
-            # directly before the delete (round-12 review): if the
-            # mtime moved since the stat above, a racer already took
-            # over and created a FRESH lock — deleting it would let two
-            # writers in; back off to the contention raise instead.
+            # presumed-crashed holder: ONE takeover attempt. The lock is
+            # moved aside under a name of this writer's own first, so the
+            # file removed is the file identified as the stale one: its
+            # mtime, or its owner record where a rename rewrites the
+            # mtime (object stores copy). A racer's fresh lock moved
+            # aside goes back in place, and this writer backs off.
+            aside = jlock.suffix("." + _uuid.uuid4().hex)
             try:
-                if fs.getFileStatus(jlock).getModificationTime() \
-                        == mtime_ms:
-                    fs.delete(jlock, False)
-            except Exception:  # noqa: BLE001 — gone already: fine
-                pass
-            continue
-        holder = _read_lock_owner(fs, jlock) or {}
+                moved = fs.rename(jlock, aside)
+            except Exception:  # noqa: BLE001 — gone: a racer moved it
+                moved = False
+            if moved and (fs.getFileStatus(aside).getModificationTime()
+                          == mtime_ms or holder
+                          and _read_lock_owner(fs, aside) == holder):
+                fs.delete(aside, False)
+                continue
+            if moved:
+                fs.rename(aside, jlock)
+            raise ConcurrentWriterError(
+                f"{op}: lost a stale-lock takeover race for {path!r} — "
+                f"another writer took the lock at {uri} over first.")
         raise ConcurrentWriterError(
             f"{op}: table {path!r} is locked by another writer "
             f"{holder.get('owner', '<unreadable>')} running "
@@ -653,9 +658,6 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
             "the lock self-expires after the TTL; lower "
             "spark.sql.index.writer.lock.ttlSeconds to take over "
             "sooner.")
-    raise ConcurrentWriterError(
-        f"{op}: could not acquire the writer lock at {uri} after a "
-        "takeover attempt — another writer won the race.")
 
 
 def writer_lock_status(spark, path: str) -> dict:
@@ -1288,18 +1290,11 @@ def _begin_rewrite(ctx, path: str, op: str):
     return table, pctx, tz
 
 
-def _read_files(spark, meta, abs_paths) -> DataFrame:
-    """The DML reader: the given data files under the metastore schema,
-    with partition values recovered from their paths (basePath)."""
-    return (spark.read.schema(meta.data_schema)
-            .option("basePath", meta.table_path)
-            .parquet(*sorted(abs_paths)))
-
-
-def _counted_rewrite(ctx, path: str, op: str, meta, read_rel, mark, rewrite,
+def _counted_rewrite(ctx, path: str, op: str, table, read_rel, mark, rewrite,
                      drop_rel=()) -> int:
     """The one read -> rewrite -> count -> swap -> refresh pipeline of the
-    DML trio. Reads the ``read_rel`` files once; ``mark(rows) -> (rows,
+    DML trio. Reads the ``read_rel`` files of the indexed ``table`` once,
+    through its exact reader; ``mark(rows) -> (rows,
     hit)`` flags the rows the op counts with a non-null boolean Column,
     and ``rewrite(rows, hit)`` gives what replaces those files (called
     with ``(None, None)`` when there is nothing to read; None stages an
@@ -1314,10 +1309,11 @@ def _counted_rewrite(ctx, path: str, op: str, meta, read_rel, mark, rewrite,
     spark = ctx.spark_session
     kind = op.split("_")[0]
     stem = f"{path.rstrip('/')}__{kind}"
+    meta = table._metadata
     read_abs = _qualified_uris(spark, meta.table_path, read_rel)
     obs = None
     if read_abs:
-        rows, hit = mark(_read_files(spark, meta, read_abs))
+        rows, hit = mark(table._read_files(read_rel))
         obs = Observation(f"{op}_hit")
         out = rewrite(rows.observe(obs, F.count(F.when(hit, 1)).alias("n")),
                       hit)
@@ -1638,10 +1634,9 @@ def _merge_into_impl(ctx, path: str, updates: DataFrame, key: str,
         # rows (the round-15 duplicate-key fixture). The key sets are
         # disjoint, so the cut never removes a matched row, and this read
         # is unobserved: its plan cannot fulfil the rewrite's observation.
-        cur = _read_files(spark, meta, _qualified_uris(
-            spark, meta.table_path, affected_rel))
+        cur = table._read_files(affected_rel)
         rows_updated = updates.join(cur.select(key), key, "left_semi").count()
-    rows_deleted = _counted_rewrite(ctx, path, "merge_into", meta,
+    rows_deleted = _counted_rewrite(ctx, path, "merge_into", table,
                                     affected_rel, mark, rewrite)
     return {"files_total": len(pctx.file_paths),
             "files_rewritten": len(affected_rel),
@@ -2061,7 +2056,7 @@ def _delete_where_impl(ctx, path: str, predicate) -> dict:
     # DELETE removes rows where pred is TRUE; rows where it is NULL
     # survive (SQL three-valued semantics) — hence coalesce, not pred
     n_hit = _counted_rewrite(
-        ctx, path, "delete_where", table._metadata, boundary_rel,
+        ctx, path, "delete_where", table, boundary_rel,
         lambda rows: (rows, F.coalesce(residual, F.lit(False))),
         lambda rows, hit: None if rows is None else rows.filter(~hit),
         drop_rel=[p for p, w in zip(pctx.file_paths, whole) if w])
@@ -2141,7 +2136,7 @@ def _update_where_impl(ctx, path: str, predicate,
         return rows.select(*out_cols)
 
     n_hit = _counted_rewrite(
-        ctx, path, "update_where", meta, affected_rel,
+        ctx, path, "update_where", table, affected_rel,
         lambda rows: (rows, F.coalesce(residual, F.lit(False))), rewrite)
     return {"files_total": len(pctx.file_paths),
             "files_rewritten": len(affected_rel),

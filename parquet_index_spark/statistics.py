@@ -203,9 +203,6 @@ class BloomFilter:
     def put_bytes(self, data: bytes) -> None:
         self.put_pair(*_hash_pair(data))
 
-    def might_contain_bytes(self, data: bytes) -> bool:
-        return self.might_contain_pair(*_hash_pair(data))
-
     def put_pair(self, h1: int, h2: int) -> None:
         # (h1 + i*h2) wraps at 64 bits so the scalar probe, the numpy
         # builder, and the executor-side UDF all index identical bits

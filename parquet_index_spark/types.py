@@ -19,7 +19,6 @@ from __future__ import annotations
 import datetime as _dt
 from typing import Any, Optional
 
-import pyarrow as pa
 from pyspark.sql import types as T
 
 # statistic "kinds"
@@ -74,24 +73,6 @@ def kind_of_spark_type(dt: T.DataType) -> Optional[str]:
         # ParquetSchemaUtils.scala:32-33)
         return TIMESTAMP
     return None
-
-
-def kind_of_arrow_type(dt: pa.DataType) -> Optional[str]:
-    if pa.types.is_int32(dt):
-        return INT
-    if pa.types.is_int64(dt):
-        return LONG
-    if pa.types.is_string(dt) or pa.types.is_large_string(dt):
-        return STRING
-    if pa.types.is_date32(dt) or pa.types.is_date64(dt):
-        return DATE
-    if pa.types.is_timestamp(dt):
-        return TIMESTAMP if dt.tz is not None else TIMESTAMP_NTZ
-    return None
-
-
-def is_string_kind(kind: str) -> bool:
-    return kind == STRING
 
 
 def to_long_space(value: Any, kind: str, tz: Optional[str] = None) -> int:
@@ -201,19 +182,6 @@ def from_long_space(v: int, kind: str) -> Any:
     if kind == TIMESTAMP_NTZ:
         return _EPOCH_DT + _dt.timedelta(microseconds=int(v))
     raise TypeError(f"kind {kind} is not long-space")
-
-
-def membership_bytes(value: Any, kind: str) -> bytes:
-    """Canonical byte encoding of a value for bloom-filter hashing.
-
-    Mirrors the *semantics* of the reference's hashing precision — dates at
-    day precision, timestamps at microsecond precision
-    (ColumnFilterStatistics.scala:264-294) — with our own encoding.
-    """
-    if kind == STRING:
-        return value.encode("utf-8") if isinstance(value, str) else bytes(value)
-    v = value if isinstance(value, int) else to_long_space(value, kind)
-    return int(v).to_bytes(8, "big", signed=True)
 
 
 def parse_partition_value(raw: str, kind: str) -> Any:

@@ -1,6 +1,7 @@
 import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -37,6 +38,34 @@ def tmp_metastore(spark):
     spark.conf.set("spark.sql.index.metastore", d)
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def count_jobs(spark, monkeypatch):
+    """``count_jobs(owner, name)`` wraps ``owner.name`` so that each call
+    runs in a Spark job group of its own, and returns the list to which
+    every call appends ``(args, jobs launched while it ran)``."""
+    sc = spark.sparkContext
+
+    def wrap(owner, name):
+        calls = []
+        orig = getattr(owner, name)
+
+        def counted(*args, **kwargs):
+            group = f"pis_count_jobs_{uuid.uuid4().hex}"
+            sc.setJobGroup(group, f"jobs of {name}")
+            try:
+                out = orig(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            calls.append(
+                (args, len(sc.statusTracker().getJobIdsForGroup(group))))
+            return out
+
+        monkeypatch.setattr(owner, name, counted)
+        return calls
+
+    return wrap
 
 
 @pytest.fixture()

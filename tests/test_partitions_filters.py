@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from parquet_index_spark import QueryContext, col
+from parquet_index_spark.manager import IndexedDataFrame
 from parquet_index_spark.predicates import parse_sql_predicate
 from tests.conftest import assert_same_rows
 
@@ -251,10 +252,10 @@ class TestEdgeFixtures:
 
 
 class TestPrunedReadRoute:
-    """How a pruned read reaches Spark (``IndexedDataFrame._scan``): the
-    survivors' directories as roots plus a file-name glob. No per-file
-    listing job at any survivor count; a count reads no file it already
-    counted from metadata."""
+    """How a pruned read reaches Spark (``IndexedDataFrame._scan``): a
+    relation over exactly the survivors' own file statuses, globbed by
+    name per directory, in this process. No listing job at any survivor
+    or directory count, and the read set is the selected set."""
 
     @pytest.fixture()
     def flat40(self, spark, tmp_table_dir):
@@ -278,57 +279,58 @@ class TestPrunedReadRoute:
         return path
 
     # p=0: one row of tasks 0..33 and 39 (35 boundary files, the rest
-    # pruned); p=1: task 1's file fully matches, one row of task 39. The
-    # glob of the survivors' names matches task 1's p=0 file, which is
-    # read too, and task 1's p=1 file, which must not be counted twice.
+    # pruned); p=1: task 1's file fully matches, one row of task 39.
+    # Task 1's p=0 file shares its name with a survivor in p=1 but is
+    # pruned, so it is not read, and task 1's p=1 file is counted once.
     SHARED_PRED = (
         "(p = 0 AND id IN ({})) OR "
         "(p = 1 AND ((id >= 100 AND id < 200) OR id = 3901))".format(
             ", ".join(str(100 * k + 2) for k in [*range(34), 39])))
 
-    @staticmethod
-    def _count_scan_jobs(spark, monkeypatch):
-        """Wrap ``_scan`` to record, per call, (number of files, Spark
-        jobs launched while the reader was built)."""
-        import parquet_index_spark.manager as mgr
-        sc = spark.sparkContext
-        built = []
-        orig = mgr.IndexedDataFrame._scan
-
-        def scan_in_group(self, files):
-            group = f"pis_scan_{len(built)}"
-            sc.setJobGroup(group, "pruned reader construction")
-            try:
-                df = orig(self, files)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            built.append((len(files),
-                          len(sc.statusTracker().getJobIdsForGroup(group))))
-            return df
-
-        monkeypatch.setattr(mgr.IndexedDataFrame, "_scan", scan_in_group)
-        return built
-
     def test_building_pruned_reader_launches_no_job(self, spark, ctx,
-                                                    flat40, monkeypatch):
+                                                    flat40, count_jobs):
         ctx.index.create.indexBy("id").parquet(flat40)
         t = ctx.index.parquet(flat40)
-        built = self._count_scan_jobs(spark, monkeypatch)
+        built = count_jobs(IndexedDataFrame, "_scan")
         plain = spark.read.parquet(flat40)
         wide = t.filter("id < 500")
         assert _scan_roots(wide) == [_scan_roots(plain)[0]]
         assert_same_rows(wide, plain.filter("id < 500"))
+        assert len(_input_files(wide, flat40)) == 36
         assert t.count_where("id < 500") == 500
         assert ctx.index.last_prune_info.selected_files == 36
-        assert_same_rows(t.filter("id = 10005"),
-                         plain.filter("id = 10005"))
-        assert [n for n, _ in built][:2] == [36, 36]
-        assert [jobs for _, jobs in built] == [0, 0, 0]
+        assert t.min_max_where("id", "id < 500") == (0, 499)
+        point = t.filter("id = 10005")
+        assert_same_rows(point, plain.filter("id = 10005"))
+        assert len(_input_files(point, flat40)) == 1
+        assert t.count_where("id = 10005") == 1
+        assert t.min_max_where("id", "id = 10005") == (10005, 10005)
+        assert [len(args[1]) for args, _ in built] == [36, 36, 36, 1, 1, 1]
+        assert [jobs for _, jobs in built] == [0] * 6
+
+    def test_many_partition_directories_launch_no_job(
+            self, spark, ctx, tmp_table_dir, count_jobs):
+        """Past Spark's 32-path threshold for a parallel listing job:
+        40 surviving partition directories, each holding one survivor
+        and three same-named non-survivors."""
+        path = os.path.join(tmp_table_dir, "dirs40")
+        spark.range(0, 4000, numPartitions=4) \
+            .selectExpr("id", "cast(id % 40 AS int) AS p") \
+            .write.partitionBy("p").parquet(path)
+        ctx.index.create.indexBy("id").parquet(path)
+        t = ctx.index.parquet(path)
+        built = count_jobs(IndexedDataFrame, "_scan")
+        df = t.filter("id < 1000")
+        survivors = t._prune(parse_sql_predicate("id < 1000"))
+        assert len({os.path.dirname(p) for p in survivors}) == 40
+        assert [(len(args[1]), jobs) for args, jobs in built] == [(40, 0)]
+        assert _input_files(df, path) == sorted(survivors)
+        assert_same_rows(df, spark.read.parquet(path).filter("id < 1000"))
 
     def test_glob_escapes_metacharacters(self, spark, ctx, tmp_table_dir):
         """Survivors named with ``{ } [ ] , * ? \\`` match only
-        themselves: each has a decoy that the unescaped name would match
-        as a glob."""
+        themselves in their directory's name glob: each has a decoy that
+        the unescaped name would match as a glob."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -348,18 +350,68 @@ class TestPrunedReadRoute:
         assert_same_rows(df, spark.read.parquet(path).filter(pred))
         assert _input_files(df, path) == sorted(names[::2])
 
+    def test_survivor_grown_in_place_reads_its_rows(self, spark, ctx,
+                                                    tmp_table_dir):
+        """A survivor rewritten in place after indexing, with more row
+        groups, is read at its length on disk: without a refresh, the
+        read returns every row the file now holds. Once the survivor is
+        gone, building the read fails."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = os.path.join(tmp_table_dir, "grown")
+        os.makedirs(path)
+        for i in range(4):
+            pq.write_table(pa.table({"id": list(range(i * 10, i * 10 + 10))}),
+                           os.path.join(path, f"part-{i}.parquet"))
+        ctx.index.create.indexBy("id").parquet(path)
+        t = ctx.index.parquet(path)
+        grown = os.path.join(path, "part-1.parquet")
+        small = os.path.getsize(grown)
+        pq.write_table(pa.table({"id": list(range(10, 20)) * 20_000}),
+                       grown, row_group_size=50_000)
+        assert pq.ParquetFile(grown).num_row_groups == 4
+        assert os.path.getsize(grown) > small
+        df = t.filter("id >= 10 AND id < 20")
+        assert _input_files(df, path) == ["part-1.parquet"]
+        assert df.count() == 200_000
+        os.remove(grown)
+        with pytest.raises(FileNotFoundError, match="refresh the index"):
+            t.filter("id >= 10 AND id < 20")
+
+    def test_reader_constructor_arities(self, spark):
+        """The exact reader calls Spark-internal constructors by
+        position; a Spark upgrade that changes one fails here, by name."""
+        jvm = spark._jvm
+        pinned = {
+            "org.apache.spark.sql.execution.datasources.InMemoryFileIndex":
+                7,
+            # six fields plus the session, in a second parameter list
+            "org.apache.spark.sql.execution.datasources.HadoopFsRelation":
+                7,
+            "org.apache.spark.sql.execution.datasources.SharedInMemoryCache":
+                2,
+        }
+        for name, arity in pinned.items():
+            found = sorted(c.getParameterCount() for c in
+                           jvm.java.lang.Class.forName(name)
+                           .getConstructors())
+            assert arity in found, (
+                f"{name} has constructors of {found} parameters; "
+                f"IndexedDataFrame._read_files passes {arity}")
+
     @pytest.mark.parametrize("spark_fold", [False, True])
     def test_shared_names_count_once(self, spark, ctx, shared_names,
-                                     monkeypatch, spark_fold):
-        """A count over partitions that share file names reads a fully
-        matching file through the name glob, and counts it once, from
-        either fold; building the readers launches no Spark job."""
+                                     count_jobs, spark_fold):
+        """Partitions that share file names: the read is exactly the
+        survivors, a fully matching file is counted once, from either
+        fold, and building the readers launches no Spark job."""
         from parquet_index_spark.pruning_spark import SPARK_PRUNING_THRESHOLD
         ctx.index.create.indexBy("id").parquet(shared_names)
         t = ctx.index.parquet(shared_names)
         pred = self.SHARED_PRED
         plain = spark.read.parquet(shared_names).filter(pred)
-        built = self._count_scan_jobs(spark, monkeypatch)
+        built = count_jobs(IndexedDataFrame, "_scan")
         if spark_fold:
             spark.conf.set(SPARK_PRUNING_THRESHOLD, "0")
         try:
@@ -372,8 +424,6 @@ class TestPrunedReadRoute:
         assert_same_rows(df, plain)
         assert sorted(r.split(os.sep)[-1] for r in _scan_roots(df)) \
             == ["p=0", "p=1"]
-        read = _input_files(df, shared_names)
-        assert set(survivors) < set(read)
-        assert read == sorted(t._read_by_scan(survivors))
-        assert [n for n, _ in built] == [36, 37]
+        assert _input_files(df, shared_names) == sorted(survivors)
+        assert [len(args[1]) for args, _ in built] == [36, 37]
         assert [jobs for _, jobs in built] == [0, 0]

@@ -2656,6 +2656,73 @@ class TestWriterLease:
         else:
             os.remove(lock)
 
+    def test_takeover_keeps_a_racers_fresh_lock(
+            self, spark, tmp_table_dir, monkeypatch):
+        """Deterministic takeover interleaving: a second racer runs its
+        whole acquire (stale lock out, its own fresh lock in, verified)
+        after this racer has judged the lock stale but before this
+        racer removes it. The fresh lock must survive, so exactly one
+        writer holds the lease and the lock on disk is the holder's."""
+        import json
+        import threading
+
+        import parquet_index_spark.sources as SRC
+        path = os.path.join(tmp_table_dir, "lease_interleave")
+        os.makedirs(path)
+        lock = self._foreign_lock(path, age_sec=700)  # stale
+        real = SRC._fs_for
+        armed, held = [True], []
+
+        def second_racer():
+            try:
+                held.append(SRC.acquire_writer_lease(spark, path, "second"))
+            except IOError:
+                pass
+
+        class RacedFS:
+            """Runs the second racer just before this racer first
+            removes or moves the lock."""
+
+            def __init__(self, fs):
+                self._fs = fs
+
+            def _race(self):
+                if armed:
+                    armed.clear()
+                    t = threading.Thread(target=second_racer)
+                    t.start()
+                    t.join(timeout=60)
+                    assert not t.is_alive()
+
+            def delete(self, p, recursive):
+                self._race()
+                return self._fs.delete(p, recursive)
+
+            def rename(self, src, dst):
+                self._race()
+                return self._fs.rename(src, dst)
+
+            def __getattr__(self, a):
+                return getattr(self._fs, a)
+
+        monkeypatch.setattr(
+            SRC, "_fs_for",
+            lambda s, p: (lambda fs, jp: (RacedFS(fs), jp))(*real(s, p)))
+        try:
+            held.append(SRC.acquire_writer_lease(spark, path, "first"))
+        except SRC.ConcurrentWriterError:
+            pass
+        try:
+            assert not armed, "the takeover never removed the lock"
+            assert [lease.op for lease in held] == ["second"], \
+                "two writers both hold the lease"
+            with open(lock) as fh:
+                assert json.loads(fh.read())["token"] == held[0].token
+        finally:
+            for lease in held:
+                lease.release()
+        assert not os.path.exists(lock)
+
     def test_unreadable_readback_retries_then_ioerror(
             self, spark, ctx, tmp_table_dir, monkeypatch):
         """Round-13 ADVICE: an unreadable payload ({}) at the acquire
@@ -3118,3 +3185,30 @@ class TestDmlCountFallback:
         forced = self._run(spark, ctx, os.path.join(tmp_table_dir, "miss"))
         assert len(misses) == 4  # one bounded read per DML call
         assert forced == healthy
+
+
+class TestDmlReader:
+    """DELETE and UPDATE read the files they rewrite through the same
+    exact reader as pruned reads: past Spark's 32-path threshold for a
+    parallel listing job, building that reader still launches none."""
+
+    def test_rewrite_of_40_files_builds_reader_without_job(
+            self, spark, ctx, tmp_table_dir, count_jobs):
+        from parquet_index_spark import sources as S
+        from parquet_index_spark.manager import IndexedDataFrame
+        path = os.path.join(tmp_table_dir, "dml40")
+        # one task writes all 40 partitions: one file per directory, and
+        # every file spans the whole id range (a boundary file for both)
+        spark.range(0, 4000).repartition(1) \
+            .selectExpr("id", "id AS v", "cast(id % 40 AS int) AS p") \
+            .write.partitionBy("p").parquet(path)
+        ctx.index.create.indexBy("id").parquet(path)
+        built = count_jobs(IndexedDataFrame, "_read_files")
+        info = S.delete_where(ctx, path, "id < 2000")
+        assert (info["files_rewritten"], info["rows_deleted"]) == (40, 2000)
+        info = S.update_where(ctx, path, "id >= 3000", {"v": F.lit(-1)})
+        assert (info["files_rewritten"], info["rows_updated"]) == (40, 1000)
+        assert [(len(args[1]), jobs) for args, jobs in built] == [(40, 0)] * 2
+        rows = spark.read.parquet(path)
+        assert rows.count() == 2000
+        assert rows.filter("v = -1").count() == 1000
