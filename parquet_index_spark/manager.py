@@ -40,7 +40,7 @@ from parquet_index_spark.metastore import (
     FILES_FILE, METADATA_FILE, STATS_DIR, SUCCESS_FILE,
     IndexMetadata, IndexNotFoundError, LocationSpec, Metastore,
 )
-from parquet_index_spark.pruning import prune_files
+from parquet_index_spark.pruning import count_files, prune_files
 
 _GLOB_META = re.compile(r"[\\{}\[\],*?]")
 
@@ -127,6 +127,23 @@ class IndexedDataFrame:
             return pruning_spark.prune_files_with_spark(
                 self._spark, self._metadata, ast, tz)
         return prune_files(ast, self._metadata.context(), tz)
+
+    def _count_files(self, ast, column: str = None) -> tuple:
+        """The three-band decomposition of ``ast`` on the route
+        ``_prune`` takes (``pruning.count_files``, or
+        ``pruning_spark.count_files_with_spark``): -> (scan paths,
+        answers, tz). Records the scanned files in ``last_prune_info``."""
+        from parquet_index_spark import pruning_spark
+        spark_fold, tz = self._fold_route()
+        if spark_fold:
+            scan_paths, answers = pruning_spark.count_files_with_spark(
+                self._spark, self._metadata, ast, tz, column)
+        else:
+            scan_paths, answers = count_files(
+                ast, self._metadata.context(), tz, column)
+        self._manager.last_prune_info = PruneInfo(
+            len(self._metadata.files), len(scan_paths), pruned=True)
+        return scan_paths, answers, tz
 
     def _scan(self, files) -> DataFrame:
         """The reader of a pruned read over ``files`` (relative paths):
@@ -325,10 +342,6 @@ class IndexedDataFrame:
         means the vocabulary outgrew the filter, not that the predicate
         is unselective. Popcounts every stored filter, so it costs one
         pass over the stats metadata."""
-        import numpy as np
-
-        from parquet_index_spark import pruning as PR
-
         all_paths = self._metadata.all_file_paths()
         ast, _residual = self._compile(predicate)
         if ast is None:
@@ -337,12 +350,6 @@ class IndexedDataFrame:
                     "leaves": {}}
         ctx = self._metadata.context()
         tz = self._fold_route()[1]
-
-        def n_files(mask: np.ndarray) -> int:
-            keep = np.zeros(len(ctx.file_paths), dtype=bool)
-            keep[ctx.file_ids[mask]] = True
-            return int(keep.sum())
-
         leaves: dict = {}
 
         def walk(p) -> None:
@@ -354,11 +361,11 @@ class IndexedDataFrame:
                 return
             desc = (f"unsupported({p.description})"
                     if isinstance(p, P.Unsupported) else str(p))
-            leaves[desc] = n_files(PR.evaluate(p, ctx, tz))
+            leaves[desc] = len(prune_files(p, ctx, tz))
 
         walk(P.push_not_down(ast))
         out = {"total_files": len(all_paths),
-               "overall_files": n_files(PR.evaluate(ast, ctx, tz)),
+               "overall_files": len(prune_files(ast, ctx, tz)),
                "pruned": True, "leaves": leaves}
         if include_saturation:
             sat = DataFrameIndexManager._filter_saturation(self._metadata)
@@ -441,30 +448,25 @@ class IndexedDataFrame:
         """Metadata-accelerated count: ``count(*) WHERE pred`` answered
         from index statistics wherever they PROVE the predicate.
 
-        Three-band decomposition per block (pruning.evaluate /
-        pruning.evaluate_full): blocks that provably FULLY match
-        contribute their exact footer row counts with zero data IO;
-        blocks that provably cannot match contribute zero; only files
-        containing a boundary (partially-matching) block are scanned,
-        with the full predicate re-applied. On a time-clustered 100 TB
-        table a time-range count reads the two boundary files instead of
-        the whole range — the aggregate analog of file pruning. Beyond
-        reference (it only prunes scans); soundness rests on the stored
-        min/max being exact, which the collector guarantees (footer
-        values, data-recomputed where footers are distrusted).
+        Three-band decomposition per block (``pruning.bands``): blocks
+        that provably FULLY match contribute their exact footer row
+        counts with zero data IO; blocks that provably cannot match
+        contribute zero; only files containing a boundary
+        (partially-matching) block are scanned, with the full predicate
+        re-applied. On a time-clustered 100 TB table a time-range count
+        reads the two boundary files instead of the whole range — the
+        aggregate analog of file pruning. Beyond reference (it only
+        prunes scans); soundness rests on the stored min/max being
+        exact, which the collector guarantees (footer values,
+        data-recomputed where footers are distrusted).
 
-        ``last_prune_info`` reports files scanned = boundary files. Above
-        the driver-fold threshold the same decomposition runs as a Spark
-        job over the stats parquet (pruning_spark.count_files_with_spark)
-        — at 100 TB, where the metadata outgrows the driver, a trailing-
-        window count stays a metadata job plus boundary scans. Falls back
-        to pruned ``filter(pred).count()`` only when the predicate is
-        outside the foldable grammar."""
-        import numpy as np
-
-        from parquet_index_spark import pruning as PR
-        from parquet_index_spark import pruning_spark
-
+        ``last_prune_info`` reports files scanned = boundary files. The
+        decomposition folds where pruning does (``_count_files``): on
+        the driver, or past the fold threshold as a Spark job over the
+        stats parquet — at 100 TB, where the metadata outgrows the
+        driver, a trailing-window count stays a metadata job plus
+        boundary scans. Falls back to pruned ``filter(pred).count()``
+        only when the predicate is outside the foldable grammar."""
         all_paths = self._metadata.all_file_paths()
         if predicate is None:
             # manifest row counts are exact: a bare count is pure metadata
@@ -474,21 +476,8 @@ class IndexedDataFrame:
         ast, residual = self._compile(predicate)
         if ast is None:
             return self.filter(residual).count()
-        spark_fold, tz = self._fold_route()
-        if spark_fold:
-            total, scan_paths = pruning_spark.count_files_with_spark(
-                self._spark, self._metadata, ast, tz)
-        else:
-            ctx = self._metadata.context()
-            may = PR.evaluate(ast, ctx, tz)
-            full = PR.evaluate_full(ast, ctx, tz)
-            boundary = np.zeros(len(ctx.file_paths), dtype=bool)
-            boundary[ctx.file_ids[may & ~full]] = True
-            scan_paths = [p for p, b in zip(ctx.file_paths, boundary) if b]
-            # full blocks inside a boundary file are counted by its scan
-            total = int(ctx.rows[full & ~boundary[ctx.file_ids]].sum())
-        self._manager.last_prune_info = PruneInfo(
-            len(all_paths), len(scan_paths), pruned=True)
+        scan_paths, (total,), _tz = self._count_files(ast)
+        total = total or 0
         if scan_paths:
             total += self._scan(scan_paths).filter(residual).count()
         return total
@@ -505,82 +494,31 @@ class IndexedDataFrame:
         its extremes are unknowable from metadata. Returns native Python
         values (instant timestamps tz-aware UTC); ``(None, None)`` when
         no row matches or all matching values are NULL — SQL min/max
-        semantics. Above the driver-fold threshold the decomposition runs
-        as a Spark job over the stats parquet
-        (pruning_spark.min_max_files_with_spark); falls back to a pruned
-        scan aggregate for unindexed columns or unfoldable predicates."""
-        import numpy as np
-
-        from parquet_index_spark import pruning as PR
-        from parquet_index_spark import pruning_spark
-
-        all_paths = self._metadata.all_file_paths()
+        semantics. Folds where ``count_where`` does; falls back to a
+        pruned scan aggregate for unindexed columns or unfoldable
+        predicates."""
         kind = self._metadata.index_columns.get(column)
+        ast, residual = (P.Trivial(True), F.lit(True)) if predicate is None \
+            else self._compile(predicate)
 
-        def _scan_fallback(pred_for_filter):
-            df = self.df if pred_for_filter is None \
-                else self.filter(pred_for_filter)
+        def extremes(df):
             row = df.agg(F.min(column).alias("mn"),
                          F.max(column).alias("mx")).head()
             return row["mn"], row["mx"]
 
-        if kind is None:
-            return _scan_fallback(predicate)
-        if predicate is None:
-            ast, residual = None, None
-        else:
-            ast, residual = self._compile(predicate)
-            if ast is None:
-                return _scan_fallback(residual)
-        spark_fold, tz = self._fold_route()
-        if spark_fold:
-            lo, hi, scan_paths = pruning_spark.min_max_files_with_spark(
-                self._spark, self._metadata, column, ast, tz)
-        else:
-            ctx = self._metadata.context()
-            stats = ctx.columns[column]
-            if ast is None:
-                may = np.ones(ctx.n, dtype=bool)
-                full = may
-            else:
-                may = PR.evaluate(ast, ctx, tz)
-                full = PR.evaluate_full(ast, ctx, tz)
-            # statless-but-maybe-non-null blocks hide their extremes from
-            # metadata even when the predicate proves them full
-            scan_block = (may & ~full) | (
-                full & PR.statless(stats.has, stats.nulls, ctx.rows))
-            file_scan = np.zeros(len(ctx.file_paths), dtype=bool)
-            file_scan[ctx.file_ids[scan_block]] = True
-            meta_blocks = full & stats.has & ~file_scan[ctx.file_ids]
-            lo = hi = None
-            if meta_blocks.any():
-                if kind == ityp.STRING:
-                    lo = min(x for x in stats.min_s[meta_blocks])
-                    hi = max(x for x in stats.max_s[meta_blocks])
-                else:
-                    lo = int(stats.min_l[meta_blocks].min())
-                    hi = int(stats.max_l[meta_blocks].max())
-            scan_paths = [p for p, b in zip(ctx.file_paths, file_scan) if b]
-        self._manager.last_prune_info = PruneInfo(
-            len(all_paths), len(scan_paths), pruned=True)
-        if scan_paths:
-            df = self._scan(scan_paths)
-            if residual is not None:
-                df = df.filter(residual)
-            row = df.agg(F.min(column).alias("mn"),
-                         F.max(column).alias("mx")).head()
-            smn, smx = row["mn"], row["mx"]
-            if smn is not None:
-                if kind == ityp.STRING:
-                    s_lo, s_hi = smn, smx
-                else:
-                    s_lo = ityp.to_long_space(smn, kind, tz)
-                    s_hi = ityp.to_long_space(smx, kind, tz)
-                lo = s_lo if lo is None else min(lo, s_lo)
-                hi = s_hi if hi is None else max(hi, s_hi)
-        if lo is None:
-            return None, None
-        if kind == ityp.STRING:
+        if kind is None or ast is None:
+            return extremes(self.df if predicate is None
+                            else self.filter(predicate))
+        scan_paths, (lo, hi), tz = self._count_files(ast, column)
+        smn, smx = extremes(self._scan(scan_paths).filter(residual)) \
+            if scan_paths else (None, None)
+        if smn is not None:
+            if kind != ityp.STRING:
+                smn = ityp.to_long_space(smn, kind, tz)
+                smx = ityp.to_long_space(smx, kind, tz)
+            lo = smn if lo is None else min(lo, smn)
+            hi = smx if hi is None else max(hi, smx)
+        if lo is None or kind == ityp.STRING:
             return lo, hi
         return ityp.from_long_space(lo, kind), ityp.from_long_space(hi, kind)
 

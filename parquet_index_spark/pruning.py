@@ -87,6 +87,32 @@ class BlockStatsContext:
         self._membership_loader = membership_loader
         self._membership_cache: Dict[str, Optional[list]] = {}
 
+    def files_with(self, mask: np.ndarray) -> np.ndarray:
+        """bool[n_files]: the files holding at least one block of ``mask``."""
+        out = np.zeros(len(self.file_paths), dtype=bool)
+        out[self.file_ids[mask]] = True
+        return out
+
+    def paths(self, files: np.ndarray) -> List[str]:
+        """The paths of the files marked in ``files`` (bool[n_files])."""
+        return [self.file_paths[i] for i in np.flatnonzero(files)]
+
+    def reduce_files(self, scan: np.ndarray, meta: np.ndarray = None,
+                     reductions=()) -> tuple:
+        """The numpy per-file reduction of a decomposition (`bands`):
+        -> (paths of the files holding a ``scan`` block, answers). Each
+        ``(name, values)`` of ``reductions`` answers ``np.<name>`` of
+        ``values`` over the ``meta`` blocks of the other files, or None
+        when there is no such block."""
+        scanned = self.files_with(scan)
+        answers = ()
+        if meta is not None:
+            meta = meta & ~scanned[self.file_ids]
+            answers = tuple(
+                _native(getattr(np, name)(values[meta])) if meta.any()
+                else None for name, values in reductions)
+        return self.paths(scanned), answers
+
     def membership(self, column: str):
         """-> ColumnMembership | None. Loader results are normalized: a
         per-block MembershipFilter list (test fixtures) converts once."""
@@ -100,6 +126,11 @@ class BlockStatsContext:
                     loaded = None
             self._membership_cache[column] = loaded
         return self._membership_cache[column]
+
+
+def _native(value):
+    """A numpy scalar as its Python value; a string passes through."""
+    return value.item() if isinstance(value, np.generic) else value
 
 
 def _norm_literal(value, kind: str, tz: str = None):
@@ -309,6 +340,9 @@ class _BlockOps:
     def kind(self, column: str) -> Optional[str]:
         return getattr(self.ctx.columns.get(column), "kind", None)
 
+    def rows(self) -> np.ndarray:
+        return self.ctx.rows
+
     def stats(self, column: str):
         s = self.ctx.columns[column]
         if s.kind == ityp.STRING:
@@ -355,13 +389,9 @@ def evaluate(pred: P.Predicate, ctx: BlockStatsContext,
 
 def prune_files(pred: P.Predicate, ctx: BlockStatsContext,
                 tz: str = None) -> List[str]:
-    """Files whose ANY block might match. Empty files (no blocks) skipped."""
-    block_match = evaluate(pred, ctx, tz)
-    if ctx.n == 0:
-        return []
-    matched = np.zeros(len(ctx.file_paths), dtype=bool)
-    matched[ctx.file_ids[block_match]] = True
-    return [p for p, m in zip(ctx.file_paths, matched) if m]
+    """Files whose ANY block might match. Empty files (no blocks) skipped.
+    The scan-only use of the per-file reduction: no full-match fold."""
+    return ctx.reduce_files(evaluate(pred, ctx, tz))[0]
 
 
 # The full-match fold is the dual of `evaluate` (which answers "might ANY
@@ -371,7 +401,7 @@ def prune_files(pred: P.Predicate, ctx: BlockStatsContext,
 # (footer values, or data-recomputed where footers are distrusted —
 # collector._footer_str_trusted), so min >= v proves `col > v-1` etc.
 #
-# This enables metadata-only aggregation (IndexedDataFrame.count_where):
+# This enables metadata-only aggregation (`bands`, `count_files`):
 # full blocks contribute their exact footer row counts with no data IO;
 # only blocks in the PARTIAL band (may-match but not full-match) force a
 # scan of their file. No reference analog — the reference only prunes.
@@ -383,3 +413,37 @@ def evaluate_full(pred: P.Predicate, ctx: BlockStatsContext,
     prove the predicate (unindexed column, unsupported shape, unknown
     null count, statless block)."""
     return _fold(P.push_not_down(pred), _BlockOps(ctx), tz, True)
+
+
+def bands(ops, may, full, column: str = None) -> tuple:
+    """The three-band decomposition of a fold, per block, over either
+    backend (``ops``, as in `_fold`; the masks need only ``& | ~``):
+    -> (scan, meta, reductions).
+
+    A block that might match but is not proven to fully match is a
+    boundary block: its file is scanned with the predicate re-applied.
+    A full-match block answers from its stats, unless its file is
+    scanned anyway; a block that cannot match adds nothing. The per-file
+    reduction (`BlockStatsContext.reduce_files`,
+    `pruning_spark._reduce_files`) folds ``reductions``, (name, values)
+    pairs, over the meta blocks of the files that hold no scan block:
+    their row total, or with ``column`` its (min, max). A statless block
+    hides its extremes even when it fully matches, so for min/max it is
+    scanned, and only blocks with stats answer."""
+    scan = may & ~full
+    if column is None:
+        return scan, full, (("sum", ops.rows()),)
+    has, nulls, rows, mn, mx = ops.stats(column)
+    return (scan | (full & statless(has, nulls, rows)), full & has,
+            (("min", mn), ("max", mx)))
+
+
+def count_files(pred: P.Predicate, ctx: BlockStatsContext, tz: str = None,
+                column: str = None) -> tuple:
+    """The three-band decomposition (`bands`) of ``pred`` on the driver:
+    -> (paths of the files to scan, answers from the other files' full
+    blocks). The answers are ``(row total,)``, or with ``column`` the
+    ``(min, max)`` of its stored stats, in stat space; None where no
+    block answers. Boundary blocks are scanned, never counted here."""
+    return ctx.reduce_files(*bands(_BlockOps(ctx), evaluate(pred, ctx, tz),
+                                   evaluate_full(pred, ctx, tz), column))

@@ -11,7 +11,10 @@ fold as a Spark aggregation over the stats *parquet* directly:
          referenced columns only
       -> pruning._fold over `_ColumnOps`: the lattice both folds share,
          answered with Columns instead of bool arrays
-      -> bool_or per path -> surviving file list
+      -> `_reduce_files`: bool_or per path -> the surviving files, less
+         the paths outside the manifest (or, for the three-band
+         decomposition of `pruning.bands`, the boundary files plus one
+         final aggregate, both over a join with the manifest)
 
 Membership (dict/bloom/bitmap) refinement applies here too (round-2): dict
 filters fold as ``arrays_overlap`` on the metadata's list column — pure
@@ -31,10 +34,11 @@ from typing import List
 import pandas as pd
 
 from pyspark.sql import SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from parquet_index_spark import collector, predicates as P
 from parquet_index_spark import types as ityp
-from parquet_index_spark.pruning import _fold, statless
+from parquet_index_spark.pruning import _fold, bands
 
 SPARK_PRUNING_THRESHOLD = "spark.sql.index.pruning.sparkThreshold"
 DEFAULT_THRESHOLD = 5_000_000
@@ -220,6 +224,10 @@ class _ColumnOps:
                 F.col(f"{column}__min{sfx}"), F.col(f"{column}__max{sfx}"))
 
     @staticmethod
+    def rows() -> F.Column:
+        return F.col("__rows")
+
+    @staticmethod
     def known(mask: F.Column) -> F.Column:
         # a NULL comparison proves nothing either way
         return F.coalesce(mask, F.lit(False))
@@ -287,34 +295,26 @@ def compile_full_to_spark(pred: P.Predicate, kinds: dict,
     return _fold(P.push_not_down(pred), _ColumnOps(kinds), tz, True)
 
 
-def _manifest_df(spark: SparkSession, metadata):
-    """The committed file manifest as a 1-column DataFrame for in-job
-    orphan filtering (manifest is the commit point; stats rows for paths
-    outside it are leftovers from an interrupted refresh)."""
-    return spark.createDataFrame(
-        [(p,) for p in metadata.files["path"]], "path string")
-
-
-def _prepare_pivot(spark: SparkSession, metadata, referenced: set,
-                   tz: str = None):
+def _prepare_pivot(spark: SparkSession, metadata, referenced: set):
     """Shared front half of every distributed fold: read the stats
     parquet, pivot the referenced columns wide per (path, block), and
     join partition values in as exact pseudo-stats (min == max == value,
     as metastore.IndexMetadata._build_context builds them).
 
-    -> (pivoted | None, kinds, memb_cols); None when the index has no
-    stats shards (empty table)."""
+    -> (pivoted, kinds, memb_cols); pivoted is empty when the index has
+    no stats shards (empty table). The stats schema is given, so no job
+    reads a footer to infer it."""
     import json
 
     stats_path = os.path.join(metadata.index_dir, "stats")
     has_shards = os.path.isdir(stats_path) and any(
         f.endswith(".parquet") for f in os.listdir(stats_path))
-    if not has_shards:
-        return None, {}, frozenset()
     # the membership probes are pandas UDFs that import this package on
     # the executors' Python workers, in sessions that never ran a build
     collector._ensure_package_shipped(spark)
-    stats_df = spark.read.parquet(stats_path)
+    schema = from_arrow_schema(collector.STATS_SCHEMA)
+    stats_df = spark.read.schema(schema).parquet(stats_path) if has_shards \
+        else spark.createDataFrame([], schema)
 
     kinds = {c: k for c, k in metadata.index_columns.items() if c in referenced}
     pivoted = _pivot_stats(stats_df, sorted(kinds))
@@ -350,111 +350,63 @@ def _prepare_pivot(spark: SparkSession, metadata, referenced: set,
     return pivoted, kinds, memb_cols
 
 
+def _reduce_files(pivoted, manifest, scan, meta=None, reductions=()):
+    """The Spark per-file reduction of a decomposition
+    (`pruning.bands`), the twin of `BlockStatsContext.reduce_files`:
+    -> (sorted paths of the files holding a ``scan`` block, answers).
+
+    One groupBy("path"); stats paths outside ``manifest`` (the committed
+    paths) are orphans of an interrupted refresh and are dropped. A
+    scan-only reduction (no ``meta``) collects its paths and drops the
+    orphans on the driver: the paths reach it either way. Otherwise an
+    inner join with the manifest drops them in the job, and one final
+    aggregate gives the scan paths and each ``(name, values)`` of
+    ``reductions``: ``F.<name>`` of ``values`` over the ``meta`` blocks
+    of the other files, None when there is none."""
+    per_path = pivoted.groupBy("path").agg(
+        F.bool_or(scan).alias("__scan"),
+        *(getattr(F, name)(F.when(meta, values)).alias(f"__a{i}")
+          for i, (name, values) in enumerate(reductions)))
+    if meta is None:
+        committed = set(manifest)
+        return sorted(r["path"] for r in
+                      per_path.filter("__scan").select("path").collect()
+                      if r["path"] in committed), ()
+    committed = pivoted.sparkSession.createDataFrame(
+        [(p,) for p in manifest], "path string")
+    scanned = F.col("__scan")
+    row = per_path.join(F.broadcast(committed), "path").agg(
+        F.collect_list(F.when(scanned, F.col("path"))),
+        *(getattr(F, name)(F.when(~scanned, F.col(f"__a{i}")))
+          for i, (name, _) in enumerate(reductions))).head()
+    return sorted(row[0]), tuple(row[1:])
+
+
 def prune_files_with_spark(spark: SparkSession, metadata,
                            pred: P.Predicate, tz: str = None) -> List[str]:
     """Distributed equivalent of pruning.prune_files, membership
-    refinement included.
+    refinement included: the scan-only use of `_reduce_files`, with no
+    full-match fold.
 
     Partition-column predicates are folded too: partition values join in
     from the file manifest as exact pseudo-stats (`_prepare_pivot`).
     """
     pivoted, kinds, memb_cols = _prepare_pivot(
-        spark, metadata, P.referenced_columns(pred), tz)
-    if pivoted is None:
-        return []
-    match = compile_to_spark(pred, kinds, tz, memb_cols=memb_cols)
-    survivors = (pivoted.withColumn("__match", match)
-                 .groupBy("path")
-                 .agg(F.max(F.col("__match").cast("int")).alias("m"))
-                 .filter("m = 1")
-                 .select("path"))
-    manifest = set(metadata.files["path"])
-    # drop orphan stats paths from an interrupted refresh (the manifest
-    # is the commit point)
-    return [r["path"] for r in survivors.collect() if r["path"] in manifest]
+        spark, metadata, P.referenced_columns(pred))
+    return _reduce_files(pivoted, metadata.files["path"],
+                         compile_to_spark(pred, kinds, tz, memb_cols))[0]
 
 
 def count_files_with_spark(spark: SparkSession, metadata,
-                           pred: P.Predicate, tz: str = None):
-    """Distributed three-band count decomposition.
-
-    -> (meta_count, boundary_paths): exact row total of files proven
-    all-FULL by the fold, plus the file list that must be scanned with
-    the residual predicate. One Spark aggregation over the stats parquet;
-    only the boundary path list (bounded: these files get scanned anyway)
-    and one long reach the driver."""
-    pivoted, kinds, memb_cols = _prepare_pivot(
-        spark, metadata, P.referenced_columns(pred), tz)
-    if pivoted is None:
-        return 0, []
-    may = compile_to_spark(pred, kinds, tz, memb_cols=memb_cols)
+                           pred: P.Predicate, tz: str = None,
+                           column: str = None) -> tuple:
+    """Distributed equivalent of pruning.count_files, the three-band
+    decomposition: -> (paths of the files to scan, ``(row total,)`` or
+    with ``column`` its ``(min, max)`` in stat space). The metadata
+    outgrows the driver here, so the stats never leave the job."""
+    referenced = P.referenced_columns(pred) | ({column} if column else set())
+    pivoted, kinds, memb_cols = _prepare_pivot(spark, metadata, referenced)
+    may = compile_to_spark(pred, kinds, tz, memb_cols)
     full = compile_full_to_spark(pred, kinds, tz)
-    per_path = (pivoted
-                .withColumn("__may", may).withColumn("__full", full)
-                .groupBy("path")
-                .agg(F.max((F.col("__may") & ~F.col("__full"))
-                           .cast("int")).alias("b"),
-                     F.sum(F.when(F.col("__full"), F.col("__rows")))
-                     .alias("fr")))
-    # manifest join runs IN the job (orphan stats from an interrupted
-    # refresh must not count), and the full-file total is aggregated
-    # in-job too: only one long and the boundary path list (bounded —
-    # these files get scanned anyway) ever reach the driver
-    per_path = per_path.join(F.broadcast(_manifest_df(spark, metadata)),
-                             "path", "inner")
-    row = per_path.agg(
-        F.sum(F.when(F.col("b") == 0, F.col("fr"))).alias("meta"),
-        F.collect_list(F.when(F.col("b") == 1, F.col("path"))).alias("bp")
-    ).head()
-    return int(row["meta"] or 0), sorted(row["bp"])
-
-
-def min_max_files_with_spark(spark: SparkSession, metadata, column: str,
-                             pred: P.Predicate = None, tz: str = None):
-    """Distributed three-band min/max decomposition for ``column``.
-
-    -> (lo, hi, scan_paths) with lo/hi in STAT space (long or str, None
-    when metadata alone proves nothing). Files needing a scan: boundary
-    blocks, or full-match blocks whose stats for ``column`` are absent
-    yet possibly non-null."""
-    referenced = set(P.referenced_columns(pred)) if pred is not None else set()
-    referenced.add(column)
-    pivoted, kinds, memb_cols = _prepare_pivot(spark, metadata, referenced, tz)
-    if pivoted is None:
-        return None, None, []
-    if pred is None:
-        may = F.lit(True)
-        full = F.lit(True)
-    else:
-        may = compile_to_spark(pred, kinds, tz, memb_cols=memb_cols)
-        full = compile_full_to_spark(pred, kinds, tz)
-    kind = kinds.get(column)
-    if kind is None:
-        # agg column not indexed: nothing provable, scan all may-files
-        survivors = (pivoted.withColumn("__may", may)
-                     .groupBy("path")
-                     .agg(F.max(F.col("__may").cast("int")).alias("m"))
-                     .filter("m = 1").select("path")
-                     .join(F.broadcast(_manifest_df(spark, metadata)),
-                           "path", "inner"))
-        return None, None, sorted(r["path"] for r in survivors.collect())
-    has, nulls, rows, mn_col, mx_col = _ColumnOps(kinds).stats(column)
-    scan_block = (may & ~full) | (full & statless(has, nulls, rows))
-    meta_ok = full & has
-    per_path = (pivoted
-                .withColumn("__scan", scan_block)
-                .groupBy("path")
-                .agg(F.max(F.col("__scan").cast("int")).alias("b"),
-                     F.min(F.when(meta_ok, mn_col)).alias("mn"),
-                     F.max(F.when(meta_ok, mx_col)).alias("mx"))
-                .join(F.broadcast(_manifest_df(spark, metadata)),
-                      "path", "inner"))
-    # single in-job aggregation: extremes over clean (non-scanned) files
-    # plus the bounded boundary path list; nothing per-file reaches the
-    # driver for the metadata-answered portion
-    row = per_path.agg(
-        F.min(F.when(F.col("b") == 0, F.col("mn"))).alias("lo"),
-        F.max(F.when(F.col("b") == 0, F.col("mx"))).alias("hi"),
-        F.collect_list(F.when(F.col("b") == 1, F.col("path"))).alias("sp")
-    ).head()
-    return row["lo"], row["hi"], sorted(row["sp"])
+    return _reduce_files(pivoted, metadata.files["path"],
+                         *bands(_ColumnOps(kinds), may, full, column))

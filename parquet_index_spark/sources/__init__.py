@@ -2036,13 +2036,11 @@ def _delete_where_impl(ctx, path: str, predicate) -> dict:
         may = PR.evaluate(ast, pctx, tz)
         full = PR.evaluate_full(ast, pctx, tz)
     nf = len(pctx.file_paths)
-    file_may = np.zeros(nf, dtype=bool)
-    file_may[pctx.file_ids[may]] = True
+    file_may = pctx.files_with(may)
     # whole-drop requires EVERY block of the file to fully match — a file
     # mixing a full-match block with a no-match block must be REWRITTEN
     # (its non-matching rows survive), not dropped
-    file_has_nonfull = np.zeros(nf, dtype=bool)
-    file_has_nonfull[pctx.file_ids[~full]] = True
+    file_has_nonfull = pctx.files_with(~full)
     whole = file_may & ~file_has_nonfull
     boundary = file_may & file_has_nonfull
     if not file_may.any():
@@ -2052,14 +2050,14 @@ def _delete_where_impl(ctx, path: str, predicate) -> dict:
         raise ValueError(
             "delete_where would remove every row; drop the table and its "
             "index instead of deleting through them")
-    boundary_rel = [p for p, b in zip(pctx.file_paths, boundary) if b]
+    boundary_rel = pctx.paths(boundary)
     # DELETE removes rows where pred is TRUE; rows where it is NULL
     # survive (SQL three-valued semantics) — hence coalesce, not pred
     n_hit = _counted_rewrite(
         ctx, path, "delete_where", table, boundary_rel,
         lambda rows: (rows, F.coalesce(residual, F.lit(False))),
         lambda rows, hit: None if rows is None else rows.filter(~hit),
-        drop_rel=[p for p, w in zip(pctx.file_paths, whole) if w])
+        drop_rel=pctx.paths(whole))
     return {"files_total": nf,
             "files_dropped_whole": int(whole.sum()),
             "files_rewritten": len(boundary_rel),

@@ -98,6 +98,32 @@ def test_unindexed_column_still_exact(counted, spark):
     assert t.count_where(pred) == plain.filter(pred).count()
 
 
+@pytest.mark.parametrize("threshold", [None, "0"],
+                         ids=["driver_fold", "spark_fold"])
+def test_filter_folds_may_match_only(spark, counted, monkeypatch, threshold):
+    """A pruned read runs no full-match fold on either route; only the
+    decompositions of count_where and min_max_where do."""
+    from parquet_index_spark import pruning, pruning_spark
+    _ctx, t, _plain = counted
+    calls = []
+    for owner, name in ((pruning, "evaluate_full"),
+                        (pruning_spark, "compile_full_to_spark")):
+        def spy(*args, _orig=getattr(owner, name), **kwargs):
+            calls.append(args)
+            return _orig(*args, **kwargs)
+        monkeypatch.setattr(owner, name, spy)
+    key = "spark.sql.index.pruning.sparkThreshold"
+    if threshold is not None:
+        spark.conf.set(key, threshold)
+    try:
+        t.filter("id >= 2500 AND id < 7500")
+        assert calls == []
+        t.count_where("id >= 2500 AND id < 7500")
+        assert len(calls) == 1
+    finally:
+        spark.conf.unset(key)
+
+
 class TestMinMaxWhere:
     @pytest.mark.parametrize("pred", PREDICATES)
     def test_matches_plain_agg(self, counted, pred):
@@ -150,20 +176,33 @@ class TestMinMaxWhere:
 
 class TestDistributedFold:
     """Force the Spark-side fold (threshold=1 block) so count_where /
-    min_max_where exercise pruning_spark.count_files_with_spark and
-    min_max_files_with_spark — the 100 TB path where the metadata itself
-    outgrows the driver."""
+    min_max_where exercise pruning_spark.count_files_with_spark — the
+    100 TB path where the metadata itself outgrows the driver."""
+
+    KEY = "spark.sql.index.pruning.sparkThreshold"
 
     @pytest.fixture()
     def tiny_threshold(self, spark):
-        spark.conf.set("spark.sql.index.pruning.sparkThreshold", "1")
+        spark.conf.set(self.KEY, "1")
         yield
-        spark.conf.unset("spark.sql.index.pruning.sparkThreshold")
+        spark.conf.unset(self.KEY)
+
+    def _driver_selected(self, spark, ctx, call) -> int:
+        """Files the driver fold scans for ``call``."""
+        spark.conf.unset(self.KEY)
+        try:
+            call()
+        finally:
+            spark.conf.set(self.KEY, "1")
+        return ctx.index.last_prune_info.selected_files
 
     @pytest.mark.parametrize("pred", PREDICATES)
-    def test_count_matches_plain(self, counted, tiny_threshold, pred):
-        _ctx, t, plain = counted
+    def test_count_matches_plain(self, spark, counted, tiny_threshold, pred):
+        ctx, t, plain = counted
         assert t.count_where(pred) == plain.filter(pred).count()
+        selected = ctx.index.last_prune_info.selected_files
+        assert selected == self._driver_selected(
+            spark, ctx, lambda: t.count_where(pred))
 
     def test_count_boundary_accounting(self, counted, tiny_threshold):
         ctx, t, plain = counted
@@ -172,11 +211,15 @@ class TestDistributedFold:
         assert ctx.index.last_prune_info.selected_files <= 2
 
     @pytest.mark.parametrize("pred", PREDICATES)
-    def test_minmax_matches_plain(self, counted, tiny_threshold, pred):
-        _ctx, t, plain = counted
+    def test_minmax_matches_plain(self, spark, counted, tiny_threshold,
+                                  pred):
+        ctx, t, plain = counted
         row = (plain.filter(pred)
                .agg(F.min("id").alias("mn"), F.max("id").alias("mx")).head())
         assert t.min_max_where("id", pred) == (row["mn"], row["mx"])
+        selected = ctx.index.last_prune_info.selected_files
+        assert selected == self._driver_selected(
+            spark, ctx, lambda: t.min_max_where("id", pred))
 
     def test_minmax_string_column(self, counted, tiny_threshold):
         _ctx, t, plain = counted
@@ -185,6 +228,23 @@ class TestDistributedFold:
                .agg(F.min("key").alias("mn"), F.max("key").alias("mx"))
                .head())
         assert t.min_max_where("key", pred) == (row["mn"], row["mx"])
+
+    def test_fold_jobs(self, counted, count_jobs, tiny_threshold):
+        """Spark jobs per distributed fold call on this 20-file,
+        range-clustered table: the pruned read's fold collects its
+        survivors; the count and min/max folds add the manifest join
+        and one final aggregate. The stats schema is given, so no job
+        infers it."""
+        from parquet_index_spark import pruning_spark
+        _ctx, t, _plain = counted
+        pred = "id >= 2500 AND id < 7500"
+        prune = count_jobs(pruning_spark, "prune_files_with_spark")
+        decompose = count_jobs(pruning_spark, "count_files_with_spark")
+        t.filter(pred)
+        t.count_where(pred)
+        t.min_max_where("id", pred)
+        assert [n for _args, n in prune] == [3]
+        assert [n for _args, n in decompose] == [5, 5]
 
     def test_minmax_no_predicate(self, counted, tiny_threshold):
         _ctx, t, plain = counted

@@ -315,9 +315,11 @@ class TestFoldBackendParity:
 
     def _frame(self, spark, blocks, membership):
         """The pivoted-stats frame (`pruning_spark._pivot_stats` columns)
-        for the same blocks, plus the block index ``__i``."""
+        for the same blocks, plus the block index ``__i``; a block's
+        ``path`` is its ``file``, else one file per block."""
         from pyspark.sql import types as T_
         fields = [T_.StructField("__i", T_.IntegerType()),
+                  T_.StructField("path", T_.StringType()),
                   T_.StructField("__rows", T_.LongType())]
         for c in self.KINDS:
             fields += [
@@ -333,7 +335,7 @@ class TestFoldBackendParity:
                 T_.StructField(f"{c}__bloom", T_.BinaryType())]
         rows = []
         for i, b in enumerate(blocks):
-            row = [i, b["rows"]]
+            row = [i, b.get("file", f"f{i}"), b["rows"]]
             for c, kind in self.KINDS.items():
                 spec = b["cols"].get(c)
                 if spec is None:
@@ -462,3 +464,74 @@ class TestFoldBackendParity:
                 mixed += bool(want.any() and not want.all())
         # the block cases actually separate the shapes
         assert mixed >= len(preds)
+
+    def _files(self):
+        """Files of several blocks, for the per-file reductions under
+        ``l >= 10``: (min, max, nulls) of l, d and s per block."""
+        L, D, S = self.L, self.D, self.S
+
+        def block(file, rows, l_, d, s):
+            cols = {"l": (L,) + l_, "s": (S,) + s}
+            if d is not None:  # no d stats row: statless
+                cols["d"] = (D,) + d
+            return {"file": file, "rows": rows, "cols": cols}
+
+        return [
+            # every block full-match: answered from metadata
+            block("all_full", 100, (10, 20, 0), (5, 7, 0), ("m", "n", 0)),
+            block("all_full", 40, (30, 40, 0), (1, 9, 0), ("c", "d", 0)),
+            # a full block beside a boundary block: scanned
+            block("full_boundary", 100, (10, 12, 0), (100, 200, 0),
+                  ("x", "y", 0)),
+            block("full_boundary", 30, (5, 15, 0), (0, 3, 0), ("e", "f", 0)),
+            # a full block beside a no-match block: the full block answers
+            block("full_none", 20, (50, 60, 0), (-5, 2, 0), ("a", "b", 0)),
+            block("full_none", 100, (0, 5, 0), (-100, 100, 0),
+                  ("A", "z", 0)),
+            # full blocks: d statless in the first (min/max scans the
+            # file), s all-null there (no extremes, nothing to scan)
+            block("full_statless", 10, (20, 30, 0), None, (None, None, 10)),
+            block("full_statless", 10, (20, 25, 0), (4, 4, 0), ("k", "k", 0)),
+        ]
+
+    def test_per_file_reductions_match(self, spark):
+        """`BlockStatsContext.reduce_files` and `pruning_spark.
+        _reduce_files` over the same bands give the same scan set and
+        answers. The Spark frame also holds a full-match block of a path
+        missing from the manifest (an interrupted refresh's orphan,
+        which the driver context never holds): counted, it would add
+        1000 rows and widen every (min, max)."""
+        from parquet_index_spark import predicates as P
+        from parquet_index_spark.pruning import bands, count_files, evaluate
+        from parquet_index_spark.pruning_spark import (
+            _ColumnOps, _reduce_files, compile_full_to_spark,
+            compile_to_spark)
+        from tests.test_fold_algebra import make_ctx
+        files = self._files()
+        orphan = {"file": "orphan", "rows": 1000,
+                  "cols": {"l": (self.L, 10, 10, 0),
+                           "d": (self.D, -1000, 1000, 0),
+                           "s": (self.S, "0", "~", 0)}}
+        ctx = make_ctx(files)
+        frame = self._frame(spark, files + [orphan], {})
+        manifest = ctx.file_paths
+        ge = P.Ge("l", 10)
+        want = {(ge, None): (["full_boundary"], (180,)),
+                (ge, "d"): (["full_boundary", "full_statless"], (-5, 9)),
+                (ge, "s"): (["full_boundary"], ("a", "n")),
+                (P.Trivial(True), "d"): (["full_statless"], (-100, 200))}
+        for (pred, column), expected in want.items():
+            assert count_files(pred, ctx, "UTC", column) == expected, \
+                (pred, column)
+            spark_bands = bands(
+                _ColumnOps(self.KINDS),
+                compile_to_spark(pred, self.KINDS, "UTC"),
+                compile_full_to_spark(pred, self.KINDS, "UTC"), column)
+            assert _reduce_files(frame, manifest, *spark_bands) == expected, \
+                (pred, column)
+        # the scan-only use: every file that might match
+        expected = (["all_full", "full_boundary", "full_none",
+                     "full_statless"], ())
+        assert ctx.reduce_files(evaluate(ge, ctx, "UTC")) == expected
+        assert _reduce_files(frame, manifest, compile_to_spark(
+            ge, self.KINDS, "UTC")) == expected

@@ -1603,7 +1603,7 @@ class TestIndexCurrencyGuardSchemes:
                                                      tmp_table_dir):
         """_require_index_current must compare files through qualified
         Hadoop URIs, not os.path.abspath: a table addressed with an
-        explicit scheme (as every hdfs://\/s3a:// table is) previously
+        explicit scheme (as every hdfs:// or s3a:// table is) previously
         made EVERY file look unindexed and spuriously refused DML
         (round-5 verdict nit #3). Simulated here with the file: scheme —
         the same URI-vs-abspath mismatch without needing a remote FS."""
