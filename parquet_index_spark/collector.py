@@ -21,7 +21,9 @@ Spark-first design differences:
   ParquetStatisticsRDD.scala:142-148); the driver never materializes the
   full statistics — at 100 TB / millions of row groups the driver-side
   ``rdd.collect`` the reference does (ParquetMetastoreSupport.scala:143)
-  would be the bottleneck.
+  would be the bottleneck. A one-file write set (an append, a DML
+  rewrite, a sink batch) is indexed in the driver instead, where it costs
+  one file's stats and no job launch (see :func:`run_stats_job`).
 """
 
 from __future__ import annotations
@@ -480,7 +482,20 @@ def run_stats_job(spark, table_root: str, files: list, stats_dir: str,
                   dict_max_size: int, num_partitions: int,
                   shard_prefix: str = "part",
                   bloom_fpp: float = 0.03) -> list:
-    """Run the distributed stats collection; returns per-file summaries.
+    """Collect the statistics of ``files``; returns per-file summaries.
+
+    Both placements run :func:`collect_partition`, the one stats
+    implementation:
+
+    - **One file runs in the driver process.** One file is one task, so
+      Spark adds no parallelism, only its launch cost: a trivial
+      one-partition Python job takes about 260 ms (4-core host,
+      ``local[2]``), and every append, DML rewrite and sink batch
+      refreshes one file. The driver holds only that file's stats.
+    - **Several files run as one Spark stage.** The size-sorted files are
+      dealt round-robin into ``n`` buckets on the driver, so big files
+      spread evenly, and each bucket is one task writing one shard
+      (``{shard_prefix}-{idx:05d}``).
 
     Parallelism default mirrors the reference:
     min(defaultParallelism * 3, shuffle.partitions)
@@ -490,18 +505,17 @@ def run_stats_job(spark, table_root: str, files: list, stats_dir: str,
     if not files:
         return []
     _ensure_package_shipped(spark)
+    args = (table_root, stats_dir, index_cols, filter_enabled, filter_type,
+            dict_max_size, shard_prefix, bloom_fpp)
+    if len(files) == 1:
+        return list(collect_partition(0, files, *args))
     n = max(1, min(num_partitions, len(files)))
-    # distribute big files evenly: sort by size desc, round-robin assign
     ordered = sorted(files, key=lambda f: -f["size"])
-    sc = spark.sparkContext
-    rdd = sc.parallelize(list(enumerate(ordered)), n) \
-        .map(lambda t: (t[0] % n, t[1])) \
-        .partitionBy(n, lambda key: key) \
-        .map(lambda kv: kv[1])
+    buckets = [ordered[i::n] for i in range(n)]
 
-    def fn(idx: int, it: Iterator) -> Iterator[dict]:
-        return collect_partition(idx, it, table_root, stats_dir, index_cols,
-                                 filter_enabled, filter_type, dict_max_size,
-                                 shard_prefix, bloom_fpp)
+    def fn(idx: int, it: Iterator[list]) -> Iterator[dict]:
+        return collect_partition(idx, (f for bucket in it for f in bucket),
+                                 *args)
 
-    return rdd.mapPartitionsWithIndex(fn).collect()
+    return (spark.sparkContext.parallelize(buckets, n)
+            .mapPartitionsWithIndex(fn).collect())
