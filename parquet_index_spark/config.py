@@ -36,21 +36,6 @@ BLOOM_FPP = "spark.sql.index.parquet.filter.bloom.fpp"
 # metadata read. Past this shard count, refresh compacts the stats dir
 # (staged swap with crash recovery). 0 disables.
 REFRESH_MAX_SHARDS = "spark.sql.index.parquet.refresh.maxShards"
-# staged-swap rename pool size (default 16): flat layouts past 64 pending
-# sibling renames stage on a process-wide thread pool; metadata-op
-# (NameNode) throughput differs per cluster, so the width is tunable.
-# Read ONCE at the pool's first use — the pool persists for the process
-# (pinned-thread py4j connections are per-thread; rebuilding pools would
-# leak JVM threads), so later conf changes have no effect.
-STAGE_THREADS = "spark.sql.index.stage.threads"
-# staged-swap rename pool latency gate (round-12, r11 verdict #2): past
-# the pending-sibling floor the swap times its first renames serially and
-# pools the remainder ONLY when the mean per-op latency exceeds this many
-# microseconds. Default 1000 µs sits between the measured regimes
-# (STRESS_r11: local-FS renames ~0.68 ms/op where the pool LOSES 1.5x to
-# GIL-held py4j marshalling; >=1 ms emulated NameNode RPC where it wins
-# 2.6-6x). 0 disables the probe (always pool past the floor).
-STAGE_MIN_OP_MICROS = "spark.sql.index.stage.minOpMicros"
 # single-writer lease TTL (round-12, r11 verdict #1): every mutating
 # entry point (merge_into, delete_where, update_where, compact_table,
 # maintain_table, vacuum_table) acquires a create-exclusive sibling lock

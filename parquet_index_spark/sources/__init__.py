@@ -17,16 +17,6 @@ from parquet_index_spark.operators._ckpt import observation_get_bounded
 
 import threading as _threading
 
-_STAGE_PARALLEL_FLOOR = 64
-_STAGE_PROBE_N = 16
-_STAGE_MIN_OP_MICROS_DEFAULT = 1000.0  # shared with tools/stress.py
-_STAGE_POOL = None
-_STAGE_POOL_LOCK = _threading.Lock()  # built at import: no lock race
-#: diagnostics for the last staged swap's pool decision (read by the
-#: stress harness and tests; never consulted by product logic):
-#: {"mode": "serial"|"pooled"|"under_floor", "probe_us": float|None}
-_STAGE_LAST_MODE: dict = {"mode": None, "probe_us": None}
-
 #: staging sidecar written at the tmp root BEFORE the first rename: one
 #: table-relative path per line for every entry the swap will carry
 #: (displace) into tmp. vacuum_table classifies a stranded tmp from this
@@ -97,45 +87,6 @@ def _read_stage_sidecar(fs, jvm, jtmp):
         return "ok", frozenset(rels)
     except Exception:  # noqa: BLE001 — unreadable => keep tmp
         return "unreadable", None
-
-
-def _stage_pool(spark=None):
-    """One process-wide rename pool for the staged swap (round-10
-    review): PySpark's default pinned-thread py4j mode spawns a paired
-    JVM thread per NEW Python thread and reclaims it only on GC of the
-    connection, so a fresh pool per swap would leak JVM threads per CDC
-    micro-batch on a long-running driver. A persistent pool caps the
-    whole process at one fixed set of stage threads/connections.
-    Creation is double-check-locked: two concurrent swaps (two
-    foreachBatch streams on one driver) must not each build a pool and
-    orphan one.
-
-    Width comes from ``spark.sql.index.stage.threads`` (default 16),
-    read ONCE at first use — NameNode/metadata-op throughput differs per
-    cluster, and the pool persisting for the process means later conf
-    changes have no effect (round-10 verdict #4)."""
-    global _STAGE_POOL
-    if _STAGE_POOL is None:
-        with _STAGE_POOL_LOCK:
-            if _STAGE_POOL is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                from parquet_index_spark.config import STAGE_THREADS
-                raw = None
-                if spark is not None:
-                    try:  # ONLY the conf read is guarded (API drift);
-                        # a malformed value must fail loudly below, not
-                        # silently build a 16-wide pool for the process
-                        raw = spark.conf.get(STAGE_THREADS, None)
-                    except Exception:  # noqa: BLE001
-                        raw = None
-                n = int(raw) if raw not in (None, "") else 16
-                if not 1 <= n <= 256:
-                    raise ValueError(
-                        f"{STAGE_THREADS} must be in [1, 256], got {n}")
-                _STAGE_POOL = ThreadPoolExecutor(
-                    max_workers=n, thread_name_prefix="pis-stage")
-    return _STAGE_POOL
 
 
 #: single-writer lease marker, a SIBLING of the table path (like the
@@ -440,8 +391,7 @@ def _read_lock_owner(fs, jlock):
 
 def _heartbeat_loop() -> None:
     """Process-wide daemon servicing EVERY active lease (one thread —
-    and so one pinned py4j JVM thread — per process, the same
-    bounded-thread discipline as the stage pool). Fixed fine tick: a
+    and so one pinned py4j JVM thread — per process). Fixed fine tick: a
     registry scan twice a second costs nothing, and per-lease beats
     only fire past ttl/3, so a production 600s TTL touches the lock
     every ~200s while a test's 1s TTL still beats in time.
@@ -921,20 +871,21 @@ def _qualified_uris(spark, table_path: str, rel_paths) -> set:
         for p in rel_paths}
 
 
-def _parquet_files(spark, path: str):
-    """(path, bytes) for every data file under ``path`` via the Hadoop FS
-    API — works against any supported filesystem, not just local disk."""
-    fs, jpath = _fs_for(spark, path)
-    out = []
-    if not fs.exists(jpath):
-        return out
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            out.append((st.getPath().toString(), st.getLen()))
-    return out
+def _table_files(path: str):
+    """(root, files, part_cols) of the table at ``path`` from the
+    refresh's own listing (``collector.list_table_files``), which skips
+    what Spark's reader skips: ``_``/``.`` entries at any depth and
+    ``.crc`` sidecars, whatever a data file's suffix. An absent table
+    lists no files."""
+    from parquet_index_spark import collector
+    from parquet_index_spark.metastore import LocationSpec
+
+    root = LocationSpec(path).table_path
+    try:
+        files, part_cols = collector.list_table_files(root)
+    except FileNotFoundError:
+        files, part_cols = [], []
+    return root, files, part_cols
 
 
 def _require_index_current(spark, meta, op: str) -> None:
@@ -1137,19 +1088,12 @@ def _compact_table_impl(spark, path: str, target_file_mb: int = 128,
     # wasted the whole rewrite plan on a doomed call)
     _refuse_stranded_tmp(spark, path, path.rstrip("/") + "__compact_tmp",
                          "compact_table")
-    files = _parquet_files(spark, path)
+    # the files Spark's reader rewrites below are exactly the files the
+    # swap must not carry; hive partition columns come from the listing
+    root, files, pcols = _table_files(path)
     if not files:
         raise ValueError(f"no parquet data files under {path!r}")
-    # hive layout detection from the data-file paths themselves (works
-    # without an index): dir components shaped name=value. The listing
-    # is qualified, so the first file's path relative to the table is
-    # plain '/'-prefix arithmetic (the _qualified_uris contract)
-    fs, jpath = _fs_for(spark, path)
-    base = fs.makeQualified(jpath).toString().rstrip("/")
-    pcols = [comp.split("=", 1)[0]
-             for comp in files[0][0][len(base) + 1:].split("/")[:-1]
-             if "=" in comp]
-    total = sum(sz for _, sz in files)
+    total = sum(f["size"] for f in files)
     n_target = max(1, -(-total // (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
     if zorder_by:
@@ -1192,13 +1136,14 @@ def _compact_table_impl(spark, path: str, target_file_mb: int = 128,
     # (sidecar-protected) and brings its rollback + vacuum recovery
     # semantics along. Every data file is affected (full rewrite), so
     # the carry set is markers/metadata only — O(markers) renames.
-    _staged_swap(spark, path, tmp, bak, {u for u, _sz in files},
+    _staged_swap(spark, path, tmp, bak,
+                 _qualified_uris(spark, root, [f["path"] for f in files]),
                  label="compact")
     ctx = QueryContext(spark)
     if ctx.index.exists.parquet(path):
         ctx.index.refresh.parquet(path)
     return {"files_before": len(files),
-            "files_after": len(_parquet_files(spark, path)),
+            "files_after": len(_table_files(path)[1]),
             "bytes": total}
 
 
@@ -1223,9 +1168,9 @@ def _maintain_table_impl(spark, path: str, max_files: int = 64,
     ``compact_table`` is manual, but streaming sinks and incremental
     appends grow file counts without bound — this is the maintenance
     entry point a scheduler calls after every sink commit or on a
-    timer. It reads the table's own file/size accounting (the same
-    Hadoop-FS listing ``describe`` reports) and compacts ONLY when both
-    thresholds trip:
+    timer. It counts files and bytes with the listing the refresh and
+    ``compact_table`` use (``collector.list_table_files``) and compacts
+    ONLY when both thresholds trip:
 
     - the table holds more than ``max_files`` data files, AND
     - compaction would actually shrink the count (the size-derived
@@ -1243,11 +1188,11 @@ def _maintain_table_impl(spark, path: str, max_files: int = 64,
     if max_files < 1:
         raise ValueError(f"max_files must be >= 1, got {max_files}")
     _recover_staged_swap(spark, path, "__compact_bak")
-    files = _parquet_files(spark, path)
+    _root, files, _pcols = _table_files(path)
     if not files:
         raise ValueError(f"no parquet data files under {path!r}")
     n = len(files)
-    total = sum(sz for _, sz in files)
+    total = sum(f["size"] for f in files)
     n_target = max(1, -(-total // (target_file_mb * 1024 * 1024)))
     out = {"compacted": False, "files": n, "bytes": total,
            "target_files": int(n_target)}
@@ -1672,19 +1617,12 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
     or here), so rewritten and untouched files of one partition land
     side by side.
 
-    FLAT layouts rename per untouched file; past a small threshold the
-    independent file renames run on a thread pool (py4j ClientServer is
-    per-thread-connection-safe, Hadoop FileSystem rename is an atomic
-    independent metadata op per file) — a serial loop costs one
-    driver<->JVM(<->NameNode) roundtrip per file, minutes per CDC batch
-    on a 100k-file table. The pool is additionally LATENCY-GATED
-    (round-12): a 16-rename serial probe keeps low-latency filesystems
-    (local/NVMe, where py4j marshalling dominates and pooling loses)
-    on the serial loop — see _rename_files. Failure semantics are
-    unchanged: every
-    completed rename lands in the rollback list and any failure
-    triggers the same best-effort reversal (completion order does not
-    matter for sibling files, and directory merges stay serial)."""
+    FLAT layouts rename per untouched file, one serial loop. Indexed
+    tables are local (``collector.list_table_files`` walks the local
+    disk), where a rename costs well under a millisecond and a thread
+    pool lost to the loop (0.67x, STRESS_r11): the GIL-held py4j
+    marshalling of each rename cannot overlap. Every completed rename
+    lands in the rollback list, and any failure reverses them all."""
     import os
 
     jvm = spark._jvm
@@ -1745,8 +1683,7 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
     # walk (jvm.org.apache...) is ~5 reflection roundtrips and every
     # JavaObject attribute lookup is one more — at 17 roundtrips per
     # staged file the driver chatter, not the renames, dominated the
-    # swap. Bind the Path class and the hot FileSystem members ONCE;
-    # the bound members are safe to call from the pool threads.
+    # swap. Bind the Path class and the hot FileSystem members ONCE.
     HPath = jvm.org.apache.hadoop.fs.Path
     fs_rename = fs.rename
     fs_mkdirs, fs_listStatus = fs.mkdirs, fs.listStatus
@@ -1766,100 +1703,13 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
             affected_dirs.add(d)
             d = os.path.dirname(d)
     moved = []
-    # ONE lock guards every `moved` append — serial callers pay an
-    # uncontended acquire, and nothing depends on remembering which
-    # helper is pool-safe (round-10 verdict #3: the unlocked serial
-    # append was correct only because no pooled caller existed yet)
-    mv_lock = _threading.Lock()
-
-    def _rename_one(src, dst):
-        if not fs_rename(src, dst):
-            raise IOError(f"{label}: could not stage {src} into rewrite")
-        with mv_lock:
-            moved.append((dst, src))
-
-    def _rename_files(triples):
-        """Rename independent sibling entries ((src_uri, dst_dir, name)
-        — BOTH Path constructions happen in the worker so their py4j
-        roundtrips pool too; a plain staged file costs ZERO serial
-        driver<->JVM hops); thread pool past the floor AND past a
-        latency probe (round-12, r11 verdict #2): the pool hides
-        GIL-releasing FS wait (NameNode RPC) but cannot shed the
-        GIL-held py4j marshalling each rename task carries, so on a
-        low-latency filesystem it LOSES to the serial loop (STRESS_r11
-        measured pooled 0.67x on local renames at ~0.68 ms/op vs
-        2.6-6x wins at >=1 ms emulated RPC). The first 16 renames run
-        serially and are timed; the remainder pools only when the mean
-        per-op latency exceeds ``spark.sql.index.stage.minOpMicros``
-        (default 1000; 0 disables the probe and always pools past the
-        floor — the knob an operator sets when the FS latency profile
-        is already known). `moved` appends
-        are under a lock; a failure cancels nothing in flight but every
-        SUCCESS is recorded, so the caller's rollback restores exactly
-        what moved."""
-        def _serial(ts):
-            for src_uri, dst_dir, name in ts:
-                _rename_one(HPath(src_uri), HPath(dst_dir, name))
-
-        if len(triples) <= _STAGE_PARALLEL_FLOOR:
-            _STAGE_LAST_MODE.update(mode="under_floor", probe_us=None)
-            _serial(triples)
-            return
-        from parquet_index_spark.config import STAGE_MIN_OP_MICROS
-        try:
-            raw = spark.conf.get(STAGE_MIN_OP_MICROS, None)
-        except Exception:  # noqa: BLE001 — conf surface drift
-            raw = None
-        floor_us = (float(raw) if raw not in (None, "")
-                    else _STAGE_MIN_OP_MICROS_DEFAULT)
-        if floor_us < 0:
-            raise ValueError(
-                f"{STAGE_MIN_OP_MICROS} must be >= 0, got {floor_us}")
-        rest = triples
-        probe_us = None
-        if floor_us:
-            import time as _t
-            probe, rest = triples[:_STAGE_PROBE_N], triples[_STAGE_PROBE_N:]
-            t0 = _t.perf_counter()
-            _serial(probe)
-            probe_us = (_t.perf_counter() - t0) * 1e6 / max(len(probe), 1)
-            if probe_us < floor_us:
-                _STAGE_LAST_MODE.update(mode="serial", probe_us=probe_us)
-                _serial(rest)
-                return
-        _STAGE_LAST_MODE.update(mode="pooled", probe_us=probe_us)
-        failed = []
-
-        def work(t):
-            src_uri, dst_dir, name = t
-            try:  # a RAISING rename must not escape the worker: map()
-                # would re-raise mid-iteration and break the completion
-                # barrier — in-flight renames would keep moving files
-                # into tmp while the caller's rollback already ran
-                # (round-10 review). Record it as a failure instead.
-                src = HPath(src_uri)
-                dst = HPath(dst_dir, name)
-                ok = fs_rename(src, dst)
-            except Exception:  # noqa: BLE001 — flaky-FS regime
-                ok = False
-                src = src_uri
-            with mv_lock:
-                if ok:
-                    moved.append((dst, src))
-                else:
-                    failed.append(src)
-
-        list(_stage_pool(spark).map(work, rest))  # full barrier: no
-        if failed:                            # worker can raise, so map
-            raise IOError(                    # always drains every future
-                f"{label}: could not stage {failed[0]} into rewrite")
 
     # staging is plan-then-execute (round-11): the walk below only lists
     # and mkdirs — no renames — so the full displaced-entry list can be
     # persisted as the tmp sidecar BEFORE the first rename. vacuum_table
     # then classifies a stranded tmp from the sidecar alone, immune to a
     # post-crash index refresh rewriting the manifest (round-10 ADVICE).
-    markers, plain, rels = [], [], []
+    carry, rels = [], []
 
     def _dir_names(jdir):
         """(statuses, names) of one directory. Three py4j roundtrips
@@ -1867,8 +1717,8 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
         the floor reachable without custom JVM helpers — py4j's
         array-parameter matching cannot express a JVM-side join of the
         listing into one string, and these are loopback driver<->JVM
-        hops, not NameNode RPC, so they neither pool (GIL-bound) nor
-        grow with cluster latency."""
+        hops, not NameNode RPC, so they do not grow with filesystem
+        latency."""
         sts = fs_listStatus(jdir)
         paths = stat2paths(sts)
         return sts, [p.getName() for p in paths]
@@ -1890,38 +1740,24 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
                 # never carried (the fresh sidecar/token are written at
                 # the same dst), dies with the bak dir after the swap
             rel = prefix + name
-            if u in affected_dirs:
-                # an ancestor of an affected file is a DIRECTORY by
-                # construction: merge it (Hadoop rename onto an existing
-                # dir would NEST src inside it)
+            # an ancestor of an affected file is a DIRECTORY by
+            # construction, and so is a collision the rewrite re-created
+            # (a partition dir): merge it, as Hadoop rename onto an
+            # existing dir would NEST src inside it. A collision is the
+            # only site that needs a per-entry type probe (rare)
+            if u in affected_dirs or (name in tmp_set
+                                      and sts[i].isDirectory()):
                 dst = HPath(dst_dir, name)
                 fs_mkdirs(dst)  # idempotent if the rewrite made it
                 plan(sts[i].getPath(), dst, u, rel + "/")
                 continue
-            if name in tmp_set:
-                # collides with a rewrite-produced entry — the only site
-                # that still needs a per-entry type probe (rare: _SUCCESS
-                # markers; partition dirs the rewrite re-created)
-                if sts[i].isDirectory():
-                    dst = HPath(dst_dir, name)
-                    plan(sts[i].getPath(), dst, u, rel + "/")
-                    continue
-                if name.startswith(("_", ".")):
-                    continue  # marker the rewrite produced (_SUCCESS)
-                # a data file colliding with rewrite output cannot
-                # happen (fresh UUID names) — surface loudly via the
-                # rename failure rather than silently skipping data
-                plain.append((u, dst_dir, name))
-                rels.append(rel)
-                continue
-            if name.startswith(("_", ".")):
-                markers.append((sts[i].getPath(), HPath(dst_dir, name)))
-                rels.append(rel)
-                continue
-            # plain entry with no tmp counterpart: renames wholesale
-            # whether file or dir (unaffected partition dirs move as one
-            # rename), so no type probe is needed at all
-            plain.append((u, dst_dir, name))
+            if name in tmp_set and name.startswith(("_", ".")):
+                continue  # marker the rewrite produced (_SUCCESS)
+            # any other entry renames wholesale, file or dir (unaffected
+            # partition dirs move as one rename). A data file colliding
+            # with rewrite output cannot happen (fresh UUID names), and
+            # would surface loudly as a failed rename
+            carry.append((u, dst_dir, name))
             rels.append(rel)
 
     def stage(src_dir, dst_dir):
@@ -1929,20 +1765,21 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
         _write_stage_sidecar(fs, jvm, jtmp, rels)
         if fence_token is not None:  # after the sidecar, before the
             _write_swap_token(fs, jvm, jtmp, fence_token)  # 1st rename
-        for src, dst in markers:
-            _rename_one(src, dst)  # markers stay serial (few)
-        _rename_files(plain)  # one global batch: the pool threshold
-        # sees the whole table's untouched-file count, not per-dir runs
+        for src_uri, dst_dir, name in carry:
+            src, dst = HPath(src_uri), HPath(dst_dir, name)
+            if not fs_rename(src, dst):
+                raise IOError(
+                    f"{label}: could not stage {src} into rewrite")
+            moved.append((dst, src))  # the rollback undoes exactly these
 
     def _rollback_and_clear_tmp():
         """Undo completed stage renames, then drop tmp — but ONLY when
         every rollback rename succeeded: a file whose rollback failed
         is still INSIDE tmp, and deleting tmp would silently destroy an
-        untouched original (round-10 review #1 — the parallel pool can
-        have staged ~every sibling by the time a failure surfaces).
-        Instead the tmp dir is left stranded and named loudly;
-        vacuum_table restores sidecar-listed files before dropping
-        it."""
+        untouched original (round-10 review #1 — staging can have
+        moved ~every sibling by the time a failure surfaces). Instead
+        the tmp dir is left stranded and named loudly; vacuum_table
+        restores sidecar-listed files before dropping it."""
         failed_back = []
         for dst, src in reversed(moved):
             try:
@@ -2254,7 +2091,8 @@ def _vacuum_table_impl(spark, path: str) -> dict:
     Stranded ``*_bak`` means the crash hit INSIDE the two-rename swap
     window — the table may BE the rewrite and the bak the only copy of
     the pre-image, so bak dirs are only removed when the table
-    directory itself exists and is non-empty. When the table dir is
+    directory holds a data file by the refresh's own listing
+    (``collector.list_table_files``). When the table dir is
     ABSENT and a bak exists ALONGSIDE the op's sidecar-bearing tmp —
     the state a swap-window crash always leaves, since staging fully
     completes before the renames — vacuum HEALS the window first
@@ -2302,14 +2140,7 @@ def _vacuum_table_impl(spark, path: str) -> dict:
                 restored.append(path)  # whole-table restore
         except Exception:  # noqa: BLE001 — flaky FS: keep bak
             pass
-    table_ok = False
-    if fs.exists(jpath):
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            nm = it.next().getPath().getName()
-            if nm.endswith(".parquet") and not nm.startswith(("_", ".")):
-                table_ok = True
-                break
+    table_ok = bool(_table_files(path)[1])
     manifest_rel = None  # lazy: loaded on the first NON-EMPTY tmp only
 
     def _manifest():

@@ -669,6 +669,44 @@ class TestCompaction:
         assert want == (spark.read.parquet(path)
                         .filter("x >= 700 AND x < 720").count())
 
+    def test_suffixless_data_file_is_rewritten_not_carried(
+            self, spark, tmp_table_dir):
+        """Spark's reader reads a data file whatever its suffix, so the
+        rewrite holds its rows; the swap must not carry the original
+        into the rewritten table as well (that duplicated its rows)."""
+        from parquet_index_spark.sources import compact_table
+        path = os.path.join(tmp_table_dir, "nosuffix")
+        spark.range(0, 100).repartition(4).write.parquet(path)
+        name = sorted(f for f in os.listdir(path)
+                      if f.endswith(".parquet"))[0]
+        os.rename(os.path.join(path, name),
+                  os.path.join(path, name[:-len(".parquet")]))
+        os.remove(os.path.join(path, f".{name}.crc"))
+        before = sorted(r.id for r in spark.read.parquet(path).collect())
+        assert len(before) == 100
+        stats = compact_table(spark, path, target_file_mb=1)
+        after = sorted(r.id for r in spark.read.parquet(path).collect())
+        assert len(after) == 100
+        assert after == before
+        assert stats["files_before"] == 4
+
+    def test_hidden_dir_parquet_file_survives(self, spark, tmp_table_dir):
+        """A ``*.parquet`` file under a ``_``-prefixed directory is not
+        table data (Spark's reader and the refresh skip it): compaction
+        neither counts it nor deletes it with the backup dir."""
+        from parquet_index_spark.sources import compact_table
+        path = os.path.join(tmp_table_dir, "stray")
+        spark.range(0, 100).repartition(4).write.parquet(path)
+        stray = os.path.join(path, "_scratch", "leftover.parquet")
+        os.makedirs(os.path.dirname(stray))
+        with open(stray, "wb") as fh:
+            fh.write(b"not table data")
+        stats = compact_table(spark, path, target_file_mb=1)
+        assert stats["files_before"] == 4
+        with open(stray, "rb") as fh:
+            assert fh.read() == b"not table data"
+        assert spark.read.parquet(path).count() == 100
+
     def test_validates_inputs(self, spark, tmp_table_dir):
         from parquet_index_spark.sources import compact_table
         with pytest.raises(ValueError):
@@ -809,11 +847,10 @@ class TestStagedSwapRollback:
         assert t.filter("v = -1").count() == 100
 
 
-class TestParallelStage:
-    """Round-10: past a threshold the independent sibling-file renames
-    of the staged swap run on a thread pool (a serial loop is one
-    driver<->NameNode roundtrip per file — minutes per CDC batch on a
-    100k-file flat table). Same result, same rollback contract."""
+class TestFlatStage:
+    """The staged swap of a flat table renames each untouched file into
+    the rewrite in one serial loop; the result is exact, and a failed
+    rename rolls every completed one back."""
 
     def _table(self, spark, ctx, tmp_table_dir, name, n_files=96):
         from pyspark.sql import functions as F
@@ -827,7 +864,7 @@ class TestParallelStage:
     def test_flat_many_file_merge_roundtrip(self, spark, ctx,
                                             tmp_table_dir):
         """96 files, 1 affected: ~95 untouched files stage through the
-        parallel path; the merged table is exact and fully indexed."""
+        rename loop; the merged table is exact and fully indexed."""
         from pyspark.sql import functions as F
         from parquet_index_spark.sources import merge_into
         path = self._table(spark, ctx, tmp_table_dir, "par96")
@@ -849,10 +886,9 @@ class TestParallelStage:
     @pytest.mark.slow  # staged-swap crash-matrix long tail: the
     # sidecar/restore/rollback semantics are covered fast by
     # test_merge_crash_window_recovery (round-13, r12 verdict #4)
-    def test_parallel_stage_failure_rolls_back(self, spark, ctx,
-                                               tmp_table_dir,
-                                               monkeypatch):
-        """Poison one untouched file's rename mid-pool: every completed
+    def test_flat_stage_failure_rolls_back(self, spark, ctx,
+                                           tmp_table_dir, monkeypatch):
+        """Poison one untouched file's rename mid-stage: every completed
         rename must be restored and the table left byte-identical."""
         import glob
         from pyspark.sql import functions as F
@@ -862,9 +898,7 @@ class TestParallelStage:
         before = sorted(map(tuple, spark.read.parquet(path).collect()))
         n_before = len(glob.glob(os.path.join(path, "*.parquet")))
         # poison ONE deterministic untouched file (k=50 lives in the
-        # lowest-range file, so the highest-range file always stages) —
-        # a shared call counter across the 16 pool threads would race
-        # and could miss its trigger (round-10 review)
+        # lowest-range file, so the highest-range file always stages)
         victim = os.path.basename(
             sorted(glob.glob(os.path.join(path, "*.parquet")))[-1])
 
@@ -1661,58 +1695,6 @@ class TestMergeReleasesPersistFallback:
         assert cm.isEmpty()
         # result is intact after the release
         assert spark.read.parquet(path).count() == 2_000 - 200 + 1
-
-
-class TestStagePoolKnob:
-    """Round-10 verdict #4: the staged-swap rename pool width is a conf
-    knob (``spark.sql.index.stage.threads``), read once at first use."""
-
-    def _fresh_pool(self, spark, conf_val):
-        import parquet_index_spark.sources as SRC
-        old = SRC._STAGE_POOL
-        SRC._STAGE_POOL = None
-        if conf_val is not None:
-            spark.conf.set("spark.sql.index.stage.threads", conf_val)
-        try:
-            pool = SRC._stage_pool(spark)
-        finally:
-            if conf_val is not None:
-                spark.conf.unset("spark.sql.index.stage.threads")
-            made = SRC._STAGE_POOL
-            SRC._STAGE_POOL = old
-            if made is not None and made is not old:
-                made.shutdown(wait=False)
-        return pool
-
-    def test_pool_width_from_conf(self, spark):
-        assert self._fresh_pool(spark, "4")._max_workers == 4
-
-    def test_default_width(self, spark):
-        assert self._fresh_pool(spark, None)._max_workers == 16
-
-    def test_bad_width_rejected(self, spark):
-        with pytest.raises(ValueError, match="stage.threads"):
-            self._fresh_pool(spark, "0")
-
-    def test_width_fixed_at_first_use(self, spark):
-        """The pool persists for the process: a later conf change must
-        NOT resize it (documented contract — rebuilding pools would
-        leak pinned py4j JVM threads)."""
-        import parquet_index_spark.sources as SRC
-        old = SRC._STAGE_POOL
-        SRC._STAGE_POOL = None
-        spark.conf.set("spark.sql.index.stage.threads", "3")
-        try:
-            first = SRC._stage_pool(spark)
-            spark.conf.set("spark.sql.index.stage.threads", "7")
-            again = SRC._stage_pool(spark)
-            assert again is first and again._max_workers == 3
-        finally:
-            spark.conf.unset("spark.sql.index.stage.threads")
-            made = SRC._STAGE_POOL
-            SRC._STAGE_POOL = old
-            if made is not None and made is not old:
-                made.shutdown(wait=False)
 
 
 class TestStrandedTmpGuards:
@@ -3037,91 +3019,6 @@ class TestSwapFencing:
         assert tmp in res["removed"], res
         assert not os.path.exists(os.path.join(path, SRC.SWAP_TOKEN))
         assert res["restored"] == []
-
-
-class TestStagePoolLatencyGate:
-    """Round-12 (r11 verdict #2): past the pending-sibling floor, a
-    16-rename serial probe decides pool vs serial — local FS (per-op
-    dominated by GIL-held py4j marshalling, where STRESS_r11 measured
-    the pool LOSING 1.5x) stays serial; high-latency FS pools; the
-    probe is knob-disableable."""
-
-    def _flat_swap(self, spark, tmp_table_dir, name, n=200, delay=0.0,
-                   monkeypatch=None):
-        import time as _t
-
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, name)
-        os.makedirs(path)
-        for i in range(n):
-            with open(os.path.join(path, f"part-{i:04d}.parquet"),
-                      "wb") as fh:
-                fh.write(b"x")
-        tmp = path + "__compact_tmp"
-        os.makedirs(tmp)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        if delay and monkeypatch is not None:
-            orig = SRC._fs_for
-
-            class DelayFS:
-                def __init__(self, fs):
-                    self._fs = fs
-
-                def rename(self, src, dst):
-                    _t.sleep(delay)
-                    return self._fs.rename(src, dst)
-
-                def __getattr__(self, a):
-                    return getattr(self._fs, a)
-
-            monkeypatch.setattr(
-                SRC, "_fs_for",
-                lambda s, p: (lambda fs, jp: (DelayFS(fs), jp))(
-                    *orig(s, p)))
-        SRC._staged_swap(spark, path, tmp, path + "__compact_bak",
-                         frozenset(), label="gate-test")
-        assert len([f for f in os.listdir(path)
-                    if f.endswith(".parquet")]) == n
-        return SRC._STAGE_LAST_MODE.copy()
-
-    def test_local_fs_auto_serial(self, spark, tmp_table_dir):
-        """The serial arm of the gate, made host-independent (round-13):
-        this VM's quiet-box py4j rename roundtrip hovers AT the 1 ms
-        default gate (measured 950-1100 us), so asserting 'local always
-        probes under the default' flaked on the boundary. With the gate
-        raised well above any sane local probe, the decision must be
-        serial; at the DEFAULT gate the decision must simply MATCH the
-        probe the harness just took — the gate logic, not the host."""
-        spark.conf.set("spark.sql.index.stage.minOpMicros", "50000")
-        try:
-            mode = self._flat_swap(spark, tmp_table_dir, "gate_local")
-        finally:
-            spark.conf.unset("spark.sql.index.stage.minOpMicros")
-        assert mode["mode"] == "serial", mode
-        assert mode["probe_us"] is not None and mode["probe_us"] < 50000
-        mode_def = self._flat_swap(spark, tmp_table_dir, "gate_local_d")
-        want = "pooled" if mode_def["probe_us"] > 1000 else "serial"
-        assert mode_def["mode"] == want, mode_def
-
-    def test_high_latency_fs_pools(self, spark, tmp_table_dir,
-                                   monkeypatch):
-        mode = self._flat_swap(spark, tmp_table_dir, "gate_slow",
-                               delay=0.002, monkeypatch=monkeypatch)
-        assert mode["mode"] == "pooled", mode
-        assert mode["probe_us"] > 1000
-
-    def test_probe_disabled_always_pools(self, spark, tmp_table_dir):
-        spark.conf.set("spark.sql.index.stage.minOpMicros", "0")
-        try:
-            mode = self._flat_swap(spark, tmp_table_dir, "gate_off")
-            assert mode == {"mode": "pooled", "probe_us": None}
-        finally:
-            spark.conf.unset("spark.sql.index.stage.minOpMicros")
-
-    def test_under_floor_stays_serial_unprobed(self, spark,
-                                               tmp_table_dir):
-        mode = self._flat_swap(spark, tmp_table_dir, "gate_small", n=10)
-        assert mode["mode"] == "under_floor"
 
 
 class TestDmlCountFallback:

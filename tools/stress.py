@@ -522,21 +522,12 @@ def main() -> None:
         r["merge_overcap_deleted"] = oinfo["rows_deleted"]
         report[label] = r
 
-    # 15. round-11 parallel staged swap (r10 verdict #4): stage ~10k
-    # untouched flat-layout files through a full swap, serial-floor vs
-    # pooled. Three regimes: RAW local FS (renames complete in ~0.1ms,
-    # so there is almost no latency for the pool to hide — py4j+GIL
-    # chatter dominates and pooled can even LOSE to serial, by design)
-    # and EMULATED NameNode RPC at 1ms and 5ms per rename (the sleep
-    # releases the GIL exactly like the real socket wait, so this
-    # measures the latency-hiding the pool exists for). The speedup is
-    # bounded by the GIL-held py4j marshalling each rename task cannot
-    # shed (~0.6ms across its 3 roundtrips — 2 Path constructions + the
-    # rename — measured as the pooled rpc1ms-minus-local delta), so it
-    # GROWS with real RPC latency: ~(lat + 0.6ms)/0.6ms ideal →
-    # measured 1.3-2.6x at 1ms and 5.4-6x at 5ms across runs, more on a
-    # loaded NameNode (5-20ms under the mass-metadata-op regimes this
-    # pool targets).
+    # 15. staged swap of ~10k untouched flat-layout files: seconds of
+    # the serial rename loop per latency regime. RAW local FS, and an
+    # EMULATED metadata RPC of 1 ms and 5 ms per rename (a sleep in a
+    # wrapped FileSystem.rename). Indexed tables are local, so "local"
+    # is the regime every swap runs in; the emulated rows show how the
+    # loop scales with per-rename latency.
     import time as _time
 
     import parquet_index_spark.sources as SRC
@@ -576,32 +567,10 @@ def main() -> None:
         finally:
             SRC._fs_for = orig
 
-    # round-12 (r11 verdict #2): the pool is latency-gated — a 16-rename
-    # serial probe keeps local FS on the serial loop (where the pool
-    # measurably LOST 1.5x to GIL-held py4j marshalling) and pools only
-    # past spark.sql.index.stage.minOpMicros (default 1 ms). The "auto"
-    # row per regime is therefore the shipped behavior: expect
-    # mode=serial / speedup ~1.0 on local, mode=pooled with the r11-class
-    # wins at 1-5 ms emulated NameNode RPC.
-    floor = SRC._STAGE_PARALLEL_FLOOR
-    stage_r = {"files": n_stage,
-               "pool_threads": SRC._stage_pool(spark)._max_workers,
-               "gate_min_op_micros": SRC._STAGE_MIN_OP_MICROS_DEFAULT}
+    stage_r = {"files": n_stage}
     for regime, delay in (("local", 0.0), ("rpc1ms", 0.001),
                           ("rpc5ms", 0.005)):
-        SRC._STAGE_PARALLEL_FLOOR = 1 << 60   # force the serial path
-        try:
-            serial_sec, _ = _timed(lambda: run_swap(delay))
-        finally:
-            SRC._STAGE_PARALLEL_FLOOR = floor
-        auto_sec, _ = _timed(lambda: run_swap(delay))  # gated (shipped)
-        stage_r[regime] = {
-            "serial_sec": serial_sec, "auto_sec": auto_sec,
-            "auto_mode": SRC._STAGE_LAST_MODE["mode"],
-            "probe_us": (round(SRC._STAGE_LAST_MODE["probe_us"], 1)
-                         if SRC._STAGE_LAST_MODE["probe_us"] is not None
-                         else None),
-            "speedup": round(serial_sec / max(auto_sec, 1e-9), 2)}
+        stage_r[regime] = {"serial_sec": _timed(lambda: run_swap(delay))[0]}
     report["stage_swap"] = stage_r
 
     # 16. round-13 (r12 verdict stretch #7): TWO-PROCESS lease stress
