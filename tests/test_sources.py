@@ -707,6 +707,58 @@ class TestCompaction:
             assert fh.read() == b"not table data"
         assert spark.read.parquet(path).count() == 100
 
+    def test_qualified_path_compacts_like_plain_path(self, spark,
+                                                     tmp_table_dir):
+        """A ``file:`` URI names the same table as its plain path: the
+        listing counts the same files and the swap carries none of the
+        rewritten ones, so every row is there exactly once."""
+        from parquet_index_spark.sources import compact_table
+        path = os.path.join(tmp_table_dir, "qualified")
+        spark.range(0, 100).repartition(4).write.parquet(path)
+        stats = compact_table(spark, "file://" + path, target_file_mb=1)
+        assert stats["files_before"] == 4
+        assert stats["files_after"] == 1
+        assert sorted(r.id for r in spark.read.parquet(path).collect()) == \
+            list(range(100))
+
+    def test_zorder_on_partition_column_refused(self, spark, tmp_table_dir):
+        """The partition columns come from the table listing: Z-ordering
+        on one is refused before anything is written."""
+        from parquet_index_spark.sources import compact_table
+        path = os.path.join(tmp_table_dir, "zpart")
+        (spark.range(0, 100)
+         .select("id", (F.col("id") % 2).alias("p"))
+         .coalesce(1).write.partitionBy("p").parquet(path))
+        with pytest.raises(ValueError, match="partition columns"):
+            compact_table(spark, path, zorder_by=["id", "p"])
+        assert not os.path.exists(path + "__compact_tmp")
+        assert spark.read.parquet(path).count() == 100
+
+    def test_maintain_counts_what_the_refresh_lists(self, spark,
+                                                     tmp_table_dir):
+        """maintain_table decides on the refresh's listing: a data file
+        without the ``.parquet`` suffix counts, a ``*.parquet`` file
+        under a ``_``-prefixed directory does not."""
+        from parquet_index_spark.sources import maintain_table
+        path = os.path.join(tmp_table_dir, "mlist")
+        spark.range(0, 100).repartition(4).write.parquet(path)
+        name = sorted(f for f in os.listdir(path)
+                      if f.endswith(".parquet"))[0]
+        os.rename(os.path.join(path, name),
+                  os.path.join(path, name[:-len(".parquet")]))
+        os.remove(os.path.join(path, f".{name}.crc"))
+        stray = os.path.join(path, "_scratch", "leftover.parquet")
+        os.makedirs(os.path.dirname(stray))
+        with open(stray, "wb") as fh:
+            fh.write(b"not table data")
+        data = [f for f in os.listdir(path) if not f.startswith(("_", "."))]
+        assert len(data) == 4
+        out = maintain_table(spark, path, max_files=4, target_file_mb=1)
+        assert out["compacted"] is False and "within" in out["reason"]
+        assert out["files"] == 4
+        assert out["bytes"] == sum(os.path.getsize(os.path.join(path, f))
+                                   for f in data)
+
     def test_validates_inputs(self, spark, tmp_table_dir):
         from parquet_index_spark.sources import compact_table
         with pytest.raises(ValueError):
@@ -932,6 +984,128 @@ class TestFlatStage:
         info = merge_into(ctx, path, ups, "k")
         assert info["rows_updated"] == 1
 
+    @staticmethod
+    def _wrap_renames(monkeypatch, on_stage):
+        """Route every FileSystem rename of the staged swap through
+        ``on_stage(src, dst)`` when ``dst`` is inside the staging dir;
+        ``on_stage`` returns False to fail that rename, else None."""
+        import parquet_index_spark.sources as SRC
+
+        class WrappedFS:
+            def __init__(self, fs):
+                self._fs = fs
+
+            def rename(self, src, dst):
+                if "__delete_tmp" in dst.toUri().getPath() and \
+                        on_stage(src, dst) is False:
+                    return False
+                return self._fs.rename(src, dst)
+
+            def __getattr__(self, name):
+                return getattr(self._fs, name)
+
+        orig = SRC._fs_for
+        monkeypatch.setattr(
+            SRC, "_fs_for",
+            lambda spark_, p: (lambda fs, jp: (WrappedFS(fs), jp))(
+                *orig(spark_, p)))
+        return orig
+
+    @staticmethod
+    def _inodes(path):
+        return {f: os.stat(os.path.join(path, f)).st_ino
+                for f in os.listdir(path) if f.endswith(".parquet")}
+
+    def test_untouched_files_carried_by_rename(self, spark, ctx,
+                                               tmp_table_dir):
+        """Untouched data files reach the rewritten table by rename:
+        same names, same inodes; only the affected file is replaced."""
+        from parquet_index_spark.sources import delete_where
+        path = self._table(spark, ctx, tmp_table_dir, "flat8", n_files=8)
+        before = self._inodes(path)
+        info = delete_where(ctx, path, "k < 10")
+        assert info["rows_deleted"] == 10
+        assert info["files_rewritten"] == 1
+        after = self._inodes(path)
+        kept = set(before) & set(after)
+        assert len(kept) == 7 and len(after) == 8
+        assert all(before[f] == after[f] for f in kept)
+        assert ctx.index.parquet(path).df.count() == 9590
+
+    def test_stage_renames_run_on_calling_thread(self, spark, ctx,
+                                                 tmp_table_dir,
+                                                 monkeypatch):
+        """Every staging rename runs in the caller's own thread, and
+        each untouched data file is staged exactly once."""
+        import threading
+        from parquet_index_spark.sources import delete_where
+        path = self._table(spark, ctx, tmp_table_dir, "flat8t", n_files=8)
+        threads, names = set(), []
+
+        def on_stage(src, dst):
+            threads.add(threading.get_ident())
+            names.append(src.getName())
+
+        self._wrap_renames(monkeypatch, on_stage)
+        delete_where(ctx, path, "k < 10")
+        assert threads == {threading.get_ident()}
+        # the 7 untouched data files, each staged exactly once
+        data = [n for n in names if n.endswith(".parquet")
+                and not n.startswith(".")]
+        assert len(data) == len(set(data)) == 7
+
+    def test_small_flat_stage_failure_rolls_back(self, spark, ctx,
+                                                 tmp_table_dir,
+                                                 monkeypatch):
+        """The fifth staging rename fails after four completed: all four
+        are renamed back, the staging dir is dropped and every file is
+        where it was; a retry without the fault succeeds."""
+        import parquet_index_spark.sources as SRC
+        from parquet_index_spark.sources import delete_where
+        path = self._table(spark, ctx, tmp_table_dir, "flat8rb", n_files=8)
+        rows = sorted(map(tuple, spark.read.parquet(path).collect()))
+        entries = sorted(os.listdir(path))
+        inodes = self._inodes(path)
+        staged = []
+
+        def on_stage(src, dst):
+            staged.append(src.getName())
+            return False if len(staged) == 5 else None
+
+        orig = self._wrap_renames(monkeypatch, on_stage)
+        with pytest.raises(IOError, match="could not stage"):
+            delete_where(ctx, path, "k < 10")
+        monkeypatch.setattr(SRC, "_fs_for", orig)
+        assert len(staged) == 5
+        assert not os.path.exists(path + "__delete_tmp")
+        assert sorted(os.listdir(path)) == entries
+        assert self._inodes(path) == inodes
+        assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows
+        info = delete_where(ctx, path, "k < 10")
+        assert info["rows_deleted"] == 10
+
+
+class TestTableFiles:
+    def test_absent_table_lists_no_files(self, tmp_table_dir):
+        from parquet_index_spark.sources import _table_files
+        path = os.path.join(tmp_table_dir, "absent")
+        assert _table_files(path) == (path, [], [])
+
+    def test_lists_like_the_refresh(self, spark, tmp_table_dir):
+        """Root, files and partition columns as the refresh sees them,
+        for a ``file:`` URI as for its plain path."""
+        from parquet_index_spark import collector
+        from parquet_index_spark.sources import _table_files
+        path = os.path.join(tmp_table_dir, "tf")
+        (spark.range(0, 100)
+         .select("id", (F.col("id") % 2).alias("p"))
+         .coalesce(1).write.partitionBy("p").parquet(path))
+        root, files, pcols = _table_files("file://" + path)
+        assert root == path
+        assert pcols == ["p"]
+        assert len(files) == 2
+        assert files == collector.list_table_files(path)[0]
+
 
 class TestVacuum:
     def test_removes_stranded_tmp_keeps_orphan_bak(self, spark, ctx,
@@ -956,6 +1130,43 @@ class TestVacuum:
         assert info2["removed"] == []
         assert info2["kept"] == [path2 + "__update_bak"]
         assert os.path.exists(path2 + "__update_bak")
+
+    def test_bak_dropped_when_table_holds_suffixless_data(self, spark,
+                                                          tmp_table_dir):
+        """Whether the table holds data is the refresh's listing's call,
+        whatever a data file's suffix: a table whose one data file has
+        no ``.parquet`` suffix still has data, so its bak is dropped."""
+        from parquet_index_spark.sources import vacuum_table
+        path = os.path.join(tmp_table_dir, "vsfx")
+        spark.range(0, 100).coalesce(1).write.parquet(path)
+        for f in os.listdir(path):
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(path, f),
+                          os.path.join(path, f[:-len(".parquet")]))
+                os.remove(os.path.join(path, f".{f}.crc"))
+        os.makedirs(path + "__delete_bak")
+        info = vacuum_table(spark, path)
+        assert info["removed"] == [path + "__delete_bak"]
+        assert info["kept"] == []
+        assert not os.path.exists(path + "__delete_bak")
+
+    def test_bak_kept_when_table_holds_only_hidden_files(self, spark,
+                                                         tmp_table_dir):
+        """A ``*.parquet`` file under a ``_``-prefixed directory is not
+        table data: a table dir holding only that and a marker has no
+        data, so its bak, possibly the only copy, is kept."""
+        from parquet_index_spark.sources import vacuum_table
+        path = os.path.join(tmp_table_dir, "vstray")
+        os.makedirs(os.path.join(path, "_scratch"))
+        with open(os.path.join(path, "_scratch", "leftover.parquet"),
+                  "wb") as fh:
+            fh.write(b"not table data")
+        open(os.path.join(path, "_SUCCESS"), "wb").close()
+        os.makedirs(path + "__update_bak")
+        info = vacuum_table(spark, path)
+        assert info["removed"] == []
+        assert info["kept"] == [path + "__update_bak"]
+        assert os.path.exists(path + "__update_bak")
 
 
 class TestVacuumRestore:
