@@ -32,7 +32,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import types as T
 
-from parquet_index_spark import types as ityp
+from parquet_index_spark import _localfs, types as ityp
 from parquet_index_spark.pruning import BlockStatsContext, ColumnBlockStats
 from parquet_index_spark.statistics import ColumnMembership
 
@@ -122,43 +122,16 @@ class LocationSpec:
                 f"glob pattern: {table_path!r} contains "
                 f"{''.join(sorted(hit))!r}. Point the index at the table "
                 f"root (e.g. '/data/table', not '/data/table/*.parquet').")
-        # scheme-aware normalization (the reference qualifies through
-        # fs.makeQualified, IndexedDataSource.scala:174-177): a local
-        # table addressed as file:/x, file:///x, or /x must resolve to
-        # the SAME index; non-file schemes keep scheme+authority so the
-        # metastore layout never collides two filesystems' /data/table
-        import re
-        from urllib.parse import urlparse
-        if re.match(r"^[A-Za-z][A-Za-z0-9+.-]+:", table_path):
-            u = urlparse(table_path)
-            if u.scheme == "file":
-                self.scheme = "file"
-                self.authority = ""
-                self.table_path = os.path.abspath(u.path)
-            else:
-                import posixpath
-                self.scheme = u.scheme
-                self.authority = u.netloc
-                norm = posixpath.normpath(u.path) if u.path else "/"
-                self.table_path = f"{u.scheme}://{u.netloc}{norm}"
-        else:
-            self.scheme = "file"
-            self.authority = ""
-            self.table_path = os.path.abspath(table_path)
+        # a local table addressed as file:/x, file:///x or /x resolves to
+        # the SAME index; any other scheme is refused here, at create and
+        # at load, because the refresh lists the table with os.walk
+        self.table_path = _localfs.local_path(table_path)
         self.dataspace = dataspace
         self.identifier = identifier
 
     def relative_dir(self) -> str:
-        if self.scheme == "file":
-            tail = self.table_path.lstrip(os.sep)
-        else:
-            from urllib.parse import urlparse
-            u = urlparse(self.table_path)
-            tail = u.path.lstrip("/")
-            if self.authority:
-                tail = os.path.join(self.authority, tail)
-        return os.path.join(self.dataspace, self.identifier, self.scheme,
-                            tail)
+        return os.path.join(self.dataspace, self.identifier, "file",
+                            self.table_path.lstrip(os.sep))
 
 
 class IndexMetadata:

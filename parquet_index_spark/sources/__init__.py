@@ -8,14 +8,15 @@ matter at scale (target file size via repartition, partition columns).
 
 from __future__ import annotations
 
+import os
+import threading as _threading
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
 
+from parquet_index_spark import _localfs
 from parquet_index_spark.manager import QueryContext
 from parquet_index_spark.operators._ckpt import observation_get_bounded
-
-import threading as _threading
 
 #: staging sidecar written at the tmp root BEFORE the first rename: one
 #: table-relative path per line for every entry the swap will carry
@@ -35,57 +36,36 @@ STAGE_SIDECAR = "_pis_displaced"
 SWAP_TOKEN = "_pis_swap_token"
 
 
-def _write_stage_sidecar(fs, jvm, jtmp, rels) -> None:
+def _write_stage_sidecar(tmp, rels) -> None:
     """Persist the displaced-entry list at ``<tmp>/_pis_displaced``.
     Must complete before the first stage rename: a crash mid-write means
     nothing was displaced yet, so a partial (or absent) sidecar can
     never misclassify a displaced original."""
-    p = jvm.org.apache.hadoop.fs.Path(jtmp, STAGE_SIDECAR)
-    out = fs.create(p, True)
-    try:
-        data = "".join(r + "\n" for r in rels).encode("utf-8")
-        if data:
-            out.write(bytearray(data))
-    finally:
-        out.close()
+    _localfs.write_record(os.path.join(tmp, STAGE_SIDECAR),
+                          "".join(r + "\n" for r in rels).encode("utf-8"))
 
 
-def _write_swap_token(fs, jvm, jtmp, token: str) -> None:
+def _write_swap_token(tmp, token: str) -> None:
     """Stamp the staging writer's lease token at ``<tmp>/_pis_swap_token``.
     Written AFTER the sidecar (so a crash between the two writes leaves
     a sidecar-classified tmp, never a token-only one the manifest rule
     would restore as junk) and BEFORE the first stage rename."""
-    p = jvm.org.apache.hadoop.fs.Path(jtmp, SWAP_TOKEN)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(token.encode("utf-8")))
-    finally:
-        out.close()
+    _localfs.write_record(os.path.join(tmp, SWAP_TOKEN),
+                          token.encode("utf-8"))
 
 
-def _read_stage_sidecar(fs, jvm, jtmp):
+def _read_stage_sidecar(tmp):
     """(state, rels) for ``<tmp>/_pis_displaced``: ``("ok", frozenset)``
     when present and readable, ``("absent", None)`` when the staging
     never started (pre-sidecar crash => tmp holds only rewrite output),
     ``("unreadable", None)`` on IO errors (the caller keeps tmp)."""
-    p = jvm.org.apache.hadoop.fs.Path(jtmp, STAGE_SIDECAR)
     try:
-        if not fs.exists(p):
+        data = _localfs.read_record(os.path.join(tmp, STAGE_SIDECAR))
+        if data is None:
             return "absent", None
-        br = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(fs.open(p), "UTF-8"))
-        try:
-            rels = []
-            while True:
-                line = br.readLine()
-                if line is None:
-                    break
-                if line:
-                    rels.append(line)
-        finally:
-            br.close()
-        return "ok", frozenset(rels)
-    except Exception:  # noqa: BLE001 — unreadable => keep tmp
+        return "ok", frozenset(r for r in data.decode("utf-8").split("\n")
+                               if r)
+    except (OSError, ValueError):  # unreadable => keep tmp
         return "unreadable", None
 
 
@@ -115,7 +95,7 @@ class StaleWriterFenceError(ConcurrentWriterError):
     table stays the takeover winner's."""
 
 
-_WRITER_LEASES: dict = {}  # qualified lock URI -> _WriterLease
+_WRITER_LEASES: dict = {}  # lock path -> _WriterLease
 _WRITER_LEASES_LOCK = _threading.Lock()
 _HEARTBEAT_THREAD = None
 
@@ -127,32 +107,14 @@ class _WriterLease:
     the outer acquisition); a second thread in the same process is a
     concurrent writer like any other and fails loudly."""
 
-    def __init__(self, fs, jlock, uri, token, ttl, payload=b"",
-                 op="?"):
-        self.fs, self.jlock, self.uri = fs, jlock, uri
-        self.token, self.ttl = token, ttl
-        self.payload = payload
-        self.op = op
+    def __init__(self, lock, token, ttl, op="?"):
+        import time as _t
+        self.lock, self.token, self.ttl, self.op = lock, token, ttl, op
         self.thread_id = _threading.get_ident()
         self.depth = 1
-        #: tri-state setTimes verdict: None = unprobed, True = mtime
-        #: refresh works on this filesystem, False = inert (S3A-class)
-        #: — every later beat rewrites the payload in place instead
-        self.mtime_refresh_ok = None
         #: thread id currently holding a cross-thread reentry (see
         #: :meth:`reenter`), or None
         self.reentered_by = None
-        #: serializes this lease's lock-file IO (heartbeat payload
-        #: rewrite vs release's read-back-and-delete vs a swap fence's
-        #: read-back) WITHOUT holding the process-global registry lock
-        #: across remote FS calls (round-15 ADVICE: on a high-latency
-        #: object store one beat's rewrite was blocking every acquire/
-        #: release/reenter in the process). Ordering discipline:
-        #: _beat_lock may be taken first and _WRITER_LEASES_LOCK
-        #: nested briefly inside it; nothing acquires _beat_lock while
-        #: HOLDING the global lock, so the two orders never deadlock.
-        self._beat_lock = _threading.Lock()
-        import time as _t
         self.last_beat = _t.monotonic()
 
     def reenter(self):
@@ -173,162 +135,48 @@ class _WriterLease:
         """Refresh the lock mtime so a LIVE long-running mutation never
         expires under the TTL-takeover rule. Failures are swallowed:
         the worst case is the pre-heartbeat behavior (expiry after
-        TTL), never a stuck lock.
-
-        Object-store safety (round-13, r12 verdict #2):
-        ``FileSystem.setTimes`` is a SILENT no-op on S3A-class stores —
-        a live writer's lock would go stale at the TTL and a second
-        live writer would legally take over, the exact two-writer
-        scenario the lease exists to prevent. The FIRST beat therefore
-        verifies the refresh (stat before and after); if the mtime did
-        not move, a named warning identifies the degraded scheme and
-        every beat thereafter REWRITES the owner payload in place
-        (``create(overwrite=true)``) — a write always carries a fresh
-        mtime on any store. The rewrite's only cost is a transient
-        unreadable-payload window for a concurrent status probe (it
-        reads ``<unreadable>``, never a false takeover — the mtime is
-        fresh)."""
+        TTL), never a stuck lock. A beat only moves the mtime, so it
+        can neither truncate the lock nor recreate a released one."""
         import time as _t
         try:
-            if self.mtime_refresh_ok is not False:
-                # the setTimes probe gets its OWN except (round-13
-                # ADVICE #1): some object-store connectors RAISE
-                # (UnsupportedOperationException) instead of silently
-                # no-opping — letting that escape to the blanket
-                # swallow below would leave mtime_refresh_ok unprobed
-                # forever and a LIVE writer's lock would still go
-                # stale at the TTL. Any exception here is the same
-                # verdict as an inert no-op: flip to rewrite mode and
-                # fall through to the rewrite IN THIS SAME BEAT.
-                try:
-                    before = None
-                    if self.mtime_refresh_ok is None:
-                        before = self.fs.getFileStatus(
-                            self.jlock).getModificationTime()
-                    self.fs.setTimes(self.jlock, int(_t.time() * 1000),
-                                     -1)
-                    if self.mtime_refresh_ok is None:
-                        after = self.fs.getFileStatus(
-                            self.jlock).getModificationTime()
-                        if after == before:
-                            self.mtime_refresh_ok = False
-                            self._warn_inert_settimes("did not advance "
-                                                      "the lock mtime")
-                        else:
-                            self.mtime_refresh_ok = True
-                except Exception as exc:  # noqa: BLE001 — raising
-                    # connectors are verdict "inert", same as no-op
-                    if self.mtime_refresh_ok is None:
-                        self._warn_inert_settimes(f"raised ({exc})")
-                    self.mtime_refresh_ok = False
-                if self.mtime_refresh_ok is not False:
-                    self.last_beat = _t.monotonic()
-                    return
-            # inert-setTimes fallback: rewrite the identical owner
-            # payload — same token, so release's read-back still
-            # matches — purely to carry a fresh mtime. The rewrite
-            # runs under this lease's _beat_lock with a
-            # still-registered check (round-13 ADVICE #2, lock scope
-            # narrowed round-15): release() pops the registry under
-            # the global lock and then takes _beat_lock before
-            # deleting the lock file, so an already-scheduled beat can
-            # never recreate a released lock with a dead token (which
-            # would refuse every writer, this process included, for a
-            # full TTL). The registry check itself nests the global
-            # lock BRIEFLY — the remote-FS read-back and rewrite no
-            # longer block unrelated acquires/releases in the process
-            # (round-15 ADVICE #1).
-            with self._beat_lock:
-                with _WRITER_LEASES_LOCK:
-                    if _WRITER_LEASES.get(self.uri) is not self \
-                            or self.depth <= 0:
-                        return
-                # a release() racing past the check above blocks on
-                # _beat_lock (it acquires it before deleting), so the
-                # registration verdict holds for the rewrite below.
-                # takeover guard: if our heartbeat stalled past the
-                # TTL and another writer legally took the lock over,
-                # create(overwrite) would stomp the WINNER's lock and
-                # let two writers in — read back first and only
-                # rewrite a lock that is still ours (or gone: a
-                # takeover-in-flight deleted it; recreating ours makes
-                # the racer's create-exclusive fail and read-back
-                # raise lost-race — one winner either way, and we are
-                # demonstrably alive). Unreadable ({}) could be a
-                # racer mid-write: skip this beat, the next one (well
-                # inside the TTL) retries.
-                holder = _read_lock_owner(self.fs, self.jlock)
-                if holder == {}:
-                    return
-                if holder is not None \
-                        and holder.get("token") != self.token:
-                    return
-                out = self.fs.create(self.jlock, True)
-                try:
-                    out.write(bytearray(self.payload))
-                finally:
-                    out.close()
-                self.last_beat = _t.monotonic()
-        except Exception:  # noqa: BLE001 — see docstring
-            pass
-
-    def _warn_inert_settimes(self, what: str) -> None:
-        import warnings
-        warnings.warn(
-            f"writer lease: FileSystem.setTimes {what} at {self.uri} "
-            "(object stores like S3A no-op or reject it) — falling "
-            "back to rewriting the lock payload per heartbeat so a "
-            "LIVE writer's lock never looks stale. If lock writes are "
-            "expensive on this store, raise "
-            "spark.sql.index.writer.lock.ttlSeconds.",
-            UserWarning, stacklevel=3)
+            _localfs.touch(self.lock)
+        except OSError:
+            return
+        self.last_beat = _t.monotonic()
 
     def release(self) -> None:
+        import warnings
         with _WRITER_LEASES_LOCK:
             self.depth -= 1
             if self.depth > 0:
                 return
-            _WRITER_LEASES.pop(self.uri, None)
-        # _beat_lock AFTER the registry pop (never while holding the
-        # global lock — see __init__ ordering note): a beat already
-        # past its registration check finishes its payload rewrite
-        # before the delete below runs; a beat arriving later sees the
-        # popped registry and no-ops. Either way the lock file cannot
-        # be resurrected with a dead token after this method deletes it.
-        self._beat_lock.acquire()
+            _WRITER_LEASES.pop(self.lock, None)
+        holder = _read_lock_owner(self.lock)
+        if holder == {}:
+            # unreadable (transient IO?): almost certainly still ours,
+            # but deleting a lock we cannot verify risks removing a
+            # foreign one — leave it to TTL expiry
+            warnings.warn(
+                f"writer lease: lock at {self.lock} could not be read "
+                "back at release — leaving it in place (it self-expires "
+                "after the TTL).", UserWarning, stacklevel=2)
+            return
+        if holder is not None and holder.get("token") != self.token:
+            # a TTL takeover happened while we ran (our heartbeat
+            # stalled past the TTL): the lock is someone else's now —
+            # do NOT delete it, and say what happened
+            warnings.warn(
+                f"writer lease: lock at {self.lock} was taken over by "
+                f"{holder.get('owner')} while this writer held it "
+                "(heartbeat stalled past the TTL?) — the two mutations "
+                "may have overlapped; verify the table and raise "
+                "spark.sql.index.writer.lock.ttlSeconds if this writer "
+                "legitimately pauses that long.", UserWarning, stacklevel=2)
+            return
         try:
-            holder = _read_lock_owner(self.fs, self.jlock)
-            if holder == {}:
-                # unreadable (transient IO?): almost certainly still
-                # ours, but deleting a lock we cannot verify risks
-                # removing a foreign one — leave it to TTL expiry
-                import warnings
-                warnings.warn(
-                    f"writer lease: lock at {self.uri} could not be "
-                    "read back at release — leaving it in place (it "
-                    "self-expires after the TTL).",
-                    UserWarning, stacklevel=2)
-                return
-            if holder is not None and holder.get("token") != self.token:
-                # a TTL takeover happened while we ran (our heartbeat
-                # stalled past the TTL): the lock is someone else's now
-                # — do NOT delete it, and say what happened
-                import warnings
-                warnings.warn(
-                    "writer lease: lock at "
-                    f"{self.uri} was taken over by {holder.get('owner')} "
-                    "while this writer held it (heartbeat stalled past "
-                    "the TTL?) — the two mutations may have overlapped; "
-                    "verify the table and raise "
-                    "spark.sql.index.writer.lock.ttlSeconds if this "
-                    "writer legitimately pauses that long.",
-                    UserWarning, stacklevel=2)
-                return
-            self.fs.delete(self.jlock, False)
-        except Exception:  # noqa: BLE001 — a failed delete leaves a
-            pass  # stale lock that self-expires after one TTL
-        finally:
-            self._beat_lock.release()
+            _localfs.remove(self.lock)
+        except OSError:  # a failed delete leaves a stale lock that
+            pass         # self-expires after one TTL
 
 
 class _LeaseReentry:
@@ -347,13 +195,13 @@ class _LeaseReentry:
         with _WRITER_LEASES_LOCK:
             if lease.depth <= 0:
                 raise ConcurrentWriterError(
-                    f"reenter: the lease for {lease.uri} was already "
+                    f"reenter: the lease for {lease.lock} was already "
                     "released — the streaming query outlived its "
                     "sink's lease (a bug in the sink teardown order).")
             if lease.reentered_by is not None \
                     and lease.reentered_by != me:
                 raise ConcurrentWriterError(
-                    f"reenter: the lease for {lease.uri} is already "
+                    f"reenter: the lease for {lease.lock} is already "
                     f"reentered by thread {lease.reentered_by} — "
                     "micro-batches must be serialized; a second "
                     "simultaneous reentry means two concurrent "
@@ -372,37 +220,31 @@ class _LeaseReentry:
         return False
 
 
-def _read_lock_owner(fs, jlock):
+def _read_lock_owner(lock):
     """The lock file's JSON payload ({owner, op, token, acquired_utc}),
     or None when the file is gone, or {} when unreadable."""
     import json as _json
     try:
-        if not fs.exists(jlock):
-            return None
-        stream = fs.open(jlock)
-        try:
-            data = bytes(stream.readAllBytes()).decode("utf-8", "replace")
-        finally:
-            stream.close()
-        return _json.loads(data)
-    except Exception:  # noqa: BLE001 — unreadable: held by unknown
+        data = _localfs.read_record(lock)
+        return None if data is None else _json.loads(data)
+    except (OSError, ValueError):  # unreadable: held by unknown
         return {}
 
 
 def _heartbeat_loop() -> None:
-    """Process-wide daemon servicing EVERY active lease (one thread —
-    and so one pinned py4j JVM thread — per process). Fixed fine tick: a
-    registry scan twice a second costs nothing, and per-lease beats
-    only fire past ttl/3, so a production 600s TTL touches the lock
-    every ~200s while a test's 1s TTL still beats in time.
+    """Process-wide daemon servicing EVERY active lease (one thread per
+    process). Fixed fine tick: a registry scan twice a second costs
+    nothing, and per-lease beats only fire past ttl/3, so a production
+    600s TTL touches the lock every ~200s while a test's 1s TTL still
+    beats in time.
 
-    EXITS when the registry empties (round-13 ADVICE: a permanent
-    0.5s wakeup — and a pinned py4j JVM thread — for the life of the
-    process after one short DML call is waste); the next acquire
-    restarts it lazily. The empty-check, the ``_HEARTBEAT_THREAD =
-    None`` hand-back, and acquire's restart all run under
-    ``_WRITER_LEASES_LOCK``, so a lease registered concurrently with
-    the exit is always picked up by a (possibly new) live thread."""
+    EXITS when the registry empties (round-13 ADVICE: a permanent 0.5s
+    wakeup for the life of the process after one short DML call is
+    waste); the next acquire restarts it lazily. The empty-check, the
+    ``_HEARTBEAT_THREAD = None`` hand-back, and acquire's restart all
+    run under ``_WRITER_LEASES_LOCK``, so a lease registered
+    concurrently with the exit is always picked up by a (possibly new)
+    live thread."""
     import time as _t
     global _HEARTBEAT_THREAD
     while True:
@@ -417,15 +259,30 @@ def _heartbeat_loop() -> None:
         _t.sleep(0.5)
 
 
+def _takeover_in_flight(lock: str, ttl: float) -> bool:
+    """Whether a takeover racer holds a fresh lock moved aside
+    (``<lock>.<hex>``, younger than the TTL), which it is about to put
+    back. Stale locks moved aside are only ever deleted."""
+    import time as _t
+    head, prefix = os.path.split(lock)
+    for name in _localfs.listdir(head):
+        if name.startswith(prefix + ".") and not name.endswith(".tmp"):
+            mtime = _localfs.mtime(os.path.join(head, name))
+            if mtime is not None and _t.time() - mtime <= ttl:
+                return True
+    return False
+
+
+def _lock_path(path: str) -> str:
+    """The writer lock of the table at ``path``: a sibling file."""
+    return _localfs.local_path(path) + WRITER_LOCK_SUFFIX
+
+
 def _lock_ref(spark, path: str):
-    """(fs, jlock, uri, ttl) for a table's writer lock — the shared
-    resolution between acquire and the read-only status probe."""
+    """(lock, ttl) for a table's writer lock — the shared resolution
+    between acquire and the read-only status probe."""
     from parquet_index_spark.config import WRITER_LOCK_TTL
 
-    fs, _ = _fs_for(spark, path)
-    jlock = spark._jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + WRITER_LOCK_SUFFIX)
-    uri = fs.makeQualified(jlock).toString()
     try:
         raw = spark.conf.get(WRITER_LOCK_TTL, None)
     except Exception:  # noqa: BLE001 — conf surface drift
@@ -433,7 +290,7 @@ def _lock_ref(spark, path: str):
     ttl = float(raw) if raw not in (None, "") else _WRITER_LOCK_TTL_DEFAULT
     if ttl <= 0:
         raise ValueError(f"{WRITER_LOCK_TTL} must be > 0, got {ttl}")
-    return fs, jlock, uri, ttl
+    return _lock_path(path), ttl
 
 
 def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
@@ -451,32 +308,31 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
       (default 600): the holder is presumed crashed — its heartbeat
       would have refreshed the mtime — and the lease is taken over.
 
+    The create is truly exclusive: the owner record is written and
+    fsynced under a private name, then hard-linked to the lock name,
+    which fails atomically when the name exists. Only a complete record
+    is ever visible, and of any number of racers exactly one creates.
+
     Takeover race discipline: takeover is rename-aside -> identify ->
     delete -> create-exclusive -> READ-BACK VERIFY. The lock is renamed
     to a name of this writer's own and deleted only when the renamed
-    file is the stale one first observed (same mtime, or same owner
-    record); a fresh lock a faster racer created meanwhile is renamed
-    back and this writer refuses. Rename is atomic, so no racer ever
-    removes a lock it has not identified; create-exclusive arbitrates
-    between the creates that follow, and the read-back verify catches a
-    create that raced ours before this writer touches the table.
-
-    Atomicity note: HDFS/ABFS ``create(overwrite=false)`` is atomic;
-    raw local FS approximates it (exists-then-create) — fine for the
-    failure mode this guards (two long-lived drivers, not a µs race).
-    Object stores without atomic create (plain S3A) degrade to
-    best-effort detection, still strictly better than the r11 surface
-    (nothing)."""
+    file is the stale one first observed (same mtime); a fresh lock a
+    faster racer created meanwhile is renamed back and this writer
+    refuses. Rename is atomic, so no racer ever removes a lock it has
+    not identified, and the exclusive create arbitrates between the
+    creates that follow. A create can still succeed in the instant a
+    racer holds a fresh lock aside, so the read-back waits until no
+    fresh lock is aside: by then that lock is back in place and this
+    writer refuses."""
     import json as _json
-    import os as _os
     import socket as _socket
     import time as _t
     import uuid as _uuid
 
     global _HEARTBEAT_THREAD
-    fs, jlock, uri, ttl = _lock_ref(spark, path)
+    lock, ttl = _lock_ref(spark, path)
     with _WRITER_LEASES_LOCK:
-        held = _WRITER_LEASES.get(uri)
+        held = _WRITER_LEASES.get(lock)
         if held is not None:
             if held.thread_id == _threading.get_ident():
                 held.depth += 1
@@ -487,45 +343,34 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
                 f"{getattr(held, 'op', '?')}, thread {held.thread_id}, "
                 f"lease {held.token}); single-writer contract — "
                 "serialize the mutations.")
-    token = (f"{_socket.gethostname()}:{_os.getpid()}:"
+    token = (f"{_socket.gethostname()}:{os.getpid()}:"
              f"{spark.sparkContext.applicationId}:{_uuid.uuid4().hex[:8]}")
     payload = _json.dumps({
-        "owner": f"{_socket.gethostname()}:pid{_os.getpid()}",
+        "owner": f"{_socket.gethostname()}:pid{os.getpid()}",
         "op": op, "token": token,
         "acquired_utc": _t.strftime("%Y-%m-%dT%H:%M:%SZ", _t.gmtime()),
     }).encode("utf-8")
     for attempt in (1, 2):
-        created = False
-        create_exc = None
         try:
-            out = fs.create(jlock, False)  # create-exclusive
-            created = True
-        except Exception as exc:  # noqa: BLE001 — exists (or FS error)
-            create_exc = exc
+            created = _localfs.create_record_exclusive(lock, payload)
+        except OSError as exc:
+            # nothing is visible at the lock name: the record is written
+            # under a private name first and removed on failure
+            raise IOError(
+                f"{op}: could not create the writer lock at {lock}: "
+                f"could not write the owner record ({exc}); no lock was "
+                "left behind — retry the operation.") from exc
         if created:
-            # write the owner record; a failure here must not strand
-            # this writer's OWN fresh lock (it would block every
-            # writer, itself included, for a full TTL with no owner to
-            # read — round-12 review): delete it and surface the real
-            # IO error, not a ConcurrentWriterError
-            try:
-                try:
-                    out.write(bytearray(payload))
-                finally:
-                    out.close()
-            except Exception as exc:  # noqa: BLE001
-                try:
-                    fs.delete(jlock, False)
-                except Exception:  # noqa: BLE001 — TTL self-expires it
-                    pass
-                raise IOError(
-                    f"{op}: created the writer lock at {uri} but could "
-                    f"not write the owner record ({exc}); the lock was "
-                    "removed — retry the operation.") from exc
-            # read-back verify: where create-exclusive is not atomic
-            # (raw local FS checks, then opens), a racer's create can
-            # land on ours — never proceed on a lock that is not ours
-            holder = _read_lock_owner(fs, jlock)
+            # read-back verify. A takeover racer acting on a stale
+            # observation can have moved a fresh lock aside (this one, or
+            # the one whose absence let this create succeed); it puts
+            # that lock back over whatever holds the name by then. So the
+            # record is read once no such move is in flight
+            for _ in range(100):
+                if not _takeover_in_flight(lock, ttl):
+                    break
+                _t.sleep(0.01)
+            holder = _read_lock_owner(lock)
             if holder == {}:
                 # unreadable ({} = read error, not a foreign token):
                 # retry once — treating a transient IO blip as a lost
@@ -533,30 +378,26 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
                 # misleading 'the lock is theirs now' and block every
                 # writer (ourselves included) for a full TTL
                 # (round-13 ADVICE)
-                holder = _read_lock_owner(fs, jlock)
+                holder = _read_lock_owner(lock)
             if holder == {}:
-                # still unreadable: usually a filesystem problem on our
-                # OWN fresh lock, but inside a takeover race it can be
-                # a racer's MID-WRITE lock that replaced ours (their
-                # create->close span reads as empty) — deleting a lock
-                # we cannot attribute could evict that racer, so leave
-                # it to TTL expiry (the release()-path discipline) and
-                # surface an IOError, not a misleading 'lost the race'
+                # still unreadable: deleting a lock we cannot attribute
+                # could evict a racer, so leave it to TTL expiry (the
+                # release()-path discipline) and surface an IOError,
+                # not a misleading 'lost the race'
                 raise IOError(
-                    f"{op}: created the writer lock at {uri} but could "
+                    f"{op}: created the writer lock at {lock} but could "
                     "not read the owner record back (twice) — IO "
-                    "problem or a mid-write takeover racer, not a "
-                    "verified concurrent writer. The lock was left in "
-                    "place (it self-expires after the TTL if it is "
-                    "ours); retry the operation.")
-            if holder is not None and holder.get("token") != token:
+                    "problem, not a verified concurrent writer. The "
+                    "lock was left in place (it self-expires after the "
+                    "TTL if it is ours); retry the operation.")
+            if holder is None or holder.get("token") != token:
                 raise ConcurrentWriterError(
                     f"{op}: lost a stale-lock takeover race for "
-                    f"{path!r} to {holder.get('owner', '<unreadable>')} "
-                    f"— the lock at {uri} is theirs now.")
-            lease = _WriterLease(fs, jlock, uri, token, ttl, payload, op)
+                    f"{path!r} to {(holder or {}).get('owner', 'nobody')} "
+                    f"— the lock at {lock} is not ours.")
+            lease = _WriterLease(lock, token, ttl, op)
             with _WRITER_LEASES_LOCK:
-                _WRITER_LEASES[uri] = lease
+                _WRITER_LEASES[lock] = lease
                 # lazily (re)started: the loop exits when the registry
                 # empties (is_alive guards a thread torn down by
                 # interpreter shutdown edge cases)
@@ -567,44 +408,43 @@ def acquire_writer_lease(spark, path: str, op: str) -> _WriterLease:
                         name="pis-writer-heartbeat")
                     _HEARTBEAT_THREAD.start()
             return lease
-        holder = _read_lock_owner(fs, jlock) or {}
-        try:
-            mtime_ms = fs.getFileStatus(jlock).getModificationTime()
-            age = _t.time() - mtime_ms / 1000.0
-        except Exception:  # noqa: BLE001 — no lock file after a failed
-            if attempt == 1:   # create: either it vanished between the
-                continue       # two calls (retry once) or the create
-            raise IOError(     # itself is broken (permissions, missing
-                f"{op}: could not create the writer lock at {uri} and "
-                f"no existing lock is readable — filesystem problem, "
-                f"not a concurrent writer: {create_exc}") from create_exc
+        holder = _read_lock_owner(lock) or {}
+        mtime = _localfs.mtime(lock)
+        if mtime is None:
+            # the lock vanished between the failed create and the stat
+            # (a racer released or moved it): retry once
+            if attempt == 1:
+                continue
+            raise ConcurrentWriterError(
+                f"{op}: lost a stale-lock takeover race for {path!r} — "
+                f"the lock at {lock} keeps changing hands.")
+        age = _t.time() - mtime
         if age > ttl and attempt == 1:
             # presumed-crashed holder: ONE takeover attempt. The lock is
             # moved aside under a name of this writer's own first, so the
-            # file removed is the file identified as the stale one: its
-            # mtime, or its owner record where a rename rewrites the
-            # mtime (object stores copy). A racer's fresh lock moved
-            # aside goes back in place, and this writer backs off.
-            aside = jlock.suffix("." + _uuid.uuid4().hex)
+            # file removed is the file identified as the stale one by its
+            # mtime. A racer's fresh lock moved aside goes back in
+            # place, replacing any lock created meanwhile (its creator
+            # waits for this move before reading back, and then
+            # refuses), and this writer backs off.
+            aside = f"{lock}.{_uuid.uuid4().hex}"
             try:
-                moved = fs.rename(jlock, aside)
-            except Exception:  # noqa: BLE001 — gone: a racer moved it
-                moved = False
-            if moved and (fs.getFileStatus(aside).getModificationTime()
-                          == mtime_ms or holder
-                          and _read_lock_owner(fs, aside) == holder):
-                fs.delete(aside, False)
+                _localfs.rename(lock, aside)
+            except OSError:  # gone: a racer moved it
+                aside = None
+            if aside is not None and _localfs.mtime(aside) == mtime:
+                _localfs.remove(aside)
                 continue
-            if moved:
-                fs.rename(aside, jlock)
+            if aside is not None:
+                _localfs.rename(aside, lock)
             raise ConcurrentWriterError(
                 f"{op}: lost a stale-lock takeover race for {path!r} — "
-                f"another writer took the lock at {uri} over first.")
+                f"another writer took the lock at {lock} over first.")
         raise ConcurrentWriterError(
             f"{op}: table {path!r} is locked by another writer "
             f"{holder.get('owner', '<unreadable>')} running "
             f"{holder.get('op', '?')} (lock age {age:.0f}s, "
-            f"ttl {ttl:.0f}s, at {uri}). If that writer crashed, "
+            f"ttl {ttl:.0f}s, at {lock}). If that writer crashed, "
             "the lock self-expires after the TTL; lower "
             "spark.sql.index.writer.lock.ttlSeconds to take over "
             "sooner.")
@@ -618,15 +458,14 @@ def writer_lock_status(spark, path: str) -> dict:
     next writer will take the lease over. Never mutates anything."""
     import time as _t
 
-    fs, jlock, uri, ttl = _lock_ref(spark, path)
+    lock, ttl = _lock_ref(spark, path)
     out = {"held": False, "owner": None, "op": None, "age_sec": None,
-           "ttl_sec": ttl, "stale": False, "uri": uri}
-    try:
-        st = fs.getFileStatus(jlock)
-    except Exception:  # noqa: BLE001 — no lock file
+           "ttl_sec": ttl, "stale": False, "uri": lock}
+    mtime = _localfs.mtime(lock)
+    if mtime is None:
         return out
-    holder = _read_lock_owner(fs, jlock) or {}
-    age = round(_t.time() - st.getModificationTime() / 1000.0, 1)
+    holder = _read_lock_owner(lock) or {}
+    age = round(_t.time() - mtime, 1)
     out.update(held=True, owner=holder.get("owner", "<unreadable>"),
                op=holder.get("op"), age_sec=age, stale=age > ttl)
     return out
@@ -848,27 +687,13 @@ def write_zordered(df: DataFrame, path: str, zorder_by: List[str],
         .indexBy(*(index_by or zorder_by)).parquet(path))
 
 
-def _fs_for(spark, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _qualified_uris(spark, table_path: str, rel_paths) -> set:
-    """Fully-qualified URI strings (scheme + authority + path) for
-    index-relative data file paths, resolved through the TABLE's own
-    Hadoop filesystem — the one normalization every DML file-set
-    comparison shares. os.path.abspath is NOT equivalent: on an
-    hdfs:// or s3a:// table it prefixes the cwd and matches nothing
-    (round-6 verdict nit #5)."""
+def _local_files(table_path: str, rel_paths) -> set:
+    """Absolute local paths of index-relative data files: the one form
+    every DML file-set comparison uses."""
     from parquet_index_spark import collector
 
-    fs, _ = _fs_for(spark, table_path)
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    return {
-        fs.makeQualified(hpath(collector.resolve_file(table_path, p)))
-        .toString()
-        for p in rel_paths}
+    root = _localfs.local_path(table_path)
+    return {collector.resolve_file(root, p) for p in rel_paths}
 
 
 def _table_files(path: str):
@@ -935,19 +760,20 @@ def _recover_staged_swap(spark, path: str, bak_suffix: str) -> bool:
     originals; a streaming sink's ``_spark_metadata`` commit log) into
     tmp, and the restored bak dir LACKS them — vacuum restores them
     from the staging sidecar before dropping the rewrite output
-    (round-11 review: the old ``fs.delete(tmp)`` destroyed the only
-    copy of whatever staging displaced). Returns True when a recovery
-    happened. A bak ALONGSIDE a live table is the normal pre-cleanup
-    state of a completed swap and is left for the swap logic to delete."""
-    fs, jpath = _fs_for(spark, path)
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    jbak = hpath(path.rstrip("/") + bak_suffix)
-    if fs.exists(jpath) or not fs.exists(jbak):
+    (round-11 review: deleting tmp destroyed the only copy of whatever
+    staging displaced). Returns True when a recovery happened. A bak
+    ALONGSIDE a live table is the normal pre-cleanup state of a
+    completed swap and is left for the swap logic to delete."""
+    base = _localfs.local_path(path)
+    bak = base + bak_suffix
+    if _localfs.exists(base) or not _localfs.exists(bak):
         return False
-    if not fs.rename(jbak, jpath):
+    try:
+        _localfs.rename(bak, base)
+    except OSError as exc:
         raise IOError(
-            f"recover: found interrupted swap ({jbak} without {path!r}) "
-            "but could not restore it")
+            f"recover: found interrupted swap ({bak} without {path!r}) "
+            "but could not restore it") from exc
     vacuum_table(spark, path)
     return True
 
@@ -977,10 +803,10 @@ def _refuse_stranded_tmp(spark, path: str, tmp: str, op: str) -> None:
 
     One exists() probe per DML call (plus one on the sidecar when tmp
     exists)."""
-    fs, jtmp = _fs_for(spark, tmp)
-    if not fs.exists(jtmp):
+    tmp = _localfs.local_path(tmp)
+    if not _localfs.exists(tmp):
         return
-    state, _side = _read_stage_sidecar(fs, spark._jvm, jtmp)
+    state, _side = _read_stage_sidecar(tmp)
     if state == "absent":
         try:
             indexed = QueryContext(spark).index.exists.parquet(path)
@@ -988,7 +814,7 @@ def _refuse_stranded_tmp(spark, path: str, tmp: str, op: str) -> None:
             indexed = True  # vacuum classify (or keep) conservatively
         if indexed:
             vacuum_table(spark, path)
-            if not fs.exists(jtmp):
+            if not _localfs.exists(tmp):
                 return
             # vacuum KEPT the dir: unclassifiable — a distinct message,
             # because 'run vacuum first' would loop the operator
@@ -1002,36 +828,29 @@ def _refuse_stranded_tmp(spark, path: str, tmp: str, op: str) -> None:
                 "then delete the dir. Re-running vacuum will not "
                 "resolve this state.")
         else:
-            fs.delete(jtmp, True)  # unindexed: rewrite output only
+            _localfs.rmtree(tmp)  # unindexed: rewrite output only
             return
     raise IOError(
         f"{op}: stranded staging dir {tmp!r} from an interrupted "
-        f"rewrite{_staged_by(fs, spark._jvm, jtmp)} — it may hold the "
+        f"rewrite{_staged_by(tmp)} — it may hold the "
         "only copy of displaced table "
         "files. Run vacuum_table (or `python -m parquet_index_spark "
         "vacuum <table>`) first; it restores displaced originals "
         "from the staging sidecar and removes the leftovers.")
 
 
-def _staged_by(fs, jvm, jtmp) -> str:
+def _staged_by(tmp) -> str:
     """Forensic suffix for stranded-tmp messages: the lease token
     stamped at ``<tmp>/_pis_swap_token`` identifies WHICH writer
     (host:pid:appId:nonce) staged the dir — the first question a 3am
     operator asks. Empty string when absent/unreadable (pre-round-14
     strandings, unleased callers)."""
     try:
-        p = jvm.org.apache.hadoop.fs.Path(jtmp, SWAP_TOKEN)
-        if not fs.exists(p):
-            return ""
-        stream = fs.open(p)
-        try:
-            token = bytes(stream.readAllBytes()).decode(
-                "utf-8", "replace").strip()
-        finally:
-            stream.close()
-        return f" (staged by lease {token})" if token else ""
-    except Exception:  # noqa: BLE001 — forensics only, never block
+        data = _localfs.read_record(os.path.join(tmp, SWAP_TOKEN))
+        token = data.decode("utf-8", "replace").strip() if data else ""
+    except OSError:  # forensics only, never block
         return ""
+    return f" (staged by lease {token})" if token else ""
 
 
 def compact_table(spark, path: str, target_file_mb: int = 128,
@@ -1121,8 +940,7 @@ def _compact_table_impl(spark, path: str, target_file_mb: int = 128,
             out = out.drop("__zkey")
     else:
         out = out.repartition(int(n_target))
-    tmp = path.rstrip("/") + "__compact_tmp"
-    bak = path.rstrip("/") + "__compact_bak"
+    tmp, bak = root + "__compact_tmp", root + "__compact_bak"
     writer = out.write.mode("overwrite")
     if pcols:
         writer = writer.partitionBy(*pcols)
@@ -1137,7 +955,7 @@ def _compact_table_impl(spark, path: str, target_file_mb: int = 128,
     # semantics along. Every data file is affected (full rewrite), so
     # the carry set is markers/metadata only — O(markers) renames.
     _staged_swap(spark, path, tmp, bak,
-                 _qualified_uris(spark, root, [f["path"] for f in files]),
+                 _local_files(root, [f["path"] for f in files]),
                  label="compact")
     ctx = QueryContext(spark)
     if ctx.index.exists.parquet(path):
@@ -1261,9 +1079,9 @@ def _counted_rewrite(ctx, path: str, op: str, table, read_rel, mark, rewrite,
 
     spark = ctx.spark_session
     kind = op.split("_")[0]
-    stem = f"{path.rstrip('/')}__{kind}"
+    stem = f"{_localfs.local_path(path)}__{kind}"
     meta = table._metadata
-    read_abs = _qualified_uris(spark, meta.table_path, read_rel)
+    read_abs = _local_files(meta.table_path, read_rel)
     obs = None
     if read_abs:
         rows, hit = mark(table._read_files(read_rel))
@@ -1273,9 +1091,8 @@ def _counted_rewrite(ctx, path: str, op: str, table, read_rel, mark, rewrite,
     else:
         out = rewrite(None, None)
     if out is None:
-        fs, jtmp = _fs_for(spark, stem + "_tmp")
-        fs.delete(jtmp, True)
-        fs.mkdirs(jtmp)
+        _localfs.rmtree(stem + "_tmp")
+        os.makedirs(stem + "_tmp")
     else:
         # partitioned: hash on the partition columns so each partition
         # value writes from one task — one output file per touched
@@ -1292,7 +1109,7 @@ def _counted_rewrite(ctx, path: str, op: str, table, read_rel, mark, rewrite,
         n_hit = (int(got["n"]) if got is not None
                  else rows.filter(hit).count())
     _staged_swap(spark, path, stem + "_tmp", stem + "_bak",
-                 read_abs | _qualified_uris(spark, meta.table_path, drop_rel),
+                 read_abs | _local_files(meta.table_path, drop_rel),
                  label=kind)
     ctx.index.refresh.parquet(path)
     return n_hit
@@ -1617,16 +1434,13 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
     or here), so rewritten and untouched files of one partition land
     side by side.
 
-    FLAT layouts rename per untouched file, one serial loop. Indexed
-    tables are local (``collector.list_table_files`` walks the local
-    disk), where a rename costs well under a millisecond and a thread
-    pool lost to the loop (0.67x, STRESS_r11): the GIL-held py4j
-    marshalling of each rename cannot overlap. Every completed rename
-    lands in the rollback list, and any failure reverses them all."""
-    import os
-
-    jvm = spark._jvm
-    fs, jpath = _fs_for(spark, path)
+    FLAT layouts rename per untouched file, one serial loop. A carried
+    file's Hadoop checksum sidecar (``.<name>.crc``) is carried with it;
+    an affected file's is left behind to die with the bak dir. Every
+    completed rename lands in the rollback list, and any failure
+    reverses them all."""
+    base = _localfs.local_path(path)
+    tmp, bak = _localfs.local_path(tmp), _localfs.local_path(bak)
     # fencing (round-14, r13 verdict #2): the swap runs under the
     # caller's single-writer lease, but a holder whose heartbeat
     # stalled past the TTL can have LOST that lease to a legal
@@ -1639,33 +1453,21 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
     # path — internal/test direct calls) skips the fence: it has no
     # token to fence with, and the lease wrappers on every public
     # mutating entry point are the contract.
-    _f_fs, _f_jlock, _f_uri, _f_ttl = _lock_ref(spark, path)
+    lock = _lock_path(path)
     with _WRITER_LEASES_LOCK:
-        _f_lease = _WRITER_LEASES.get(_f_uri)
-    fence_token = _f_lease.token if _f_lease is not None else None
+        lease = _WRITER_LEASES.get(lock)
+    fence_token = lease.token if lease is not None else None
 
     def _verify_swap_fence(when: str) -> None:
         if fence_token is None:
             return
-        # synchronize with OUR OWN heartbeat's payload-rewrite
-        # fallback (round-15 ADVICE #2): create(overwrite) on HDFS /
-        # local FS briefly exposes a truncated lock, and both the read
-        # and its single retry can land inside that window — raising
-        # IOError and rolling back a perfectly valid completed swap
-        # (fail-safe but spurious). Holding the lease's _beat_lock for
-        # the read-back excludes same-process beats; foreign writers'
-        # rewrites remain covered by the retry + fail-safe refusal.
-        import contextlib
-        _guard = (_f_lease._beat_lock if _f_lease is not None
-                  else contextlib.nullcontext())
-        with _guard:
-            holder = _read_lock_owner(_f_fs, _f_jlock)
-            if holder == {}:
-                holder = _read_lock_owner(_f_fs, _f_jlock)  # one retry
+        holder = _read_lock_owner(lock)
+        if holder == {}:
+            holder = _read_lock_owner(lock)  # one retry
         if holder == {}:
             raise IOError(
                 f"{label}: could not read the writer lock back at "
-                f"{_f_uri} {when} — refusing to commit a swap whose "
+                f"{lock} {when} — refusing to commit a swap whose "
                 "lease cannot be verified (IO problem or a takeover "
                 "racer mid-write); the staging was rolled back, retry "
                 "the operation.")
@@ -1679,23 +1481,7 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
                 "The staging was rolled back; re-run the operation, "
                 "and raise spark.sql.index.writer.lock.ttlSeconds if "
                 "this writer legitimately pauses that long.")
-    # py4j cost discipline (round-11, profiled): every dotted package
-    # walk (jvm.org.apache...) is ~5 reflection roundtrips and every
-    # JavaObject attribute lookup is one more — at 17 roundtrips per
-    # staged file the driver chatter, not the renames, dominated the
-    # swap. Bind the Path class and the hot FileSystem members ONCE.
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs_rename = fs.rename
-    fs_mkdirs, fs_listStatus = fs.mkdirs, fs.listStatus
-    stat2paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths
-    jtmp = HPath(tmp)
-    jbak = HPath(bak)
-    # every ancestor dir of an affected file must be merged, not renamed.
-    # All comparisons happen in fully-qualified URI space (the
-    # _qualified_uris contract): dirname on a URI string is plain
-    # '/'-prefix arithmetic, so it works for file:/, hdfs://nn:port/,
-    # s3a://bucket/ alike
-    base = fs.makeQualified(jpath).toString()
+    # every ancestor dir of an affected file must be merged, not renamed
     affected_dirs = set()
     for a in affected_abs:
         d = os.path.dirname(a)
@@ -1711,65 +1497,58 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
     # post-crash index refresh rewriting the manifest (round-10 ADVICE).
     carry, rels = [], []
 
-    def _dir_names(jdir):
-        """(statuses, names) of one directory. Three py4j roundtrips
-        per entry (array getitem + getName member resolution + call) is
-        the floor reachable without custom JVM helpers — py4j's
-        array-parameter matching cannot express a JVM-side join of the
-        listing into one string, and these are loopback driver<->JVM
-        hops, not NameNode RPC, so they do not grow with filesystem
-        latency."""
-        sts = fs_listStatus(jdir)
-        paths = stat2paths(sts)
-        return sts, [p.getName() for p in paths]
-
-    def plan(src_dir, dst_dir, dir_u, prefix=""):
-        sts, names = _dir_names(src_dir)
-        _, tmp_names = _dir_names(dst_dir)
-        tmp_set = set(tmp_names)
-        for i, name in enumerate(names):
-            # child qualified URI by string concat — listStatus children
-            # live directly under dir_u, and dirname/join on these URIs
-            # is plain '/' arithmetic (the _qualified_uris contract), so
-            # a per-entry makeQualified roundtrip would buy nothing
-            u = dir_u + "/" + name
-            if u in affected_abs:
+    def plan(src_dir, dst_dir, prefix=""):
+        names = _localfs.listdir(src_dir)
+        present = set(names)
+        tmp_set = set(_localfs.listdir(dst_dir))
+        for name in names:
+            if _localfs.is_checksum(name):
+                continue  # carried with its file below, or left behind
+            src = src_dir + "/" + name
+            if src in affected_abs:
                 continue
-            if prefix == "" and name in (STAGE_SIDECAR, SWAP_TOKEN):
+            if prefix == "" and name.startswith((STAGE_SIDECAR, SWAP_TOKEN)):
                 continue  # stale bookkeeping from an interrupted swap:
                 # never carried (the fresh sidecar/token are written at
                 # the same dst), dies with the bak dir after the swap
             rel = prefix + name
+            dst = dst_dir + "/" + name
             # an ancestor of an affected file is a DIRECTORY by
             # construction, and so is a collision the rewrite re-created
-            # (a partition dir): merge it, as Hadoop rename onto an
-            # existing dir would NEST src inside it. A collision is the
-            # only site that needs a per-entry type probe (rare)
-            if u in affected_dirs or (name in tmp_set
-                                      and sts[i].isDirectory()):
-                dst = HPath(dst_dir, name)
-                fs_mkdirs(dst)  # idempotent if the rewrite made it
-                plan(sts[i].getPath(), dst, u, rel + "/")
+            # (a partition dir): merge it, as a rename onto an existing
+            # dir would replace or fail. A collision is the only site
+            # that needs a per-entry type probe (rare)
+            if src in affected_dirs or (name in tmp_set
+                                        and os.path.isdir(src)):
+                os.makedirs(dst, exist_ok=True)
+                plan(src, dst, rel + "/")
                 continue
-            if name in tmp_set and name.startswith(("_", ".")):
-                continue  # marker the rewrite produced (_SUCCESS)
+            if name in tmp_set:
+                if name.startswith(("_", ".")):
+                    continue  # marker the rewrite produced (_SUCCESS)
+                # a data file colliding with rewrite output cannot
+                # happen (fresh UUID names); a rename would replace it
+                raise IOError(f"{label}: could not stage {src} into "
+                              f"rewrite: {dst} exists")
             # any other entry renames wholesale, file or dir (unaffected
-            # partition dirs move as one rename). A data file colliding
-            # with rewrite output cannot happen (fresh UUID names), and
-            # would surface loudly as a failed rename
-            carry.append((u, dst_dir, name))
+            # partition dirs move as one rename)
+            carry.append((src, dst))
+            crc = _localfs.checksum_name(name)
+            if crc in present:
+                carry.append((src_dir + "/" + crc, dst_dir + "/" + crc))
             rels.append(rel)
 
-    def stage(src_dir, dst_dir):
-        plan(src_dir, dst_dir, base)
-        _write_stage_sidecar(fs, jvm, jtmp, rels)
+    def stage():
+        plan(base, tmp)
+        _write_stage_sidecar(tmp, rels)
         if fence_token is not None:  # after the sidecar, before the
-            _write_swap_token(fs, jvm, jtmp, fence_token)  # 1st rename
-        for src_uri, dst_dir, name in carry:
-            src, dst = HPath(src_uri), HPath(dst_dir, name)
-            if not fs_rename(src, dst):
+            _write_swap_token(tmp, fence_token)  # 1st rename
+        for src, dst in carry:
+            try:
+                _localfs.rename(src, dst)
+            except OSError as exc:
                 raise IOError(
-                    f"{label}: could not stage {src} into rewrite")
+                    f"{label}: could not stage {src} into rewrite") from exc
             moved.append((dst, src))  # the rollback undoes exactly these
 
     def _rollback_and_clear_tmp():
@@ -1783,24 +1562,22 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
         failed_back = []
         for dst, src in reversed(moved):
             try:
-                ok = fs_rename(dst, src)
-            except Exception:  # noqa: BLE001 — same flaky-FS regime
-                ok = False
-            if not ok:
-                failed_back.append(str(dst))
+                _localfs.rename(dst, src)
+            except OSError:
+                failed_back.append(dst)
         if failed_back:
             raise IOError(
                 f"{label}: rollback could not restore "
                 f"{len(failed_back)} staged file(s) (e.g. "
                 f"{failed_back[0]}); originals remain under {tmp!r} — "
                 "vacuum_table restores them from the staging sidecar")
-        fs.delete(jtmp, True)
+        _localfs.rmtree(tmp)
 
     try:
         # fail fast: nothing staged yet, so the except-rollback just
         # drops the tmp dir (pure rewrite output at this point)
         _verify_swap_fence("before staging")
-        stage(jpath, jtmp)
+        stage()
         # decisive fence: the last instant the commit can be refused.
         # The residual window shrinks from the whole rewrite+staging
         # span to one metadata op between this read and the rename —
@@ -1809,23 +1586,28 @@ def _staged_swap(spark, path: str, tmp: str, bak: str, affected_abs: set,
     except Exception:
         _rollback_and_clear_tmp()  # table untouched when this returns
         raise
-    fs.delete(jbak, True)
-    if not fs.rename(jpath, jbak):
+    _localfs.rmtree(bak)
+    try:
+        _localfs.rename(base, bak)
+    except OSError as exc:
         _rollback_and_clear_tmp()
-        raise IOError(f"{label}: could not stage {path!r} aside")
-    if not fs.rename(jtmp, jpath):
+        raise IOError(f"{label}: could not stage {path!r} aside") from exc
+    try:
+        _localfs.rename(tmp, base)
+    except OSError as exc:
         # restore the original dir, then the untouched files moved out of it
-        fs.rename(jbak, jpath)
+        _localfs.rename(bak, base)
         _rollback_and_clear_tmp()
-        raise IOError(f"{label}: could not move rewrite into {path!r}")
-    fs.delete(jbak, True)
+        raise IOError(
+            f"{label}: could not move rewrite into {path!r}") from exc
+    _localfs.rmtree(bak)
     # the sidecar/token traveled with tmp into the live table — drop
     # them (best-effort: if a delete is lost, the `_`-prefixed file is
     # invisible to readers and the next swap skips + replaces it)
     for bookkeeping in (STAGE_SIDECAR, SWAP_TOKEN):
         try:
-            fs.delete(HPath(jpath, bookkeeping), False)
-        except Exception:  # noqa: BLE001 — cosmetic cleanup only
+            _localfs.remove(os.path.join(base, bookkeeping))
+        except OSError:
             pass
 
 
@@ -2104,8 +1886,6 @@ def _vacuum_table_impl(spark, path: str) -> dict:
     bak WITHOUT that corroborating tmp stays kept as before. Returns
     {removed: [paths], kept: [paths], restored: [file paths; the table
     path itself for a whole-table bak restore]}."""
-    fs, jpath = _fs_for(spark, path)
-    jvm = spark._jvm
     # heal the swap-window crash FIRST (round-11 review, third pass):
     # bak present with the table dir ABSENT means the crash landed
     # between the swap's two renames — the bak holds the pre-image of
@@ -2119,12 +1899,11 @@ def _vacuum_table_impl(spark, path: str) -> dict:
     # restore rename leaves bak in place; the main loop then KEEPS it
     # (table_ok is false), never deletes it.
     removed, kept, restored = [], [], []
-    base = path.rstrip("/")
+    base = _localfs.local_path(path)
     for op in ("merge", "delete", "update", "compact"):
-        jbak = jvm.org.apache.hadoop.fs.Path(f"{base}__{op}_bak")
-        jtmp = jvm.org.apache.hadoop.fs.Path(f"{base}__{op}_tmp")
-        if not (fs.exists(jbak) and not fs.exists(jpath)
-                and fs.exists(jtmp)):
+        bak, tmp = f"{base}__{op}_bak", f"{base}__{op}_tmp"
+        if not (_localfs.exists(bak) and not _localfs.exists(base)
+                and _localfs.exists(tmp)):
             continue
         # corroborate the swap window before restoring: by the time the
         # swap renames run, staging has fully completed, so the genuine
@@ -2132,13 +1911,13 @@ def _vacuum_table_impl(spark, path: str) -> dict:
         # alongside. An orphan bak with no such tmp is ambiguous
         # (possibly the only copy of a pre-image) and stays KEPT, the
         # pre-round-11 contract.
-        state, _s = _read_stage_sidecar(fs, jvm, jtmp)
+        state, _s = _read_stage_sidecar(tmp)
         if state != "ok":
             continue
         try:
-            if fs.rename(jbak, jpath):
-                restored.append(path)  # whole-table restore
-        except Exception:  # noqa: BLE001 — flaky FS: keep bak
+            _localfs.rename(bak, base)
+            restored.append(path)  # whole-table restore
+        except OSError:  # keep bak
             pass
     table_ok = bool(_table_files(path)[1])
     manifest_rel = None  # lazy: loaded on the first NON-EMPTY tmp only
@@ -2152,7 +1931,7 @@ def _vacuum_table_impl(spark, path: str) -> dict:
         if manifest_rel is None:
             try:
                 ctx = QueryContext(spark)
-                if fs.exists(jpath) and ctx.index.exists.parquet(path):
+                if _localfs.exists(base) and ctx.index.exists.parquet(path):
                     meta = ctx.index.parquet(path)._metadata
                     manifest_rel = frozenset(meta.files["path"].tolist())
                 else:
@@ -2164,24 +1943,21 @@ def _vacuum_table_impl(spark, path: str) -> dict:
     for op in ("merge", "delete", "update", "compact"):
         for kind in ("tmp", "bak"):
             cand = f"{base}__{op}_{kind}"
-            jcand = jvm.org.apache.hadoop.fs.Path(cand)
-            if not fs.exists(jcand):
+            if not _localfs.exists(cand):
                 continue
             if kind == "bak" and not table_ok:
                 kept.append(cand)  # possibly the only copy of the table
                 continue
             if kind == "tmp":
-                qtmp = fs.makeQualified(jcand).toString()
-                entries = []
-                files = fs.listFiles(jcand, True)
-                while files.hasNext():
-                    src = files.next().getPath()
-                    u = fs.makeQualified(src).toString()
-                    rel = u[len(qtmp):].lstrip("/")
-                    if rel in (STAGE_SIDECAR, SWAP_TOKEN):
-                        continue  # staging bookkeeping: dies with tmp
-                    entries.append((src, rel))
-                state, side = _read_stage_sidecar(fs, jvm, jcand)
+                # checksum sidecars travel with their files below;
+                # staging bookkeeping dies with tmp
+                entries = [
+                    os.path.relpath(os.path.join(d, n), cand)
+                    for d, _dirs, names in os.walk(cand) for n in names
+                    if not _localfs.is_checksum(n)]
+                entries = [r for r in entries
+                           if not r.startswith((STAGE_SIDECAR, SWAP_TOKEN))]
+                state, side = _read_stage_sidecar(cand)
                 if state == "unreadable":
                     kept.append(cand)  # unclassifiable: may hold the
                     continue           # only copy of displaced files
@@ -2190,7 +1966,7 @@ def _vacuum_table_impl(spark, path: str) -> dict:
                     # the sidecar is the exact displaced set, written
                     # before the first rename — a post-crash index
                     # refresh cannot rewrite it
-                    if entries and not fs.exists(jpath):
+                    if entries and not _localfs.exists(base):
                         kept.append(cand)  # nowhere to restore into
                         continue
 
@@ -2220,26 +1996,28 @@ def _vacuum_table_impl(spark, path: str) -> dict:
                             return False
                         return rel in _m or top.startswith(("_", "."))
                 restore_failed = False
-                for src, rel in entries:
+                for rel in entries:
                     if not _displaced(rel):
                         continue  # rewrite output, not an original
-                    dst = jvm.org.apache.hadoop.fs.Path(f"{base}/{rel}")
+                    src, dst = f"{cand}/{rel}", f"{base}/{rel}"
+                    if _localfs.exists(dst):
+                        continue  # table already has it
                     try:
-                        if fs.exists(dst):
-                            continue  # table already has it
-                        parent = dst.getParent()
-                        if parent is not None:
-                            fs.mkdirs(parent)
-                        ok = fs.rename(src, dst)
-                    except Exception:  # noqa: BLE001 — flaky FS
-                        ok = False
-                    if ok:
-                        restored.append(f"{base}/{rel}")
-                    else:
+                        os.makedirs(os.path.dirname(dst), exist_ok=True)
+                        _localfs.rename(src, dst)
+                    except OSError:
                         restore_failed = True
+                        continue
+                    restored.append(dst)
+                    head, name = os.path.split(rel)
+                    crc = os.path.join(head, _localfs.checksum_name(name))
+                    try:  # the file's checksum comes back with it
+                        _localfs.rename(f"{cand}/{crc}", f"{base}/{crc}")
+                    except OSError:  # absent: Hadoop reads it unchecked
+                        pass
                 if restore_failed:
                     kept.append(cand)  # deleting would destroy the
                     continue           # original we failed to restore
-            fs.delete(jcand, True)
+            _localfs.rmtree(cand)
             removed.append(cand)
     return {"removed": removed, "kept": kept, "restored": restored}

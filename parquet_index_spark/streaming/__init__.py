@@ -9,8 +9,12 @@ tests (stream results must equal the batch computation on the same data).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from parquet_index_spark import _localfs
 
 EVENTS_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -323,45 +327,34 @@ def write_parquet_sink(stream_df: DataFrame, path: str, checkpoint: str,
 class _ReplayMarkers:
     """Per-batch commit markers for foreachBatch sinks — the replay guard.
 
-    Two properties earlier rounds got wrong (round-4 VERDICT/ADVICE):
-
-    - **Filesystem-portable**: all IO goes through the Hadoop FileSystem
-      of the *table path* (same as ``sources._staged_swap``), so the guard
-      holds on ``hdfs://``/``s3a://`` tables, not just local disk. The
-      reference routes all metastore IO through Hadoop FS for the same
-      reason (Metastore.scala:131-179).
-    - **Scoped per logical stream**: a streaming ``batch_id`` is only
-      meaningful relative to its checkpoint (a fresh checkpoint restarts
-      ids at 0), so markers embed a digest of the checkpoint location —
-      the same identity trick as Delta's txn ``appId``/``version``. A
-      *different* stream into the same table can therefore never match a
-      stale marker and be silently skipped; replay protection is
-      per-checkpoint, and restarting the same query MUST reuse the same
-      checkpoint string for the guard to engage (it must anyway, for
-      Spark's own offset tracking).
+    Markers are empty files under ``<table>/<dirname>`` on the local
+    filesystem, where every indexed table lives. A streaming
+    ``batch_id`` is only meaningful relative to its checkpoint (a fresh
+    checkpoint restarts ids at 0), so markers embed a digest of the
+    checkpoint location — the same identity trick as Delta's txn
+    ``appId``/``version``. A *different* stream into the same table can
+    therefore never match a stale marker and be silently skipped; replay
+    protection is per-checkpoint, and restarting the same query MUST
+    reuse the same checkpoint string for the guard to engage (it must
+    anyway, for Spark's own offset tracking).
     """
 
-    def __init__(self, spark, table_path: str, dirname: str,
-                 checkpoint: str):
+    def __init__(self, table_path: str, dirname: str, checkpoint: str):
         import hashlib
-        from parquet_index_spark.sources import _fs_for
-        self._fs, _ = _fs_for(spark, table_path)
-        self._jvm = spark._jvm
         scope = hashlib.sha1(
             checkpoint.rstrip("/").encode()).hexdigest()[:12]
-        self._dir = table_path.rstrip("/") + "/" + dirname
+        self._dir = os.path.join(_localfs.local_path(table_path), dirname)
         self._prefix = f"{scope}-batch-"
 
-    def _jpath(self, batch_id: int):
-        return self._jvm.org.apache.hadoop.fs.Path(
-            self._dir + "/" + self._prefix + str(batch_id))
+    def _path(self, batch_id: int) -> str:
+        return f"{self._dir}/{self._prefix}{batch_id}"
 
     def committed(self, batch_id: int) -> bool:
-        return self._fs.exists(self._jpath(batch_id))
+        return _localfs.exists(self._path(batch_id))
 
     def commit(self, batch_id: int) -> None:
-        self._fs.mkdirs(self._jvm.org.apache.hadoop.fs.Path(self._dir))
-        self._fs.create(self._jpath(batch_id), True).close()
+        os.makedirs(self._dir, exist_ok=True)
+        _localfs.write_record(self._path(batch_id), b"")
 
 
 def write_indexed_sink(stream_df: DataFrame, path: str, checkpoint: str,
@@ -375,7 +368,7 @@ def write_indexed_sink(stream_df: DataFrame, path: str, checkpoint: str,
 
     Exactly-once shape: the streaming checkpoint replays a batch after a
     crash, so the foreachBatch hook must be idempotent. A per-batch,
-    per-checkpoint marker under ``<path>/_index_sink_commits`` (Hadoop-FS
+    per-checkpoint marker under ``<path>/_index_sink_commits`` (local
     IO, checkpoint-scoped — see :class:`_ReplayMarkers`) makes replays of
     *committed* batches no-ops; a crash inside the append itself (before
     the marker) degrades to at-least-once for that one batch — the same
@@ -402,8 +395,7 @@ def write_indexed_sink(stream_df: DataFrame, path: str, checkpoint: str,
     serializes a query's micro-batches). The per-batch replay markers
     (exactly-once skip of committed batches) are untouched."""
     from parquet_index_spark.sources import acquire_writer_lease
-    markers = _ReplayMarkers(stream_df.sparkSession, path,
-                             "_index_sink_commits", checkpoint)
+    markers = _ReplayMarkers(path, "_index_sink_commits", checkpoint)
 
     lease = acquire_writer_lease(stream_df.sparkSession, path,
                                  "write_indexed_sink (streaming query)")
@@ -467,7 +459,7 @@ def write_merge_sink(stream_df: DataFrame, path: str, checkpoint: str,
     passes through as merge_into's tier threshold.
 
     Replay contract: per-batch, per-checkpoint markers under
-    ``<path>/_merge_sink_commits`` (Hadoop-FS IO, checkpoint-scoped —
+    ``<path>/_merge_sink_commits`` (local IO, checkpoint-scoped —
     see :class:`_ReplayMarkers`) make replays of committed batches
     no-ops; a crash between the merge and its marker re-runs the merge
     on replay, which is idempotent (same keys replaced with the same
@@ -482,8 +474,7 @@ def write_merge_sink(stream_df: DataFrame, path: str, checkpoint: str,
     from parquet_index_spark.sources import (acquire_writer_lease,
                                              merge_into)
 
-    markers = _ReplayMarkers(stream_df.sparkSession, path,
-                             "_merge_sink_commits", checkpoint)
+    markers = _ReplayMarkers(path, "_merge_sink_commits", checkpoint)
     # CDC batches may carry metadata columns beyond the table's schema
     # (op/seq/source offsets); after resolution the batch is projected to
     # exactly the table's columns — a batch MISSING one still errors in

@@ -379,6 +379,21 @@ class TestGlobPathRejection:
         assert spec.table_path.endswith("plain_table")
 
 
+class TestNonLocalSchemeRejection:
+    """Indexed tables are local: the refresh lists them with ``os.walk``.
+    A table on another filesystem is refused up front, at create and at
+    load, instead of failing in the listing on a cwd-prefixed path."""
+
+    @pytest.mark.parametrize("uri", ["hdfs://nn:8020/data/table",
+                                     "s3a://bucket/data/table"])
+    def test_non_local_table_refused(self, ctx, uri):
+        for call in (lambda: LocationSpec(uri),
+                     lambda: ctx.index.create.indexBy("id").parquet(uri),
+                     lambda: ctx.index.parquet(uri)):
+            with pytest.raises(ValueError, match="local filesystem"):
+                call()
+
+
 class TestDescribeSaturation:
     def test_term_index_reports_fill_and_fpp(self, spark, ctx,
                                              tmp_table_dir):

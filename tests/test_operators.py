@@ -1495,8 +1495,7 @@ class TestMergeSink:
                  F.lit(1).cast("long").alias("seq"))
          .coalesce(1).write.parquet(cdc))
         ckpt = str(tmp_path / "ck1")
-        ST._ReplayMarkers(spark, path, "_merge_sink_commits",
-                          ckpt).commit(0)
+        ST._ReplayMarkers(path, "_merge_sink_commits", ckpt).commit(0)
         stream = spark.readStream.schema(schema).parquet(cdc)
         ST.write_merge_sink(stream, path, ckpt, ctx, "k")
         t = ctx.index.parquet(path).df

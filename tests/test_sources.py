@@ -840,7 +840,7 @@ class TestStagedSwapRollback:
     def test_partitioned_stage_failure_rolls_back(self, spark, ctx,
                                                   tmp_table_dir,
                                                   monkeypatch):
-        """Crash injection mid-stage: a poisoned FileSystem fails the
+        """Crash injection mid-stage: a poisoned rename fails the
         rename of an untouched file out of one partition dir AFTER other
         partition entries already moved into the rewrite. The rollback
         must restore the table byte-for-byte (moves undone, tmp gone)
@@ -849,7 +849,7 @@ class TestStagedSwapRollback:
         file modes.)"""
         import glob
         from pyspark.sql import functions as F
-        import parquet_index_spark.sources as SRC
+        from parquet_index_spark import _localfs
         from parquet_index_spark.sources import update_where
         path = os.path.join(tmp_table_dir, "swaprb")
         (spark.range(0, 6000)
@@ -859,30 +859,20 @@ class TestStagedSwapRollback:
         ctx.index.create.indexBy("id").parquet(path)
         before = sorted(map(tuple, spark.read.parquet(path).collect()))
 
-        class PoisonFS:
-            def __init__(self, fs):
-                self._fs = fs
+        orig = _localfs.rename
 
-            def rename(self, src, dst):
-                s = src.toUri().getPath()
-                if "/p=2/" in s and s.endswith(".parquet"):
-                    return False  # injected mid-stage failure
-                return self._fs.rename(src, dst)
+        def poisoned(src, dst):
+            if "/p=2/" in src and src.endswith(".parquet"):
+                raise OSError("injected mid-stage failure")
+            orig(src, dst)
 
-            def __getattr__(self, name):
-                return getattr(self._fs, name)
-
-        orig = SRC._fs_for
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda spark_, p: (lambda fs, jp: (PoisonFS(fs), jp))(
-                *orig(spark_, p)))
+        monkeypatch.setattr(_localfs, "rename", poisoned)
         # id range confined to a slice: p=2 keeps UNAFFECTED files whose
         # staging rename hits the poison after p=0/p=1 entries moved
         with pytest.raises(IOError, match="could not stage"):
             update_where(ctx, path, "id >= 2600 AND id < 2700",
                          {"v": F.lit(-1)})
-        monkeypatch.setattr(SRC, "_fs_for", orig)
+        monkeypatch.setattr(_localfs, "rename", orig)
         # table fully restored: same rows, partition dirs back in place,
         # no half-staged rewrite left behind
         assert sorted(os.path.basename(d) for d in
@@ -943,8 +933,7 @@ class TestFlatStage:
         """Poison one untouched file's rename mid-stage: every completed
         rename must be restored and the table left byte-identical."""
         import glob
-        from pyspark.sql import functions as F
-        import parquet_index_spark.sources as SRC
+        from parquet_index_spark import _localfs
         from parquet_index_spark.sources import merge_into
         path = self._table(spark, ctx, tmp_table_dir, "parrb")
         before = sorted(map(tuple, spark.read.parquet(path).collect()))
@@ -954,28 +943,18 @@ class TestFlatStage:
         victim = os.path.basename(
             sorted(glob.glob(os.path.join(path, "*.parquet")))[-1])
 
-        class PoisonFS:
-            def __init__(self, fs):
-                self._fs = fs
+        orig = _localfs.rename
 
-            def rename(self, src, dst):
-                if src.getName() == victim and "__merge_tmp" in \
-                        dst.toUri().getPath():
-                    return False
-                return self._fs.rename(src, dst)
+        def poisoned(src, dst):
+            if os.path.basename(src) == victim and "__merge_tmp" in dst:
+                raise OSError("injected stage failure")
+            orig(src, dst)
 
-            def __getattr__(self, name):
-                return getattr(self._fs, name)
-
-        orig = SRC._fs_for
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda spark_, p: (lambda fs, jp: (PoisonFS(fs), jp))(
-                *orig(spark_, p)))
+        monkeypatch.setattr(_localfs, "rename", poisoned)
         ups = spark.createDataFrame([(50, -1)], "k bigint, v bigint")
         with pytest.raises(IOError, match="could not stage"):
             merge_into(ctx, path, ups, "k")
-        monkeypatch.setattr(SRC, "_fs_for", orig)
+        monkeypatch.setattr(_localfs, "rename", orig)
         assert len(glob.glob(os.path.join(path, "*.parquet"))) == n_before
         assert not os.path.exists(path + "__merge_tmp")
         after = sorted(map(tuple, spark.read.parquet(path).collect()))
@@ -986,29 +965,18 @@ class TestFlatStage:
 
     @staticmethod
     def _wrap_renames(monkeypatch, on_stage):
-        """Route every FileSystem rename of the staged swap through
+        """Route every rename of the staged swap through
         ``on_stage(src, dst)`` when ``dst`` is inside the staging dir;
         ``on_stage`` returns False to fail that rename, else None."""
-        import parquet_index_spark.sources as SRC
+        from parquet_index_spark import _localfs
+        orig = _localfs.rename
 
-        class WrappedFS:
-            def __init__(self, fs):
-                self._fs = fs
+        def wrapped(src, dst):
+            if "__delete_tmp" in dst and on_stage(src, dst) is False:
+                raise OSError("injected stage failure")
+            orig(src, dst)
 
-            def rename(self, src, dst):
-                if "__delete_tmp" in dst.toUri().getPath() and \
-                        on_stage(src, dst) is False:
-                    return False
-                return self._fs.rename(src, dst)
-
-            def __getattr__(self, name):
-                return getattr(self._fs, name)
-
-        orig = SRC._fs_for
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda spark_, p: (lambda fs, jp: (WrappedFS(fs), jp))(
-                *orig(spark_, p)))
+        monkeypatch.setattr(_localfs, "rename", wrapped)
         return orig
 
     @staticmethod
@@ -1044,7 +1012,7 @@ class TestFlatStage:
 
         def on_stage(src, dst):
             threads.add(threading.get_ident())
-            names.append(src.getName())
+            names.append(os.path.basename(src))
 
         self._wrap_renames(monkeypatch, on_stage)
         delete_where(ctx, path, "k < 10")
@@ -1060,7 +1028,7 @@ class TestFlatStage:
         """The fifth staging rename fails after four completed: all four
         are renamed back, the staging dir is dropped and every file is
         where it was; a retry without the fault succeeds."""
-        import parquet_index_spark.sources as SRC
+        from parquet_index_spark import _localfs
         from parquet_index_spark.sources import delete_where
         path = self._table(spark, ctx, tmp_table_dir, "flat8rb", n_files=8)
         rows = sorted(map(tuple, spark.read.parquet(path).collect()))
@@ -1069,13 +1037,13 @@ class TestFlatStage:
         staged = []
 
         def on_stage(src, dst):
-            staged.append(src.getName())
+            staged.append(os.path.basename(src))
             return False if len(staged) == 5 else None
 
         orig = self._wrap_renames(monkeypatch, on_stage)
         with pytest.raises(IOError, match="could not stage"):
             delete_where(ctx, path, "k < 10")
-        monkeypatch.setattr(SRC, "_fs_for", orig)
+        monkeypatch.setattr(_localfs, "rename", orig)
         assert len(staged) == 5
         assert not os.path.exists(path + "__delete_tmp")
         assert sorted(os.listdir(path)) == entries
@@ -1083,6 +1051,32 @@ class TestFlatStage:
         assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows
         info = delete_where(ctx, path, "k < 10")
         assert info["rows_deleted"] == 10
+
+
+    def test_checksum_sidecars_travel_with_their_files(self, spark, ctx,
+                                                       tmp_table_dir):
+        """Spark's local writes leave a ``.<name>.crc`` beside each data
+        file and beside ``_SUCCESS``. After a DELETE and a compaction
+        every data file still has its checksum, no checksum is left
+        without its file, and Spark reads the expected rows."""
+        from parquet_index_spark.sources import compact_table, delete_where
+        path = self._table(spark, ctx, tmp_table_dir, "flat8crc", n_files=8)
+        expected = sorted((r.k, r.v) for r in
+                          spark.read.parquet(path).collect() if r.k >= 10)
+
+        def check():
+            names = set(os.listdir(path))
+            data = {n for n in names if n.endswith(".parquet")}
+            crcs = {n for n in names if n.endswith(".crc")}
+            assert data and crcs == {f".{n}.crc" for n in data
+                                     | {"_SUCCESS"} & names}
+            assert sorted((r.k, r.v) for r in
+                          spark.read.parquet(path).collect()) == expected
+
+        assert delete_where(ctx, path, "k < 10")["files_rewritten"] == 1
+        check()
+        compact_table(spark, path, target_file_mb=1)
+        check()
 
 
 class TestTableFiles:
@@ -1236,7 +1230,7 @@ class TestVacuumRestore:
         in both states it may hold the only copy."""
         import glob
         import shutil
-        import parquet_index_spark.sources as SRC
+        from parquet_index_spark import _localfs
         from parquet_index_spark.sources import vacuum_table
         # 1. unreadable manifest: a table dir that vanished mid-swap
         gone = os.path.join(tmp_table_dir, "vr3")
@@ -1256,23 +1250,14 @@ class TestVacuumRestore:
         os.makedirs(tmp)
         shutil.move(files[0], os.path.join(tmp, victim))
 
-        class PoisonFS:
-            def __init__(self, fs):
-                self._fs = fs
+        orig = _localfs.rename
 
-            def rename(self, src, dst):
-                if src.getName() == victim:
-                    return False
-                return self._fs.rename(src, dst)
+        def poisoned(src, dst):
+            if os.path.basename(src) == victim:
+                raise OSError("injected restore failure")
+            orig(src, dst)
 
-            def __getattr__(self, name):
-                return getattr(self._fs, name)
-
-        orig = SRC._fs_for
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda spark_, p: (lambda fs, jp: (PoisonFS(fs), jp))(
-                *orig(spark_, p)))
+        monkeypatch.setattr(_localfs, "rename", poisoned)
         info2 = vacuum_table(spark, path)
         monkeypatch.undo()
         assert tmp in info2["kept"] and info2["restored"] == []
@@ -1289,48 +1274,31 @@ class TestVacuumRestore:
         independent (the old by-position form assumed listStatus
         returned name order — OS-dependent, flaky). Returns the name of
         the displaced original left inside tmp."""
-        import parquet_index_spark.sources as SRC
+        from parquet_index_spark import _localfs
         from parquet_index_spark.sources import merge_into
 
-        class PoisonFS:
-            def __init__(self, fs):
-                self._fs = fs
-                self.staged = []
+        orig = _localfs.rename
+        staged = []
 
-            def rename(self, src, dst):
-                d = dst.toUri().getPath()
-                s = src.toUri().getPath()
-                if "__merge_tmp" in d and \
-                        src.getName().endswith(".parquet") and \
-                        "__merge_tmp" not in s:
-                    if self.staged:
-                        return False    # 2nd data-file stage -> rollback
-                    if self._fs.rename(src, dst):
-                        self.staged.append(src.getName())
-                        return True
-                    return False
-                if "__merge_tmp" in s and src.getName() in self.staged:
-                    return False        # rollback of the 1st one fails
-                return self._fs.rename(src, dst)
+        def poisoned(src, dst):
+            name = os.path.basename(src)
+            if "__merge_tmp" in dst and name.endswith(".parquet") and \
+                    "__merge_tmp" not in src:
+                if staged:
+                    raise OSError("2nd data-file stage -> rollback")
+                orig(src, dst)
+                staged.append(name)
+                return
+            if "__merge_tmp" in src and name in staged:
+                raise OSError("rollback of the 1st one fails")
+            orig(src, dst)
 
-            def __getattr__(self, name):
-                return getattr(self._fs, name)
-
-        orig = SRC._fs_for
-        poisons = []
-
-        def poisoned(spark_, p):
-            fs, jp = orig(spark_, p)
-            pf = PoisonFS(fs)
-            poisons.append(pf)
-            return pf, jp
-
-        monkeypatch.setattr(SRC, "_fs_for", poisoned)
+        monkeypatch.setattr(_localfs, "rename", poisoned)
         ups = spark.createDataFrame([(50, -1)], "k bigint, v bigint")
         with pytest.raises(IOError, match="vacuum_table"):
             merge_into(ctx, path, ups, "k")
-        monkeypatch.setattr(SRC, "_fs_for", orig)
-        return next(pf.staged[0] for pf in poisons if pf.staged)
+        monkeypatch.setattr(_localfs, "rename", orig)
+        return staged[0]
 
     # fast lane (round-14, r13 ADVICE #3): no automatic full-sweep
     # runner exists here, so the ROLLBACK-FAILS failure mode keeps its
@@ -2377,6 +2345,51 @@ class TestWriterLease:
             # all refused: the stranded record self-expires via TTL
             os.remove(lock)
 
+    def test_stale_lock_race_rounds_at_most_one_winner(self, spark,
+                                                       tmp_table_dir):
+        """The lock create is exclusive: 50 rounds of 8 threads racing
+        one stale lock, with a short thread switch interval, never admit
+        two holders in a round. Each round's winner holds the lease
+        until every racer has finished."""
+        import sys
+        import threading
+
+        import parquet_index_spark.sources as SRC
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for r in range(50):
+                path = os.path.join(tmp_table_dir, f"lease_round{r}")
+                os.makedirs(path)
+                self._foreign_lock(path, age_sec=700)  # stale
+                winners, errors = [], []
+                gate = threading.Barrier(8)
+
+                def racer():
+                    try:
+                        gate.wait(timeout=30)
+                        winners.append(SRC.acquire_writer_lease(
+                            spark, path, "round"))
+                    except IOError as e:
+                        errors.append(e)
+
+                threads = [threading.Thread(target=racer)
+                           for _ in range(8)]
+                for t in threads:
+                    t.start()
+                for t in threads:
+                    t.join(timeout=60)
+                assert not any(t.is_alive() for t in threads)
+                assert len(winners) + len(errors) == 8
+                assert len(winners) <= 1, f"round {r}: two winners"
+                for lease in winners:
+                    lease.release()
+                lock = path + "__pis_writer_lock"
+                if os.path.exists(lock):
+                    os.remove(lock)
+        finally:
+            sys.setswitchinterval(switch)
+
     def test_two_real_sessions_race_second_writer_refused(
             self, spark, ctx, tmp_table_dir):
         """The r11 verdict's literal done-criterion: TWO real driver
@@ -2470,8 +2483,8 @@ class TestWriterLease:
         os.makedirs(path)
         real = SRC._read_lock_owner
 
-        def foreign(fs, jlock):
-            out = real(fs, jlock)
+        def foreign(lock):
+            out = real(lock)
             if out is not None:
                 out = dict(out, token="someone-else")
             return out
@@ -2490,38 +2503,18 @@ class TestWriterLease:
     def test_partial_lock_write_cleans_up_own_lock(self, spark, ctx,
                                                    tmp_table_dir,
                                                    monkeypatch):
-        """Round-12 review: create succeeded but the owner-record write
-        failed — the writer must delete its OWN fresh lock (else it
-        blocks every writer, itself included, for a TTL with no owner
-        to read) and surface an IOError, not ConcurrentWriterError."""
+        """Round-12 review: the owner-record write failed — no lock of
+        this writer's may be left behind (it would block every writer,
+        itself included, for a TTL with no owner to read), and the
+        error is an IOError, not ConcurrentWriterError."""
         import parquet_index_spark.sources as SRC
         path = os.path.join(tmp_table_dir, "lease_pw")
         os.makedirs(path)
-        real = SRC._fs_for
 
-        class BrokenWriteFS:
-            def __init__(self, fs):
-                self._fs = fs
+        def disk_full(_fd):
+            raise OSError(28, "No space left on device")
 
-            def create(self, p, overwrite):
-                out = self._fs.create(p, overwrite)
-
-                class BrokenStream:
-                    def write(self, _data):
-                        raise RuntimeError("disk full")
-
-                    def close(self):
-                        out.close()
-
-                return BrokenStream()
-
-            def __getattr__(self, a):
-                return getattr(self._fs, a)
-
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda s, p: (lambda fs, jp: (BrokenWriteFS(fs), jp))(
-                *real(s, p)))
+        monkeypatch.setattr(os, "fsync", disk_full)
         with pytest.raises(IOError, match="could not write the owner"):
             SRC.acquire_writer_lease(spark, path, "pw_op")
         monkeypatch.undo()
@@ -2529,325 +2522,6 @@ class TestWriterLease:
         # and the surface recovers: a normal op acquires cleanly
         from parquet_index_spark.sources import vacuum_table
         assert vacuum_table(spark, path)["kept"] == []
-
-    @staticmethod
-    def _inert_settimes_fs(SRC, monkeypatch):
-        """Patch _fs_for so FileSystem.setTimes silently no-ops —
-        the S3A behavior (Hadoop S3AFileSystem.setTimes is empty)."""
-        real = SRC._fs_for
-
-        class InertSetTimesFS:
-            def __init__(self, fs):
-                self._fs = fs
-
-            def setTimes(self, p, mtime, atime):
-                return None  # silent no-op, exactly like S3A
-
-            def __getattr__(self, a):
-                return getattr(self._fs, a)
-
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda s, p: (lambda fs, jp: (InertSetTimesFS(fs), jp))(
-                *real(s, p)))
-
-    def test_inert_settimes_heartbeat_falls_back_to_rewrite(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """Round-13 (r12 verdict #2): on a filesystem whose setTimes is
-        a silent no-op (S3A), the FIRST beat detects the inert refresh
-        (stat-before/after), warns naming the scheme, and every beat —
-        including that first one — still advances the lock mtime by
-        rewriting the owner payload in place. Token and payload are
-        unchanged, so release's read-back verify still passes."""
-        import json
-        import time
-        import warnings as W
-
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, "lease_inert")
-        os.makedirs(path)
-        self._inert_settimes_fs(SRC, monkeypatch)
-        lock = path + "__pis_writer_lock"
-        lease = SRC.acquire_writer_lease(spark, path, "s3a_sim_op")
-        try:
-            m0 = os.path.getmtime(lock)
-            time.sleep(0.05)  # local-FS mtime granularity headroom
-            with W.catch_warnings(record=True) as rec:
-                W.simplefilter("always")
-                lease._beat()  # first beat: probe + fallback rewrite
-            assert lease.mtime_refresh_ok is False
-            assert any("setTimes did not advance" in str(w.message)
-                       for w in rec), [str(w.message) for w in rec]
-            m1 = os.path.getmtime(lock)
-            assert m1 > m0  # the rewrite carried a fresh mtime
-            with open(lock) as fh:  # payload survives the rewrite
-                assert json.loads(fh.read())["token"] == lease.token
-            time.sleep(0.05)
-            with W.catch_warnings(record=True) as rec2:
-                W.simplefilter("always")
-                lease._beat()  # later beats: rewrite, no re-warn
-            assert os.path.getmtime(lock) > m1
-            assert not any("setTimes" in str(w.message) for w in rec2)
-        finally:
-            lease.release()
-        assert not os.path.exists(lock)
-
-    def test_raising_settimes_heartbeat_falls_back_same_beat(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """Round-14 (r13 ADVICE #1): some object-store connectors
-        RAISE from setTimes (UnsupportedOperationException) instead of
-        silently no-opping. The probe must treat any exception as the
-        inert verdict — warn once naming the scheme and rewrite the
-        payload IN THE SAME BEAT — not let it escape to the blanket
-        swallow where mtime_refresh_ok stays unprobed forever and a
-        live writer's lock still goes stale at the TTL."""
-        import json
-        import time
-        import warnings as W
-
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, "lease_raise")
-        os.makedirs(path)
-        real = SRC._fs_for
-
-        class RaisingSetTimesFS:
-            def __init__(self, fs):
-                self._fs = fs
-
-            def setTimes(self, p, mtime, atime):
-                raise RuntimeError(
-                    "UnsupportedOperationException: setTimes")
-
-            def __getattr__(self, a):
-                return getattr(self._fs, a)
-
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda s, p: (lambda fs, jp: (RaisingSetTimesFS(fs), jp))(
-                *real(s, p)))
-        lock = path + "__pis_writer_lock"
-        lease = SRC.acquire_writer_lease(spark, path, "raising_op")
-        try:
-            m0 = os.path.getmtime(lock)
-            time.sleep(0.05)
-            with W.catch_warnings(record=True) as rec:
-                W.simplefilter("always")
-                lease._beat()  # probe raises -> fallback, same beat
-            assert lease.mtime_refresh_ok is False
-            assert any("FileSystem.setTimes raised" in str(w.message)
-                       for w in rec), [str(w.message) for w in rec]
-            assert os.path.getmtime(lock) > m0  # rewrite landed NOW
-            with open(lock) as fh:
-                assert json.loads(fh.read())["token"] == lease.token
-            time.sleep(0.05)
-            with W.catch_warnings(record=True) as rec2:
-                W.simplefilter("always")
-                lease._beat()  # later beats: rewrite, no re-warn, no
-                m1 = os.path.getmtime(lock)  # re-probe of setTimes
-            assert not any("setTimes" in str(w.message) for w in rec2)
-            assert m1 > m0
-        finally:
-            lease.release()
-        assert not os.path.exists(lock)
-
-    def test_rewrite_beat_cannot_resurrect_released_lock(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """Round-14 (r13 ADVICE #2): an already-scheduled beat racing
-        release() in rewrite-fallback mode must NOT recreate the lock
-        after release popped the registry and deleted the file — a
-        resurrected dead-token lock would refuse every writer (this
-        process included) for a full TTL. The beat's rewrite re-checks
-        registration under the registry lock, so a beat that runs
-        entirely AFTER release is a no-op."""
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, "lease_resurrect")
-        os.makedirs(path)
-        self._inert_settimes_fs(SRC, monkeypatch)
-        lock = path + "__pis_writer_lock"
-        lease = SRC.acquire_writer_lease(spark, path, "resurrect_op")
-        lease._beat()  # probe: flips to rewrite-fallback mode
-        assert lease.mtime_refresh_ok is False
-        lease.release()
-        assert not os.path.exists(lock)
-        lease._beat()  # the stale scheduled beat lands after release
-        assert not os.path.exists(lock), \
-            "a post-release beat resurrected the released lock"
-        # and the surface is immediately reusable by the next writer
-        nxt = SRC.acquire_writer_lease(spark, path, "next_op")
-        nxt.release()
-
-    def test_rewrite_beat_never_stomps_takeover_winner(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """A stalled holder in rewrite-fallback mode that resumes
-        beating AFTER a legal TTL takeover must not create(overwrite)
-        the WINNER's lock — that would put two live writers under one
-        path. The beat reads the owner back and skips on a foreign
-        token."""
-        import json
-
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, "lease_stomp")
-        os.makedirs(path)
-        self._inert_settimes_fs(SRC, monkeypatch)
-        lock = path + "__pis_writer_lock"
-        lease = SRC.acquire_writer_lease(spark, path, "stalled_op")
-        lease._beat()
-        assert lease.mtime_refresh_ok is False
-        # simulate the takeover: the winner replaced the lock file
-        winner = {"owner": "otherhost:pid999", "op": "takeover_op",
-                  "token": "winner-token", "acquired_utc": "x"}
-        with open(lock, "w") as fh:
-            fh.write(json.dumps(winner))
-        # drop the ChecksumFileSystem sidecar so the Java read sees the
-        # foreign token instead of a checksum error (= unreadable {})
-        crc = os.path.join(os.path.dirname(lock),
-                           "." + os.path.basename(lock) + ".crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        lease._beat()  # stalled holder resumes
-        with open(lock) as fh:
-            assert json.loads(fh.read())["token"] == "winner-token", \
-                "the stalled holder's beat stomped the winner's lock"
-        # release() sees the foreign token, warns, leaves it in place
-        import warnings as W
-        with W.catch_warnings(record=True) as rec:
-            W.simplefilter("always")
-            lease.release()
-        assert any("taken over" in str(w.message) for w in rec)
-        assert os.path.exists(lock)
-        os.remove(lock)  # cleanup for the tmp dir
-
-    def test_rewrite_beat_fs_io_runs_outside_global_registry_lock(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """Round-15 ADVICE #1: the rewrite-fallback beat must NOT hold
-        the process-global _WRITER_LEASES_LOCK across the remote-FS
-        read-back + payload rewrite — on a high-latency object store
-        one beat was blocking every acquire/release/reenter in the
-        process. The registry check nests the global lock briefly; the
-        FS IO runs under the lease's own _beat_lock only. Pinned by a
-        probe inside FileSystem.create: the global lock is acquirable
-        while the rewrite's create runs, and the per-lease _beat_lock
-        is held."""
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, "lease_lockscope")
-        os.makedirs(path)
-        real = SRC._fs_for
-        state = {"armed": False, "lease": None}
-        probes = []
-
-        class ProbingFS:
-            def __init__(self, fs):
-                self._fs = fs
-
-            def setTimes(self, p, mtime, atime):
-                return None  # inert, like S3A
-
-            def create(self, p, overwrite=True):
-                if state["armed"]:
-                    got = SRC._WRITER_LEASES_LOCK.acquire(timeout=1.0)
-                    if got:
-                        SRC._WRITER_LEASES_LOCK.release()
-                    probes.append(
-                        (got, state["lease"]._beat_lock.locked()))
-                return self._fs.create(p, overwrite)
-
-            def __getattr__(self, a):
-                return getattr(self._fs, a)
-
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda s, p: (lambda fs, jp: (ProbingFS(fs), jp))(
-                *real(s, p)))
-        lease = SRC.acquire_writer_lease(spark, path, "lockscope_op")
-        try:
-            state["lease"] = lease
-            state["armed"] = True
-            import warnings as W
-            with W.catch_warnings():
-                W.simplefilter("ignore")
-                lease._beat()  # probe flips + rewrite in the same beat
-            assert lease.mtime_refresh_ok is False
-            assert probes, "the rewrite never reached create()"
-            assert all(g for g, _ in probes), \
-                "the beat held _WRITER_LEASES_LOCK across FS create"
-            assert all(b for _, b in probes), \
-                "the rewrite ran outside the lease's _beat_lock"
-        finally:
-            state["armed"] = False
-            lease.release()
-        assert not os.path.exists(path + "__pis_writer_lock")
-
-    def test_inert_settimes_live_lock_never_goes_stale(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """The r12 verdict's done-criterion: with setTimes inert, the
-        heartbeat THREAD still keeps a live lock fresh past the TTL —
-        writer_lock_status never reports stale, so no second live
-        writer would take over."""
-        import time
-
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, "lease_inert_live")
-        os.makedirs(path)
-        self._inert_settimes_fs(SRC, monkeypatch)
-        prev = spark.conf.get("spark.sql.index.writer.lock.ttlSeconds",
-                              None)
-        spark.conf.set("spark.sql.index.writer.lock.ttlSeconds", "2")
-        try:
-            lease = SRC.acquire_writer_lease(spark, path, "long_s3a_op")
-            try:
-                deadline = time.time() + 3.0  # hold well past the TTL
-                while time.time() < deadline:
-                    st = SRC.writer_lock_status(spark, path)
-                    assert st["held"] and not st["stale"], st
-                    time.sleep(0.3)
-            finally:
-                lease.release()
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.index.writer.lock.ttlSeconds")
-            else:
-                spark.conf.set(
-                    "spark.sql.index.writer.lock.ttlSeconds", prev)
-
-    def test_takeover_hammer_on_inert_settimes_fs(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """The 8-thread stale-lock hammer re-run against the inert-
-        setTimes FS (r12 verdict #2 done-criterion): the takeover
-        discipline never depended on setTimes, so at most one winner
-        holds the lease and its release cleans up."""
-        import json
-        import threading
-
-        import parquet_index_spark.sources as SRC
-        path = os.path.join(tmp_table_dir, "lease_hammer_inert")
-        os.makedirs(path)
-        self._inert_settimes_fs(SRC, monkeypatch)
-        lock = self._foreign_lock(path, age_sec=700)  # stale
-        winners, errors = [], []
-        gate = threading.Barrier(8)
-
-        def racer():
-            try:
-                gate.wait(timeout=30)
-                lease = SRC.acquire_writer_lease(spark, path, "hammer")
-                winners.append(lease)
-            except IOError as e:  # ConcurrentWriterError subclasses it
-                errors.append(e)
-
-        threads = [threading.Thread(target=racer) for _ in range(8)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=120)
-        assert len(winners) <= 1, "two writers both hold the lease"
-        assert len(winners) + len(errors) == 8
-        if winners:
-            with open(lock) as fh:
-                assert json.loads(fh.read())["token"] == winners[0].token
-            winners[0].release()
-            assert not os.path.exists(lock)
-        else:
-            os.remove(lock)
 
     def test_takeover_keeps_a_racers_fresh_lock(
             self, spark, tmp_table_dir, monkeypatch):
@@ -2863,7 +2537,6 @@ class TestWriterLease:
         path = os.path.join(tmp_table_dir, "lease_interleave")
         os.makedirs(path)
         lock = self._foreign_lock(path, age_sec=700)  # stale
-        real = SRC._fs_for
         armed, held = [True], []
 
         def second_racer():
@@ -2872,12 +2545,14 @@ class TestWriterLease:
             except IOError:
                 pass
 
+        from parquet_index_spark import _localfs
+
         class RacedFS:
             """Runs the second racer just before this racer first
             removes or moves the lock."""
 
-            def __init__(self, fs):
-                self._fs = fs
+            def __init__(self):
+                self._remove, self._rename = _localfs.remove, _localfs.rename
 
             def _race(self):
                 if armed:
@@ -2887,20 +2562,17 @@ class TestWriterLease:
                     t.join(timeout=60)
                     assert not t.is_alive()
 
-            def delete(self, p, recursive):
+            def remove(self, p):
                 self._race()
-                return self._fs.delete(p, recursive)
+                return self._remove(p)
 
             def rename(self, src, dst):
                 self._race()
-                return self._fs.rename(src, dst)
+                return self._rename(src, dst)
 
-            def __getattr__(self, a):
-                return getattr(self._fs, a)
-
-        monkeypatch.setattr(
-            SRC, "_fs_for",
-            lambda s, p: (lambda fs, jp: (RacedFS(fs), jp))(*real(s, p)))
+        raced = RacedFS()
+        monkeypatch.setattr(_localfs, "remove", raced.remove)
+        monkeypatch.setattr(_localfs, "rename", raced.rename)
         try:
             held.append(SRC.acquire_writer_lease(spark, path, "first"))
         except SRC.ConcurrentWriterError:
@@ -2929,11 +2601,11 @@ class TestWriterLease:
         real = SRC._read_lock_owner
         calls = {"n": 0}
 
-        def flaky_then_ok(fs, jlock):
+        def flaky_then_ok(lock):
             calls["n"] += 1
             if calls["n"] == 1:
                 return {}  # one transient read error
-            return real(fs, jlock)
+            return real(lock)
 
         monkeypatch.setattr(SRC, "_read_lock_owner", flaky_then_ok)
         lease = SRC.acquire_writer_lease(spark, path, "flaky_op")
@@ -2945,8 +2617,7 @@ class TestWriterLease:
         # PLACE to TTL-expire (inside a takeover race the unreadable
         # file can be a racer's mid-write lock — deleting it could
         # evict that racer; mirrors the release()-path discipline)
-        monkeypatch.setattr(SRC, "_read_lock_owner",
-                            lambda fs, jlock: {})
+        monkeypatch.setattr(SRC, "_read_lock_owner", lambda lock: {})
         with pytest.raises(IOError,
                            match="could not read the owner record back"):
             SRC.acquire_writer_lease(spark, path, "dead_read_op")
@@ -3067,8 +2738,8 @@ class TestSwapFencing:
         real_sidecar = SRC._write_stage_sidecar
         fired = {"n": 0}
 
-        def hijack(fs, jvm, jtmp, rels):
-            real_sidecar(fs, jvm, jtmp, rels)
+        def hijack(tmp, rels):
+            real_sidecar(tmp, rels)
             if fired["n"] == 0:  # first swap only
                 fired["n"] += 1
                 self._takeover(lock)
@@ -3100,9 +2771,9 @@ class TestSwapFencing:
         seen = {}
         real_token = SRC._write_swap_token
 
-        def spy(fs, jvm, jtmp, token):
+        def spy(tmp, token):
             seen["token"] = token
-            real_token(fs, jvm, jtmp, token)
+            real_token(tmp, token)
 
         monkeypatch.setattr(SRC, "_write_swap_token", spy)
         info = SRC.delete_where(ctx, path, "id >= 10000 AND id < 20000")
@@ -3122,70 +2793,14 @@ class TestSwapFencing:
         path = self._table(spark, ctx, tmp_table_dir, "fence_who")
         tmp = path + "__delete_tmp"
         os.makedirs(tmp)
-        fs, _ = SRC._fs_for(spark, tmp)
-        jvm = spark._jvm
-        jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        SRC._write_stage_sidecar(fs, jvm, jtmp, ["somefile.parquet"])
-        SRC._write_swap_token(fs, jvm, jtmp, "host:pid7:app-1:cafe01")
+        SRC._write_stage_sidecar(tmp, ["somefile.parquet"])
+        SRC._write_swap_token(tmp, "host:pid7:app-1:cafe01")
         with pytest.raises(IOError, match="staged by lease "
                                           "host:pid7:app-1:cafe01"):
             SRC.delete_where(ctx, path, "id < 100")
         # cleanup so the class's tmp dir teardown stays quiet
         import shutil
         shutil.rmtree(tmp)
-        assert not os.path.exists(path + "__pis_writer_lock")
-
-    def test_fence_read_excludes_same_process_beat_window(
-            self, spark, ctx, tmp_table_dir, monkeypatch):
-        """Round-15 ADVICE #2: the fence's lock read-back synchronizes
-        on the lease's _beat_lock, so our OWN heartbeat's
-        create(overwrite) rewrite — which briefly exposes a truncated
-        lock on HDFS/local FS — can never make the fence observe an
-        unreadable lock twice and roll back a valid completed swap.
-        Simulated by a thread that holds _beat_lock with a forced
-        unreadable-({}) window active ~98% of the time: the fence
-        waits out the window (it acquires _beat_lock, under which the
-        flag is always clear) and the swap commits."""
-        import threading
-        import time
-
-        import parquet_index_spark.sources as SRC
-        path = self._table(spark, ctx, tmp_table_dir, "fence_beatwin")
-        lock_uri_tail = "fence_beatwin__pis_writer_lock"
-        real_read = SRC._read_lock_owner
-        flag = {"on": False}
-        stop = {"now": False}
-
-        def patched_read(fs, jlock):
-            if flag["on"] and str(jlock).endswith(lock_uri_tail):
-                return {}  # mid-rewrite truncated window
-            return real_read(fs, jlock)
-
-        monkeypatch.setattr(SRC, "_read_lock_owner", patched_read)
-        # the table's lease, acquired up front so delete_where reenters
-        # it (same thread) and the fence resolves THIS lease's token
-        lease = SRC.acquire_writer_lease(spark, path, "beatwin_dml")
-
-        def toggler():
-            while not stop["now"]:
-                with lease._beat_lock:
-                    flag["on"] = True
-                    time.sleep(0.05)
-                    flag["on"] = False
-                time.sleep(0.001)
-
-        t = threading.Thread(target=toggler, daemon=True)
-        t.start()
-        try:
-            info = SRC.delete_where(ctx, path,
-                                    "id >= 10000 AND id < 20000")
-            assert info["rows_deleted"] == 10_000, info
-        finally:
-            stop["now"] = True
-            t.join(timeout=2)
-            lease.release()
-        for leftover in ("__delete_tmp", "__delete_bak"):
-            assert not os.path.exists(path + leftover), leftover
         assert not os.path.exists(path + "__pis_writer_lock")
 
     def test_readme_runbook_documents_live_surface(self):
@@ -3221,11 +2836,8 @@ class TestSwapFencing:
         tmp = path + "__delete_tmp"
         os.makedirs(tmp)
         # a stranded staging dir: sidecar + token, no displaced files
-        fs, _ = SRC._fs_for(spark, tmp)
-        jvm = spark._jvm
-        jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        SRC._write_stage_sidecar(fs, jvm, jtmp, [])
-        SRC._write_swap_token(fs, jvm, jtmp, "stranded-token")
+        SRC._write_stage_sidecar(tmp, [])
+        SRC._write_swap_token(tmp, "stranded-token")
         res = SRC.vacuum_table(spark, path)
         assert tmp in res["removed"], res
         assert not os.path.exists(os.path.join(path, SRC.SWAP_TOKEN))

@@ -212,3 +212,56 @@ class TestWritePathJobBudget:
                 for name, calls in counted.items()}
         assert jobs == {name: [n] for name, n in self.BUDGET.items()}
         assert spark.read.parquet(path).count() == 4000 + 100 - 100 + 10
+
+
+class TestWritePathPy4jCensus:
+    """The writer lease, crash recovery, the stranded-tmp guard and the
+    staged swap work on the local filesystem directly: the py4j round
+    trips they make during a one-file DELETE do not grow with the number
+    of untouched files the swap carries."""
+
+    STEPS = ("acquire_writer_lease", "_refuse_stranded_tmp",
+             "_recover_staged_swap", "_staged_swap")
+
+    def _round_trips(self, spark, ctx, tmp_table_dir, monkeypatch, n_files):
+        import threading
+
+        from py4j.clientserver import ClientServerConnection
+
+        path = os.path.join(tmp_table_dir, f"census{n_files}")
+        (spark.range(0, 100 * n_files)
+         .select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+         .repartitionByRange(n_files, "k").write.parquet(path))
+        ctx.index.create.indexBy("k").parquet(path)
+        local, count = threading.local(), [0]
+        real_send = ClientServerConnection.send_command
+
+        def send(conn, command):
+            if getattr(local, "depth", 0):
+                count[0] += 1
+            return real_send(conn, command)
+
+        def counted(fn):
+            def inner(*a, **kw):
+                local.depth = getattr(local, "depth", 0) + 1
+                try:
+                    return fn(*a, **kw)
+                finally:
+                    local.depth -= 1
+            return inner
+
+        with monkeypatch.context() as m:
+            m.setattr(ClientServerConnection, "send_command", send)
+            for name in self.STEPS:
+                m.setattr(sources, name, counted(getattr(sources, name)))
+            m.setattr(sources._WriterLease, "release",
+                      counted(sources._WriterLease.release))
+            info = sources.delete_where(ctx, path, "k >= 10 AND k < 20")
+        assert (info["rows_deleted"], info["files_rewritten"]) == (10, 1)
+        return count[0]
+
+    def test_round_trips_do_not_grow_with_carried_files(
+            self, spark, ctx, tmp_table_dir, monkeypatch):
+        small = self._round_trips(spark, ctx, tmp_table_dir, monkeypatch, 8)
+        large = self._round_trips(spark, ctx, tmp_table_dir, monkeypatch, 32)
+        assert small == large, (small, large)

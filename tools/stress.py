@@ -56,246 +56,48 @@ def _replicate(df, key_col: str, copies: int, n_files: int, path: str):
         .write.mode("overwrite").parquet(path))
 
 
-_LEASE_SUB_CODE = '''
-import json, os, sys, time
-path, flagdir, delay_s, hold_s, n_races = (
-    sys.argv[1], sys.argv[2], float(sys.argv[3]), float(sys.argv[4]),
-    int(sys.argv[5]))
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[2]")
-         .appName("pis-lease-stress-holder")
-         .config("spark.ui.enabled", "false").getOrCreate())
-import parquet_index_spark.sources as SRC
+def _lease_race(spark, SRC, threads: int = 8, rounds: int = 200) -> dict:
+    """Stale-lock takeover race: per round, ``threads`` threads released
+    by one barrier race to acquire the writer lease of a table whose
+    lock is stale. A round's winner holds the lease until every racer
+    has finished. Reports the rounds with more than one winner (must be
+    0) and how many rounds had 0 or 1 winners."""
+    import threading
 
-class DelayFS:
-    DELAYED = ("create", "delete", "getFileStatus", "exists", "open",
-               "setTimes", "rename")
-    def __init__(self, fs, delay):
-        self._fs, self._delay = fs, delay
-    def __getattr__(self, name):
-        attr = getattr(self._fs, name)
-        if name in self.DELAYED and callable(attr):
-            def slow(*a, **kw):
-                time.sleep(self._delay)
-                return attr(*a, **kw)
-            return slow
-        return attr
+    winners_per_round = []
+    for r in range(rounds):
+        path = os.path.join(ROOT, "lease_race", f"r{r}")
+        os.makedirs(path)
+        lock = path + SRC.WRITER_LOCK_SUFFIX
+        with open(lock, "w") as fh:
+            fh.write(json.dumps({"owner": "crashed:pid0",
+                                 "op": "merge_into", "token": "stale"}))
+        old = time.time() - 700
+        os.utime(lock, (old, old))
+        gate = threading.Barrier(threads)
+        won = []
 
-orig = SRC._fs_for
-SRC._fs_for = lambda s, p: (lambda fs, jp: (DelayFS(fs, delay_s), jp))(
-    *orig(s, p))
-# phase A: hold the lease while the parent hammers refusals
-lease = SRC.acquire_writer_lease(spark, path, "stress_holder")
-with open(os.path.join(flagdir, "held.json"), "w") as fh:
-    fh.write(json.dumps({"token": lease.token, "t0": time.time()}))
-time.sleep(hold_s)
-lease.release()
-with open(os.path.join(flagdir, "released.json"), "w") as fh:
-    fh.write(json.dumps({"t1": time.time()}))
-# phase B: stale-lock takeover races from a flag-file starting gate
-for i in range(n_races):
-    go = os.path.join(flagdir, "race%d_go" % i)
-    while not os.path.exists(go):
-        time.sleep(0.003)
-    racepath = open(go).read().strip()
-    try:
-        lr = SRC.acquire_writer_lease(spark, racepath, "race%d_sub" % i)
-        out = {"win": True, "token": lr.token}
-        lr.release()
-    except IOError as e:  # ConcurrentWriterError subclasses IOError
-        out = {"win": False, "err": type(e).__name__}
-    with open(os.path.join(flagdir, "race%d_sub.json" % i), "w") as fh:
-        fh.write(json.dumps(out))
-spark.stop()
-'''
+        def racer():
+            gate.wait(timeout=60)
+            try:
+                won.append(SRC.acquire_writer_lease(spark, path, "race"))
+            except IOError:  # ConcurrentWriterError subclasses IOError
+                pass
 
-
-def _lease_stress(spark, SRC, regimes=(("rpc1ms", 0.001),
-                                       ("rpc5ms", 0.005)),
-                  hold_s=6.0, n_attempts=10, n_races=4):
-    """Two-process single-writer-lease stress (round-13): per latency
-    regime, a subprocess driver holds the lease for ``hold_s`` while
-    this process measures acquire-refusal latency and counts
-    double-acquires (must be 0), then both processes race ``n_races``
-    stale-lock takeovers (winners per race must be <= 1)."""
-    import json as _json
-    import statistics
-    import subprocess
-    import tempfile
-    import time as _time
-
-    class _LeaseDelayFS:
-        _DELAYED = ("create", "delete", "getFileStatus", "exists",
-                    "open", "setTimes", "rename")
-
-        def __init__(self, fs, delay):
-            self._fs, self._delay = fs, delay
-
-        def __getattr__(self, name):
-            attr = getattr(self._fs, name)
-            if name in self._DELAYED and callable(attr):
-                def slow(*a, **kw):
-                    _time.sleep(self._delay)
-                    return attr(*a, **kw)
-                return slow
-            return attr
-
-    out = {"hold_s": hold_s, "attempts_per_regime": n_attempts,
-           "races_per_regime": n_races}
-    env = dict(os.environ, PYTHONPATH=os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
-    for regime, delay in regimes:
-        flagdir = tempfile.mkdtemp(prefix=f"pis_lease_{regime}_")
-        path = os.path.join(ROOT, f"lease_{regime}")
-        os.makedirs(path, exist_ok=True)
-        proc = subprocess.Popen(
-            [sys.executable, "-c", _LEASE_SUB_CODE, path, flagdir,
-             str(delay), str(hold_s), str(n_races)], env=env,
-            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
-        r = {"double_acquires": 0, "refusals": 0}
-        orig = SRC._fs_for
-        SRC._fs_for = lambda s, p: (lambda fs, jp:
-                                    (_LeaseDelayFS(fs, delay), jp))(
-            *orig(s, p))
-        try:
-            held = os.path.join(flagdir, "held.json")
-            deadline = _time.time() + 120
-            while not os.path.exists(held) and _time.time() < deadline \
-                    and proc.poll() is None:
-                _time.sleep(0.05)
-            assert os.path.exists(held), f"{regime}: holder never acquired"
-            sub_token = _json.loads(open(held).read())["token"]
-            # on-disk record is the holder's during the hold
-            with open(path + "__pis_writer_lock") as fh:
-                assert _json.loads(fh.read())["token"] == sub_token
-            lat = []
-            for _ in range(n_attempts):
-                t0 = _time.time()
-                try:
-                    lease = SRC.acquire_writer_lease(
-                        spark, path, "stress_rival")
-                    r["double_acquires"] += 1  # must never happen
-                    lease.release()
-                except IOError:
-                    r["refusals"] += 1
-                lat.append((_time.time() - t0) * 1000.0)
-            r["refusal_latency_ms"] = {
-                "p50": round(statistics.median(lat), 1),
-                "max": round(max(lat), 1)}
-            # after release: a normal acquire succeeds (no residue)
-            released = os.path.join(flagdir, "released.json")
-            while not os.path.exists(released) \
-                    and _time.time() < deadline:
-                _time.sleep(0.05)
-            t0 = _time.time()
-            lease = SRC.acquire_writer_lease(spark, path, "post_release")
-            r["post_release_acquire_ms"] = round(
-                (_time.time() - t0) * 1000.0, 1)
+        ts = [threading.Thread(target=racer) for _ in range(threads)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+        winners_per_round.append(len(won))
+        for lease in won:
             lease.release()
-            # phase B: two-process stale-takeover races
-            race_winners = []
-            for i in range(n_races):
-                racepath = os.path.join(ROOT, f"lease_race_{regime}_{i}")
-                os.makedirs(racepath, exist_ok=True)
-                lock = racepath + "__pis_writer_lock"
-                with open(lock, "w") as fh:
-                    fh.write(_json.dumps({"owner": "crashed:pid0",
-                                          "op": "merge_into",
-                                          "token": "stale"}))
-                old = _time.time() - 700
-                os.utime(lock, (old, old))
-                go_tmp = os.path.join(flagdir, f"race{i}_go.tmp")
-                with open(go_tmp, "w") as fh:
-                    fh.write(racepath)
-                os.rename(go_tmp, os.path.join(flagdir, f"race{i}_go"))
-                me_win = False
-                try:
-                    lr = SRC.acquire_writer_lease(spark, racepath,
-                                                  f"race{i}_parent")
-                    me_win = True
-                except IOError:
-                    pass
-                subf = os.path.join(flagdir, f"race{i}_sub.json")
-                while not os.path.exists(subf) \
-                        and _time.time() < deadline:
-                    _time.sleep(0.02)
-                sub = _json.loads(open(subf).read())
-                wins = int(me_win) + int(bool(sub.get("win")))
-                race_winners.append(wins)
-                assert wins <= 1, f"{regime} race {i}: two winners"
-                if me_win:
-                    lr.release()
-                if os.path.exists(lock):
-                    os.remove(lock)  # loser-side leftovers
-            r["race_winners"] = race_winners
-            r["max_winners_per_race"] = max(race_winners)
-            # phase C: fenced commit (round-14, r13 verdict stretch
-            # #7) — an ex-holder whose lease was taken over while its
-            # rewrite ran attempts to land its staged swap under this
-            # regime's metadata-RPC latency; the commit fence must
-            # refuse it (StaleWriterFenceError), leave the table
-            # byte-identical, and never accept a stale commit.
-            import warnings as _warnings
-
-            from parquet_index_spark import QueryContext
-            from parquet_index_spark.sources import delete_where
-            ctx = QueryContext(spark)
-            fc = {"attempts": 0, "stale_commits_accepted": 0,
-                  "refusal_ms": []}
-            for i in range(3):
-                fpath = os.path.join(ROOT,
-                                     f"lease_fence_{regime}_{i}")
-                (spark.range(0, 20_000)
-                 .selectExpr("id", "id % 5 as v")
-                 .repartitionByRange(4, "id")
-                 .write.mode("overwrite").parquet(fpath))
-                ctx.index.create.mode("overwrite") \
-                   .indexBy("id").parquet(fpath)
-                lk = fpath + "__pis_writer_lock"
-                stalled = SRC.acquire_writer_lease(
-                    spark, fpath, "stalled_dml")
-                # the takeover winner replaces the lock (instant —
-                # only the ex-holder's own ops carry the RPC delay)
-                os.remove(lk)
-                with open(lk, "w") as fh:
-                    fh.write(_json.dumps({
-                        "owner": "winner:pid9", "op": "takeover",
-                        "token": "winner", "acquired_utc": "x"}))
-                crc = os.path.join(os.path.dirname(lk),
-                                   "." + os.path.basename(lk) + ".crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
-                n0 = spark.read.parquet(fpath).count()
-                fc["attempts"] += 1
-                t0 = _time.time()
-                try:
-                    delete_where(ctx, fpath,
-                                 "id >= 5000 AND id < 10000")
-                    fc["stale_commits_accepted"] += 1
-                except SRC.StaleWriterFenceError:
-                    fc["refusal_ms"].append(round(
-                        (_time.time() - t0) * 1000.0, 1))
-                with _warnings.catch_warnings():
-                    _warnings.simplefilter("ignore")
-                    stalled.release()
-                if os.path.exists(lk):
-                    os.remove(lk)
-                assert spark.read.parquet(fpath).count() == n0, \
-                    f"{regime} fence {i}: refused swap changed rows"
-            fc["p50_refusal_ms"] = (
-                round(statistics.median(fc["refusal_ms"]), 1)
-                if fc["refusal_ms"] else None)
-            assert fc["stale_commits_accepted"] == 0, fc
-            r["fenced_commit"] = fc
-        finally:
-            SRC._fs_for = orig
-            if proc.poll() is None:
-                try:
-                    proc.wait(timeout=60)
-                except subprocess.TimeoutExpired:
-                    proc.kill()
-        out[regime] = r
-    return out
+        if os.path.exists(lock):
+            os.remove(lock)  # all racers refused: the record is stranded
+    return {"threads": threads, "rounds": rounds,
+            "two_winner_rounds": sum(n > 1 for n in winners_per_round),
+            "zero_winner_rounds": winners_per_round.count(0),
+            "one_winner_rounds": winners_per_round.count(1)}
 
 
 def main() -> None:
@@ -523,13 +325,8 @@ def main() -> None:
         report[label] = r
 
     # 15. staged swap of ~10k untouched flat-layout files: seconds of
-    # the serial rename loop per latency regime. RAW local FS, and an
-    # EMULATED metadata RPC of 1 ms and 5 ms per rename (a sleep in a
-    # wrapped FileSystem.rename). Indexed tables are local, so "local"
-    # is the regime every swap runs in; the emulated rows show how the
-    # loop scales with per-rename latency.
-    import time as _time
-
+    # the serial rename loop on the local filesystem, where every
+    # indexed table lives.
     import parquet_index_spark.sources as SRC
     spath = os.path.join(ROOT, "stage_flat")
     os.makedirs(spath, exist_ok=True)
@@ -538,52 +335,19 @@ def main() -> None:
         with open(os.path.join(spath, f"part-{i:05d}.parquet"), "wb") as fh:
             fh.write(b"x")
 
-    class _DelayFS:
-        """Per-rename RPC-latency emulation; everything else delegates."""
-
-        def __init__(self, fs, delay):
-            self._fs, self._delay = fs, delay
-
-        def rename(self, src, dst):
-            _time.sleep(self._delay)
-            return self._fs.rename(src, dst)
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-    def run_swap(delay=0.0):
+    def run_swap():
         tmp, bak = spath + "__compact_tmp", spath + "__compact_bak"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp)
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        orig = SRC._fs_for
-        if delay:
-            SRC._fs_for = lambda s, p: (lambda fs, jp:
-                                        (_DelayFS(fs, delay), jp))(
-                *orig(s, p))
-        try:
-            SRC._staged_swap(spark, spath, tmp, bak, frozenset(),
-                             label="stress")
-        finally:
-            SRC._fs_for = orig
+        SRC._staged_swap(spark, spath, tmp, bak, frozenset(),
+                         label="stress")
 
-    stage_r = {"files": n_stage}
-    for regime, delay in (("local", 0.0), ("rpc1ms", 0.001),
-                          ("rpc5ms", 0.005)):
-        stage_r[regime] = {"serial_sec": _timed(lambda: run_swap(delay))[0]}
-    report["stage_swap"] = stage_r
+    report["stage_swap"] = {"files": n_stage,
+                            "local": {"serial_sec": _timed(run_swap)[0]}}
 
-    # 16. round-13 (r12 verdict stretch #7): TWO-PROCESS lease stress
-    # under emulated metadata-RPC latency (the in-process hammer and
-    # the two-real-sessions test were latency-unloaded). Per regime a
-    # SUBPROCESS driver session holds the lease while this session
-    # hammers acquire attempts (refusal latency, zero double-acquires),
-    # then the two processes race stale-lock takeovers from a
-    # flag-file starting gate (at most one winner per race). The delay
-    # wraps every lock-relevant FileSystem op (create/delete/stat/
-    # exists/open/setTimes/rename) in BOTH processes — the sleep
-    # releases the GIL like the real socket wait.
-    report["lease"] = _lease_stress(spark, SRC)
+    # 16. the writer lease's stale-lock race: 8 threads x 200 rounds
+    report["lease"] = _lease_race(spark, SRC)
 
     # slopes: Nx time / 1x time, vs the ideal SCALE
     slopes = {}
